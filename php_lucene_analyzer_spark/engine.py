@@ -218,7 +218,8 @@ class FulltextIndex:
                        must_not: list[str] | None = None, msm: int = 0,
                        k: int = 10) -> DataFrame:
         """Lucene BooleanQuery semantics over the index
-        (operators/boolean.py::boolean_topk): every ``must`` string's
+        (operators/boolean.py::boolean_topk, a depth-1 tree over the
+        boolean_tree_topk kernel): every ``must`` string's
         analyzed terms all match, at least ``msm`` of the ``should``
         terms match (pure-SHOULD queries require one), no ``must_not``
         term matches; BM25-scored over the matched must+should set.
@@ -411,7 +412,7 @@ class FulltextIndex:
         (driver-side boolean evaluation per mask).  Nested phrases GATE
         matching; they do not score (documented divergence — only
         top-level SHOULD phrases score)."""
-        from .operators.boolean import boolean_tree_topk_many
+        from .operators.boolean import _leaf_terms, boolean_tree_topk_many
 
         kn = len(npids)
 
@@ -448,21 +449,13 @@ class FulltextIndex:
                 return False
             return not any(ev_tf(c, mask) for c in nots)
 
-        def any_terms(node):
-            if node[0] == "leaf":
-                return bool(node[2])
-            if node[0] == "node":
-                return any(any_terms(c)
-                           for c in node[1] + node[2] + node[3])
-            return False
-
         allowed = [m for m in range(1 << kn) if ev_tf(tree, m)]
         # the kernel must run whenever ANY leaf carries terms —
         # including purely NEGATIVE leaves (no scoring instances, but
         # the match algebra and the `seen` guard depend on their
         # postings; a '(NOT t "<phrase>")' query has zero instances
         # yet must exclude t-docs)
-        run_kernel = bool(instances) or any_terms(tree)
+        run_kernel = bool(instances) or bool(_leaf_terms(tree))
         trees_v = {f"v{m}": subst(tree, m) for m in range(1 << kn)}
         insts_v = {q: list(instances) for q in trees_v}
         counts_qids = set(trees_v) if with_counts else None
@@ -472,16 +465,8 @@ class FulltextIndex:
             # postings IS the kernel-visible doc universe (an ("all",)
             # leaf would carry no terms, so the many-kernel's per-qid
             # term filter would feed it an empty bucket)
-            def tree_terms(node, acc):
-                if node[0] == "leaf":
-                    acc.update(node[2])
-                elif node[0] == "node":
-                    for c in node[1] + node[2] + node[3]:
-                        tree_terms(c, acc)
-                return acc
-
             trees_v["seen"] = ("node", (), (
-                ("leaf", -1000, tuple(sorted(tree_terms(tree, set())))),
+                ("leaf", -1000, tuple(sorted(_leaf_terms(tree)))),
             ), (), 1)
             insts_v["seen"] = []
         kern = boolean_tree_topk_many(

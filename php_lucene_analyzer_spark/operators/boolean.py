@@ -11,12 +11,14 @@ postings instead of a doc-at-a-time scorer tree.
 Distribution model — identical to WAND's (operators/wand.py): posting
 blocks live in doc-disjoint ``rbucket`` ranges, so every doc's full term
 membership is visible inside one bucket.  One applyInPandas pass per
-bucket evaluates every clause vectorized (NumPy set algebra over the
-decoded doc arrays — conjunctions/counts via ``np.unique``, exclusions
-via ``np.isin``), emits the bucket's top-k, and a global
-TakeOrderedAndProject finishes.  Per-bucket work is bounded by the build
-partition size; nothing is all-pairs and nothing funnels through one
-task.
+bucket evaluates every compiled query tree of a query SET vectorized
+(NumPy set algebra over the decoded doc arrays — conjunctions/counts
+via ``np.unique``, exclusions via ``np.isin``), emits each query's
+bucket top-k, and a global top-k finishes (TakeOrderedAndProject for a
+single tree, a per-qid window for a set).  Flat boolean queries
+(boolean_topk) are depth-1 trees.  Per-bucket work is bounded by the
+build partition size; nothing is all-pairs and nothing funnels through
+one task.
 
 Unlike WAND (top-k pruning, document-at-a-time cursors), boolean
 evaluation wants the MATCHING SET, whose candidates are bounded by the
@@ -34,13 +36,11 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 
 from ..functions.codec import delta_decode, vbyte_decode
 from .fulltext import B, K1, idf as bm25_idf
 from .wand import _filter_terms, _topk_cut
-
-_EMPTY_SCHEMA = "doc_id long, score double"
 
 
 def _decode_term(rows: pd.DataFrame) -> tuple[np.ndarray, np.ndarray,
@@ -61,168 +61,15 @@ def _decode_term(rows: pd.DataFrame) -> tuple[np.ndarray, np.ndarray,
     return docs, tfs, dls
 
 
-def _empty_result() -> pd.DataFrame:
-    return pd.DataFrame({"doc_id": pd.Series(dtype="int64"),
-                         "score": pd.Series(dtype="float64")})
-
-
-def _group_union(group, decoded) -> np.ndarray:
-    """Sorted-unique union of a clause group's per-bucket doc arrays —
-    a group (e.g. a fuzzy/prefix expansion) matches a doc when ANY of
-    its terms does."""
-    parts = [decoded[t][0] for t in sorted(group) if t in decoded]
-    if not parts:
-        return np.empty(0, dtype=np.int64)
-    if len(parts) == 1:
-        return parts[0]
-    return np.unique(np.concatenate(parts))
-
-
-def _bool_bucket(pdf: pd.DataFrame, scoring_meta: list[tuple[str, float]],
-                 must_groups: list[frozenset], should_groups: list[frozenset],
-                 not_terms: set[str], msm: int, k: int, avgdl: float,
-                 k1: float, b: float) -> pd.DataFrame:
-    """Evaluate the boolean query inside ONE doc-range bucket.
-
-    Clause GROUPS: a group is a set of index terms that jointly form one
-    Lucene clause (a plain term is a singleton; a fuzzy/prefix/regex
-    clause is its bounded expansion) — the group matches a doc when any
-    of its terms does; MUST means every group matches, msm counts
-    matched SHOULD groups."""
-    decoded: dict[str, tuple[np.ndarray, np.ndarray, np.ndarray]] = {}
-    for term, g in pdf.groupby("term"):
-        decoded[term] = _decode_term(g)
-
-    # ---- candidate set by clause algebra (doc ids only, no scoring yet)
-    n_must = len(must_groups)
-    should_unions = [_group_union(g, decoded) for g in should_groups]
-    should_unions = [u for u in should_unions if u.size]
-    if n_must:
-        cand = None
-        for g in must_groups:
-            u = _group_union(g, decoded)
-            if u.size == 0:
-                # no term of a MUST group has postings in this doc range
-                # -> no doc here satisfies the conjunction (buckets are
-                # doc-disjoint)
-                return _empty_result()
-            cand = u if cand is None else np.intersect1d(
-                cand, u, assume_unique=True)
-            if cand.size == 0:
-                return _empty_result()
-    elif not should_unions:
-        return _empty_result()
-    elif msm <= 1:
-        cand = np.unique(np.concatenate(should_unions))
-    else:
-        u, c = np.unique(np.concatenate(should_unions), return_counts=True)
-        cand = u[c >= msm]
-    if cand.size == 0:
-        return _empty_result()
-
-    if n_must and msm:
-        if len(should_unions) < msm:
-            cand = np.empty(0, dtype=np.int64)
-        else:
-            allc = np.concatenate(should_unions)
-            hits = allc[np.isin(allc, cand, assume_unique=False)]
-            u, c = np.unique(hits, return_counts=True)
-            cand = u[c >= msm]
-        if cand.size == 0:
-            return _empty_result()
-
-    for t in sorted(not_terms):
-        if t in decoded:
-            cand = cand[~np.isin(cand, decoded[t][0], assume_unique=True)]
-    if cand.size == 0:
-        return _empty_result()
-
-    # ---- score survivors: term-lex accumulation (float contract)
-    scores = np.zeros(cand.size, dtype=np.float64)
-    for term, tidf in scoring_meta:  # scoring_meta is term-sorted
-        if term not in decoded:
-            continue
-        docs, tfs, dls = decoded[term]
-        pos = np.searchsorted(docs, cand)
-        pos_ok = pos < docs.size
-        hit = np.zeros(cand.size, dtype=bool)
-        hit[pos_ok] = docs[pos[pos_ok]] == cand[pos_ok]
-        p = pos[hit]
-        # identical association to the WAND/exhaustive scorers —
-        # idf * (tf * (k1+1)) — so group queries are bit-identical to
-        # wand_topk_terms over the same term set
-        contrib = (tidf * (tfs[p] * (k1 + 1.0))
-                   / (tfs[p] + k1 * (1.0 - b + b * dls[p] / avgdl)))
-        scores[hit] += contrib
-
-    if k is None:
-        # full filtered match set (callers that post-filter, e.g. phrase
-        # constraints, then take their own global top-k — a per-bucket
-        # cut here would drop docs that survive the later filter)
-        return pd.DataFrame({"doc_id": cand, "score": scores})
-    d, s = _topk_cut(cand, scores, k)
-    return pd.DataFrame({"doc_id": d, "score": s})
-
-
-def boolean_groups_topk(postings: DataFrame, tstats: DataFrame,
-                        n_docs: int, avgdl: float,
-                        must_groups: list[list[str]] | None = None,
-                        should_groups: list[list[str]] | None = None,
-                        must_not: list[str] | None = None, msm: int = 0,
-                        k: int | None = 10, k1: float = K1,
-                        b: float = B) -> DataFrame:
-    """Boolean top-k over CLAUSE GROUPS -> (doc_id, score).
-
-    ``k=None`` returns the FULL scored match set (no per-bucket cut, no
-    global limit) — for callers that apply a further filter (phrase
-    constraints) before their own top-k.
-
-    A group is the term expansion of one Lucene clause: a plain term is
-    a singleton, a fuzzy/prefix/regex clause is its bounded expansion.
-    Semantics:
-      * every ``must`` group matches (ANY term of the group present); a
-        must group with no corpus term empties the result;
-      * at least ``msm`` SHOULD groups match; with no must groups the
-        effective minimum is ``max(msm, 1)`` (Lucene's pure-SHOULD
-        rule);
-      * no ``must_not`` term matches; must_not never scores;
-      * score = BM25 sum over every matched must/should term (Lucene's
-        rewritten-clause scoring).
-    """
-    spark = postings.sparkSession
-    mg = [frozenset(g) for g in (must_groups or []) if g]
-    sg = [frozenset(g) for g in (should_groups or []) if g]
-    not_s = sorted(set(must_not or []))
-    eff_msm = msm if mg else max(msm, 1)
-    scoring = sorted(set().union(*mg, *sg) if (mg or sg) else set())
-    if not scoring:
-        return spark.createDataFrame([], _EMPTY_SCHEMA)
-
-    meta_rows = (_filter_terms(tstats, scoring)
-                 .select("term", "df").orderBy("term").collect())
-    dfs = {r["term"]: int(r["df"]) for r in meta_rows}
-    # restrict groups to corpus terms; a must group losing ALL terms
-    # cannot match anywhere
-    mg_alive = [frozenset(t for t in g if t in dfs) for g in mg]
-    if any(not g for g in mg_alive):
-        return spark.createDataFrame([], _EMPTY_SCHEMA)
-    sg_alive = [frozenset(t for t in g if t in dfs) for g in sg]
-    sg_alive = [g for g in sg_alive if g]
-    if eff_msm > len(sg_alive):
-        return spark.createDataFrame([], _EMPTY_SCHEMA)
-    scoring_meta = [(t, bm25_idf(n_docs, dfs[t]))
-                    for t in scoring if t in dfs]
-
-    all_terms = sorted(set(t for t, _ in scoring_meta) | set(not_s))
-    matched = _filter_terms(postings, all_terms)  # pushed / semi-join
-    not_set = set(not_s)
-    local = matched.groupBy("rbucket").applyInPandas(
-        lambda pdf: _bool_bucket(pdf, scoring_meta, mg_alive, sg_alive,
-                                 not_set, eff_msm, k, avgdl, k1, b),
-        schema=_EMPTY_SCHEMA)
-    if k is None:
-        return local
-    return local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+def _leaf_terms(node) -> set[str]:
+    """Every term carried by a leaf under ``node`` (MUST, SHOULD and NOT
+    children alike — NOT terms must be fetched to exclude)."""
+    if node[0] == "leaf":
+        return set(node[2])
+    if node[0] == "node":
+        return set().union(*(_leaf_terms(c)
+                             for c in node[1] + node[2] + node[3]))
+    return set()
 
 
 def _t_match(node, decoded, cache):
@@ -296,10 +143,12 @@ def _t_match(node, decoded, cache):
     return cand
 
 
-def _tree_bucket(pdf, tree, instances, k: int | None,
+def _tree_bucket(decoded, tree, instances, k: int | None,
                  k1: float, b: float, with_counts: bool) -> pd.DataFrame:
     """Evaluate a compiled query TREE inside one doc-range bucket.
 
+    ``decoded``: {term: (docs, tfs, dls)} for the tree's terms in this
+    bucket (_decode_term output, shared read-only across the set).
     ``instances``: [(term, weight, avgdl, leaf_id), ...] sorted by
     (term, leaf_id) — one scoring instance per positive-path leaf
     membership; weight = idf x the boost product along the leaf's path.
@@ -314,16 +163,6 @@ def _tree_bucket(pdf, tree, instances, k: int | None,
     if with_counts:
         cols["n_should"] = pd.Series(dtype="int32")
     empty = pd.DataFrame(cols)
-    if isinstance(pdf, dict):
-        # pre-decoded {term: (docs, tfs, dls)} — the many-kernel shares
-        # one decode across queries with identical term sets (nested-
-        # phrase Shannon variants decode 2^k times otherwise)
-        decoded = pdf
-    else:
-        if not len(pdf):
-            return empty
-        decoded = {term: _decode_term(g)
-                   for term, g in pdf.groupby("term")}
     if not decoded:
         return empty
     cache: dict = {}
@@ -388,51 +227,93 @@ def _tree_bucket(pdf, tree, instances, k: int | None,
     return pd.DataFrame({"doc_id": d, "score": s})
 
 
+def _tree_set(postings: DataFrame, tstats: DataFrame, n_docs: int, avgdl,
+              trees: dict, instances_raw: dict, k: int | None, k1: float,
+              b: float, k_map: dict, counts_qids: set) -> DataFrame:
+    """The tree-kernel plan over a SET of compiled trees -> per-bucket
+    (qid, doc_id, score[, n_should]) rows, before any global top-k: one
+    df collect for the union of leaf terms, one pruned scan, one
+    applyInPandas pass running every tree against each bucket."""
+    spark = postings.sparkSession
+    with_counts = bool(counts_qids)
+    schema = "qid string, doc_id long, score double" + \
+        (", n_should int" if with_counts else "")
+    per_q_terms = {qid: _leaf_terms(t) for qid, t in trees.items()}
+    all_terms = sorted(set().union(*per_q_terms.values()))
+    if not all_terms:
+        return spark.createDataFrame([], schema)
+    dfs = {r["term"]: int(r["df"]) for r in
+           _filter_terms(tstats, all_terms).select("term", "df").collect()}
+    instances = {
+        qid: sorted(
+            (t, boost * bm25_idf(n_docs, dfs[t]),
+             avgdl if isinstance(avgdl, float) else avgdl[t], leaf_id)
+            for t, boost, leaf_id in raw if t in dfs)
+        for qid, raw in instances_raw.items()}
+    alive = sorted(t for t in all_terms if t in dfs)
+    if not alive:
+        return spark.createDataFrame([], schema)
+    qterms_alive = {qid: {t for t in ts if t in dfs}
+                    for qid, ts in per_q_terms.items()}
+
+    def bucket(pdf: pd.DataFrame) -> pd.DataFrame:
+        outs = []
+        # r6: decode each TERM once per bucket and assemble per-query
+        # views from the shared arrays (_tree_bucket is read-only over
+        # the decoded tuples)
+        by_term = dict(tuple(pdf.groupby("term")))
+        term_dec: dict[str, tuple] = {}
+        for qid, tree in trees.items():
+            # restrict to THIS query's terms (the wand_topk_many rule:
+            # the union bucket would corrupt per-query statistics)
+            dec = {}
+            for t in qterms_alive[qid]:
+                d = term_dec.get(t)
+                if d is None:
+                    g = by_term.get(t)
+                    if g is None:
+                        continue
+                    d = term_dec[t] = _decode_term(g)
+                dec[t] = d
+            wc = qid in counts_qids
+            r = _tree_bucket(dec, tree, instances[qid],
+                             k_map.get(qid, k), k1, b, wc)
+            if with_counts and not wc:
+                r["n_should"] = np.zeros(len(r), dtype=np.int32)
+            r.insert(0, "qid", qid)
+            outs.append(r)
+        return pd.concat(outs, ignore_index=True)
+
+    matched = _filter_terms(postings, alive)
+    return matched.groupBy("rbucket").applyInPandas(bucket, schema=schema)
+
+
 def boolean_tree_topk(postings: DataFrame, tstats: DataFrame, n_docs: int,
                       avgdl, tree, instances_raw,
                       k: int | None = 10, k1: float = K1, b: float = B,
                       with_counts: bool = False) -> DataFrame:
     """Boolean top-k over a compiled query TREE -> (doc_id, score
-    [, n_should]) — the nested-BooleanQuery kernel behind
-    FulltextIndex.query's grouped/boosted/fielded path (the flat path
-    keeps boolean_groups_topk; querycompile.py builds ``tree``).
+    [, n_should]) — the BooleanQuery kernel behind FulltextIndex.query's
+    grouped/boosted/fielded path and, as depth-1 trees, behind
+    boolean_topk / search_boolean (querycompile.py builds ``tree``).
 
-    ``avgdl``: float (single-field) or {field_prefixed_term -> avgdl}
-    resolution is done by the CALLER — ``instances_raw`` already carries
-    (term, boost_product, avgdl, leaf_id) with idf NOT yet applied
-    (df lookup happens here, one collect for the whole query).
+    ``avgdl``: float (single-field) or {field_prefixed_term -> avgdl};
+    ``instances_raw``: [(term, boost_product, leaf_id)] with idf NOT yet
+    applied (df lookup happens here, one collect for the whole query).
     ``k=None`` returns the full scored match set (callers that
     post-filter with phrase constraints).  ``with_counts`` adds the
     per-doc count of matched ROOT-level SHOULD children (phrase-msm
-    integration)."""
-    spark = postings.sparkSession
+    integration).
 
-    def leaf_terms(node, acc):
-        if node[0] == "leaf":
-            acc.update(node[2])
-        elif node[0] == "node":
-            for c in node[1] + node[2] + node[3]:
-                leaf_terms(c, acc)
-        return acc
-
-    all_terms = sorted(leaf_terms(tree, set()))
-    schema = _EMPTY_SCHEMA + (", n_should int" if with_counts else "")
-    if not all_terms:
-        return spark.createDataFrame([], schema)
-    dfs = {r["term"]: int(r["df"]) for r in
-           _filter_terms(tstats, all_terms).select("term", "df").collect()}
-    instances = sorted(
-        (t, boost * bm25_idf(n_docs, dfs[t]),
-         avgdl if isinstance(avgdl, float) else avgdl[t], leaf_id)
-        for t, boost, leaf_id in instances_raw if t in dfs)
-    matched = _filter_terms(postings, [t for t in all_terms if t in dfs])
-    local = matched.groupBy("rbucket").applyInPandas(
-        lambda pdf: _tree_bucket(pdf, tree, instances, k, k1, b,
-                                 with_counts),
-        schema=schema)
+    Runs boolean_tree_topk_many's kernel as a set of one, finished by a
+    global orderBy().limit() — one Spark job fewer than the per-qid
+    window."""
+    local = _tree_set(postings, tstats, n_docs, avgdl, {"_": tree},
+                      {"_": instances_raw}, k, k1, b, {},
+                      {"_"} if with_counts else set()).drop("qid")
     if k is None:
         return local
-    return (local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k))
+    return local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
 
 def boolean_tree_topk_many(postings: DataFrame, tstats: DataFrame,
@@ -458,77 +339,12 @@ def boolean_tree_topk_many(postings: DataFrame, tstats: DataFrame,
     boolean_tree_topk's ``k=None`` contract).  ``counts_qids``: qids
     whose rows also need the matched-root-SHOULD count; when given, the
     output carries ``n_should`` (0 for other qids)."""
-    spark = postings.sparkSession
-    with_counts = bool(counts_qids)
-    counts_qids = counts_qids or set()
     k_map = dict(k_map or {})
-    schema = "qid string, doc_id long, score double" + \
-        (", n_should int" if with_counts else "")
-
-    def leaf_terms(node, acc):
-        if node[0] == "leaf":
-            acc.update(node[2])
-        elif node[0] == "node":
-            for c in node[1] + node[2] + node[3]:
-                leaf_terms(c, acc)
-        return acc
-
-    per_q_terms = {qid: leaf_terms(t, set()) for qid, t in trees.items()}
-    all_terms = sorted(set().union(*per_q_terms.values())
-                       if per_q_terms else set())
-    if not all_terms:
-        return spark.createDataFrame([], schema)
-    dfs = {r["term"]: int(r["df"]) for r in
-           _filter_terms(tstats, all_terms).select("term", "df").collect()}
-    instances = {
-        qid: sorted(
-            (t, boost * bm25_idf(n_docs, dfs[t]),
-             avgdl if isinstance(avgdl, float) else avgdl[t], leaf_id)
-            for t, boost, leaf_id in raw if t in dfs)
-        for qid, raw in instances_raw.items()}
-    alive = sorted(t for t in all_terms if t in dfs)
-    if not alive:
-        return spark.createDataFrame([], schema)
-    qterms_alive = {qid: {t for t in ts if t in dfs}
-                    for qid, ts in per_q_terms.items()}
-
-    def bucket(pdf: pd.DataFrame) -> pd.DataFrame:
-        outs = []
-        # r6: decode each TERM once per bucket and assemble per-query
-        # views from the shared arrays — the r5 version shared decodes
-        # only between queries with IDENTICAL term sets, so overlapping
-        # query sets re-decoded their common terms (_tree_bucket is
-        # read-only over the decoded tuples; the pre-decoded-dict form
-        # is its existing contract)
-        by_term = dict(tuple(pdf.groupby("term")))
-        term_dec: dict[str, tuple] = {}
-        for qid, tree in trees.items():
-            # restrict to THIS query's terms (the wand_topk_many rule:
-            # the union bucket would corrupt per-query statistics)
-            dec = {}
-            for t in qterms_alive[qid]:
-                d = term_dec.get(t)
-                if d is None:
-                    g = by_term.get(t)
-                    if g is None:
-                        continue
-                    d = term_dec[t] = _decode_term(g)
-                dec[t] = d
-            wc = qid in counts_qids
-            r = _tree_bucket(dec, tree, instances[qid],
-                             k_map.get(qid, k), k1, b, wc)
-            if with_counts and not wc:
-                r["n_should"] = np.zeros(len(r), dtype=np.int32)
-            r.insert(0, "qid", qid)
-            outs.append(r)
-        return pd.concat(outs, ignore_index=True)
-
-    matched = _filter_terms(postings, alive)
-    local = matched.groupBy("rbucket").applyInPandas(bucket, schema=schema)
+    local = _tree_set(postings, tstats, n_docs, avgdl, trees,
+                      instances_raw, k, k1, b, k_map, counts_qids or set())
     uncut = {qid for qid in trees if k_map.get(qid, k) is None}
     if len(uncut) == len(trees):
         return local
-    from pyspark.sql import Window
     w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("doc_id"))
     out = local.withColumn("_r", F.row_number().over(w))
     keep = F.col("_r") <= k
@@ -546,20 +362,24 @@ def boolean_topk(postings: DataFrame, tstats: DataFrame, n_docs: int,
     the per-TERM form (each term its own clause): every ``must`` term
     matches, ≥ ``msm`` of the ``should`` terms match (pure-SHOULD
     requires one), no ``must_not`` term matches, BM25 over matched
-    must+should terms.  Thin wrapper over ``boolean_groups_topk`` with
-    singleton groups (a must term absent from the corpus empties the
-    result, as before).
+    must+should terms.  Runs as a depth-1 tree over
+    ``boolean_tree_topk``, one leaf and one unit-boost scoring instance
+    per term (a must term absent from the corpus empties the result).
 
     Overlap normalization (documented divergence): a term listed in
     BOTH must and should is kept as a MUST clause only (``should -
     must``), scoring once and not counting toward msm — Lucene's
     BooleanQuery would keep both clauses, score the term twice and let
-    it satisfy minimumShouldMatch.  The tree path
-    (``boolean_tree_topk`` / FulltextIndex.query) scores per clause,
-    Lucene-faithfully."""
+    it satisfy minimumShouldMatch.  FulltextIndex.query compiles its
+    own trees and scores per clause, Lucene-faithfully."""
     must_s = sorted(set(must or []))
     should_s = sorted(set(should or []) - set(must_s))
-    return boolean_groups_topk(
-        postings, tstats, n_docs, avgdl,
-        [[t] for t in must_s], [[t] for t in should_s],
-        must_not, msm, k, k1, b)
+    not_s = sorted(set(must_not or []))
+    leaves = [("leaf", i, (t,))
+              for i, t in enumerate(must_s + should_s + not_s)]
+    nm, ns = len(must_s), len(should_s)
+    tree = ("node", tuple(leaves[:nm]), tuple(leaves[nm:nm + ns]),
+            tuple(leaves[nm + ns:]), msm if must_s else max(msm, 1))
+    instances = [(t, 1.0, i) for i, t in enumerate(must_s + should_s)]
+    return boolean_tree_topk(postings, tstats, n_docs, float(avgdl), tree,
+                             instances, k, k1, b)

@@ -62,7 +62,7 @@ class _BlobCache:
     a term shared by many queries had its blocks VByte-decoded once per
     query — measured 4.5 s -> 1.5 s for the 100-query batch kernel at
     sf1.0 with this memo.  Scope is one bucket() invocation (created in
-    wand_topk_many's applyInPandas fn, or per _wand_bucket call), so no
+    _wand_set's applyInPandas fn, or per _wand_bucket call), so no
     state outlives a task and memory is bounded by the bucket's own
     blob set.  Cached arrays are frozen (writeable=False); every
     consumer copies via .astype(...) exactly as the uncached path did,
@@ -441,21 +441,33 @@ def wand_topk_many(postings: DataFrame, tstats: DataFrame, n_docs: int,
 
     ``terms_fn``: query-string -> term list; defaults to the flagship
     analysis chain (custom Analyzer chains pass ``analyzer.terms``)."""
-    spark = postings.sparkSession
     if terms_fn is None:
         terms_fn = lambda q: [t.term for t in analyze(q)]
-    per_q: dict[str, list[str]] = {
-        qid: sorted(set(terms_fn(q))) for qid, q in queries.items()}
-    all_terms = sorted({t for ts in per_q.values() for t in ts})
+    return _wand_set(postings, tstats, n_docs, avgdl,
+                     {qid: [(t, 1.0) for t in sorted(set(terms_fn(q)))]
+                      for qid, q in queries.items()}, k, k1, b)
+
+
+def _wand_set(postings: DataFrame, tstats: DataFrame, n_docs: int,
+              avgdl: float, entries: dict[str, list[tuple[str, float]]],
+              k: int, k1: float, b: float) -> DataFrame:
+    """The WAND serving plan over ``{qid: [(term, weight), ...]}`` ->
+    (qid, doc_id, score): one df collect for the union of terms, one
+    applyInPandas pass running every query against each bucket, one
+    per-qid top-k window.  A single query is a set of one."""
+    spark = postings.sparkSession
+    schema = "qid string, doc_id long, score double"
+    all_terms = sorted({t for es in entries.values() for t, _ in es})
     if not all_terms:
-        return spark.createDataFrame([], "qid string, doc_id long, score double")
+        return spark.createDataFrame([], schema)
     dfs = {r["term"]: int(r["df"]) for r in
            _filter_terms(tstats, all_terms).select("term", "df").collect()}
-    metas = {qid: [(t, bm25_idf(n_docs, dfs[t])) for t in ts if t in dfs]
-             for qid, ts in per_q.items()}
+    metas = {qid: [(t, w * bm25_idf(n_docs, dfs[t]))
+                   for t, w in sorted(es) if t in dfs]
+             for qid, es in entries.items()}
     metas = {qid: m for qid, m in metas.items() if m}
     if not metas:
-        return spark.createDataFrame([], "qid string, doc_id long, score double")
+        return spark.createDataFrame([], schema)
 
     def bucket(pdf: pd.DataFrame) -> pd.DataFrame:
         outs = []
@@ -474,8 +486,7 @@ def wand_topk_many(postings: DataFrame, tstats: DataFrame, n_docs: int,
 
     matched = _filter_terms(
         postings, sorted({t for m in metas.values() for t, _ in m}))
-    local = matched.groupBy("rbucket").applyInPandas(
-        bucket, schema="qid string, doc_id long, score double")
+    local = matched.groupBy("rbucket").applyInPandas(bucket, schema=schema)
     w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("doc_id"))
     return (local.withColumn("_r", F.row_number().over(w))
             .filter(F.col("_r") <= k).drop("_r"))
@@ -510,23 +521,10 @@ def wand_topk_terms(postings: DataFrame, tstats: DataFrame, n_docs: int,
     sorted by term, possibly with REPEATED terms (one entry per query
     clause — Lucene's fuzzy edit-distance downweight, boosted clauses).
     Each entry becomes its own cursor with idf x weight; weights scale
-    every block bound linearly, so WAND pruning stays exact."""
-    spark = postings.sparkSession
+    every block bound linearly, so WAND pruning stays exact.
+
+    Runs the batch kernel (wand_topk_many's plan) as a set of one."""
     entries = term_boosts if term_boosts is not None \
         else [(t, 1.0) for t in (terms or [])]
-    if not entries:
-        return spark.createDataFrame([], "doc_id long, score double")
-    uniq = sorted({t for t, _ in entries})
-    meta_rows = (_filter_terms(tstats, uniq)
-                 .select("term", "df").orderBy("term").collect())
-    if not meta_rows:
-        return spark.createDataFrame([], "doc_id long, score double")
-    dfs = {r["term"]: int(r["df"]) for r in meta_rows}
-    term_meta = [(t, w * bm25_idf(n_docs, dfs[t]))
-                 for t, w in sorted(entries) if t in dfs]
-    qterms = sorted({t for t, _ in term_meta})
-    matched = _filter_terms(postings, qterms)  # pushed to scan / semi-join
-    local = matched.groupBy("rbucket").applyInPandas(
-        lambda pdf: _wand_bucket(pdf, term_meta, k, avgdl, k1, b),
-        schema="doc_id long, score double")
-    return local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+    return _wand_set(postings, tstats, n_docs, avgdl, {"_": entries},
+                     k, k1, b).drop("qid")

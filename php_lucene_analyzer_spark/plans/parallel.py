@@ -21,12 +21,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 
-def spread_input(df: DataFrame, min_partitions: int | None = None
-                 ) -> DataFrame:
-    """Repartition ``df`` round-robin to ``min_partitions`` (default:
-    the session's defaultParallelism) iff it currently has fewer
-    partitions.  No-op otherwise — see module docstring."""
-    n = min_partitions or df.sparkSession.sparkContext.defaultParallelism
+def spread_input(df: DataFrame) -> DataFrame:
+    """Repartition ``df`` round-robin to the session's defaultParallelism
+    iff it currently has fewer partitions.  No-op otherwise — see module
+    docstring."""
+    n = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < n:
         return df.repartition(n)
     return df

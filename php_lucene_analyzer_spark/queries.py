@@ -412,7 +412,8 @@ def q_facet_source(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_boolean(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Boolean retrieval top-10 per fixed query (BOOL_QUERIES) — Lucene
     BooleanQuery semantics on the relational path (the engine-index twin
-    is operators/boolean.py::boolean_topk):
+    is operators/boolean.py::boolean_topk, a depth-1 tree over the
+    boolean_tree_topk kernel):
 
       must_hit == n_must AND should_hit >= msm AND no must_not term,
       score = BM25 sum over matched must+should clauses (must_not never

@@ -12,7 +12,8 @@ import pytest
 from php_lucene_analyzer_spark.analysis import analyze
 from php_lucene_analyzer_spark.operators import fulltext as ft
 from php_lucene_analyzer_spark.operators.boolean import boolean_topk
-from php_lucene_analyzer_spark.operators.postings import build_postings
+from php_lucene_analyzer_spark.operators.postings import (build_postings,
+                                                           index_corpus)
 
 
 @pytest.fixture(scope="module")
@@ -20,9 +21,12 @@ def index(spark, docs):
     tdf = ft.term_doc_freqs(docs, "doc_id", "text").cache()
     n, avgdl = ft.corpus_stats(tdf)
     tstats = ft.term_stats(tdf).cache()
-    # small bucket span so the kernel runs across multiple rbuckets
+    # small bucket span so the kernel runs across multiple rbuckets;
+    # "fused" is the single-pass index_corpus layout FulltextIndex builds
     postings = build_postings(tdf, bucket_span=100).cache()
-    return dict(n=n, avgdl=avgdl, tstats=tstats, postings=postings)
+    fused = index_corpus(docs, "doc_id", "text").cache()
+    return dict(n=n, avgdl=avgdl, tstats=tstats, postings=postings,
+                fused=fused)
 
 
 @pytest.fixture(scope="module")
@@ -72,8 +76,8 @@ def _oracle(docs_pdf: pd.DataFrame, must, should, must_not, msm, k=10):
     return res[:k]
 
 
-def _run(index, **kw):
-    out = boolean_topk(index["postings"], index["tstats"], index["n"],
+def _run(index, layout="postings", **kw):
+    out = boolean_topk(index[layout], index["tstats"], index["n"],
                        index["avgdl"], **kw)
     return [(r["doc_id"], r["score"]) for r in out.collect()]
 
@@ -91,14 +95,19 @@ CASES = [
     dict(should=["window", "order", "sort", "tabl"], msm=2),
     dict(should=["dup", "vector"], msm=1),
     dict(must=["custom"], must_not=["dup"]),
+    # a term in both must and should: normalized to must-only
+    dict(must=["stream"], should=["stream", "batch"], msm=1),
 ]
 
 
-@pytest.mark.parametrize("case", CASES)
-def test_boolean_matches_bruteforce(index, corpus_pdf, case):
+@pytest.mark.parametrize("layout, case", [
+    pytest.param(layout, case, id=prefix + f"case{i}")
+    for layout, prefix in (("postings", ""), ("fused", "fused-"))
+    for i, case in enumerate(CASES)])
+def test_boolean_matches_bruteforce(index, corpus_pdf, layout, case):
     kw = dict(must=case.get("must", []), should=case.get("should", []),
               must_not=case.get("must_not", []), msm=case.get("msm", 0))
-    got = _run(index, k=10, **kw)
+    got = _run(index, layout, k=10, **kw)
     want = _oracle(corpus_pdf, **kw, k=10)
     assert got, f"case produced no rows: {case}"
     _assert_same(got, want)

@@ -30,10 +30,3 @@ def test_spread_is_noop_on_wide_input(spark):
     assert out.rdd.getNumPartitions() == par + 4
     assert out is df
 
-
-def test_spread_respects_explicit_floor(spark):
-    from php_lucene_analyzer_spark.plans.parallel import spread_input
-
-    df = spark.range(100).coalesce(1)
-    out = spread_input(df, min_partitions=4)
-    assert out.rdd.getNumPartitions() == 4

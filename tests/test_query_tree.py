@@ -198,14 +198,52 @@ def test_negative_expansion_is_uncapped(idx, spark):
         nidx.close()
 
 
-def test_fuzzy_lucene_scoring_mode(idx):
-    """Edit-distance downweight (Lucene FuzzyTermsEnum): candidates
-    agree with the plain mode; exact-distance-0 terms keep weight 1 and
-    farther terms are strictly downweighted."""
-    plain = _rows(idx.search_fuzzy("stram", k=50))
-    lucene = _rows(idx.search_fuzzy("stram", k=50, scoring="lucene"))
-    assert {d for d, _ in plain} == {d for d, _ in lucene}
-    assert plain and lucene != plain   # weights actually applied
+def _levenshtein(a: str, b: str) -> int:
+    prev = list(range(len(b) + 1))
+    for i, ca in enumerate(a, 1):
+        cur = [i]
+        for j, cb in enumerate(b, 1):
+            cur.append(min(prev[j] + 1, cur[j - 1] + 1,
+                           prev[j - 1] + (ca != cb)))
+        prev = cur
+    return prev[-1]
+
+
+def test_fuzzy_lucene_scoring_mode(idx, corpus):
+    """Edit-distance downweight (Lucene FuzzyTermsEnum) against a
+    brute-force BM25 over the weighted clause entries, exact floats:
+    each (query term -> index term within 2 edits) clause weighs
+    1 - dist / min(len(query term), len(term)), and entries accumulate
+    in (term, weight) order.  Both query terms reach ``stream``, so the
+    entry list carries a repeated term that scores once per clause."""
+    per_doc, dls = corpus
+    k1, b = ft.K1, ft.B
+    q = "stram strem"
+    vocab = set().union(*per_doc.values())
+    entries = []
+    for qt in idx._terms(q):
+        for t in vocab:
+            dist = _levenshtein(qt, t)
+            if dist <= 2:
+                entries.append((t, 1.0 - (dist / min(len(qt), len(t))
+                                          if dist else 0.0)))
+    entries.sort()
+    assert [t for t, _ in entries].count("stream") == 2
+    dfm = {t: sum(1 for c in per_doc.values() if t in c) for t, _ in entries}
+    scores = {}
+    for d, counts in per_doc.items():
+        if not any(t in counts for t, _ in entries):
+            continue
+        s = 0.0
+        for t, w in entries:
+            if t in counts:
+                tf = counts[t]
+                s += (w * ft.idf(idx.n_docs, dfm[t]) * (tf * (k1 + 1.0))
+                      / (tf + k1 * (1.0 - b + b * dls[d] / idx.avgdl)))
+        scores[d] = s
+    want = sorted(scores.items(), key=lambda x: (-x[1], x[0]))[:50]
+    got = _rows(idx.search_fuzzy(q, k=50, scoring="lucene"))
+    assert got == want and got
 
 
 # -------------------------------------------------------- multi-field
