@@ -34,14 +34,16 @@ def _fullchain_wand(spark: SparkSession, sf_dir: str,
                     queries: dict[str, str]) -> DataFrame:
     """Full-chain engine: analyze -> postings -> WAND topk per query."""
     from php_lucene_analyzer_spark.operators import fulltext as ft
-    from php_lucene_analyzer_spark.operators.postings import build_postings
+    from php_lucene_analyzer_spark.operators.postings import index_corpus
     from php_lucene_analyzer_spark.operators.wand import wand_topk_many
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     tdf = ft.term_doc_freqs(docs, "doc_id", "text").cache()
     n, avgdl = ft.corpus_stats(tdf)
     tstats = ft.term_stats(tdf).cache()
-    postings = build_postings(tdf).cache()
+    postings = index_corpus(docs.repartitionByRange(
+        spark.sparkContext.defaultParallelism, "doc_id"),
+        "doc_id", "text").cache()
     # whole query set in ONE Spark job (bit-identical to per-query WAND);
     # materialize, then UNPERSIST the build caches — the driver calls
     # these entries repeatedly and each call mints fresh plans, so

@@ -33,7 +33,7 @@ def main() -> None:
 
     from php_lucene_analyzer_spark.operators import fulltext as ft
     from php_lucene_analyzer_spark.operators.postings import (
-        build_postings, corpus_stats_from_postings, index_corpus,
+        corpus_stats_from_postings, index_corpus,
         term_stats_from_postings)
     from php_lucene_analyzer_spark.operators.wand import (wand_topk,
                                                           wand_topk_many)
@@ -54,7 +54,9 @@ def main() -> None:
     tdf = ft.term_doc_freqs(docs, "doc_id", "text").cache()
     n, avgdl = ft.corpus_stats(tdf)
     tstats = ft.term_stats(tdf).cache()
-    postings = build_postings(tdf).cache()
+    postings = index_corpus(docs.repartitionByRange(
+        spark.sparkContext.defaultParallelism, "doc_id"),
+        "doc_id", "text").cache()
     postings.count()
     tstats.count()
     dt = time.time() - t0

@@ -28,6 +28,7 @@ import pyspark.sql.functions as F
 
 from .filters import (ENGLISH_STOP_WORDS, compile_synonym_rules,
                       lowercase, stop, synonym_graph, synonyms)
+from .memo import Memo
 from .porter2 import stem as porter2_stem
 from .tokenizer import (MAX_TOKEN_LEN, TYPE_ALPHANUM, TYPE_NUM, Token,
                         standard_tokenize, token_spans)
@@ -60,7 +61,7 @@ class Analyzer:
             len(kk) == 1 and all(len(o) == 1 for o in vv)
             for kk, vv in self.syn_rules.items())
         self._stem = self._make_stemmer(stemmer, hunspell, morphology)
-        self._pipe_cache: dict[str, tuple[str, ...]] = {}
+        self._pipe_cache = Memo(self._pipe, 2_000_000)
 
     def _make_stemmer(self, name, hunspell, morphology) -> Callable[[str], list[str]]:
         if name is None:
@@ -103,9 +104,6 @@ class Analyzer:
 
     # ---- fast term stream (memoized per unique raw token) ---------------
     def _pipe(self, raw: str) -> tuple[str, ...]:
-        got = self._pipe_cache.get(raw)
-        if got is not None:
-            return got
         toks = [Token(raw, 0, len(raw), 1, 1, TYPE_ALPHANUM)]
         if self.word_delimiter:
             toks = word_delimiter_graph(toks)
@@ -115,10 +113,7 @@ class Analyzer:
             toks = stop(toks, self.stop_words)
         if self.synonyms:
             toks = synonyms(toks, self.synonyms)
-        v = tuple(s for t in toks for s in self._stem(t.term))
-        if len(self._pipe_cache) < 2_000_000:
-            self._pipe_cache[raw] = v
-        return v
+        return tuple(s for t in toks for s in self._stem(t.term))
 
     def terms(self, text: str) -> list[str]:
         if self.synonyms and not self._syn_single:
@@ -133,7 +128,7 @@ class Analyzer:
                 continue
             raw = text[s:e]
             if ttype is TYPE_ALPHANUM or ttype is TYPE_NUM:
-                out.extend(self._pipe(raw))
+                out.extend(self._pipe_cache[raw])
             else:
                 out.append(raw.lower())
         return out

@@ -28,8 +28,10 @@ import pyspark.sql.functions as F
 import pyspark.sql.types as T
 
 from .filters import ENGLISH_STOP_WORDS, lowercase, stop
+from .memo import Memo
 from .porter2 import stem
-from .tokenizer import Token, standard_tokenize
+from .tokenizer import (MAX_TOKEN_LEN, TYPE_ALPHANUM, TYPE_NUM, Token,
+                        standard_tokenize, token_spans)
 from .word_delimiter import word_delimiter_graph
 
 __all__ = ["analyze", "analyze_terms", "analyze_udf", "term_vectors_udf",
@@ -76,25 +78,25 @@ def _analyze_series(texts: pd.Series) -> pd.Series:
     return pd.Series(out)
 
 
-class _TokenPipeCache(dict):
-    """raw token text -> tuple of FINAL emitted terms (after WDGF + lower +
-    stop + stem).  Every downstream stage is a pure function of the raw
-    token text, so the whole pipeline tail is memoizable per unique token —
-    the vocabulary-level trick (SURVEY §4) applied to the entire chain.
-    Correctness vs the unfused path is asserted by tests/test_analysis.py.
-    """
-
-    def __missing__(self, raw: str) -> tuple[str, ...]:
-        toks = word_delimiter_graph(
-            [Token(raw, 0, len(raw), 1, 1, "<ALPHANUM>")])
-        toks = stop(lowercase(toks))
-        v = tuple(stem(t.term) for t in toks)
-        if len(self) < 2_000_000:
-            self[raw] = v
-        return v
+def _tail(raw: str, ttype: str) -> tuple[int, tuple, tuple]:
+    """One raw token through WDGF + lower + stop + stem -> (position of
+    its last token, dropped ones included; its FINAL terms; their
+    (term, position, start, length)), positions counted from the raw
+    token's own (0) and offsets from its start."""
+    pos, occ = -1, []
+    for t in lowercase(word_delimiter_graph(
+            [Token(raw, 0, len(raw), 1, 1, ttype)])):
+        pos += t.pos_inc
+        if t.term not in ENGLISH_STOP_WORDS:
+            occ.append((stem(t.term), pos, t.start, t.end - t.start))
+    return pos, tuple(o[0] for o in occ), tuple(occ)
 
 
-_PIPE_CACHE = _TokenPipeCache()
+# raw token text -> _tail.  Every downstream stage is a pure function of
+# the raw token text, so the whole pipeline tail — terms, relative
+# positions and offsets — is memoizable per unique token.  Correctness vs
+# the unfused path is asserted by tests/test_analysis.py.
+_PIPE_CACHE = Memo(lambda raw: _tail(raw, TYPE_ALPHANUM), 2_000_000)
 
 
 def analyze_terms(text: str) -> list[str]:
@@ -103,17 +105,35 @@ def analyze_terms(text: str) -> list[str]:
     Skips offset/position bookkeeping — used for term-vector/tf extraction
     where only the term stream matters.  len(result) == dl.
     """
-    from .tokenizer import MAX_TOKEN_LEN, TYPE_ALPHANUM, TYPE_NUM, token_spans
-
     out: list[str] = []
     for s, e, ttype in token_spans(text):
         if e - s > MAX_TOKEN_LEN:
             continue
         raw = text[s:e]
         if ttype is TYPE_ALPHANUM or ttype is TYPE_NUM:
-            out.extend(_PIPE_CACHE[raw])
+            out.extend(_PIPE_CACHE[raw][1])
         else:
             out.append(raw.lower())  # CJK/SEA: no WDGF/stem, lowercase only
+    return out
+
+
+def _analyze_occurrences(text: str) -> list[tuple[str, int, int, int]]:
+    """Positional fast path: (term, position, start, length) per token of
+    ``analyze(text)``, position being the running sum of pos_inc.  A kept
+    token's position counts every pos_inc before it, dropped (stop word,
+    overlong) tokens' included — so memoized tails add up to the holes
+    the unfused chain leaves."""
+    out: list[tuple[str, int, int, int]] = []
+    nxt = 0  # position the next raw token's first token takes
+    for s, e, ttype in token_spans(text):
+        if e - s > MAX_TOKEN_LEN:
+            nxt += 1
+            continue
+        last, _, occ = (_PIPE_CACHE[text[s:e]]
+                        if ttype is TYPE_ALPHANUM or ttype is TYPE_NUM
+                        else _tail(text[s:e], ttype))
+        out.extend((t, nxt + p, s + st, n) for t, p, st, n in occ)
+        nxt += last + 1
     return out
 
 

@@ -29,6 +29,8 @@ from __future__ import annotations
 import re
 from dataclasses import dataclass, field
 
+from .memo import Memo
+
 
 @dataclass
 class Affix:
@@ -320,13 +322,13 @@ class Stemmer:
         self.longest_only = longest_only
         self._iconv = _ConvTable(d.iconv)
         self._oconv = _ConvTable(d.oconv)
-        self._cache: dict[str, list[str]] = {}
+        self._cache = Memo(self._unique_stems, 1_000_000)
 
     # -- public ------------------------------------------------------------
     def unique_stems(self, word: str) -> list[str]:
-        got = self._cache.get(word)
-        if got is not None:
-            return got
+        return self._cache[word]
+
+    def _unique_stems(self, word: str) -> list[str]:
         # input cleaning FIRST, like the reference (Stemmer.php:91-97 ->
         # Dictionary::cleanInput :1271-1306): ICONV rewrites + IGNORE
         # removal — a Ukrainian word with a combining stress mark must
@@ -347,8 +349,6 @@ class Stemmer:
                         seen.append(s)
         if self.longest_only and seen:
             seen = [max(seen, key=len)]
-        if len(self._cache) < 1_000_000:
-            self._cache[word] = seen
         return seen
 
     # -- internals ----------------------------------------------------------

@@ -35,6 +35,8 @@ from dataclasses import dataclass
 
 import numpy as np
 
+from .memo import Memo
+
 # ---------------------------------------------------------------- codecs
 
 _EN_ALPHABET = "-abcdefghijklmnopqrstuvwxyz"          # base 28 with NUL=0
@@ -336,12 +338,12 @@ class EnglishStemmerPolicy:
 
     def __init__(self, morph: Morphology):
         self.morph = morph
-        self._cache: dict[str, str] = {}
+        self._cache = Memo(self._stem, 1_000_000)
 
     def stem(self, word: str) -> str:
-        got = self._cache.get(word)
-        if got is not None:
-            return got
+        return self._cache[word]
+
+    def _stem(self, word: str) -> str:
         forms = self.morph.normal_forms(word)
         if len(forms) == 1:
             s = forms[0]
@@ -353,8 +355,6 @@ class EnglishStemmerPolicy:
             if word in survivors:
                 survivors.remove(word)
             s = survivors[0] if len(survivors) == 1 else word
-        if len(self._cache) < 1_000_000:
-            self._cache[word] = s
         return s
 
 

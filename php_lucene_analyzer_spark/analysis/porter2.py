@@ -14,6 +14,8 @@ everything else passes through unchanged.
 
 from __future__ import annotations
 
+from .memo import Memo
+
 _VOWELS = frozenset("aeiouy")
 _DOUBLES = ("bb", "dd", "ff", "gg", "mm", "nn", "pp", "rr", "tt")
 _LI_ENDINGS = frozenset("cdeghkmnrt")
@@ -198,19 +200,10 @@ def porter2(word: str) -> str:
 _IS_PLAIN = frozenset("abcdefghijklmnopqrstuvwxyz")
 
 
-class _StemCache(dict):
-    """Vocabulary-level memo — stem unique terms, never per token
-    (the reference hints at this with its md5 memo,
-    /root/reference/src/analyses/morphology/Morphology.php:94-99)."""
-
-    def __missing__(self, term: str) -> str:
-        s = porter2(term) if all(c in _IS_PLAIN for c in term) else term
-        if len(self) < 2_000_000:
-            self[term] = s
-        return s
-
-
-STEM_CACHE = _StemCache()
+# stem unique terms, never per token (the reference hints at this with
+# its md5 memo, src/analyses/morphology/Morphology.php:94-99)
+STEM_CACHE = Memo(lambda term: porter2(term)
+                  if all(c in _IS_PLAIN for c in term) else term, 2_000_000)
 
 
 def stem(term: str) -> str:

@@ -28,6 +28,7 @@ from __future__ import annotations
 
 import unicodedata
 
+from .memo import Memo
 from .tokenizer import TYPE_ALPHANUM, TYPE_NUM, Token
 
 _LOWER, _UPPER, _DIGIT, _DELIM = 0, 1, 2, 3
@@ -98,19 +99,9 @@ def split_word(term: str, split_on_case_change: bool = True,
     return parts
 
 
-class _SplitCache(dict):
-    """Per-process memo of term -> parts (the vocabulary is tiny vs the
-    token stream; mirrors the reference's char-class cache idea,
-    WordDelimiterIterator.php:295-304)."""
-
-    def __missing__(self, term: str) -> list[tuple[str, int, int]]:
-        v = split_word(term)
-        if len(self) < 1_000_000:
-            self[term] = v
-        return v
-
-
-_CACHE = _SplitCache()
+# term -> parts (mirrors the reference's char-class cache idea,
+# WordDelimiterIterator.php:295-304)
+_CACHE = Memo(split_word, 1_000_000)
 
 # public char classes for custom charTypeTable functions (split_word)
 CHAR_LOWER, CHAR_UPPER, CHAR_DIGIT, CHAR_DELIM = (_LOWER, _UPPER,

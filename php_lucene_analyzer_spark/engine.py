@@ -27,8 +27,9 @@ from pyspark.sql import DataFrame, SparkSession
 
 from .analysis import analyze
 from .operators import fulltext as ft
-from .operators.positional import phrase_match, positional_postings
-from .operators.postings import (corpus_stats_from_postings, index_corpus,
+from .operators.positional import phrase_match
+from .operators.postings import (_index_blocks, _split_blocks,
+                                 corpus_stats_from_postings,
                                  term_stats_from_postings, write_postings)
 from .operators.wand import (_filter_terms, prefix_topk, wand_topk_many,
                              wand_topk_terms)
@@ -76,8 +77,11 @@ class FulltextIndex:
               fields: list[str] | None = None,
               offsets: bool = False) -> "FulltextIndex":
         """Deterministic doc ids -> fused posting-block build (one
-        shuffle total); optional packed positional index (uses the
-        flagship chain — phrase semantics are defined by it).
+        shuffle total); optional packed positional index.  ``analyzer``
+        (None = the flagship chain) defines terms AND positions, so
+        queries must reopen the index with the same one.  With
+        ``positional=True`` ONE builder pass analyzes each doc once and
+        emits both tables (operators/postings.py::_index_blocks).
 
         ``fields``: MULTI-FIELD index — list of text columns indexed in
         one pass (``text_col`` ignored; fields[0] is the default field,
@@ -86,13 +90,18 @@ class FulltextIndex:
         ``field:term`` / ``field:(...)`` through ``query()``; BM25 uses
         the FIELD's own avgdl (Lucene per-field norms).  With
         ``positional=True`` EVERY field indexes positionally (r5), so
-        ``field:"exact phrase"`` works; highlighting offsets cover the
-        default field."""
+        ``field:"exact phrase"`` works, and ``offsets=True`` stores char
+        offsets for every field."""
         ids = ft.with_doc_ids(docs, order_cols, partitions).cache()
         n_docs = ids.count()
-        default_col = fields[0] if fields else text_col
-        postings = index_corpus(ids, "doc_id", text_col,
-                                analyzer=analyzer, fields=fields).cache()
+        # one cached build: with positions, postings and pos are column
+        # projections of it (write_postings leaves such a view uncached)
+        blocks = _index_blocks(ids, "doc_id",
+                               list(fields) if fields else [text_col],
+                               analyzer, positions=positional,
+                               store_offsets=offsets).cache()
+        postings, pos = (_split_blocks(blocks) if positional
+                         else (blocks, None))
         tstats = term_stats_from_postings(postings).cache()
         field_avgdl = None
         if fields:
@@ -100,26 +109,10 @@ class FulltextIndex:
             avgdl = field_avgdl[fields[0]]
         else:
             avgdl = corpus_stats_from_postings(postings, n_docs)
-        pos = None
-        if positional:
-            # multi-field: one positional build per field, unioned into
-            # one table under the "<field>\x1fterm" namespace (field 0
-            # bare) — rbuckets share the doc-range partitioning, so the
-            # union keeps the per-bucket doc-disjointness invariant and
-            # field-scoped phrases (title:"...") evaluate per bucket
-            pos = positional_postings(ids, "doc_id", default_col,
-                                      store_offsets=offsets,
-                                      analyzer=analyzer)
-            for f in (fields or [])[1:]:
-                pos = pos.unionByName(positional_postings(
-                    ids, "doc_id", f, store_offsets=offsets,
-                    term_prefix=f + ft.FIELD_SEP, analyzer=analyzer))
-            pos = pos.cache()
         idx = cls(spark, postings, tstats, n_docs, avgdl, analyzer, pos,
                   fields=list(fields) if fields else None,
                   field_avgdl=field_avgdl)
-        idx._cached = [ids, postings, tstats] + ([pos] if pos is not None
-                                                 else [])
+        idx._cached = [ids, blocks, tstats]
         return idx
 
     def close(self) -> None:

@@ -29,8 +29,6 @@ regardless of term df.
 
 from __future__ import annotations
 
-from array import array
-
 import numpy as np
 import pandas as pd
 import pyspark.sql.functions as F
@@ -38,8 +36,11 @@ from pyspark.sql import DataFrame
 
 from ..analysis import analyze
 from ..functions.codec import vbyte_decode, vbyte_encode_slices
+from .postings import (BLOCK_SIZE, FLUSH_POSTINGS, _doc_blocks, _doc_order,
+                       _index_blocks, _reset_gaps, _split_blocks,
+                       pack_bucket_groups)
 
-POS_BLOCK_SIZE = 128
+POS_BLOCK_SIZE = BLOCK_SIZE
 
 POS_SCHEMA = ("term string, rbucket long, block_no int, n int, "
               "first_doc long, last_doc long, sum_tf long, "
@@ -70,50 +71,31 @@ def _pos_block_rows(terms: list[str], term_offsets: np.ndarray,
     backward/forward compatible)."""
     if docs.size == 0:
         return pd.DataFrame(columns=_COLS)
-    from .postings import tile_blocks
-
-    term_idx, block_no, bstarts, bends = tile_blocks(term_offsets,
-                                                     POS_BLOCK_SIZE)
-    # doc gaps with reset at block starts (first doc absolute per block)
-    dgaps = docs.astype(np.uint64).copy()
-    dgaps[1:] -= docs[:-1].astype(np.uint64)
-    dgaps[bstarts] = docs[bstarts]
-    doc_blobs = vbyte_encode_slices(dgaps, bstarts)
-    freq_blobs = vbyte_encode_slices(freqs, bstarts)
-    # positions: gaps reset at each DOC start (Lucene .pos layout)
+    bstarts, cols = _doc_blocks(terms, term_offsets, docs, rbucket)
+    # positions and offset starts: gaps reset at each DOC start (Lucene
+    # .pos layout); a block's runs start at its first doc's first entry
     pdoc = np.concatenate(([0], np.cumsum(freqs))).astype(np.int64)
-    pgaps = pos.astype(np.uint64).copy()
-    pgaps[1:] -= pos[:-1].astype(np.uint64)
-    pgaps[pdoc[:-1]] = pos[pdoc[:-1]]
-    pos_blobs = vbyte_encode_slices(pgaps, pdoc[bstarts])
+    pstarts = pdoc[bstarts]
     if ostart is not None:
-        ogaps = ostart.astype(np.uint64).copy()
-        ogaps[1:] -= ostart[:-1].astype(np.uint64)
-        ogaps[pdoc[:-1]] = ostart[pdoc[:-1]]
-        ostart_blobs = vbyte_encode_slices(ogaps, pdoc[bstarts])
-        olen_blobs = vbyte_encode_slices(olen.astype(np.uint64),
-                                         pdoc[bstarts])
+        ostart_blobs = vbyte_encode_slices(_reset_gaps(ostart, pdoc[:-1]),
+                                           pstarts)
+        olen_blobs = vbyte_encode_slices(olen.astype(np.uint64), pstarts)
     else:
-        ostart_blobs = [None] * bstarts.size
-        olen_blobs = [None] * bstarts.size
-    sum_tf = np.add.reduceat(freqs, bstarts)
+        ostart_blobs = olen_blobs = [None] * bstarts.size
     return pd.DataFrame({
-        "term": np.asarray(terms, dtype=object)[term_idx],
-        "rbucket": np.full(bstarts.size, rbucket, dtype=np.int64),
-        "block_no": block_no.astype(np.int32),
-        "n": (bends - bstarts).astype(np.int32),
-        "first_doc": docs[bstarts].astype(np.int64),
-        "last_doc": docs[bends - 1].astype(np.int64),
-        "sum_tf": sum_tf.astype(np.int64),
-        "doc_blob": doc_blobs,
-        "freq_blob": freq_blobs,
-        "pos_blob": pos_blobs,
+        **cols,
+        "sum_tf": np.add.reduceat(freqs, bstarts).astype(np.int64),
+        "freq_blob": vbyte_encode_slices(freqs, bstarts),
+        "pos_blob": vbyte_encode_slices(_reset_gaps(pos, pdoc[:-1]),
+                                        pstarts),
         "ostart_blob": ostart_blobs,
         "olen_blob": olen_blobs,
-    })
+    }, columns=_COLS)
 
 
-FLUSH_POSITIONS = 1 << 19
+# the builder's one flush bound, counted in tokens (postings.py::
+# FLUSH_POSTINGS): positional and posting builds flush at the same docs
+FLUSH_POSITIONS = FLUSH_POSTINGS
 
 
 def positional_postings(docs_with_ids: DataFrame, id_col: str = "doc_id",
@@ -122,25 +104,25 @@ def positional_postings(docs_with_ids: DataFrame, id_col: str = "doc_id",
                         flush_positions: int = FLUSH_POSITIONS,
                         store_offsets: bool = False,
                         spans_fn=None,
-                        term_prefix: str = "",
                         analyzer=None) -> DataFrame:
-    """Fused analyze (FULL chain, graph positions) -> positional blocks.
-    Requires doc-range-partitioned input (with_doc_ids output) — same
-    segment model as postings.index_corpus: zero extra shuffle, heavy
-    terms split across all partitions.  ``rbucket_base``: per-segment
-    offset for multi-segment builders (see postings.index_corpus).
+    """Fused analyze (FULL chain, graph positions) -> positional blocks:
+    the positional view of postings._index_blocks.  Requires
+    doc-range-partitioned input (with_doc_ids output) — same segment
+    model as postings.index_corpus: zero extra shuffle, heavy terms
+    split across all partitions.  ``rbucket_base``: per-segment offset
+    for multi-segment builders (see postings.index_corpus).
 
     ``terms_fn``: optional text -> list[str]; positions become the token
     indices (no graph holes).  This is the SQL-expressible tokenization
     mode the driver oracle verifies (oracles.py::phrase_match); the
     default (None) keeps the full chain's pos_inc/pos_len graph.
 
-    Like postings.index_corpus, the per-partition accumulator flushes to
-    finished block rows every ``flush_positions`` stored positions (the
-    positional working set is the BM25 one plus the flat position
-    arrays, so the bound matters even more here); each flush gets its
-    own rbucket and holds all positions of a disjoint doc set, so
-    phrase evaluation per rbucket still sees complete documents.
+    The accumulator flushes to finished block rows every
+    ``flush_positions`` tokens — the same bound, counted the same way,
+    as index_corpus's ``flush_postings``, so both tables cut the same
+    rbuckets and blocks; each flush holds all positions of a disjoint
+    doc set, so phrase evaluation per rbucket still sees complete
+    documents.
 
     ``store_offsets``: also store each kept occurrence's CHAR OFFSETS
     (start, token length) — the reference token stream's
@@ -150,133 +132,17 @@ def positional_postings(docs_with_ids: DataFrame, id_col: str = "doc_id",
     tokenization mode).  Stacked tokens at one position keep the FIRST
     offset (the original's, Lucene WDGF convention).
 
-    ``term_prefix``: stored-term namespace prefix — multi-field builds
-    pass "<field>\\x1f" so per-field positional postings share one
-    table (engine.build fields=..., positional=True; field-scoped
-    phrases address them via phrase_match(field=...)).
-
     ``analyzer``: custom chain (analysis.analyzers.Analyzer) — its
     ``tokens()`` graph (pos_inc/pos_len, synonym insertions) defines
     positions; None = the default full chain.  Queries must pass the
     SAME analyzer to phrase_match/phrase_match_many."""
-    from .postings import RBUCKET_STRIDE
-
-    with_off = store_offsets
-
-    def build(batches):
-        from pyspark import TaskContext
-
-        base = rbucket_base + TaskContext.get().partitionId()
-        # per-term accumulators: docs, per-doc counts, flat positions
-        # (+ flat offset starts/lengths when with_off)
-        acc: dict[str, tuple] = {}
-        state = {"pending": 0, "flush_no": 0}
-
-        def flush() -> pd.DataFrame | None:
-            if not acc:
-                return None
-            terms = sorted(acc)
-            dsizes = np.array([len(acc[t][0]) for t in terms],
-                              dtype=np.int64)
-            offsets = np.concatenate(([0], np.cumsum(dsizes)))
-            psizes = np.array([len(acc[t][2]) for t in terms],
-                              dtype=np.int64)
-            poffs = np.concatenate(([0], np.cumsum(psizes)))
-            docs_a = np.empty(int(offsets[-1]), dtype=np.uint64)
-            freqs_a = np.empty(int(offsets[-1]), dtype=np.uint64)
-            pos_a = np.empty(int(poffs[-1]), dtype=np.uint64)
-            os_a = np.empty(int(poffs[-1]), dtype=np.uint64) \
-                if with_off else None
-            ol_a = np.empty(int(poffs[-1]), dtype=np.uint64) \
-                if with_off else None
-            for i, term in enumerate(terms):
-                t = acc[term]
-                d, f, p = t[0], t[1], t[2]
-                s, e = offsets[i], offsets[i + 1]
-                ps, pe = poffs[i], poffs[i + 1]
-                docs_a[s:e] = d
-                freqs_a[s:e] = f
-                pos_a[ps:pe] = p
-                if with_off:
-                    os_a[ps:pe] = t[3]
-                    ol_a[ps:pe] = t[4]
-                # doc-order guard (same as postings.index_corpus): range
-                # partitioning does NOT sort within partitions, so input
-                # rows can arrive doc-unordered — re-sort docs AND gather
-                # each doc's position slice along
-                if e - s > 1 and not (docs_a[s + 1:e] >= docs_a[s:e - 1]).all():
-                    order = np.argsort(docs_a[s:e], kind="stable")
-                    fl = freqs_a[s:e].astype(np.int64)
-                    starts = ps + np.concatenate(
-                        ([0], np.cumsum(fl)))[:-1]
-                    gather = np.concatenate(
-                        [np.arange(starts[j], starts[j] + fl[j])
-                         for j in order])
-                    docs_a[s:e] = docs_a[s:e][order]
-                    freqs_a[s:e] = freqs_a[s:e][order]
-                    pos_a[ps:pe] = pos_a[gather]
-                    if with_off:
-                        os_a[ps:pe] = os_a[gather]
-                        ol_a[ps:pe] = ol_a[gather]
-            rb = base * RBUCKET_STRIDE + state["flush_no"]
-            acc.clear()
-            state["pending"] = 0
-            state["flush_no"] += 1
-            return _pos_block_rows(terms, offsets, docs_a, freqs_a,
-                                   pos_a, rb, os_a, ol_a)
-
-        for pdf in batches:
-            for did, text in zip(pdf[id_col].to_numpy(), pdf[text_col]):
-                # pos -> (start, len) per term; first token at a
-                # position wins (stacked WDGF parts share the original's
-                # offsets)
-                per_term: dict[str, dict[int, tuple[int, int]]] = {}
-                if spans_fn is not None:
-                    for pos, (term, st, en) in enumerate(
-                            spans_fn(text or "")):
-                        per_term.setdefault(term, {}) \
-                            .setdefault(pos, (st, en - st))
-                elif terms_fn is not None:
-                    for pos, term in enumerate(terms_fn(text or "")):
-                        per_term.setdefault(term, {}) \
-                            .setdefault(pos, (0, 0))
-                else:
-                    pos = -1
-                    toks = analyzer.tokens(text or "") \
-                        if analyzer is not None else analyze(text or "")
-                    for t in toks:
-                        pos += t.pos_inc
-                        per_term.setdefault(t.term, {}) \
-                            .setdefault(pos, (t.start, t.end - t.start))
-                did = int(did)
-                for term, pmap in per_term.items():
-                    term = term_prefix + term
-                    ps = sorted(pmap)
-                    e = acc.get(term)
-                    if e is None:
-                        e = acc[term] = (array("q"), array("q"),
-                                         array("q"), array("q"),
-                                         array("q"))
-                    e[0].append(did)
-                    e[1].append(len(ps))
-                    e[2].extend(ps)
-                    if with_off:
-                        e[3].extend(pmap[p][0] for p in ps)
-                        e[4].extend(pmap[p][1] for p in ps)
-                    state["pending"] += len(ps)
-                if state["pending"] >= flush_positions:
-                    out = flush()
-                    if out is not None:
-                        yield out
-        out = flush()
-        if out is not None:
-            yield out
-
     if store_offsets and terms_fn is not None and spans_fn is None:
         raise ValueError("store_offsets needs spans_fn (or the default "
                          "full chain) — a terms_fn carries no offsets")
-    return docs_with_ids.select(id_col, text_col).mapInPandas(
-        build, schema=POS_SCHEMA)
+    return _split_blocks(_index_blocks(
+        docs_with_ids, id_col, [text_col], analyzer, rbucket_base,
+        flush_positions, positions=True, store_offsets=store_offsets,
+        terms_fn=terms_fn, spans_fn=spans_fn))[1]
 
 
 def _decode_arrays(doc_blob: bytes, freq_blob: bytes,
@@ -795,8 +661,6 @@ def compact_positional(pos_postings: DataFrame,
     (re-sorting if bucket doc ranges interleave), and re-encodes
     through _pos_block_rows.  Phrase/first_match results are
     bit-identical; only the physical layout changes."""
-    from .postings import pack_bucket_groups
-
     stats = pos_postings.groupBy("rbucket").agg(
         F.min("first_doc").alias("lo"), F.sum("sum_tf").alias("w"))
     mapping = pack_bucket_groups(stats, target_positions)
@@ -806,61 +670,31 @@ def compact_positional(pos_postings: DataFrame,
         has_off = ("ostart_blob" in pdf.columns
                    and pdf["ostart_blob"].iloc[0] is not None)
         terms, offsets = [], [0]
-        d_parts, f_parts, p_parts = [], [], []
-        os_parts, ol_parts = [], []
-        total = 0
+        parts: list[list] = [[], [], [], [], []]
         for term, g in pdf.groupby("term", sort=True):
-            g = g.sort_values("first_doc")
-            t_docs, t_freqs, t_plists = [], [], []
-            t_oslices, t_olslices = [], []
-            for _, row in g.iterrows():
-                docs, freqs, plists = _decode_block(
-                    row["doc_blob"], row["freq_blob"], row["pos_blob"])
-                t_docs.append(docs)
-                t_freqs.append(freqs)
-                t_plists.extend(plists)
-                if has_off:
-                    abs_os, ol = _decode_offsets(
-                        row["ostart_blob"], row["olen_blob"], freqs)
-                    bounds = np.cumsum(freqs)[:-1]
-                    t_oslices.extend(np.split(abs_os, bounds))
-                    t_olslices.extend(np.split(ol, bounds))
-            docs_t = np.concatenate(t_docs)
-            freqs_t = np.concatenate(t_freqs)
-            # doc-order guard (same as compact_postings): buckets are
-            # doc-SET disjoint only — interleaved doc ranges across
-            # flushes make first_doc-sorted concatenation non-monotonic
-            # and the gap encode would wrap.  Re-sort docs and gather
-            # each doc's position (and offset) slice along (the
-            # builder's flush-guard pattern).
-            if docs_t.size > 1 and not (docs_t[1:] >= docs_t[:-1]).all():
-                order = np.argsort(docs_t, kind="stable")
-                docs_t = docs_t[order]
-                freqs_t = freqs_t[order]
-                t_plists = [t_plists[j] for j in order]
-                if has_off:
-                    t_oslices = [t_oslices[j] for j in order]
-                    t_olslices = [t_olslices[j] for j in order]
-            d_parts.append(docs_t.astype(np.uint64))
-            f_parts.append(freqs_t.astype(np.uint64))
-            p_parts.append(np.concatenate(t_plists).astype(np.uint64)
-                           if t_plists else np.empty(0, dtype=np.uint64))
+            g = g.sort_values(["first_doc", "block_no"])
+            for part, arr in zip(parts, _decode_flat(g)):
+                part.append(arr)
             if has_off:
-                os_parts.append(
-                    np.concatenate(t_oslices).astype(np.uint64)
-                    if t_oslices else np.empty(0, dtype=np.uint64))
-                ol_parts.append(
-                    np.concatenate(t_olslices).astype(np.uint64)
-                    if t_olslices else np.empty(0, dtype=np.uint64))
-            total += docs_t.size
+                for ob, lb, f in zip(g["ostart_blob"], g["olen_blob"],
+                                     g["freq_blob"]):
+                    starts, lens = _decode_offsets(
+                        ob, lb, vbyte_decode(f).astype(np.int64))
+                    parts[3].append(starts)
+                    parts[4].append(lens)
             terms.append(term)
-            offsets.append(total)
-        return _pos_block_rows(
-            terms, np.asarray(offsets, dtype=np.int64),
-            np.concatenate(d_parts), np.concatenate(f_parts),
-            np.concatenate(p_parts), gid_v,
-            np.concatenate(os_parts) if has_off else None,
-            np.concatenate(ol_parts) if has_off else None)
+            offsets.append(offsets[-1] + int(g["n"].sum()))
+        offsets = np.asarray(offsets, dtype=np.int64)
+        cols = [np.concatenate(p).astype(np.uint64)
+                for p in parts[:5 if has_off else 3]]
+        # buckets are doc-SET disjoint only: re-sort interleaved doc
+        # ranges, gathering each doc's positions (and offsets) along
+        order, gather = _doc_order(offsets, cols[0], cols[1])
+        if order is not None:
+            cols = ([c[order] for c in cols[:2]]
+                    + [c[gather] for c in cols[2:]])
+        return _pos_block_rows(terms, offsets, *cols[:3], gid_v,
+                               *cols[3:])
 
     return (pos_postings.join(F.broadcast(mapping), "rbucket")
             .groupBy("_gid")

@@ -1,25 +1,23 @@
 """Posting-list construction: delta-gap + VByte blocks with block-max skip
 metadata (SURVEY.md §2-C "Posting-list build" / "Segment merge").
 
-Two build paths, one storage schema:
+One build path, one storage schema:
 
-``index_corpus``  (the scale path, used by bench + entry):
-    ONE pass: the documents are already range-partitioned by doc_id
-    (with_doc_ids), so each partition is a disjoint contiguous doc range —
-    the Lucene *segment* model.  mapInPandas fuses analyzer + posting
-    builder: per partition it accumulates term -> (docs, tfs, dls) and
-    emits finished block rows.  NO raw (doc,term,tf) row ever crosses the
-    wire; the only shuffle in the whole index build is the one that
-    assigned doc ids.  "Segment merge" costs zero: blocks are doc-sorted
-    within a partition and partitions are doc-disjoint, so the per-term
-    global posting list is just the rows ordered by (rbucket, block_no).
-    Zipf skew: a heavy term's postings are split across ALL partitions —
-    no reducer ever holds a full heavy-term list.
-
-``build_postings``  (the composable path over an existing
-    (doc_id, term, tf, dl) DataFrame): order-preserving salted shuffle on
-    (term, rbucket = doc_id // bucket_span), then applyInPandas per group.
-    Same output schema; used when term frequencies come from elsewhere.
+``index_corpus`` and ``positional.positional_postings`` are column views
+of ONE private builder, ``_index_blocks``.  The documents are already
+range-partitioned by doc_id (with_doc_ids), so each partition is a
+disjoint contiguous doc range — the Lucene *segment* model.  Per
+partition, one mapInPandas analyzes each doc once per field, accumulates
+term -> (docs, tfs, dls[, freqs, positions, offsets]) and emits finished
+block rows; with positions, a term's doc blocks and positional blocks
+tile identically, so both ride in one wide row and the two tables are
+projections of it.  NO raw (doc,term,tf) row ever crosses the wire; the
+only shuffle in the whole index build is the one that assigned doc ids.
+"Segment merge" costs zero: blocks are doc-sorted within a partition and
+partitions are doc-disjoint, so the per-term global posting list is just
+the rows ordered by (rbucket, block_no).  Zipf skew: a heavy term's
+postings are split across ALL partitions — no reducer ever holds a full
+heavy-term list.
 
 Term statistics FALL OUT of the block metadata (df = Σ n, cf = Σ sum_tf,
 Σdl = Σ cf over all terms) — no separate corpus-wide aggregation pass.
@@ -47,20 +45,24 @@ import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
+from ..functions.codec import vbyte_encode_slices
 
 BLOCK_SIZE = 128
 
-# index_corpus flushes its per-partition accumulator to finished block
-# rows every ~FLUSH_POSTINGS postings: bounds the working set to ~12 MB
-# of array('q') per worker regardless of partition size (32 workers on
-# one box otherwise contend for DRAM bandwidth as partitions grow — the
-# measured 1M-doc scaling gap, BENCH/BASELINE.md).  Each flush gets its
-# own rbucket: a doc's postings all land in one flush (docs are analyzed
-# whole), so every rbucket still holds ALL postings of a disjoint doc
-# set — the WAND-bucket invariant.  RBUCKET_STRIDE leaves room for 2^10
-# flushes per partition (a flush covers >= 0.5M postings, so hitting the
-# stride would need a >500M-posting input split — two orders beyond
-# spark.sql.files.maxPartitionBytes).
+# The builder flushes its per-partition accumulator to finished block
+# rows every ~FLUSH_POSTINGS TOKENS (Σ dl of the docs accumulated —
+# postings and stored positions are each at most that): bounds the
+# working set to ~4 MB of array('q') per accumulator column per worker,
+# whatever the partition size (32 workers on one box otherwise contend
+# for DRAM bandwidth as partitions grow — the measured 1M-doc scaling
+# gap, BENCH/BASELINE.md).  It is the ONE bound of every build: runs
+# with and without positions flush at the same docs.  Each flush gets
+# its own rbucket: a doc's postings and positions, in all its fields,
+# land in one flush (docs are analyzed whole), so every rbucket still
+# holds ALL postings of a disjoint doc set — the WAND-bucket invariant.
+# RBUCKET_STRIDE leaves room for 2^10 flushes per partition (a flush
+# covers >= 0.5M tokens, so hitting the stride would need a >500M-token
+# input split — two orders beyond spark.sql.files.maxPartitionBytes).
 FLUSH_POSTINGS = 1 << 19
 RBUCKET_STRIDE = 1 << 10
 
@@ -76,9 +78,9 @@ _COLS = ["term", "rbucket", "block_no", "n", "first_doc", "last_doc",
 
 def tile_blocks(term_offsets: np.ndarray, block_size: int
                 ) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
-    """Tile per-term slices into <= block_size-doc blocks (shared by the
-    BM25 and positional builders): -> (term_idx, block_no, bstarts,
-    bends), all in the concatenated doc-index space."""
+    """Tile per-term slices into <= block_size-doc blocks (the one tiling
+    of both block layouts, via _doc_blocks): -> (term_idx, block_no,
+    bstarts, bends), all in the concatenated doc-index space."""
     counts = np.diff(term_offsets)
     nblocks = (counts + block_size - 1) // block_size
     term_idx = np.repeat(np.arange(len(counts)), nblocks)
@@ -87,6 +89,32 @@ def tile_blocks(term_offsets: np.ndarray, block_size: int
     bstarts = term_offsets[term_idx] + block_no * block_size
     bends = np.minimum(bstarts + block_size, term_offsets[term_idx + 1])
     return term_idx, block_no, bstarts, bends
+
+
+def _reset_gaps(vals: np.ndarray, starts: np.ndarray) -> np.ndarray:
+    """Delta gaps of ``vals``, restarting (absolute value) at each index
+    in ``starts`` — a block's first doc, a doc's first position."""
+    gaps = vals.astype(np.uint64)
+    gaps[1:] -= vals[:-1].astype(np.uint64)
+    gaps[starts] = vals[starts]
+    return gaps
+
+
+def _doc_blocks(terms: list[str], term_offsets: np.ndarray,
+                docs: np.ndarray, rbucket: int) -> tuple[np.ndarray, dict]:
+    """Tile per-term doc slices into BLOCK_SIZE blocks -> (block starts,
+    the columns every block layout shares: keys + delta-gap doc_blob)."""
+    term_idx, block_no, bstarts, bends = tile_blocks(term_offsets,
+                                                     BLOCK_SIZE)
+    return bstarts, {
+        "term": np.asarray(terms, dtype=object)[term_idx],
+        "rbucket": np.full(bstarts.size, rbucket, dtype=np.int64),
+        "block_no": block_no.astype(np.int32),
+        "n": (bends - bstarts).astype(np.int32),
+        "first_doc": docs[bstarts].astype(np.int64),
+        "last_doc": docs[bends - 1].astype(np.int64),
+        "doc_blob": vbyte_encode_slices(_reset_gaps(docs, bstarts), bstarts),
+    }
 
 
 def _block_rows(terms: list[str], term_offsets: np.ndarray,
@@ -99,37 +127,191 @@ def _block_rows(terms: list[str], term_offsets: np.ndarray,
     term's slice doc-ascending.  ONE VByte pass encodes everything; block
     stats come from np.*.reduceat — no per-term small-array overhead.
     """
-    from ..functions.codec import vbyte_encode_slices
-
-    n = docs.size
-    if n == 0:
+    if docs.size == 0:
         return pd.DataFrame(columns=_COLS)
-    term_idx, block_no, bstarts, bends = tile_blocks(term_offsets,
-                                                     BLOCK_SIZE)
-    # delta-gap with reset at block starts (first doc absolute per block)
-    gaps = docs.astype(np.uint64).copy()
-    gaps[1:] -= docs[:-1].astype(np.uint64)
-    gaps[bstarts] = docs[bstarts]
-    doc_blobs = vbyte_encode_slices(gaps, bstarts)
-    tf_blobs = vbyte_encode_slices(tfs, bstarts)
-    dl_blobs = vbyte_encode_slices(dls, bstarts)
-    max_tf = np.maximum.reduceat(tfs, bstarts)
-    min_dl = np.minimum.reduceat(dls, bstarts)
-    sum_tf = np.add.reduceat(tfs, bstarts)
+    bstarts, cols = _doc_blocks(terms, term_offsets, docs, rbucket)
     return pd.DataFrame({
-        "term": np.asarray(terms, dtype=object)[term_idx],
-        "rbucket": np.full(bstarts.size, rbucket, dtype=np.int64),
-        "block_no": block_no.astype(np.int32),
-        "n": (bends - bstarts).astype(np.int32),
-        "first_doc": docs[bstarts].astype(np.int64),
-        "last_doc": docs[bends - 1].astype(np.int64),
-        "max_tf": max_tf.astype(np.int32),
-        "min_dl": min_dl.astype(np.int32),
-        "sum_tf": sum_tf.astype(np.int64),
-        "doc_blob": doc_blobs,
-        "tf_blob": tf_blobs,
-        "dl_blob": dl_blobs,
-    })
+        **cols,
+        "max_tf": np.maximum.reduceat(tfs, bstarts).astype(np.int32),
+        "min_dl": np.minimum.reduceat(dls, bstarts).astype(np.int32),
+        "sum_tf": np.add.reduceat(tfs, bstarts).astype(np.int64),
+        "tf_blob": vbyte_encode_slices(tfs, bstarts),
+        "dl_blob": vbyte_encode_slices(dls, bstarts),
+    }, columns=_COLS)
+
+
+_WIDE_SCHEMA = (POSTINGS_SCHEMA + ", pos_sum_tf long, freq_blob binary, "
+                "pos_blob binary, ostart_blob binary, olen_blob binary")
+
+
+def _split_blocks(blocks: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """Wide builder rows -> (postings, positional) tables: two column
+    projections of one build (cache or checkpoint ``blocks`` once)."""
+    return blocks.select(*_COLS), blocks.select(
+        *_COLS[:6], F.col("pos_sum_tf").alias("sum_tf"), "doc_blob",
+        "freq_blob", "pos_blob", "ostart_blob", "olen_blob")
+
+
+def _doc_order(offsets: np.ndarray, docs: np.ndarray,
+               runs: np.ndarray | None = None):
+    """Doc-order guard -> (row order, flat gather), or (None, None) when
+    every term's rows are already doc-ascending.  Rows reach an encoder
+    doc-unordered when a partition arrives unsorted (range partitioning
+    does not sort within partitions) or when compaction concatenates
+    doc-SET-disjoint buckets; the uint64 gap encode would then wrap.
+    ``order`` sorts each term's slice of ``docs`` (terms stay grouped);
+    ``gather`` moves each row's run of ``runs[i]`` flat entries
+    (positions, offsets) along with it."""
+    row_term = np.repeat(np.arange(offsets.size - 1), np.diff(offsets))
+    if not (docs[1:] < docs[:-1])[row_term[1:] == row_term[:-1]].any():
+        return None, None
+    order = np.lexsort((docs, row_term))
+    if runs is None:
+        return order, None
+    runs = runs.astype(np.int64)
+    starts, lens = (np.cumsum(runs) - runs)[order], runs[order]
+    return order, (np.arange(lens.sum(), dtype=np.int64)
+                   + np.repeat(starts - (np.cumsum(lens) - lens), lens))
+
+
+def _index_blocks(docs_with_ids: DataFrame, id_col: str, fields: list[str],
+                  analyzer=None, rbucket_base: int = 0,
+                  flush_tokens: int = FLUSH_POSTINGS,
+                  positions: bool = False, store_offsets: bool = False,
+                  terms_fn=None, spans_fn=None) -> DataFrame:
+    """The one index builder behind index_corpus, positional_postings,
+    FulltextIndex.build and the streaming segments.
+
+    Per doc-range partition it analyzes each doc once per field (the
+    token source is picked once, before the doc loop), keeps one
+    accumulator and flushes it every ~``flush_tokens`` tokens (see
+    FLUSH_POSTINGS).  Postings tf and dl count every token, stacked ones
+    included; positional freq counts distinct positions (the first
+    token at a position keeps its offsets).  Without ``positions`` the
+    rows are POSTINGS_SCHEMA and the memoized ``terms()`` stream feeds
+    them; with it the analyzer's ``tokens()`` does (the default chain:
+    ``_analyze_occurrences``, memoized per raw token) and the rows are
+    _WIDE_SCHEMA — a term's doc blocks and
+    positional blocks tile identically (same slices, one BLOCK_SIZE), so
+    ``_split_blocks`` projects the two tables out of one row."""
+    from .fulltext import FIELD_SEP
+
+    if positions:
+        from .positional import _pos_block_rows
+        if spans_fn is not None:
+            def occurrences(text):
+                return ((t, p, s, e - s)
+                        for p, (t, s, e) in enumerate(spans_fn(text)))
+        elif terms_fn is not None:
+            def occurrences(text):
+                return ((t, p, 0, 0) for p, t in enumerate(terms_fn(text)))
+        elif analyzer is not None:
+            def occurrences(text):
+                pos = -1
+                for t in analyzer.tokens(text):
+                    pos += t.pos_inc
+                    yield t.term, pos, t.start, t.end - t.start
+        else:
+            from ..analysis.chain import _analyze_occurrences as occurrences
+
+        def doc_terms(text):
+            # term -> [tf, {pos: (start, len)}]
+            per_term: dict[str, list] = {}
+            dl = 0
+            for term, pos, start, length in occurrences(text):
+                dl += 1
+                e = per_term.get(term)
+                if e is None:
+                    e = per_term[term] = [0, {}]
+                e[0] += 1
+                e[1].setdefault(pos, (start, length))
+            return dl, per_term.items()
+    else:
+        if analyzer is not None:
+            terms_of = analyzer.terms
+        else:
+            from ..analysis.chain import analyze_terms as terms_of
+
+        def doc_terms(text):
+            toks = terms_of(text)
+            return len(toks), Counter(toks).items()
+
+    prefixes = [""] + [f + FIELD_SEP for f in fields[1:]]
+    # accumulator columns: doc, tf, dl [, freq | flat pos [, start, len]]
+    width = (7 if store_offsets else 5) if positions else 3
+
+    def build(batches):
+        from array import array
+
+        from pyspark import TaskContext
+
+        base = rbucket_base + TaskContext.get().partitionId()
+        # array('q') accumulators: ~4x less memory than Python int lists
+        # (the per-partition working set is what pressures the DRAM bus
+        # under 32 workers — see BENCH/BASELINE.md scaling notes)
+        acc: dict[str, tuple] = {}
+
+        def flush(rb: int) -> pd.DataFrame:
+            terms = sorted(acc)
+            cols = [np.concatenate([np.frombuffer(acc[t][j], dtype=np.int64)
+                                    for t in terms]).astype(np.uint64)
+                    for j in range(width)]
+            offsets = np.concatenate(([0], np.cumsum(
+                [len(acc[t][0]) for t in terms]))).astype(np.int64)
+            order, gather = _doc_order(offsets, cols[0],
+                                       cols[3] if positions else None)
+            if order is not None:
+                cols = ([c[order] for c in cols[:4]]
+                        + [c[gather] for c in cols[4:]])
+            acc.clear()
+            out = _block_rows(terms, offsets, *cols[:3], rb)
+            if positions:
+                pos = _pos_block_rows(terms, offsets, cols[0], *cols[3:5],
+                                      rb, *cols[5:])
+                out["pos_sum_tf"] = pos["sum_tf"].to_numpy()
+                for c in ("freq_blob", "pos_blob", "ostart_blob",
+                          "olen_blob"):
+                    out[c] = pos[c].to_numpy()
+            return out
+
+        pending = flush_no = 0
+        for pdf in batches:
+            ids = pdf[id_col].to_numpy()
+            field_vals = [pdf[f].tolist() for f in fields]
+            for ri, did in enumerate(ids):
+                # all fields of a doc accumulate BEFORE the flush check:
+                # a doc's postings never straddle flushes (the rbucket
+                # doc-disjointness invariant, per doc across fields)
+                for prefix, vals in zip(prefixes, field_vals):
+                    dl, items = doc_terms(vals[ri] or "")
+                    for term, val in items:
+                        key = prefix + term if prefix else term
+                        e = acc.get(key)
+                        if e is None:
+                            e = acc[key] = tuple(array("q")
+                                                 for _ in range(width))
+                        e[0].append(did)
+                        e[2].append(dl)
+                        if positions:
+                            tf, pmap = val
+                            ps = sorted(pmap)
+                            e[1].append(tf)
+                            e[3].append(len(ps))
+                            e[4].extend(ps)
+                            if store_offsets:
+                                e[5].extend(pmap[p][0] for p in ps)
+                                e[6].extend(pmap[p][1] for p in ps)
+                        else:
+                            e[1].append(val)
+                    pending += dl
+                if pending >= flush_tokens and acc:
+                    yield flush(base * RBUCKET_STRIDE + flush_no)
+                    pending, flush_no = 0, flush_no + 1
+        if acc:
+            yield flush(base * RBUCKET_STRIDE + flush_no)
+
+    return docs_with_ids.select(id_col, *fields).mapInPandas(
+        build, schema=_WIDE_SCHEMA if positions else POSTINGS_SCHEMA)
 
 
 def index_corpus(docs_with_ids: DataFrame, id_col: str = "doc_id",
@@ -137,14 +319,15 @@ def index_corpus(docs_with_ids: DataFrame, id_col: str = "doc_id",
                  rbucket_base: int = 0,
                  flush_postings: int = FLUSH_POSTINGS,
                  fields: list[str] | None = None) -> DataFrame:
-    """Fused analyze + posting-block build, one pass, zero extra shuffle.
+    """Fused analyze + posting-block build, one pass, zero extra shuffle
+    (the postings view of ``_index_blocks``, fed by ``terms()``).
 
     ``docs_with_ids`` must be partitioned into disjoint doc_id ranges
     (with_doc_ids output is).  Partition memory is bounded by
-    ``flush_postings`` (the accumulator spills finished doc sets to block
-    rows incrementally — see FLUSH_POSTINGS), NOT by partition or term
-    df size — the heavy-term problem is structurally absent and the
-    working set stays cache-friendly at any input split size.
+    ``flush_postings`` tokens (the accumulator spills finished doc sets
+    to block rows incrementally — see FLUSH_POSTINGS), NOT by partition
+    or term df size — the heavy-term problem is structurally absent and
+    the working set stays cache-friendly at any input split size.
 
     ``analyzer``: optional analysis.analyzers.Analyzer (custom chain —
     hunspell/morphology stemmers, char maps, custom stop sets); defaults
@@ -162,132 +345,13 @@ def index_corpus(docs_with_ids: DataFrame, id_col: str = "doc_id",
     field, stored bare; other fields' terms are stored as
     "<field>\\x1f<term>" (fulltext.FIELD_SEP), so per-field df/cf fall
     out of the ordinary term stats and dl is the FIELD length (Lucene's
-    per-field norms).  One pass matters beyond the scan cost: a doc's
-    postings across ALL its fields land in the same flush, hence the
-    same rbucket — the per-bucket boolean/WAND kernels see a doc's
-    complete cross-field membership (two per-field passes would flush
-    independently and break that invariant).
+    per-field norms).  A doc's postings across ALL its fields land in
+    the same flush, hence the same rbucket — the per-bucket
+    boolean/WAND kernels see a doc's complete cross-field membership.
     """
-    from .fulltext import FIELD_SEP
-
-    if analyzer is not None:
-        terms_of = analyzer.terms
-    else:
-        from ..analysis.chain import analyze_terms as terms_of
-
-    field_list = list(fields) if fields else [text_col]
-    prefixes = [""] + [f + FIELD_SEP for f in field_list[1:]]
-
-    def build(batches):
-        from array import array
-
-        from pyspark import TaskContext
-
-        base = rbucket_base + TaskContext.get().partitionId()
-        # array('q') accumulators: ~4x less memory than Python int lists
-        # (the per-partition working set is what pressures the DRAM bus
-        # under 32 workers — see BENCH/BASELINE.md scaling notes)
-        acc: dict[str, tuple] = {}
-        state = {"pending": 0, "flush_no": 0}
-
-        def flush() -> pd.DataFrame | None:
-            if not acc:
-                return None
-            terms = sorted(acc)
-            sizes = np.array([len(acc[t][0]) for t in terms], dtype=np.int64)
-            offsets = np.concatenate(([0], np.cumsum(sizes)))
-            total = int(offsets[-1])
-            docs_a = np.empty(total, dtype=np.uint64)
-            tfs_a = np.empty(total, dtype=np.uint64)
-            dls_a = np.empty(total, dtype=np.uint64)
-            for i, term in enumerate(terms):
-                s, e = offsets[i], offsets[i + 1]
-                d, t, l = acc[term]
-                docs_a[s:e] = d
-                tfs_a[s:e] = t
-                dls_a[s:e] = l
-                if e - s > 1 and not (docs_a[s + 1:e] >= docs_a[s:e - 1]).all():
-                    order = np.argsort(docs_a[s:e], kind="stable")
-                    docs_a[s:e] = docs_a[s:e][order]
-                    tfs_a[s:e] = tfs_a[s:e][order]
-                    dls_a[s:e] = dls_a[s:e][order]
-            rb = base * RBUCKET_STRIDE + state["flush_no"]
-            acc.clear()
-            state["pending"] = 0
-            state["flush_no"] += 1
-            return _block_rows(terms, offsets, docs_a, tfs_a, dls_a, rb)
-
-        for pdf in batches:
-            ids = pdf[id_col].to_numpy()
-            field_vals = [pdf[f].tolist() for f in field_list]
-            for ri, did in enumerate(ids):
-                # all fields of a doc accumulate BEFORE the flush check:
-                # a doc's postings never straddle flushes (the rbucket
-                # doc-disjointness invariant, now per doc across fields)
-                for prefix, vals in zip(prefixes, field_vals):
-                    toks = terms_of(vals[ri] or "")
-                    dl = len(toks)
-                    c = Counter(toks)
-                    for t, tf in c.items():
-                        key = prefix + t if prefix else t
-                        e = acc.get(key)
-                        if e is None:
-                            e = acc[key] = (array("q"), array("q"),
-                                            array("q"))
-                        e[0].append(did)
-                        e[1].append(tf)
-                        e[2].append(dl)
-                    state["pending"] += len(c)
-                if state["pending"] >= flush_postings:
-                    out = flush()
-                    if out is not None:
-                        yield out
-        out = flush()
-        if out is not None:
-            yield out
-
-    return docs_with_ids.select(id_col, *field_list).mapInPandas(
-        build, schema=POSTINGS_SCHEMA)
-
-
-def build_postings(tdf: DataFrame, bucket_span: int = 1 << 20) -> DataFrame:
-    """(doc_id, term, tf, dl) rows -> posting blocks via an
-    ORDER-PRESERVING salted shuffle.
-
-    The salt ``rbucket = doc_id // bucket_span`` is a contiguous doc
-    range: per-term block sequences ordered by (rbucket, block_no) are
-    already globally doc-sorted, so the merge phase is free, and a heavy
-    term is split across as many tasks as it spans buckets.
-
-    Span note (r6 NEGATIVE result): deriving the span adaptively
-    (~2 buckets per core, so a sub-1M-doc corpus gets multi-task query
-    kernels instead of one bucket) was built and MEASURED SLOWER at
-    sf1.0 — bm25_batch100 5.4 -> 9.3 s, wand_fullchain_sql 3.3 ->
-    6.8 s: the postings table is small enough that AQE coalesces the
-    kernel shuffle back to a few tasks, so the extra per-group
-    pandas/Arrow overhead (buckets x queries kernel launches, 49x the
-    groupBy groups at build) is pure loss.  The fixed 2^20 span stands;
-    at >= 10^9 docs it already yields thousands of buckets and the
-    kernel parallelism problem does not exist.
-    """
-    salted = tdf.select(
-        "term",
-        (F.col("doc_id") / F.lit(bucket_span)).cast("long").alias("rbucket"),
-        "doc_id", "tf", "dl")
-
-    def build_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        term = pdf["term"].iloc[0]
-        rbucket = int(pdf["rbucket"].iloc[0])
-        order = np.argsort(pdf["doc_id"].to_numpy(), kind="stable")
-        docs_a = pdf["doc_id"].to_numpy()[order].astype(np.uint64)
-        tfs_a = pdf["tf"].to_numpy()[order].astype(np.uint64)
-        dls_a = pdf["dl"].to_numpy()[order].astype(np.uint64)
-        offsets = np.array([0, docs_a.size], dtype=np.int64)
-        return _block_rows([term], offsets, docs_a, tfs_a, dls_a, rbucket)
-
-    return (salted.repartition("term", "rbucket")
-            .groupBy("term", "rbucket")
-            .applyInPandas(build_group, schema=POSTINGS_SCHEMA))
+    return _index_blocks(docs_with_ids, id_col,
+                         list(fields) if fields else [text_col], analyzer,
+                         rbucket_base, flush_postings)
 
 
 def pack_bucket_groups(stats: DataFrame, target: int) -> DataFrame:
@@ -369,34 +433,19 @@ def compact_postings(postings: DataFrame,
         total = 0
         for term, g in pdf.groupby("term", sort=True):
             g = g.sort_values("first_doc")
-            td = [delta_decode(vbyte_decode(db)).astype(np.uint64)
-                  for db in g["doc_blob"]]
-            tt = [vbyte_decode(tb).astype(np.uint64) for tb in g["tf_blob"]]
-            tl = [vbyte_decode(lb).astype(np.uint64) for lb in g["dl_blob"]]
-            docs_t = np.concatenate(td)
-            tfs_t = np.concatenate(tt)
-            dls_t = np.concatenate(tl)
-            # doc-order guard: buckets are doc-SET disjoint, not doc-RANGE
-            # disjoint (index_corpus tolerates doc-unordered partition
-            # input, so two flushes of one partition can interleave doc
-            # ranges) — first_doc-sorted concatenation is then
-            # non-monotonic and the uint64 gap encode in _block_rows
-            # would silently wrap.  Re-sort the term's postings like the
-            # builder's flush guard does.
-            if docs_t.size > 1 and not (docs_t[1:] >= docs_t[:-1]).all():
-                order = np.argsort(docs_t, kind="stable")
-                docs_t, tfs_t, dls_t = (docs_t[order], tfs_t[order],
-                                        dls_t[order])
-            d_parts.append(docs_t)
-            t_parts.append(tfs_t)
-            l_parts.append(dls_t)
-            total += docs_t.size
+            d_parts += [delta_decode(vbyte_decode(db)) for db in g["doc_blob"]]
+            t_parts += [vbyte_decode(tb) for tb in g["tf_blob"]]
+            l_parts += [vbyte_decode(lb) for lb in g["dl_blob"]]
+            total += int(g["n"].sum())
             terms.append(term)
             offsets.append(total)
-        return _block_rows(terms, np.asarray(offsets, dtype=np.int64),
-                           np.concatenate(d_parts),
-                           np.concatenate(t_parts),
-                           np.concatenate(l_parts), gid_v)
+        offsets = np.asarray(offsets, dtype=np.int64)
+        cols = [np.concatenate(p).astype(np.uint64)
+                for p in (d_parts, t_parts, l_parts)]
+        order, _ = _doc_order(offsets, cols[0])
+        if order is not None:
+            cols = [c[order] for c in cols]
+        return _block_rows(terms, offsets, *cols, gid_v)
 
     return (postings.join(F.broadcast(mapping), "rbucket")
             .groupBy("_gid")
@@ -470,12 +519,17 @@ def write_postings(postings: DataFrame, path: str) -> None:
     needs (boundary sampling + the real shuffle) — otherwise the sampling
     job silently RE-RUNS the whole upstream index build (measured: 2x
     build cost on a 1M-doc corpus).  A DataFrame the CALLER already
-    persisted is left persisted (unpersisting here would silently evict
-    the caller's cache — persist/unpersist key on the plan, not on this
-    reference)."""
+    persisted — or a column projection of one, like the postings view
+    of a cached positional build — is left as it is: both passes then
+    scan the caller's cache, and persisting here would cache the blocks
+    a second time (or, on unpersist, evict the caller's cache — persist/
+    unpersist key on the plan, not on this reference)."""
     from pyspark import StorageLevel
 
-    already = postings.storageLevel != StorageLevel.NONE
+    plan = postings._jdf.queryExecution().withCachedData()
+    while plan.nodeName() == "Project":
+        plan = plan.child()
+    already = plan.nodeName() == "InMemoryRelation"
 
     def write(df):
         from ..functions.header import (POSTINGS_CODEC, POSTINGS_VERSION,

@@ -1080,7 +1080,7 @@ def q_wand_fullchain_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
     identically; WAND fetches k=40 raw so the rounded re-rank has
     margin at the k=10 boundary."""
     from .operators import fulltext as ft
-    from .operators.postings import build_postings
+    from .operators.postings import index_corpus
     from .operators.wand import wand_topk_many
 
     docs = _docs(spark, sf_dir)
@@ -1099,7 +1099,8 @@ def q_wand_fullchain_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
     tdf.write.mode("overwrite").parquet(fullchain_dump_path(sf_dir))
     n, avgdl = ft.corpus_stats(tdf)
     tstats = ft.term_stats(tdf)
-    postings = build_postings(tdf)
+    postings = index_corpus(docs.repartitionByRange(
+        spark.sparkContext.defaultParallelism, "doc_id"), "doc_id", "text")
     res = wand_topk_many(postings, tstats, n, avgdl,
                          FULLCHAIN_WAND_QUERIES, k=40)
     w = Window.partitionBy("qid").orderBy(F.desc("score"),

@@ -24,8 +24,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql.streaming import StreamingQuery
 
-from ..operators.positional import positional_postings
-from ..operators.postings import index_corpus
+from ..operators.postings import _index_blocks, _split_blocks
 
 EPOCH_SHIFT = 40
 
@@ -44,22 +43,24 @@ def _index_batch(batch_df: DataFrame, epoch_id: int, out_dir: str,
     # every existing id")
     doc_base = (int(epoch_id) + 1) << EPOCH_SHIFT
     # rbucket base keeps stream buckets disjoint from batch buckets AND
-    # from other epochs (index_corpus grew this parameter for exactly
+    # from other epochs (the builder grew this parameter for exactly
     # this caller; correctness never depends on it — WAND orders blocks
     # by first_doc — but bucket balance does)
     rb_base = (int(epoch_id) + 1) << 32
-    ids = (batch_df
-           .withColumn("doc_id", (F.lit(doc_base) + w - 1).cast("long"))
-           .localCheckpoint(eager=False))  # reused by both index kinds
-    seg = os.path.join(out_dir, f"epoch={int(epoch_id)}")
-    index_corpus(ids, "doc_id", "content", rbucket_base=rb_base) \
-        .write.mode("overwrite").parquet(seg)
+    ids = batch_df.withColumn("doc_id",
+                              (F.lit(doc_base) + w - 1).cast("long"))
+    blocks = _index_blocks(ids, "doc_id", ["content"],
+                           rbucket_base=rb_base,
+                           positions=positional_dir is not None,
+                           store_offsets=store_offsets)
+    postings = blocks
     if positional_dir is not None:
-        pseg = os.path.join(positional_dir, f"epoch={int(epoch_id)}")
-        positional_postings(ids, "doc_id", "content",
-                            rbucket_base=rb_base,
-                            store_offsets=store_offsets) \
-            .write.mode("overwrite").parquet(pseg)
+        # one builder run feeds both segment tables
+        postings, pos = _split_blocks(blocks.localCheckpoint(eager=False))
+        pos.write.mode("overwrite").parquet(
+            os.path.join(positional_dir, f"epoch={int(epoch_id)}"))
+    postings.write.mode("overwrite").parquet(
+        os.path.join(out_dir, f"epoch={int(epoch_id)}"))
 
 
 def stream_index(spark: SparkSession, input_dir: str, out_dir: str,

@@ -100,6 +100,31 @@ def test_fast_path_matches_full_chain():
         assert len(slow) == len(fast)
 
 
+def test_positional_fast_path_matches_full_chain():
+    """_analyze_occurrences (memoized per raw token) must give every token
+    of the unfused chain its term, position and offsets — stop-word and
+    overlong-token holes included — on a cold and on a warm memo."""
+    import json
+
+    from php_lucene_analyzer_spark.analysis.chain import _analyze_occurrences
+    from php_lucene_analyzer_spark.corpus import _gen_content
+
+    cases = [c["input"] for c in
+             json.loads((FIXTURES / "tokenizer_golden.json").read_text())]
+    cases += [_gen_content(i) for i in range(25)]
+    cases += ["", "the a an", "汉字 test O'Neil's j2se " + "x" * 300,
+              "x" * 300 + " the " + "y" * 300 + " fooBar",
+              "The-Quick wi-fi THE_AND_OF is_the of-the 3.14 It's",
+              "日本語とEnglishとрусский 混ざった text123"]
+    for _ in range(2):
+        for text in cases:
+            pos, slow = -1, []
+            for t in analyze(text):
+                pos += t.pos_inc
+                slow.append((t.term, pos, t.start, t.end - t.start))
+            assert _analyze_occurrences(text) == slow, text[:60]
+
+
 def test_analyzer_class_variants():
     """Analyzer composition parity: default == module chain; hunspell and
     morphology stemmer slots produce their family's outputs."""

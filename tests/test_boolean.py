@@ -12,8 +12,7 @@ import pytest
 from php_lucene_analyzer_spark.analysis import analyze
 from php_lucene_analyzer_spark.operators import fulltext as ft
 from php_lucene_analyzer_spark.operators.boolean import boolean_topk
-from php_lucene_analyzer_spark.operators.postings import (build_postings,
-                                                           index_corpus)
+from php_lucene_analyzer_spark.operators.postings import index_corpus
 
 
 @pytest.fixture(scope="module")
@@ -21,9 +20,11 @@ def index(spark, docs):
     tdf = ft.term_doc_freqs(docs, "doc_id", "text").cache()
     n, avgdl = ft.corpus_stats(tdf)
     tstats = ft.term_stats(tdf).cache()
-    # small bucket span so the kernel runs across multiple rbuckets;
-    # "fused" is the single-pass index_corpus layout FulltextIndex builds
-    postings = build_postings(tdf, bucket_span=100).cache()
+    # five doc-range partitions so the kernel runs across multiple
+    # rbuckets; "fused" keeps the input's own partitioning
+    postings = index_corpus(docs.repartitionByRange(5, "doc_id"),
+                            "doc_id", "text").cache()
+    assert postings.select("rbucket").distinct().count() == 5
     fused = index_corpus(docs, "doc_id", "text").cache()
     return dict(n=n, avgdl=avgdl, tstats=tstats, postings=postings,
                 fused=fused)

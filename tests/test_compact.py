@@ -9,7 +9,7 @@ import pyspark.sql.functions as F
 
 from php_lucene_analyzer_spark.operators import fulltext as ft
 from php_lucene_analyzer_spark.operators.postings import (
-    BLOCK_SIZE, build_postings, compact_postings, term_stats_from_postings)
+    BLOCK_SIZE, compact_postings, index_corpus, term_stats_from_postings)
 from php_lucene_analyzer_spark.operators.wand import wand_topk
 
 QUERIES = ["fast merge join", "window order sort", "dup", "the spark stream"]
@@ -17,12 +17,14 @@ QUERIES = ["fast merge join", "window order sort", "dup", "the spark stream"]
 
 @pytest.fixture(scope="module")
 def fragmented(spark, docs):
-    """Heavily fragmented build: 25-doc buckets -> 20 buckets, most
-    blocks holding a handful of docs."""
+    """Heavily fragmented build: 20 doc-range partitions of 25 docs ->
+    20 buckets, most blocks holding a handful of docs."""
     tdf = ft.term_doc_freqs(docs, "doc_id", "text").cache()
     n, avgdl = ft.corpus_stats(tdf)
     tstats = ft.term_stats(tdf).cache()
-    postings = build_postings(tdf, bucket_span=25).cache()
+    postings = index_corpus(docs.repartitionByRange(20, "doc_id"),
+                            "doc_id", "text").cache()
+    assert postings.select("rbucket").distinct().count() == 20
     return dict(n=n, avgdl=avgdl, tstats=tstats, postings=postings)
 
 

@@ -51,14 +51,14 @@ def test_embedded_fields_check():
 
 
 def test_write_postings_stamps_header(spark, docs):
-    from php_lucene_analyzer_spark.operators import fulltext as ft
     from php_lucene_analyzer_spark.operators.postings import (
-        build_postings, read_postings, write_postings)
+        index_corpus, read_postings, write_postings)
 
-    tdf = ft.term_doc_freqs(docs, "doc_id", "text")
+    postings = index_corpus(docs.repartitionByRange(
+        spark.sparkContext.defaultParallelism, "doc_id"), "doc_id", "text")
     with tempfile.TemporaryDirectory() as d:
         out = d + "/p"
-        write_postings(build_postings(tdf), out)
+        write_postings(postings, out)
         assert os.path.exists(os.path.join(out, "_FORMAT.json"))
         assert read_postings(spark, out).count() > 0
         # tamper: an older layout version must fail at open, not decode

@@ -1,5 +1,5 @@
 """Index correctness (SURVEY.md §5.4-5.5): brute-force pandas BM25 oracle ==
-DataFrame engine == block-max WAND (both build paths), including exact
+DataFrame engine == block-max WAND (two bucket layouts), including exact
 float equality and rank identity at different parallelism levels."""
 
 import math
@@ -13,8 +13,7 @@ import pyspark.sql.functions as F
 from php_lucene_analyzer_spark.analysis import analyze
 from php_lucene_analyzer_spark.operators import fulltext as ft
 from php_lucene_analyzer_spark.operators.postings import (
-    build_postings, corpus_stats_from_postings, index_corpus,
-    term_stats_from_postings)
+    corpus_stats_from_postings, index_corpus, term_stats_from_postings)
 from php_lucene_analyzer_spark.operators.wand import wand_topk
 
 QUERIES = [
@@ -31,8 +30,10 @@ def index(spark, docs):
     tdf = ft.term_doc_freqs(docs, "doc_id", "text").cache()
     n, avgdl = ft.corpus_stats(tdf)
     tstats = ft.term_stats(tdf).cache()
-    # small bucket span so multiple rbuckets exist at 500 docs
-    postings = build_postings(tdf, bucket_span=100).cache()
+    # five doc-range partitions so multiple rbuckets exist at 500 docs
+    postings = index_corpus(docs.repartitionByRange(5, "doc_id"),
+                            "doc_id", "text").cache()
+    assert postings.select("rbucket").distinct().count() == 5
     return dict(tdf=tdf, n=n, avgdl=avgdl, tstats=tstats, postings=postings)
 
 
@@ -98,7 +99,8 @@ def test_wand_matches_exhaustive_bit_identical(spark, index, query):
 
 @pytest.mark.parametrize("query", QUERIES)
 def test_fused_build_wand_matches_exhaustive(spark, index, fused_index, query):
-    """index_corpus (map-side segments) == build_postings == exhaustive."""
+    """Both index_corpus layouts (5 range buckets, with_doc_ids
+    segments) == exhaustive."""
     assert fused_index["n"] == index["n"]
     assert fused_index["avgdl"] == index["avgdl"]
     exh = ft.bm25_topk(index["tdf"], index["tstats"], index["n"],
@@ -496,7 +498,9 @@ def test_wand_bit_identity_at_bench_scale(spark):
     tdf = ft.term_doc_freqs(docs01, "doc_id", "text").cache()
     n, avgdl = ft.corpus_stats(tdf)
     tstats = ft.term_stats(tdf).cache()
-    postings = build_postings(tdf, bucket_span=1000).cache()
+    postings = index_corpus(docs01.repartitionByRange(5, "doc_id"),
+                            "doc_id", "text").cache()
+    assert postings.select("rbucket").distinct().count() == 5
     pdf = docs01.toPandas()
     for query in ("fast merge join order", "the spark stream batch",
                   "window sort vector"):

@@ -12,7 +12,7 @@ import pyspark.sql.functions as F
 
 from php_lucene_analyzer_spark.operators import fulltext as ft
 from php_lucene_analyzer_spark.operators.postings import (
-    build_postings, write_postings)
+    index_corpus, write_postings)
 
 
 def _plan(df) -> str:
@@ -40,8 +40,8 @@ def test_filter_pushdown_to_parquet(spark):
 
 
 def test_postings_scan_prunes_by_term(spark, docs):
-    tdf = ft.term_doc_freqs(docs, "doc_id", "text")
-    postings = build_postings(tdf)
+    postings = index_corpus(docs.repartitionByRange(
+        spark.sparkContext.defaultParallelism, "doc_id"), "doc_id", "text")
     with tempfile.TemporaryDirectory() as d:
         write_postings(postings, d + "/p")
         stored = spark.read.parquet(d + "/p")
@@ -120,12 +120,11 @@ def test_index_build_single_shuffle(spark):
 def test_semijoin_term_fetch_is_broadcast(spark, docs):
     """Past _ISIN_MAX the term predicate must plan as a BROADCAST left-semi
     hash join (not a shuffle join), keeping large query batches O(set)."""
-    from php_lucene_analyzer_spark.operators import fulltext as ft
-    from php_lucene_analyzer_spark.operators.postings import build_postings
     from php_lucene_analyzer_spark.operators.wand import _filter_terms
 
-    tdf = ft.term_doc_freqs(docs, "doc_id", "text")
-    postings = build_postings(tdf, bucket_span=100)
+    postings = index_corpus(docs.repartitionByRange(5, "doc_id"),
+                            "doc_id", "text")
+    assert postings.select("rbucket").distinct().count() == 5
     terms = [f"term{i}" for i in range(600)]  # > _ISIN_MAX
     plan = _filter_terms(postings, terms)._jdf.queryExecution() \
         .executedPlan().toString()
@@ -251,7 +250,8 @@ def test_tree_kernel_scan_prunes_by_term(spark, docs):
     tdf = ft.term_doc_freqs(docs, "doc_id", "text")
     n, avgdl = ft.corpus_stats(tdf)
     tstats = ft.term_stats(tdf)
-    postings = build_postings(tdf)
+    postings = index_corpus(docs.repartitionByRange(
+        spark.sparkContext.defaultParallelism, "doc_id"), "doc_id", "text")
     with tempfile.TemporaryDirectory() as d:
         write_postings(postings, d + "/p")
         stored = spark.read.parquet(d + "/p")
