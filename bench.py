@@ -98,8 +98,9 @@ def main() -> None:
     extra["serving_qps_batch100"] = round(100 / dt_big, 1) if dt_big else 0.0
     assert n_hits > 0
 
-    # --- fuzzy serving latency (round 4: ALL terms of a query expand in
-    # ONE Spark job — engine.search_fuzzy via expand_specs) ---
+    # --- fuzzy serving latency (ALL terms of a query expand in one
+    # expand_specs call, on the driver from the index's term dictionary
+    # — engine.search_fuzzy) ---
     from php_lucene_analyzer_spark.engine import FulltextIndex
     fidx = FulltextIndex(spark, postings, tstats, n, avgdl)
     fuzzy_queries = ["stram", "mrege ordre", "custoner valeu"]

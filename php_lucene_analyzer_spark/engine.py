@@ -27,12 +27,17 @@ from pyspark.sql import DataFrame, SparkSession
 
 from .analysis import analyze
 from .operators import fulltext as ft
+from .operators.boolean import _flat_tree, _leaf_terms, _tree_many, _tree_one
 from .operators.positional import phrase_match
 from .operators.postings import (_index_blocks, _split_blocks,
                                  corpus_stats_from_postings,
                                  term_stats_from_postings, write_postings)
-from .operators.wand import (_filter_terms, prefix_topk, wand_topk_many,
-                             wand_topk_terms)
+from .operators.wand import _wand_many, _wand_one, term_dfs
+
+# above this many terms the index keeps no driver-resident dictionary and
+# every df lookup or expansion runs as a Spark job over ``tstats``
+# (about 50 MB of driver memory at the cap)
+TERM_DICT_CAP = 250_000
 
 
 def _field_avgdl(postings: DataFrame, fields: list[str],
@@ -67,6 +72,8 @@ class FulltextIndex:
         self.positional = positional
         self.fields = fields            # multi-field: fields[0] = default
         self.field_avgdl = field_avgdl  # {field: avgdl} (multi-field)
+        self._tdict: ft.TermDictionary | None = None
+        self._tdict_read = False
 
     # ------------------------------------------------------------- build
     @classmethod
@@ -131,6 +138,53 @@ class FulltextIndex:
         self.close()
 
     # ------------------------------------------------------------- query
+    def _dictionary(self) -> "ft.TermDictionary | None":
+        """The sorted term -> df dictionary, collected on the FIRST read
+        (one job; build() and load() launch none) and kept on the
+        driver — the index is immutable.  None when the index has more
+        than TERM_DICT_CAP terms: callers then take the Spark path."""
+        if not self._tdict_read:
+            rows = (self.tstats.select("term", "df")
+                    .limit(TERM_DICT_CAP + 1).collect())
+            self._tdict = ft.TermDictionary(rows) \
+                if len(rows) <= TERM_DICT_CAP else None
+            self._tdict_read = True
+        return self._tdict
+
+    def _dfs(self, terms) -> dict[str, int]:
+        """A {term: df} map covering ``terms`` (absent terms missing):
+        the resident dictionary, else one filtered collect."""
+        d = self._dictionary()
+        return d.df if d is not None else term_dfs(self.tstats, terms)
+
+    def _expand(self, specs: list[dict], **kw) -> list:
+        """operators/fulltext.py::expand_specs over this index: on the
+        driver from the resident dictionary, regex specs (and every spec
+        above the cap) in one Spark job."""
+        return ft.expand_specs(self.tstats, specs,
+                               default_field=(self.fields[0] if self.fields
+                                              else None),
+                               tdict=self._dictionary(), **kw)
+
+    def _wand(self, entries: list[tuple[str, float]], k: int) -> DataFrame:
+        """WAND over [(term, weight)] entries, a set of one."""
+        return _wand_one(self.postings, self._dfs({t for t, _ in entries}),
+                         self.n_docs, self.avgdl, entries, k)
+
+    def _tree(self, tree, instances, k: int | None, avgdl,
+              with_counts: bool = False) -> DataFrame:
+        """The tree kernel on one compiled tree (boolean_tree_topk)."""
+        return _tree_one(self.postings, self._dfs(_leaf_terms(tree)),
+                         self.n_docs, avgdl, tree, instances, k,
+                         with_counts=with_counts)
+
+    def _trees(self, trees: dict, instances: dict, k: int | None, avgdl,
+               **kw) -> DataFrame:
+        """The tree kernel on a set of trees (boolean_tree_topk_many)."""
+        terms = set().union(*map(_leaf_terms, trees.values()))
+        return _tree_many(self.postings, self._dfs(terms), self.n_docs,
+                          avgdl, trees, instances, k, **kw)
+
     def _terms(self, query: str) -> list[str]:
         if self.analyzer is not None:
             return sorted(set(self.analyzer.terms(query)))
@@ -140,23 +194,25 @@ class FulltextIndex:
         """Block-max WAND top-k -> DataFrame(doc_id, score), total order
         (score desc, doc_id asc) — bit-identical to the exhaustive
         scorer."""
-        return wand_topk_terms(self.postings, self.tstats, self.n_docs,
-                               self.avgdl, self._terms(query), k)
+        return self._wand([(t, 1.0) for t in self._terms(query)], k)
 
     def search_many(self, queries: dict[str, str], k: int = 10) -> DataFrame:
         """Whole query set in ONE Spark job -> (qid, doc_id, score)."""
-        terms_fn = (self.analyzer.terms if self.analyzer is not None
-                    else None)
-        return wand_topk_many(self.postings, self.tstats, self.n_docs,
-                              self.avgdl, queries, k, terms_fn=terms_fn)
+        entries = {qid: [(t, 1.0) for t in self._terms(q)]
+                   for qid, q in queries.items()}
+        terms = {t for es in entries.values() for t, _ in es}
+        return _wand_many(self.postings, self._dfs(terms), self.n_docs,
+                          self.avgdl, entries, k)
 
     def search_prefix(self, prefix: str, k: int = 10,
                       max_expansions: int = 64) -> DataFrame:
-        """Wildcard `p*` query (the automaton package's PrefixQuery role):
-        range scan on the sorted term dictionary, bounded df-descending
-        expansion (Lucene's top-terms rewrite), WAND over the union."""
-        return prefix_topk(self.postings, self.tstats, self.n_docs,
-                           self.avgdl, prefix, k, max_expansions)
+        """Wildcard `p*` query (the automaton package's PrefixQuery role)
+        on the default field: range scan on the sorted term dictionary,
+        bounded df-descending expansion (Lucene's top-terms rewrite),
+        WAND over the union."""
+        [exp] = self._expand([{"kind": "prefix", "value": prefix.lower(),
+                               "field": None, "cap": max_expansions}])
+        return self._wand([(t, 1.0) for t, _, _ in exp], k)
 
     def search_fuzzy(self, query: str, k: int = 10, max_edits: int = 2,
                      prefix_len: int = 0,
@@ -164,9 +220,10 @@ class FulltextIndex:
         """Lucene FuzzyQuery's role: expand each analyzed query term to
         its Levenshtein neighborhood over the term dictionary, then
         block-max WAND over the expanded OR-set.  ALL terms expand in
-        ONE Spark job (operators/fulltext.py::expand_specs — length-band
-        prune + JVM levenshtein, no DFA, no per-term round trips); the
-        collect is bounded: an edit-distance neighborhood is tiny.
+        one expand_specs call (operators/fulltext.py — length-band
+        prune, then Levenshtein; on the driver when the dictionary is
+        resident, else one Spark job); an edit-distance neighborhood is
+        tiny.
 
         ``scoring``:
           "bm25"   — plain BM25 over the expanded set (engine default;
@@ -177,15 +234,11 @@ class FulltextIndex:
                      term reachable from two query terms scores once
                      per clause (BooleanQuery of per-term fuzzy
                      clauses).  Exact-match terms keep weight 1."""
-        from .operators.fulltext import expand_specs
         qterms = self._terms(query)
-        if not qterms:
-            return self.spark.createDataFrame(
-                [], "doc_id long, score double")
         specs = [{"kind": "fuzzy", "value": t, "edits": max_edits,
                   "prefix_len": prefix_len, "field": None, "cap": None}
                  for t in qterms]
-        expansions = expand_specs(self.tstats, specs)
+        expansions = self._expand(specs)
         if scoring == "lucene":
             boosts: list[tuple[str, float]] = []
             for qt, exp in zip(qterms, expansions):
@@ -193,18 +246,9 @@ class FulltextIndex:
                     w = 1.0 - (dist / min(len(qt), len(term))
                                if dist else 0.0)
                     boosts.append((term, w))
-            if not boosts:
-                return self.spark.createDataFrame(
-                    [], "doc_id long, score double")
-            return wand_topk_terms(self.postings, self.tstats,
-                                   self.n_docs, self.avgdl, None, k,
-                                   term_boosts=sorted(boosts))
+            return self._wand(sorted(boosts), k)
         expanded = sorted({t for exp in expansions for t, _, _ in exp})
-        if not expanded:
-            return self.spark.createDataFrame(
-                [], "doc_id long, score double")
-        return wand_topk_terms(self.postings, self.tstats, self.n_docs,
-                               self.avgdl, expanded, k)
+        return self._wand([(t, 1.0) for t in expanded], k)
 
     def search_boolean(self, must: list[str] | None = None,
                        should: list[str] | None = None,
@@ -227,11 +271,10 @@ class FulltextIndex:
         should is normalized to must-only (scores once; see
         boolean_topk's overlap note) — ``query()``'s tree path scores
         per clause instead."""
-        from .operators.boolean import boolean_topk
         expand = lambda qs: [t for q in (qs or []) for t in self._terms(q)]
-        return boolean_topk(self.postings, self.tstats, self.n_docs,
-                            self.avgdl, expand(must), expand(should),
-                            expand(must_not), msm, k)
+        tree, instances = _flat_tree(expand(must), expand(should),
+                                     expand(must_not), msm)
+        return self._tree(tree, instances, k, float(self.avgdl))
 
     def more_like_this(self, text: str, k: int = 10, max_terms: int = 25,
                        exclude_doc: int | None = None) -> DataFrame:
@@ -252,18 +295,14 @@ class FulltextIndex:
             cnt = Counter(self.analyzer.terms(text))
         else:
             cnt = Counter(t.term for t in analyze(text))
-        if not cnt:
-            return self.spark.createDataFrame([], "doc_id long, score double")
-        rows = (_filter_terms(self.tstats, sorted(cnt))
-                .select("term", "df").collect())
-        dfs = {r["term"]: int(r["df"]) for r in rows}
+        dfs = self._dfs(set(cnt))
         ranked = sorted(
-            ((t, cnt[t] * ft.idf(self.n_docs, dfs[t])) for t in dfs),
+            ((t, cnt[t] * ft.idf(self.n_docs, dfs[t]))
+             for t in cnt if t in dfs),
             key=lambda x: (-x[1], x[0]))
         seed = sorted(t for t, _ in ranked[:max_terms])
-        out = wand_topk_terms(
-            self.postings, self.tstats, self.n_docs, self.avgdl, seed,
-            k + (1 if exclude_doc is not None else 0))
+        out = self._wand([(t, 1.0) for t in seed],
+                         k + (1 if exclude_doc is not None else 0))
         if exclude_doc is not None:
             out = (out.filter(F.col("doc_id") != exclude_doc)
                    .orderBy(F.desc("score"), F.asc("doc_id")).limit(k))
@@ -301,8 +340,11 @@ class FulltextIndex:
         variant and each doc's actual matches select its row; at most 4
         nested phrases per query (2^k variants); nested phrases gate
         matching but do not score (documented).  EVERY dictionary expansion
-        (fuzzy/prefix/wildcard/regex/range) runs in ONE Spark job
-        (operators/fulltext.py::expand_specs); positive clauses cap at
+        (fuzzy/prefix/wildcard/regex/range) goes through ONE
+        operators/fulltext.py::expand_specs call: on the driver from the
+        resident term dictionary, with regex clauses (and every clause
+        of an index above TERM_DICT_CAP terms) in one Spark job;
+        positive clauses cap at
         ``max_expansions`` df-descending (Lucene top-terms rewrite),
         NEGATIVE clauses expand unbounded (exclusion needs the full
         match set — Lucene constant-score rewrite; at extreme
@@ -329,9 +371,7 @@ class FulltextIndex:
         term-level NOT — r4 ADVICE item 1).  ``field:"..."`` phrases
         evaluate on that field's positional postings (multi-field
         builds index every field positionally)."""
-        from .operators.boolean import boolean_tree_topk
-        from .operators.fulltext import (FIELD_SEP, OversizedExpansion,
-                                         expand_specs)
+        from .operators.fulltext import FIELD_SEP, OversizedExpansion
         from .operators.postings import matched_doc_ids
         from .querycompile import _Leaf, compile_query
         from .queryparser import parse_query
@@ -351,9 +391,7 @@ class FulltextIndex:
                          for sid in lf.spec_ids}
         ncm = self.NEG_COLLECT_MAX if neg_collect_max is None \
             else neg_collect_max
-        expansions = expand_specs(self.tstats, plan.specs,
-                                  default_field=default_field,
-                                  neg_collect_max=ncm,
+        expansions = self._expand(plan.specs, neg_collect_max=ncm,
                                   neg_docset_sids=root_neg_sids) \
             if plan.specs else []
         tree, instances = plan.finalize(expansions)
@@ -377,12 +415,8 @@ class FulltextIndex:
             if not has_terms:
                 return empty
             if ext_not_df is None:
-                return boolean_tree_topk(
-                    self.postings, self.tstats, self.n_docs, av, tree,
-                    instances, k)
-            res = boolean_tree_topk(
-                self.postings, self.tstats, self.n_docs, av, tree,
-                instances, None)
+                return self._tree(tree, instances, k, av)
+            res = self._tree(tree, instances, None, av)
             return (res.join(ext_not_df, "doc_id", "left_anti")
                     .orderBy(F.desc("score"), F.asc("doc_id"))
                     .limit(k))
@@ -405,8 +439,6 @@ class FulltextIndex:
         (driver-side boolean evaluation per mask).  Nested phrases GATE
         matching; they do not score (documented divergence — only
         top-level SHOULD phrases score)."""
-        from .operators.boolean import _leaf_terms, boolean_tree_topk_many
-
         kn = len(npids)
 
         def subst(node, mask):
@@ -462,10 +494,9 @@ class FulltextIndex:
                 ("leaf", -1000, tuple(sorted(_leaf_terms(tree)))),
             ), (), 1)
             insts_v["seen"] = []
-        kern = boolean_tree_topk_many(
-            self.postings, self.tstats, self.n_docs, av, trees_v,
-            insts_v, None, k_map={q: None for q in trees_v},
-            counts_qids=counts_qids) if run_kernel else None
+        kern = self._trees(trees_v, insts_v, None, av,
+                           k_map={q: None for q in trees_v},
+                           counts_qids=counts_qids) if run_kernel else None
 
         mask_expr = F.lit(0)
         for j, npid in enumerate(npids):
@@ -534,7 +565,6 @@ class FulltextIndex:
         in phrase-id order with 0.0 for unmatched phrases — the same
         association query_many's fold uses, so the two paths are
         bit-identical."""
-        from .operators.boolean import boolean_tree_topk
         from .operators.fulltext import K1 as _K1, FIELD_SEP, idf
         from .operators.positional import phrase_match_many
         from .queryparser import MUST, MUST_NOT, SHOULD
@@ -587,18 +617,15 @@ class FulltextIndex:
                                 # kernel-selected docs had NOT applied
                                 # per variant — nothing left to anti-join
         else:
-            kernel_out = boolean_tree_topk(
-                self.postings, self.tstats, self.n_docs, av, tree,
-                instances, None, with_counts=with_counts) if has_terms \
-                else None
+            kernel_out = self._tree(tree, instances, None, av,
+                                    with_counts) if has_terms else None
 
             # NOT-term doc set for frames the kernel doesn't bound
             not_docs = None
             if tree[3] and not plan.has_must:
                 nt = ("node", (), tree[3], (), 1)
-                not_docs = boolean_tree_topk(
-                    self.postings, self.tstats, self.n_docs, self.avgdl,
-                    nt, [], None).select("doc_id")
+                not_docs = self._tree(nt, [], None,
+                                      self.avgdl).select("doc_id")
 
             if plan.has_must:
                 joined = kernel_out.join(pmp, "doc_id", "left")
@@ -633,9 +660,7 @@ class FulltextIndex:
         all_pterms = sorted({
             (f"{p[4]}{FIELD_SEP}{t}" if p[4] else t)
             for _pid, p in scoring_items for t in self._terms(p[1])})
-        dfs = {r["term"]: int(r["df"]) for r in
-               _filter_terms(self.tstats, all_pterms)
-               .select("term", "df").collect()} if all_pterms else {}
+        dfs = self._dfs(all_pterms)
         n_total = F.coalesce(F.col("n_should"), F.lit(0)) \
             if with_counts and has_terms else F.lit(0)
         p_score = F.lit(0.0)
@@ -675,7 +700,9 @@ class FulltextIndex:
         """Execute a SET of classic-Lucene query strings in ONE Spark
         job per stage -> (qid, doc_id, score), bit-identical to
         per-query ``query()`` — the serving shape: every dictionary
-        expansion of EVERY query runs in one expand_specs job, every
+        expansion of EVERY query goes through one expand_specs call (on
+        the driver from the resident dictionary; regex clauses, or every
+        clause above TERM_DICT_CAP terms, in one Spark job), every
         compiled tree evaluates against each posting bucket in one
         applyInPandas pass (operators/boolean.py::
         boolean_tree_topk_many), and (r5) every phrase clause of every
@@ -683,10 +710,8 @@ class FulltextIndex:
         (operators/positional.py::phrase_match_many), combined
         relationally per qid.  r4 raised on any phrase clause here —
         VERDICT item 2."""
-        from .operators.boolean import boolean_tree_topk_many
         from .operators.fulltext import (FIELD_SEP, K1 as _K1,
-                                         OversizedExpansion, expand_specs,
-                                         idf)
+                                         OversizedExpansion, idf)
         from .operators.positional import phrase_match_many
         from .operators.postings import matched_doc_ids
         from .querycompile import _Leaf, compile_query
@@ -727,9 +752,7 @@ class FulltextIndex:
                          for sid in lf.spec_ids}
         ncm = self.NEG_COLLECT_MAX if neg_collect_max is None \
             else neg_collect_max
-        expansions = expand_specs(self.tstats, all_specs,
-                                  default_field=default_field,
-                                  neg_collect_max=ncm,
+        expansions = self._expand(all_specs, neg_collect_max=ncm,
                                   neg_docset_sids=root_neg_sids) \
             if all_specs else []
         ext_not_many = None       # (qid, doc_id) excluded via doc sets
@@ -801,9 +824,8 @@ class FulltextIndex:
         else:
             av = self.avgdl
 
-        kernel = boolean_tree_topk_many(
-            self.postings, self.tstats, self.n_docs, av, trees, insts,
-            k, k_map=k_map, counts_qids=counts_qids) if trees else \
+        kernel = self._trees(trees, insts, k, av, k_map=k_map,
+                             counts_qids=counts_qids) if trees else \
             self.spark.createDataFrame(
                 [], out_schema + (", n_should int" if counts_qids
                                   else ""))
@@ -837,9 +859,7 @@ class FulltextIndex:
         # resolve scoring weights (one df lookup across all queries)
         sterms = sorted({x for r in pid_meta_rows if r[1] != "n"
                          for x in r[3][1]})
-        dfs = {r["term"]: int(r["df"]) for r in
-               _filter_terms(self.tstats, sterms)
-               .select("term", "df").collect()} if sterms else {}
+        dfs = self._dfs(sterms)
         for r in pid_meta_rows:
             if r[1] != "n":
                 boost, pterms = r[3]
@@ -909,7 +929,8 @@ class FulltextIndex:
         """Did-you-mean candidates for a (possibly misspelled) word ->
         (term, df, dist), DirectSpellChecker ranking (dist asc, df desc,
         term asc) over the term dictionary
-        (operators/fulltext.py::suggest_terms).  The word is analyzed
+        (operators/fulltext.py::suggest_terms, or the same ranking over
+        the driver-resident dictionary).  The word is analyzed
         first so suggestions live in the index's stemmed vocabulary; the
         FIRST token of the analyzed stream is the suggestion target
         (DirectSpellChecker is per-term — callers suggest per word); an
@@ -922,8 +943,13 @@ class FulltextIndex:
         if not stream:
             return self.spark.createDataFrame(
                 [], "term string, df long, dist long")
-        return suggest_terms(self.tstats, stream[0], max_edits, k,
-                             prefix_len)
+        d = self._dictionary()
+        if d is None:
+            return suggest_terms(self.tstats, stream[0], max_edits, k,
+                                 prefix_len)
+        return self.spark.createDataFrame(
+            d.suggest(stream[0], max_edits, k, prefix_len),
+            "term string, df long, dist int")
 
     def search_regex(self, pattern: str, k: int = 10,
                      max_expansions: int = 64) -> DataFrame:
@@ -940,8 +966,7 @@ class FulltextIndex:
                      F.col("term").rlike(f"^(?:{pattern})$"))
                   .orderBy(F.desc("df"), F.asc("term"))
                   .limit(max_expansions).collect())]
-        return wand_topk_terms(self.postings, self.tstats, self.n_docs,
-                               self.avgdl, sorted(terms), k)
+        return self._wand([(t, 1.0) for t in sorted(terms)], k)
 
     def compact(self) -> "FulltextIndex":
         """Rewrite fragmented posting blocks — and the positional index,
@@ -961,17 +986,22 @@ class FulltextIndex:
             pos = compact_positional(self.positional) \
                 .localCheckpoint(eager=True)
         idx = FulltextIndex(self.spark, cp, ts, self.n_docs, self.avgdl,
-                            self.analyzer, pos)
+                            self.analyzer, pos, fields=self.fields,
+                            field_avgdl=self.field_avgdl)
+        # compaction keeps every term and df: a read dictionary carries over
+        idx._tdict, idx._tdict_read = self._tdict, self._tdict_read
         idx._cached = [ts]
         return idx
 
     def stats(self) -> dict:
         """Index statistics (Lucene IndexReader counters): n_docs,
-        avgdl, n_terms, n_blocks, has_positional."""
+        avgdl, n_terms (the resident dictionary's length once read),
+        n_blocks, has_positional."""
         return {
             "n_docs": self.n_docs,
             "avgdl": self.avgdl,
-            "n_terms": self.tstats.count(),
+            "n_terms": (len(self._tdict) if self._tdict is not None
+                        else self.tstats.count()),
             "n_blocks": self.postings.count(),
             "has_positional": self.positional is not None,
         }

@@ -40,7 +40,7 @@ from pyspark.sql import DataFrame, Window
 
 from ..functions.codec import delta_decode, vbyte_decode
 from .fulltext import B, K1, idf as bm25_idf
-from .wand import _filter_terms, _topk_cut
+from .wand import _filter_terms, _topk_cut, term_dfs
 
 
 def _decode_term(rows: pd.DataFrame) -> tuple[np.ndarray, np.ndarray,
@@ -227,13 +227,15 @@ def _tree_bucket(decoded, tree, instances, k: int | None,
     return pd.DataFrame({"doc_id": d, "score": s})
 
 
-def _tree_set(postings: DataFrame, tstats: DataFrame, n_docs: int, avgdl,
-              trees: dict, instances_raw: dict, k: int | None, k1: float,
-              b: float, k_map: dict, counts_qids: set) -> DataFrame:
+def _tree_set(postings: DataFrame, dfs: dict[str, int], n_docs: int,
+              avgdl, trees: dict, instances_raw: dict, k: int | None,
+              k1: float, b: float, k_map: dict,
+              counts_qids: set) -> DataFrame:
     """The tree-kernel plan over a SET of compiled trees -> per-bucket
-    (qid, doc_id, score[, n_should]) rows, before any global top-k: one
-    df collect for the union of leaf terms, one pruned scan, one
-    applyInPandas pass running every tree against each bucket."""
+    (qid, doc_id, score[, n_should]) rows, before any global top-k: idf
+    from the resolved ``dfs`` map (leaf terms it lacks are absent from
+    the index), one pruned scan, one applyInPandas pass running every
+    tree against each bucket."""
     spark = postings.sparkSession
     with_counts = bool(counts_qids)
     schema = "qid string, doc_id long, score double" + \
@@ -242,15 +244,14 @@ def _tree_set(postings: DataFrame, tstats: DataFrame, n_docs: int, avgdl,
     all_terms = sorted(set().union(*per_q_terms.values()))
     if not all_terms:
         return spark.createDataFrame([], schema)
-    dfs = {r["term"]: int(r["df"]) for r in
-           _filter_terms(tstats, all_terms).select("term", "df").collect()}
+    dfs = {t: dfs[t] for t in all_terms if t in dfs}
     instances = {
         qid: sorted(
             (t, boost * bm25_idf(n_docs, dfs[t]),
              avgdl if isinstance(avgdl, float) else avgdl[t], leaf_id)
             for t, boost, leaf_id in raw if t in dfs)
         for qid, raw in instances_raw.items()}
-    alive = sorted(t for t in all_terms if t in dfs)
+    alive = sorted(dfs)
     if not alive:
         return spark.createDataFrame([], schema)
     qterms_alive = {qid: {t for t in ts if t in dfs}
@@ -308,7 +309,14 @@ def boolean_tree_topk(postings: DataFrame, tstats: DataFrame, n_docs: int,
     Runs boolean_tree_topk_many's kernel as a set of one, finished by a
     global orderBy().limit() — one Spark job fewer than the per-qid
     window."""
-    local = _tree_set(postings, tstats, n_docs, avgdl, {"_": tree},
+    return _tree_one(postings, term_dfs(tstats, _leaf_terms(tree)), n_docs,
+                     avgdl, tree, instances_raw, k, k1, b, with_counts)
+
+
+def _tree_one(postings: DataFrame, dfs: dict[str, int], n_docs: int, avgdl,
+              tree, instances_raw, k: int | None = 10, k1: float = K1,
+              b: float = B, with_counts: bool = False) -> DataFrame:
+    local = _tree_set(postings, dfs, n_docs, avgdl, {"_": tree},
                       {"_": instances_raw}, k, k1, b, {},
                       {"_"} if with_counts else set()).drop("qid")
     if k is None:
@@ -339,9 +347,18 @@ def boolean_tree_topk_many(postings: DataFrame, tstats: DataFrame,
     boolean_tree_topk's ``k=None`` contract).  ``counts_qids``: qids
     whose rows also need the matched-root-SHOULD count; when given, the
     output carries ``n_should`` (0 for other qids)."""
+    terms = set().union(*map(_leaf_terms, trees.values()))
+    return _tree_many(postings, term_dfs(tstats, terms), n_docs, avgdl,
+                      trees, instances_raw, k, k1, b, k_map, counts_qids)
+
+
+def _tree_many(postings: DataFrame, dfs: dict[str, int], n_docs: int,
+               avgdl, trees: dict, instances_raw: dict, k: int = 10,
+               k1: float = K1, b: float = B, k_map: dict | None = None,
+               counts_qids: set | None = None) -> DataFrame:
     k_map = dict(k_map or {})
-    local = _tree_set(postings, tstats, n_docs, avgdl, trees,
-                      instances_raw, k, k1, b, k_map, counts_qids or set())
+    local = _tree_set(postings, dfs, n_docs, avgdl, trees, instances_raw,
+                      k, k1, b, k_map, counts_qids or set())
     uncut = {qid for qid in trees if k_map.get(qid, k) is None}
     if len(uncut) == len(trees):
         return local
@@ -372,6 +389,13 @@ def boolean_topk(postings: DataFrame, tstats: DataFrame, n_docs: int,
     BooleanQuery would keep both clauses, score the term twice and let
     it satisfy minimumShouldMatch.  FulltextIndex.query compiles its
     own trees and scores per clause, Lucene-faithfully."""
+    tree, instances = _flat_tree(must, should, must_not, msm)
+    return boolean_tree_topk(postings, tstats, n_docs, float(avgdl), tree,
+                             instances, k, k1, b)
+
+
+def _flat_tree(must, should, must_not, msm: int) -> tuple:
+    """boolean_topk's depth-1 (tree, instances), overlap-normalized."""
     must_s = sorted(set(must or []))
     should_s = sorted(set(should or []) - set(must_s))
     not_s = sorted(set(must_not or []))
@@ -380,6 +404,4 @@ def boolean_topk(postings: DataFrame, tstats: DataFrame, n_docs: int,
     nm, ns = len(must_s), len(should_s)
     tree = ("node", tuple(leaves[:nm]), tuple(leaves[nm:nm + ns]),
             tuple(leaves[nm + ns:]), msm if must_s else max(msm, 1))
-    instances = [(t, 1.0, i) for i, t in enumerate(must_s + should_s)]
-    return boolean_tree_topk(postings, tstats, n_docs, float(avgdl), tree,
-                             instances, k, k1, b)
+    return tree, [(t, 1.0, i) for i, t in enumerate(must_s + should_s)]

@@ -19,6 +19,9 @@ Scale notes (100 TB / 10^12 docs):
 
 from __future__ import annotations
 
+import bisect
+
+import numpy as np
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 
@@ -277,20 +280,21 @@ class OversizedExpansion:
 def expand_specs(tstats: DataFrame, specs: list[dict],
                  default_field: str | None = None,
                  neg_collect_max: int | None = None,
-                 neg_docset_sids: set | None = None) -> list:
-    """Expand EVERY dictionary-expansion clause of a query in ONE Spark
-    job -> per-spec ``[(term, df, dist), ...]`` lists (terms AS STORED,
-    i.e. field-prefixed for non-default fields), each sorted by term.
+                 neg_docset_sids: set | None = None,
+                 tdict: "TermDictionary | None" = None) -> list:
+    """Expand EVERY dictionary-expansion clause of a query -> per-spec
+    ``[(term, df, dist), ...]`` lists (terms AS STORED, i.e.
+    field-prefixed for non-default fields), each sorted by term.
 
-    Round-3 ran one job per fuzzy/prefix/regex clause
-    (engine.py:127-131/244-258) — a 5-clause query paid 5 driver round
-    trips before WAND started; per-query latency at serving scale is
-    round-trip-dominated (r3 VERDICT item 2).  Here all clause
-    predicates evaluate in one scan pass: each spec contributes a
-    condition column, matches explode to (spec_id, term, df, dist)
-    rows, per-spec caps apply through ONE window partitioned by spec_id
-    (partitions are per-clause — never global), and a single collect
-    returns every expansion.
+    With ``tdict`` (the index's driver-resident dictionary) every
+    fuzzy/prefix/range spec expands on the driver and launches no Spark
+    job; regex specs, and every spec when ``tdict`` is None, expand in
+    ONE Spark job over ``tstats``: each spec contributes a condition
+    column, matches explode to (spec_id, term, df, dist) rows, per-spec
+    caps apply through ONE window partitioned by spec_id, and a single
+    collect returns every expansion.  Regex stays on Spark because the
+    JVM regex dialect is the query language's, not Python's.  Both
+    paths return identical lists.
 
     spec keys:
       kind: 'fuzzy' | 'prefix' | 'regex' | 'range'   (wildcards compile
@@ -299,71 +303,103 @@ def expand_specs(tstats: DataFrame, specs: list[dict],
       edits: fuzzy max edits;  prefix_len: fuzzy shared-prefix length
       lo/hi/incl_lo/incl_hi: range bounds (None = open)
       field: None = default field
-      cap: int max expansions (df-descending, Lucene's top-terms
-           rewrite) or None = UNBOUNDED — required for negative clauses,
-           where exclusion needs the full match set (Lucene's
-           constant-score rewrite for multi-term queries in negative
-           context; r3 ADVICE item 2)
+      cap: int max expansions (df-descending then term-ascending,
+           Lucene's top-terms rewrite) or None = UNBOUNDED — required
+           for negative clauses, where exclusion needs the full match
+           set (Lucene's constant-score rewrite for multi-term queries
+           in negative context; r3 ADVICE item 2)
 
     ``neg_collect_max`` (r5): uncapped specs listed in
     ``neg_docset_sids`` whose match COUNT exceeds this return an
     ``OversizedExpansion`` (terms stay distributed as a DataFrame; the
-    caller anti-joins the doc set) instead of a collected list — one
-    cheap per-sid count agg decides, and the oversized sids are
-    filtered OUT of the collect.  None (default) keeps the full
-    collect for everything.
+    caller anti-joins the doc set) instead of a list.  None (default)
+    keeps the full list for everything.
     """
+    if not specs:
+        return []
+    jvm = [i for i, sp in enumerate(specs)
+           if tdict is None or sp["kind"] == "regex"]
+    out = _expand_jvm(tstats, specs, jvm, default_field, neg_collect_max,
+                      neg_docset_sids) if jvm else [[] for _ in specs]
+    for i, sp in enumerate(specs):
+        if tdict is None or sp["kind"] == "regex":
+            continue
+        hits = tdict.matches(sp, default_field)
+        if sp.get("cap") is not None:
+            hits = sorted(hits, key=lambda h: (-h[1], h[0]))[
+                :max(int(sp["cap"]), 0)]
+        elif (neg_collect_max is not None and neg_docset_sids
+              and i in neg_docset_sids and len(hits) > neg_collect_max):
+            out[i] = OversizedExpansion(
+                i, len(hits),
+                tstats.filter(_spec_cond(sp, default_field)[0])
+                .select("term"))
+            continue
+        out[i] = sorted(hits)
+    return out
+
+
+def _field_prefix(sp: dict, default_field: str | None) -> str:
+    """Stored-term prefix of a spec's field: "" for the default field
+    (bare terms), "<field>\x1f" for any other."""
+    fld = sp.get("field") or default_field
+    return fld + FIELD_SEP if fld is not None and fld != default_field \
+        else ""
+
+
+def _spec_cond(sp: dict, default_field: str | None):
+    """(match condition, dist column) of one expansion spec over the
+    ``term`` column of a term-stats DataFrame."""
+    prefix = _field_prefix(sp, default_field)
+    if prefix:
+        in_field = F.col("term").startswith(prefix)
+        mt = F.substring(F.col("term"), len(prefix) + 1, 1 << 24)
+    else:
+        in_field = ~F.col("term").contains(FIELD_SEP)
+        mt = F.col("term")
+    dist = F.lit(0)
+    if sp["kind"] == "fuzzy":
+        q = sp["value"]
+        d = int(sp.get("edits", 2))
+        cond = (F.length(mt) >= len(q) - d) & (F.length(mt) <= len(q) + d)
+        pl = int(sp.get("prefix_len", 0))
+        if pl > 0:
+            cond = cond & mt.startswith(q[:pl])
+        dist = F.levenshtein(mt, F.lit(q))
+        cond = cond & (dist <= d)
+    elif sp["kind"] == "prefix":
+        cond = mt.startswith(sp["value"])
+    elif sp["kind"] == "regex":
+        cond = mt.rlike(f"^(?:{sp['value']})$")
+    elif sp["kind"] == "range":
+        cond = F.lit(True)
+        lo, hi = sp.get("lo"), sp.get("hi")
+        if lo is not None:
+            cond = cond & (mt >= lo if sp.get("incl_lo", True) else mt > lo)
+        if hi is not None:
+            cond = cond & (mt <= hi if sp.get("incl_hi", True) else mt < hi)
+    else:
+        raise ValueError(f"unknown expansion kind {sp['kind']!r}")
+    return cond & in_field, dist
+
+
+def _expand_jvm(tstats: DataFrame, specs: list[dict], sids: list[int],
+                default_field: str | None, neg_collect_max: int | None,
+                neg_docset_sids: set | None) -> list:
+    """expand_specs' Spark path for the specs ``sids`` (the others stay
+    ``[]``): one scan, one cap window, one collect."""
     from functools import reduce
     from operator import or_
 
-    if not specs:
-        return []
-    conds, dists, caps = [], [], []
-    for sp in specs:
-        fld = sp.get("field") or default_field
-        if fld is not None and fld != default_field:
-            prefix = fld + FIELD_SEP
-            in_field = F.col("term").startswith(prefix)
-            mt = F.substring(F.col("term"), len(prefix) + 1, 1 << 24)
-        else:
-            in_field = ~F.col("term").contains(FIELD_SEP)
-            mt = F.col("term")
-        dist = F.lit(0)
-        if sp["kind"] == "fuzzy":
-            q = sp["value"]
-            d = int(sp.get("edits", 2))
-            cond = (F.length(mt) >= len(q) - d) \
-                & (F.length(mt) <= len(q) + d)
-            pl = int(sp.get("prefix_len", 0))
-            if pl > 0:
-                cond = cond & mt.startswith(q[:pl])
-            dist = F.levenshtein(mt, F.lit(q))
-            cond = cond & (dist <= d)
-        elif sp["kind"] == "prefix":
-            cond = mt.startswith(sp["value"])
-        elif sp["kind"] == "regex":
-            cond = mt.rlike(f"^(?:{sp['value']})$")
-        elif sp["kind"] == "range":
-            cond = F.lit(True)
-            lo, hi = sp.get("lo"), sp.get("hi")
-            if lo is not None:
-                cond = cond & (mt >= lo if sp.get("incl_lo", True)
-                               else mt > lo)
-            if hi is not None:
-                cond = cond & (mt <= hi if sp.get("incl_hi", True)
-                               else mt < hi)
-        else:
-            raise ValueError(f"unknown expansion kind {sp['kind']!r}")
-        conds.append(cond & in_field)
-        dists.append(dist)
-        caps.append(sp.get("cap"))
+    conds, dists = zip(*(_spec_cond(specs[i], default_field) for i in sids))
+    caps = {i: specs[i].get("cap") for i in sids}
     hits = F.array(*[
         F.when(c, F.struct(F.lit(i).alias("sid"), d.alias("dist")))
-        for i, (c, d) in enumerate(zip(conds, dists))])
+        for i, c, d in zip(sids, conds, dists)])
     cap_expr = None
-    if any(c is not None for c in caps):
+    if any(c is not None for c in caps.values()):
         pairs = []
-        for i, c in enumerate(caps):
+        for i, c in caps.items():
             pairs += [F.lit(i), F.lit(int(c) if c is not None else 1 << 31)]
         cap_expr = F.element_at(F.create_map(*pairs), F.col("sid"))
     matched = (tstats
@@ -377,10 +413,9 @@ def expand_specs(tstats: DataFrame, specs: list[dict],
         matched = (matched.withColumn("_rn", F.row_number().over(w))
                    .filter(F.col("_rn") <= cap_expr).drop("_rn"))
     out: list = [[] for _ in specs]
-    oversized: dict[int, int] = {}
     if neg_collect_max is not None and neg_docset_sids:
         check = sorted(s for s in neg_docset_sids
-                       if caps[s] is None)
+                       if s in caps and caps[s] is None)
         if check:
             # localCheckpoint: the count probe and the collect (and any
             # later doc-set joins) reuse one evaluation of the scan
@@ -405,6 +440,123 @@ def expand_specs(tstats: DataFrame, specs: list[dict],
     for lst in out:
         if isinstance(lst, list):
             lst.sort()
+    return out
+
+
+class TermDictionary:
+    """Sorted term -> df dictionary held on the driver (the FST terms
+    index's role, SURVEY §1.4): an immutable index answers df lookups
+    and fuzzy/prefix/range expansion from it without a Spark job.
+    Every expansion computes what the Spark path computes — code-point
+    lengths, prefixes and Levenshtein distances, and code-point order,
+    which is the JVM's UTF-8 byte order."""
+
+    def __init__(self, rows):
+        pairs = sorted((r[0], int(r[1])) for r in rows)
+        self.terms = [t for t, _ in pairs]
+        self.df = dict(pairs)
+        self._by_len: dict[int, list[str]] | None = None
+
+    def __len__(self) -> int:
+        return len(self.terms)
+
+    def _prefix_span(self, p: str) -> tuple[int, int]:
+        """[i, j) of the sorted terms that start with ``p``."""
+        i = bisect.bisect_left(self.terms, p)
+        # every string in [p, p + U+10FFFF) starts with p; longer
+        # continuations of p + U+10FFFF sort after it
+        j = bisect.bisect_left(self.terms, p + "\U0010ffff", i)
+        while j < len(self.terms) and self.terms[j].startswith(p):
+            j += 1
+        return i, j
+
+    def matches(self, sp: dict, default_field: str | None) -> list:
+        """Uncapped [(term, df, dist)] of one fuzzy/prefix/range spec
+        (expand_specs' spec keys)."""
+        fp = _field_prefix(sp, default_field)
+        kind = sp["kind"]
+        if kind == "fuzzy":
+            return self.fuzzy(sp["value"], int(sp.get("edits", 2)),
+                              int(sp.get("prefix_len", 0)), fp, True)
+        if kind == "prefix":
+            i, j = self._prefix_span(fp + sp["value"])
+        elif kind == "range":
+            i, j = self._prefix_span(fp)
+            lo, hi = sp.get("lo"), sp.get("hi")
+            if lo is not None:
+                cut = bisect.bisect_left if sp.get("incl_lo", True) \
+                    else bisect.bisect_right
+                i = cut(self.terms, fp + lo, i, j)
+            if hi is not None:
+                cut = bisect.bisect_right if sp.get("incl_hi", True) \
+                    else bisect.bisect_left
+                j = cut(self.terms, fp + hi, i, j)
+        else:
+            raise ValueError(f"no driver-side expansion for {kind!r}")
+        return [(t, self.df[t], 0) for t in self.terms[i:j]
+                if fp or FIELD_SEP not in t]
+
+    def fuzzy(self, q: str, d: int, prefix_len: int = 0, fp: str = "",
+              scoped: bool = False) -> list:
+        """[(term, df, dist)]: terms whose part after ``fp`` lies within
+        ``d`` edits of ``q`` (and shares its first ``prefix_len``
+        characters).  ``scoped`` keeps only the field ``fp`` names
+        (bare terms for ""); fuzzy_expand's whole-term form is
+        unscoped.  Length band first, then Levenshtein on survivors."""
+        lo, hi = len(q) - d + len(fp), len(q) + d + len(fp)
+        if prefix_len > 0:
+            i, j = self._prefix_span(fp + q[:prefix_len])
+            cands = [t for t in self.terms[i:j] if lo <= len(t) <= hi]
+        else:
+            if self._by_len is None:
+                self._by_len = {}
+                for t in self.terms:
+                    self._by_len.setdefault(len(t), []).append(t)
+            cands = [t for n in range(max(lo, 0), hi + 1)
+                     for t in self._by_len.get(n, ())]
+        if scoped:
+            cands = [t for t in cands
+                     if (t.startswith(fp) if fp else FIELD_SEP not in t)]
+        dist = _levenshtein(q, [t[len(fp):] for t in cands], d)
+        return [(t, self.df[t], int(x)) for t, x in zip(cands, dist)
+                if x <= d]
+
+    def suggest(self, term: str, max_edits: int = 2, k: int = 5,
+                prefix_len: int = 1) -> list:
+        """suggest_terms' rows, (dist asc, df desc, term asc)[:k]."""
+        hits = self.fuzzy(term, max_edits, prefix_len)
+        return sorted(hits, key=lambda h: (h[2], -h[1], h[0]))[:k]
+
+
+def _levenshtein(q: str, terms: list[str], d: int) -> np.ndarray:
+    """Levenshtein distance over code points from ``q`` to each of
+    ``terms`` (Spark's ``levenshtein``) where it is <= ``d``, else d + 1.
+    One NumPy DP per term length: row i is min(substitute, delete) from
+    row i-1, then the insertion chain as a running minimum of (cell -
+    column) + column.  Row minima never decrease, so a term whose row
+    minimum passes ``d`` leaves the DP."""
+    out = np.full(len(terms), d + 1, dtype=np.int64)
+    by_len: dict[int, list[int]] = {}
+    for i, t in enumerate(terms):
+        by_len.setdefault(len(t), []).append(i)
+    qa = np.frombuffer(q.encode("utf-32-le", "surrogatepass"), np.uint32)
+    for n, ids in by_len.items():
+        ids = np.asarray(ids)
+        col = np.arange(n + 1)
+        arr = np.frombuffer("".join(terms[i] for i in ids)
+                            .encode("utf-32-le", "surrogatepass"),
+                            np.uint32).reshape(len(ids), n)
+        row = np.broadcast_to(col, (len(ids), n + 1))
+        for i, c in enumerate(qa, 1):
+            cur = np.empty((len(ids), n + 1), dtype=np.int64)
+            cur[:, 0] = i
+            np.minimum(row[:, :-1] + (arr != c), row[:, 1:] + 1,
+                       out=cur[:, 1:])
+            row = np.minimum.accumulate(cur - col, axis=1) + col
+            live = row.min(axis=1) <= d
+            if not live.all():
+                ids, arr, row = ids[live], arr[live], row[live]
+        out[ids] = np.minimum(row[:, n], d + 1)
     return out
 
 

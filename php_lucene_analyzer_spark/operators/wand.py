@@ -443,25 +443,37 @@ def wand_topk_many(postings: DataFrame, tstats: DataFrame, n_docs: int,
     analysis chain (custom Analyzer chains pass ``analyzer.terms``)."""
     if terms_fn is None:
         terms_fn = lambda q: [t.term for t in analyze(q)]
-    return _wand_set(postings, tstats, n_docs, avgdl,
-                     {qid: [(t, 1.0) for t in sorted(set(terms_fn(q)))]
-                      for qid, q in queries.items()}, k, k1, b)
+    entries = {qid: [(t, 1.0) for t in sorted(set(terms_fn(q)))]
+               for qid, q in queries.items()}
+    terms = {t for es in entries.values() for t, _ in es}
+    return _wand_many(postings, term_dfs(tstats, terms), n_docs, avgdl,
+                      entries, k, k1, b)
 
 
-def _wand_set(postings: DataFrame, tstats: DataFrame, n_docs: int,
+def term_dfs(tstats: DataFrame, terms) -> dict[str, int]:
+    """{term: df} for those of ``terms`` in ``tstats`` — one filtered
+    collect (no job for an empty term set).  The plan functions take
+    this resolved map; an index with a driver-resident dictionary
+    passes its own (engine.FulltextIndex)."""
+    if not terms:
+        return {}
+    return {r["term"]: int(r["df"]) for r in
+            _filter_terms(tstats, sorted(terms)).select("term", "df")
+            .collect()}
+
+
+def _wand_set(postings: DataFrame, dfs: dict[str, int], n_docs: int,
               avgdl: float, entries: dict[str, list[tuple[str, float]]],
               k: int, k1: float, b: float) -> DataFrame:
     """The WAND serving plan over ``{qid: [(term, weight), ...]}`` ->
-    (qid, doc_id, score): one df collect for the union of terms, one
-    applyInPandas pass running every query against each bucket, one
-    per-qid top-k window.  A single query is a set of one."""
+    per-bucket (qid, doc_id, score) candidates, before the global top-k:
+    idf from the resolved ``dfs`` map (terms it lacks are absent from
+    the index), one pruned scan, one applyInPandas pass running every
+    query against each bucket.  Callers finish: a set with the per-qid
+    window (_wand_many), a single query with orderBy().limit()
+    (_wand_one)."""
     spark = postings.sparkSession
     schema = "qid string, doc_id long, score double"
-    all_terms = sorted({t for es in entries.values() for t, _ in es})
-    if not all_terms:
-        return spark.createDataFrame([], schema)
-    dfs = {r["term"]: int(r["df"]) for r in
-           _filter_terms(tstats, all_terms).select("term", "df").collect()}
     metas = {qid: [(t, w * bm25_idf(n_docs, dfs[t]))
                    for t, w in sorted(es) if t in dfs]
              for qid, es in entries.items()}
@@ -486,10 +498,28 @@ def _wand_set(postings: DataFrame, tstats: DataFrame, n_docs: int,
 
     matched = _filter_terms(
         postings, sorted({t for m in metas.values() for t, _ in m}))
-    local = matched.groupBy("rbucket").applyInPandas(bucket, schema=schema)
+    return matched.groupBy("rbucket").applyInPandas(bucket, schema=schema)
+
+
+def _wand_many(postings: DataFrame, dfs: dict[str, int], n_docs: int,
+               avgdl: float, entries: dict[str, list[tuple[str, float]]],
+               k: int, k1: float = K1, b: float = B) -> DataFrame:
+    """A query set, finished by one per-qid top-k window."""
     w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("doc_id"))
-    return (local.withColumn("_r", F.row_number().over(w))
+    return (_wand_set(postings, dfs, n_docs, avgdl, entries, k, k1, b)
+            .withColumn("_r", F.row_number().over(w))
             .filter(F.col("_r") <= k).drop("_r"))
+
+
+def _wand_one(postings: DataFrame, dfs: dict[str, int], n_docs: int,
+              avgdl: float, entries: list[tuple[str, float]], k: int,
+              k1: float = K1, b: float = B) -> DataFrame:
+    """A set of one -> (doc_id, score), finished by a global
+    orderBy().limit(): a TakeOrderedAndProject, one Spark job fewer
+    than the per-qid window."""
+    return (_wand_set(postings, dfs, n_docs, avgdl, {"_": entries}, k,
+                      k1, b).drop("qid")
+            .orderBy(F.desc("score"), F.asc("doc_id")).limit(k))
 
 
 def prefix_topk(postings: DataFrame, tdict: DataFrame, n_docs: int,
@@ -526,5 +556,5 @@ def wand_topk_terms(postings: DataFrame, tstats: DataFrame, n_docs: int,
     Runs the batch kernel (wand_topk_many's plan) as a set of one."""
     entries = term_boosts if term_boosts is not None \
         else [(t, 1.0) for t in (terms or [])]
-    return _wand_set(postings, tstats, n_docs, avgdl, {"_": entries},
-                     k, k1, b).drop("qid")
+    return _wand_one(postings, term_dfs(tstats, {t for t, _ in entries}),
+                     n_docs, avgdl, entries, k, k1, b)

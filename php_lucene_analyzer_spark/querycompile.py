@@ -2,7 +2,7 @@
 engine kernels.
 
 Two-phase by necessity: dictionary-expansion clauses (fuzzy / prefix /
-wildcard / regex / range) need ONE Spark job over the term dictionary
+wildcard / regex / range) need one pass over the term dictionary
 (operators/fulltext.py::expand_specs) before the tree is complete, so
 ``compile_query`` returns a ``QueryPlan`` whose ``specs`` the caller
 expands, then ``finalize(expansions)`` yields:

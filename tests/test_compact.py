@@ -136,6 +136,34 @@ def test_facade_compact_covers_positional_and_caches_tstats(spark, docs):
     idx.close()
 
 
+def test_facade_compact_keeps_fields(spark, docs):
+    """A compacted MULTI-FIELD index answers ``field:`` queries exactly
+    as the original: compact() carries the fields, their avgdl and an
+    already-read term dictionary over."""
+    from php_lucene_analyzer_spark.analysis import analyze
+    from php_lucene_analyzer_spark.engine import FulltextIndex
+
+    sub = docs.filter("doc_id < 120").select(
+        "doc_id",
+        F.concat_ws(" ", F.slice(F.split("text", " "), 1, 4)).alias("title"),
+        F.col("text").alias("body"))
+    idx = FulltextIndex.build(spark, sub, ["doc_id"],
+                              fields=["body", "title"])
+    title = next(t.term for r in sub.collect()
+                 for t in analyze(r["title"] or ""))
+    tdict = idx._dictionary()
+    c = idx.compact()
+    assert (c.fields, c.field_avgdl) == (idx.fields, idx.field_avgdl)
+    assert c._dictionary() is tdict
+    for q in (f"title:{title} stream", f"+title:{title}",
+              f"title:{title[:2]}* value"):
+        want = [tuple(r) for r in idx.query(q, k=20).collect()]
+        assert [tuple(r) for r in c.query(q, k=20).collect()] == want
+        assert want, q
+    c.close()
+    idx.close()
+
+
 def test_compact_interleaved_doc_ranges(spark, docs):
     """Buckets are doc-SET disjoint, not doc-RANGE disjoint: two flushes
     of one doc-UNORDERED partition interleave doc ranges (index_corpus
