@@ -174,8 +174,8 @@ def main() -> None:
     tq = time.time()
     pidx.phrase(common_phrase, slop=8).count()
     timings["phrase_common_lucene"] = round(time.time() - tq, 3)
-    # phrase-bearing batched serving (r5: query_many full grammar —
-    # one expansion + one kernel + one positional job for the set)
+    # phrase-bearing batched serving (query_many full grammar — one
+    # expansion + one tree-kernel pass, phrase leaves included)
     grouped_ph = dict(grouped)
     grouped_ph["g5"] = f'+"{common_phrase}" {top2[0]}'
     grouped_ph["g6"] = f'{top2[1]} -"{common_phrase}"'

@@ -25,7 +25,7 @@ CODEC_MAGIC = 0x3FD76C17  # CodecUtil.php:20 CODEC_MAGIC
 POSTINGS_CODEC = "plas-postings-blocks"
 POSTINGS_VERSION = 2      # v2: rbucket = (base+pid)*stride + flush_no
 POSITIONAL_CODEC = "plas-positional-blocks"
-POSITIONAL_VERSION = 1
+POSITIONAL_VERSION = 2    # v2: a doc's positions share its postings' rbucket
 INDEX_WORKDIR_CODEC = "plas-index-workdir"
 INDEX_WORKDIR_VERSION = 2
 

@@ -16,9 +16,13 @@ bucket evaluates every compiled query tree of a query SET vectorized
 via ``np.unique``, exclusions via ``np.isin``), emits each query's
 bucket top-k, and a global top-k finishes (TakeOrderedAndProject for a
 single tree, a per-qid window for a set).  Flat boolean queries
-(boolean_topk) are depth-1 trees.  Per-bucket work is bounded by the
-build partition size; nothing is all-pairs and nothing funnels through
-one task.
+(boolean_topk) are depth-1 trees.  Phrase clauses of FulltextIndex.query
+are leaves of the same trees (Lucene's PhraseScorer beside the term
+scorers): the phrase terms' positional blocks ride in the same grouped
+pass, and per bucket each distinct phrase is evaluated once by the
+positional kernels (operators/positional.py::_run_phrase).  Per-bucket
+work is bounded by the build partition size; nothing is all-pairs and
+nothing funnels through one task.
 
 Unlike WAND (top-k pruning, document-at-a-time cursors), boolean
 evaluation wants the MATCHING SET, whose candidates are bounded by the
@@ -28,7 +32,8 @@ whole kernel NumPy (no per-doc Python).
 
 Float contract: per-doc scores accumulate clause contributions in
 term-lexicographic order (the same rule as the exhaustive scorer and
-WAND), so results are bit-identical at any parallelism.
+WAND), then add the scoring phrases' sum in phrase order, so results
+are bit-identical at any parallelism.
 """
 
 from __future__ import annotations
@@ -40,6 +45,7 @@ from pyspark.sql import DataFrame, Window
 
 from ..functions.codec import delta_decode, vbyte_decode
 from .fulltext import B, K1, idf as bm25_idf
+from .positional import _decode_flat, _run_phrase, _spec_terms
 from .wand import _filter_terms, _topk_cut, term_dfs
 
 
@@ -77,6 +83,7 @@ def _t_match(node, decoded, cache):
 
     Node encoding (hashable nested tuples, built by querycompile):
       ("leaf", leaf_id, (term, ...))
+      ("phrase", phrase_id)   — match set pre-seeded in ``cache``
       ("node", (must children...), (should children...),
                (not children...), msm)
     Semantics per level = Lucene BooleanQuery: every MUST child matches;
@@ -85,16 +92,6 @@ def _t_match(node, decoded, cache):
     got = cache.get(node)
     if got is not None:
         return got
-    if node[0] == "all":
-        # the bucket's visible doc universe (union of every decoded
-        # term's docs) — the Shannon-expansion stand-in for a nested
-        # phrase assumed TRUE; docs invisible to the kernel are added
-        # relationally by the engine (they carry no term evidence)
-        parts = [d[0] for d in decoded.values()]
-        m = np.unique(np.concatenate(parts)) if parts else \
-            np.empty(0, dtype=np.int64)
-        cache[node] = m
-        return m
     if node[0] == "leaf":
         parts = [decoded[t][0] for t in node[2] if t in decoded]
         if not parts:
@@ -143,8 +140,8 @@ def _t_match(node, decoded, cache):
     return cand
 
 
-def _tree_bucket(decoded, tree, instances, k: int | None,
-                 k1: float, b: float, with_counts: bool) -> pd.DataFrame:
+def _tree_bucket(decoded, tree, instances, k: int | None, k1: float,
+                 b: float, phrase_hits=(), scored=()) -> pd.DataFrame:
     """Evaluate a compiled query TREE inside one doc-range bucket.
 
     ``decoded``: {term: (docs, tfs, dls)} for the tree's terms in this
@@ -157,15 +154,19 @@ def _tree_bucket(decoded, tree, instances, k: int | None,
     AND every ancestor node (its effective set) — a SHOULD sub-query
     that fails to match contributes nothing even when the doc survives
     via other clauses.  Accumulation order is (term, leaf_id) — fixed
-    at any parallelism (float contract)."""
-    cols = {"doc_id": pd.Series(dtype="int64"),
-            "score": pd.Series(dtype="float64")}
-    if with_counts:
-        cols["n_should"] = pd.Series(dtype="int32")
-    empty = pd.DataFrame(cols)
-    if not decoded:
+    at any parallelism (float contract).
+
+    ``phrase_hits``: per phrase id, the bucket's (docs, n_matches) —
+    the match sets of the tree's ("phrase", j) leaves.  ``scored``:
+    [(j, w)] root-level phrases that score, in phrase-id order: each
+    adds w·n·(k1+1)/(n+k1) (BM25 saturation of its match count, no
+    length norm — the positional layout stores no dl) on top of the
+    term score, as score = term_score + (0.0 + c_j0 + c_j1 + …)."""
+    empty = pd.DataFrame({"doc_id": pd.Series(dtype="int64"),
+                          "score": pd.Series(dtype="float64")})
+    if not decoded and not phrase_hits:
         return empty
-    cache: dict = {}
+    cache: dict = {("phrase", j): d for j, (d, _n) in enumerate(phrase_hits)}
     cand = _t_match(tree, decoded, cache)
     if cand.size == 0:
         return empty
@@ -174,16 +175,14 @@ def _tree_bucket(decoded, tree, instances, k: int | None,
     effs: dict[int, np.ndarray] = {}
 
     def walk(node, eff):
-        if node[0] == "all":
-            return                  # no scoring instances beneath
-        if node[0] == "leaf":
-            m = cache[node]
-            effs[node[1]] = m[np.isin(m, eff, assume_unique=True)] \
-                if m.size and eff.size else np.empty(0, dtype=np.int64)
-            return
+        if node[0] == "phrase":
+            return                  # phrases carry no term instances
         m = cache[node]
         my_eff = m[np.isin(m, eff, assume_unique=True)] \
             if m.size and eff.size else np.empty(0, dtype=np.int64)
+        if node[0] == "leaf":
+            effs[node[1]] = my_eff
+            return
         for c in node[1] + node[2]:      # must + should children score
             walk(c, my_eff)
 
@@ -207,20 +206,17 @@ def _tree_bucket(decoded, tree, instances, k: int | None,
                    / (tfs[p] + k1 * (1.0 - b + b * dls[p] / avgdl_t)))
         cpos = np.searchsorted(cand, eff[hit])   # eff ⊆ cand
         scores[cpos] += contrib
+    if scored:
+        phr = np.zeros(cand.size, dtype=np.float64)
+        for j, w in scored:
+            d, n = phrase_hits[j]
+            hit = np.isin(d, cand, assume_unique=True)
+            if hit.any():
+                n = n[hit].astype(np.float64)
+                phr[np.searchsorted(cand, d[hit])] += \
+                    w * n * (k1 + 1.0) / (n + k1)
+        scores = scores + phr
 
-    if with_counts:
-        counts = np.zeros(cand.size, dtype=np.int32)
-        for c in tree[2]:               # root SHOULD children
-            m = cache[c]
-            if m.size:
-                counts[np.isin(cand, m, assume_unique=True)] += 1
-        if k is None:
-            return pd.DataFrame({"doc_id": cand, "score": scores,
-                                 "n_should": counts})
-        d, s = _topk_cut(cand, scores, k)
-        cpos = np.searchsorted(cand, d)
-        return pd.DataFrame({"doc_id": d, "score": s,
-                             "n_should": counts[cpos]})
     if k is None:
         return pd.DataFrame({"doc_id": cand, "score": scores})
     d, s = _topk_cut(cand, scores, k)
@@ -230,20 +226,30 @@ def _tree_bucket(decoded, tree, instances, k: int | None,
 def _tree_set(postings: DataFrame, dfs: dict[str, int], n_docs: int,
               avgdl, trees: dict, instances_raw: dict, k: int | None,
               k1: float, b: float, k_map: dict,
-              counts_qids: set) -> DataFrame:
+              positional: DataFrame | None = None, phrases=(),
+              scored: dict | None = None) -> DataFrame:
     """The tree-kernel plan over a SET of compiled trees -> per-bucket
-    (qid, doc_id, score[, n_should]) rows, before any global top-k: idf
-    from the resolved ``dfs`` map (leaf terms it lacks are absent from
-    the index), one pruned scan, one applyInPandas pass running every
-    tree against each bucket."""
+    (qid, doc_id, score) rows, before any global top-k: idf from the
+    resolved ``dfs`` map (leaf terms it lacks are absent from the
+    index), one pruned scan, one applyInPandas pass running every tree
+    against each bucket.  ``k_map`` overrides ``k`` per qid (None: no
+    per-bucket cut).
+
+    Phrase leaves: ``phrases`` lists the set's distinct compiled phrase
+    specs (positional._compile_phrase output, None for an empty
+    analysis) that the trees' ("phrase", j) leaves index, and
+    ``scored`` maps qid -> [(j, w)] (see _tree_bucket).  The phrase
+    terms' ``positional`` blocks join the leaf terms' posting blocks in
+    the SAME grouped pass (one union, one exchange): per bucket each
+    phrase term decodes once and each phrase evaluates once for the
+    whole set.  This needs every doc's postings and positions in one
+    rbucket, which the build, the streaming segments and compact()
+    keep.  A set without phrases reads no positional rows."""
     spark = postings.sparkSession
-    with_counts = bool(counts_qids)
-    schema = "qid string, doc_id long, score double" + \
-        (", n_should int" if with_counts else "")
+    schema = "qid string, doc_id long, score double"
+    scored = scored or {}
     per_q_terms = {qid: _leaf_terms(t) for qid, t in trees.items()}
-    all_terms = sorted(set().union(*per_q_terms.values()))
-    if not all_terms:
-        return spark.createDataFrame([], schema)
+    all_terms = set().union(*per_q_terms.values())
     dfs = {t: dfs[t] for t in all_terms if t in dfs}
     instances = {
         qid: sorted(
@@ -252,21 +258,29 @@ def _tree_set(postings: DataFrame, dfs: dict[str, int], n_docs: int,
             for t, boost, leaf_id in raw if t in dfs)
         for qid, raw in instances_raw.items()}
     alive = sorted(dfs)
-    if not alive:
+    pterms = sorted(set().union(*(_spec_terms(sp) for sp in phrases
+                                  if sp is not None)))
+    if not alive and not pterms:
         return spark.createDataFrame([], schema)
     qterms_alive = {qid: {t for t in ts if t in dfs}
                     for qid, ts in per_q_terms.items()}
 
     def bucket(pdf: pd.DataFrame) -> pd.DataFrame:
+        hits = []
+        if pterms:
+            is_pos = pdf["pos_blob"].notna()
+            flat = {t: _decode_flat(g)
+                    for t, g in pdf[is_pos].groupby("term")}
+            pdf = pdf[~is_pos]
+            none = (np.empty(0, dtype=np.int64),) * 2
+            hits = [_run_phrase(flat, sp) if sp is not None else none
+                    for sp in phrases]
         outs = []
-        # r6: decode each TERM once per bucket and assemble per-query
-        # views from the shared arrays (_tree_bucket is read-only over
-        # the decoded tuples)
+        # decode each TERM once per bucket and assemble per-query views
+        # from the shared arrays (_tree_bucket is read-only over them)
         by_term = dict(tuple(pdf.groupby("term")))
         term_dec: dict[str, tuple] = {}
         for qid, tree in trees.items():
-            # restrict to THIS query's terms (the wand_topk_many rule:
-            # the union bucket would corrupt per-query statistics)
             dec = {}
             for t in qterms_alive[qid]:
                 d = term_dec.get(t)
@@ -276,98 +290,84 @@ def _tree_set(postings: DataFrame, dfs: dict[str, int], n_docs: int,
                         continue
                     d = term_dec[t] = _decode_term(g)
                 dec[t] = d
-            wc = qid in counts_qids
             r = _tree_bucket(dec, tree, instances[qid],
-                             k_map.get(qid, k), k1, b, wc)
-            if with_counts and not wc:
-                r["n_should"] = np.zeros(len(r), dtype=np.int32)
+                             k_map.get(qid, k), k1, b, hits,
+                             scored.get(qid, ()))
             r.insert(0, "qid", qid)
             outs.append(r)
         return pd.concat(outs, ignore_index=True)
 
     matched = _filter_terms(postings, alive)
+    if pterms:
+        cols = ["term", "rbucket", "block_no", "first_doc", "doc_blob"]
+        matched = matched.select(*cols, "tf_blob", "dl_blob").unionByName(
+            _filter_terms(positional, pterms)
+            .select(*cols, "freq_blob", "pos_blob"),
+            allowMissingColumns=True)
     return matched.groupBy("rbucket").applyInPandas(bucket, schema=schema)
 
 
 def boolean_tree_topk(postings: DataFrame, tstats: DataFrame, n_docs: int,
                       avgdl, tree, instances_raw,
-                      k: int | None = 10, k1: float = K1, b: float = B,
-                      with_counts: bool = False) -> DataFrame:
-    """Boolean top-k over a compiled query TREE -> (doc_id, score
-    [, n_should]) — the BooleanQuery kernel behind FulltextIndex.query's
-    grouped/boosted/fielded path and, as depth-1 trees, behind
-    boolean_topk / search_boolean (querycompile.py builds ``tree``).
+                      k: int | None = 10, k1: float = K1,
+                      b: float = B) -> DataFrame:
+    """Boolean top-k over a compiled query TREE -> (doc_id, score) — the
+    BooleanQuery kernel behind FulltextIndex.query's grouped/boosted/
+    fielded path and, as depth-1 trees, behind boolean_topk /
+    search_boolean (querycompile.py builds ``tree``).
 
     ``avgdl``: float (single-field) or {field_prefixed_term -> avgdl};
     ``instances_raw``: [(term, boost_product, leaf_id)] with idf NOT yet
     applied (df lookup happens here, one collect for the whole query).
-    ``k=None`` returns the full scored match set (callers that
-    post-filter with phrase constraints).  ``with_counts`` adds the
-    per-doc count of matched ROOT-level SHOULD children (phrase-msm
-    integration).
+    ``k=None`` returns the full scored match set.
 
     Runs boolean_tree_topk_many's kernel as a set of one, finished by a
     global orderBy().limit() — one Spark job fewer than the per-qid
     window."""
     return _tree_one(postings, term_dfs(tstats, _leaf_terms(tree)), n_docs,
-                     avgdl, tree, instances_raw, k, k1, b, with_counts)
+                     avgdl, tree, instances_raw, k, k1, b)
 
 
 def _tree_one(postings: DataFrame, dfs: dict[str, int], n_docs: int, avgdl,
               tree, instances_raw, k: int | None = 10, k1: float = K1,
-              b: float = B, with_counts: bool = False) -> DataFrame:
-    local = _tree_set(postings, dfs, n_docs, avgdl, {"_": tree},
-                      {"_": instances_raw}, k, k1, b, {},
-                      {"_"} if with_counts else set()).drop("qid")
+              b: float = B) -> DataFrame:
+    return _top_k(_tree_set(postings, dfs, n_docs, avgdl, {"_": tree},
+                            {"_": instances_raw}, k, k1, b, {})
+                  .drop("qid"), k)
+
+
+def _top_k(local: DataFrame, k: int | None) -> DataFrame:
+    """The global top-k of one query's per-bucket rows."""
     if k is None:
         return local
     return local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
 
+def _top_k_per_qid(local: DataFrame, k: int) -> DataFrame:
+    """The per-qid top-k window over a query set's per-bucket rows."""
+    w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("doc_id"))
+    return local.withColumn("_r", F.row_number().over(w)) \
+        .filter(F.col("_r") <= k).drop("_r")
+
+
 def boolean_tree_topk_many(postings: DataFrame, tstats: DataFrame,
                            n_docs: int, avgdl, trees: dict,
                            instances_raw: dict, k: int = 10,
-                           k1: float = K1, b: float = B,
-                           k_map: dict | None = None,
-                           counts_qids: set | None = None) -> DataFrame:
-    """Evaluate a whole SET of compiled query trees in ONE Spark job ->
-    (qid, doc_id, score[, n_should]) — the serving shape
-    (wand_topk_many's role for the grouped/boosted/fielded query path):
-    matched terms unioned into one pruned scan, ONE applyInPandas pass
-    runs every query against each bucket, one global per-qid top-k
-    window.  Results are bit-identical to per-query
-    ``boolean_tree_topk``.
+                           k1: float = K1, b: float = B) -> DataFrame:
+    """Evaluate a whole SET of compiled query trees -> (qid, doc_id,
+    score) — the serving shape (wand_topk_many's role for the grouped/
+    boosted/fielded query path): matched terms unioned into one pruned
+    scan, ONE applyInPandas pass runs every query against each bucket,
+    one global per-qid top-k window (three Spark jobs: the bucket
+    exchange, the kernel, the window).  Results are bit-identical to
+    per-query ``boolean_tree_topk``.
 
     ``trees``: {qid: tree}; ``instances_raw``: {qid: [(term, boost,
-    leaf_id)]}; ``avgdl``: float or {term: avgdl} (multi-field).
-
-    r5 (phrase-bearing serving): ``k_map`` overrides ``k`` per qid —
-    ``None`` disables both the per-bucket cut AND the global top-k for
-    that qid (callers post-filter with phrase constraints, exactly
-    boolean_tree_topk's ``k=None`` contract).  ``counts_qids``: qids
-    whose rows also need the matched-root-SHOULD count; when given, the
-    output carries ``n_should`` (0 for other qids)."""
+    leaf_id)]}; ``avgdl``: float or {term: avgdl} (multi-field)."""
     terms = set().union(*map(_leaf_terms, trees.values()))
-    return _tree_many(postings, term_dfs(tstats, terms), n_docs, avgdl,
-                      trees, instances_raw, k, k1, b, k_map, counts_qids)
-
-
-def _tree_many(postings: DataFrame, dfs: dict[str, int], n_docs: int,
-               avgdl, trees: dict, instances_raw: dict, k: int = 10,
-               k1: float = K1, b: float = B, k_map: dict | None = None,
-               counts_qids: set | None = None) -> DataFrame:
-    k_map = dict(k_map or {})
-    local = _tree_set(postings, dfs, n_docs, avgdl, trees, instances_raw,
-                      k, k1, b, k_map, counts_qids or set())
-    uncut = {qid for qid in trees if k_map.get(qid, k) is None}
-    if len(uncut) == len(trees):
-        return local
-    w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("doc_id"))
-    out = local.withColumn("_r", F.row_number().over(w))
-    keep = F.col("_r") <= k
-    if uncut:
-        keep = keep | F.col("qid").isin(sorted(uncut))
-    return out.filter(keep).drop("_r")
+    return _top_k_per_qid(_tree_set(postings, term_dfs(tstats, terms),
+                                    n_docs, avgdl, trees, instances_raw,
+                                    k, k1, b, {}), k)
 
 
 def boolean_topk(postings: DataFrame, tstats: DataFrame, n_docs: int,

@@ -36,9 +36,9 @@ from pyspark.sql import DataFrame
 
 from ..analysis import analyze
 from ..functions.codec import vbyte_decode, vbyte_encode_slices
-from .postings import (BLOCK_SIZE, FLUSH_POSTINGS, _doc_blocks, _doc_order,
-                       _index_blocks, _reset_gaps, _split_blocks,
-                       pack_bucket_groups)
+from .postings import (BLOCK_SIZE, FLUSH_POSTINGS, _compact_postings,
+                       _doc_blocks, _doc_order, _index_blocks, _reset_gaps,
+                       _split_blocks, bucket_groups)
 
 POS_BLOCK_SIZE = BLOCK_SIZE
 
@@ -602,10 +602,11 @@ def phrase_match_many(pos_postings: DataFrame,
                       phrases: dict[str, tuple],
                       terms_fn=None, analyzer=None,
                       slop_mode: str = "lucene") -> DataFrame:
-    """Evaluate a SET of phrases in ONE positional job ->
-    (pid, doc_id, n_matches) — the serving shape for phrase-bearing
-    query()/query_many() calls (one positional scan for the whole set,
-    r4 VERDICT items 2 and 5; r4 chained one phrase() job per phrase).
+    """Evaluate a SET of phrases in one grouped pass over the
+    positional blocks -> (pid, doc_id, n_matches) (one positional scan
+    for the whole set; FulltextIndex.query/query_many evaluate their
+    phrase clauses with the same per-bucket kernels inside the boolean
+    tree kernel instead — operators/boolean.py::_tree_set).
 
     ``phrases``: {pid: (text, slop) | (text, slop, field) |
     (text, slop, field, slop_mode)} — a 4th element overrides the
@@ -649,21 +650,30 @@ def phrase_match_many(pos_postings: DataFrame,
     return matched.groupBy("rbucket").applyInPandas(bucket, schema=schema)
 
 
-def compact_positional(pos_postings: DataFrame,
-                       target_positions: int = FLUSH_POSITIONS
-                       ) -> DataFrame:
-    """Segment compaction for the positional index — the same
-    TieredMergePolicy role as postings.compact_postings, over the .pos
-    layout: distributed packing of adjacent doc-range buckets into
-    ~``target_positions``-position groups (postings.pack_bucket_groups
-    — no full driver collect), then one applyInPandas pass per group
-    that decodes each term's blocks, concatenates docs/freqs/positions
-    (re-sorting if bucket doc ranges interleave), and re-encodes
-    through _pos_block_rows.  Phrase/first_match results are
-    bit-identical; only the physical layout changes."""
-    stats = pos_postings.groupBy("rbucket").agg(
-        F.min("first_doc").alias("lo"), F.sum("sum_tf").alias("w"))
-    mapping = pack_bucket_groups(stats, target_positions)
+def compact_index(postings: DataFrame, pos_postings: DataFrame,
+                  target_postings: int = FLUSH_POSTINGS
+                  ) -> tuple[DataFrame, DataFrame]:
+    """Segment compaction of a positional index (Lucene's
+    TieredMergePolicy role) -> (postings, positional): ONE pack mapping
+    (the postings' buckets packed by Σn into ~``target_postings``
+    groups, postings.pack_bucket_groups — no full driver collect)
+    rewrites both tables, so a doc's postings and positions stay in the
+    same rbucket, which the tree kernel's phrase leaves need
+    (operators/boolean.py::_tree_set).  Packing each table by its own
+    weight would cut different group boundaries as soon as compaction
+    yields more than one group.  Query, phrase and first_match results
+    are bit-identical; only the physical layout changes."""
+    mapping = bucket_groups(postings, "n", target_postings)
+    return (_compact_postings(postings, mapping),
+            _compact_positional(pos_postings, mapping))
+
+
+def _compact_positional(pos_postings: DataFrame,
+                        mapping: DataFrame) -> DataFrame:
+    """The positional half of compact_index over a ``(rbucket, _gid)``
+    pack mapping: one applyInPandas pass per group decodes each term's
+    blocks, concatenates docs/freqs/positions (re-sorting if bucket doc
+    ranges interleave) and re-encodes through _pos_block_rows."""
 
     def compact_group(pdf: pd.DataFrame) -> pd.DataFrame:
         gid_v = int(pdf["_gid"].iloc[0])

@@ -335,9 +335,12 @@ def index_corpus(docs_with_ids: DataFrame, id_col: str = "doc_id",
 
     ``rbucket_base``: offset added to the partition id — multi-segment
     builders (chunked/resumable, streaming epochs) pass a per-segment
-    base so rbuckets stay globally unique (better bucket balance at query
-    time; correctness never depends on it since WAND orders blocks by
-    first_doc).  Emitted rbuckets are
+    base so rbuckets stay globally unique: every rbucket must hold ALL
+    postings of a disjoint doc set (the WAND and tree kernels' bucket
+    invariant), and a positional index must put each doc's positions in
+    the rbucket of its postings (the tree kernel's phrase leaves) —
+    build both tables in ONE ``_index_blocks(positions=True)`` pass
+    with the same base.  Emitted rbuckets are
     (rbucket_base + partition_id) * RBUCKET_STRIDE + flush_no.
 
     ``fields``: MULTI-FIELD mode — a list of text columns indexed in
@@ -421,9 +424,22 @@ def compact_postings(postings: DataFrame,
     only the physical block/bucket layout changes.  Shuffle cost: one
     groupBy over the postings rows — no corpus re-scan, no re-tokenize.
     """
-    stats = postings.groupBy("rbucket").agg(
-        F.min("first_doc").alias("lo"), F.sum("n").alias("w"))
-    mapping = pack_bucket_groups(stats, target_postings)
+    return _compact_postings(postings,
+                             bucket_groups(postings, "n", target_postings))
+
+
+def bucket_groups(table: DataFrame, weight: str, target: int) -> DataFrame:
+    """``(rbucket, _gid)`` pack mapping of a posting or positional table:
+    pack_bucket_groups over its per-bucket extents, weighted by Σ
+    ``weight`` per bucket."""
+    return pack_bucket_groups(
+        table.groupBy("rbucket").agg(F.min("first_doc").alias("lo"),
+                                     F.sum(weight).alias("w")), target)
+
+
+def _compact_postings(postings: DataFrame, mapping: DataFrame) -> DataFrame:
+    """compact_postings over a given ``(rbucket, _gid)`` pack mapping:
+    group ``_gid`` becomes the new rbucket."""
 
     def compact_group(pdf: pd.DataFrame) -> pd.DataFrame:
         from ..functions.codec import delta_decode, vbyte_decode

@@ -431,7 +431,9 @@ def wand_topk_many(postings: DataFrame, tstats: DataFrame, n_docs: int,
                    avgdl: float, queries: dict[str, str], k: int = 10,
                    k1: float = K1, b: float = B,
                    terms_fn=None) -> DataFrame:
-    """Evaluate a whole query SET in one Spark job -> (qid, doc_id, score).
+    """Evaluate a whole query SET in one grouped pass -> (qid, doc_id,
+    score): about three Spark jobs per set (the bucket exchange, the
+    kernel, the per-qid window).
 
     Serving shape: per-query driver round trips dominate latency at small
     k, so the bucket kernel runs every query against its bucket in one

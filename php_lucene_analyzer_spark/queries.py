@@ -769,7 +769,7 @@ def q_boolean_grouped(spark: SparkSession, sf_dir: str) -> DataFrame:
     idx = FulltextIndex(spark, postings, tstats, n_docs, avgdl,
                         analyzer=shim)
     # r6: the whole query set runs through query_many — ONE expansion
-    # pass + ONE tree-kernel job for all four queries (bit-identical to
+    # pass + ONE tree-kernel pass for all four queries (bit-identical to
     # per-query query(); tested), instead of four sequential query()
     # chains each paying its own driver round trips
     res = idx.query_many(GBOOL_QUERIES, k=1 << 20)  # full set: rank after

@@ -15,21 +15,23 @@ expands, then ``finalize(expansions)`` yields:
                instance per positive-path leaf membership (Lucene: a
                term present in two clauses scores once per clause;
                leaves under a MUST_NOT never score)
-  phrases    — top-level phrase clauses [(occur, text, boost, slop,
-               field)] (field None = default; r5 allows any index
-               field — the positional table namespaces per-field
-               postings as "<field>\\x1fterm")
-  nested     — NESTED phrase leaves [(text, slop, field)]; the tree
-               carries ("phrase", npid) where they sit, and the engine
-               evaluates them by Shannon expansion over membership
-               masks (engine._combine_phrases; nested phrases gate
-               matching, they do not score — documented)
+  phrases    — every phrase leaf [(text, slop, field)] (field None =
+               default; any index field works — the positional table
+               namespaces per-field postings as "<field>\\x1fterm"); the
+               tree carries ("phrase", j) where phrase j sits, at any
+               depth, and the kernel evaluates it from the positional
+               blocks of the same doc-range bucket
+  scored     — [(j, boost)]: the TOP-LEVEL MUST and SHOULD phrases, in
+               phrase-id order — the ones that score (a MUST_NOT phrase
+               never scores; a nested phrase gates matching but does not
+               score — documented)
+  nested     — ids j of the phrase leaves below the root
 
 Occur algebra inside a level is Lucene BooleanQuery's; msm is baked
 into each node: nested levels use 1 when pure-SHOULD else 0; the root
-takes the caller's msm (with the pure-SHOULD floor) — or 0 when SHOULD
-phrases exist, because phrase matches count toward msm relationally
-AFTER the kernel (engine.FulltextIndex.query).
+takes the caller's msm, floored to 1 when the root has no MUST clause
+(term or phrase) — a top-level phrase is a root clause like any other,
+so a SHOULD phrase counts toward msm inside the kernel.
 
 Term atoms are analyzed with the index's chain; a MUST term whose
 analysis emits several tokens (WDGF camelCase) compiles to the
@@ -43,7 +45,7 @@ from __future__ import annotations
 from dataclasses import dataclass, field as dfield
 
 from .operators.fulltext import FIELD_SEP
-from .queryparser import Atom, Bool, MUST, MUST_NOT, SHOULD, \
+from .queryparser import Atom, Bool, MUST, MUST_NOT, \
     wildcard_to_regex
 
 _NO_CAP = None
@@ -72,22 +74,27 @@ class _Node:
 class QueryPlan:
     root: _Node
     specs: list
-    phrases: list               # [(occur, text, boost, slop, field)]
+    phrases: list               # [(text, slop, field)] — leaf ("phrase", j)
     msm: int
     n_leaves: int
+    scored: list = dfield(default_factory=list)
+                                # [(j, boost)] top-level MUST/SHOULD
     nested: list = dfield(default_factory=list)
-                                # [(text, slop, field)] — nested
-                                # phrase leaves ("phrase", npid)
+                                # j of the phrase leaves below the root
 
-    def finalize(self, expansions: list[list[tuple]]):
+    def finalize(self, expansions: list[list[tuple]],
+                 phrase_ids: list[int] | None = None):
         """expansions[i] = [(term, df, dist), ...] for specs[i] ->
         (tree, instances).  Absent-vocabulary handling is structural:
-        an empty MUST leaf empties its node's match set in-kernel."""
+        an empty MUST leaf empties its node's match set in-kernel.
+        ``phrase_ids``: renumber phrase leaf j as ``phrase_ids[j]`` (a
+        query set's shared phrase table)."""
         instances: list[tuple] = []
 
         def fin(node, boost_path, negative):
-            if isinstance(node, tuple):
-                return node          # ("phrase", npid) nested leaf
+            if isinstance(node, tuple):          # ("phrase", j)
+                return node if phrase_ids is None else \
+                    ("phrase", phrase_ids[node[1]])
             if isinstance(node, _Leaf):
                 terms = node.terms if not node.spec_ids else tuple(
                     sorted({t for sid in node.spec_ids
@@ -136,7 +143,8 @@ def compile_query(ast: Bool, terms_of, default_field: str | None,
     mean (documented)."""
     specs: list[dict] = []
     phrases: list[tuple] = []
-    nested: list[tuple] = []
+    scored: list[tuple] = []
+    nested: list[int] = []
     counter = {"leaf": 0}
 
     def new_leaf(boost, terms=(), spec_ids=()):
@@ -174,19 +182,13 @@ def compile_query(ast: Bool, terms_of, default_field: str | None,
                 fld = check_field(a.field)
                 if fld == default_field:
                     fld = None
+                j = len(phrases)
+                phrases.append((a.value, a.edits, fld))
                 if depth > 0:
-                    # NESTED phrase (r5): a ("phrase", npid) tree leaf —
-                    # the engine evaluates it by Shannon expansion over
-                    # phrase-membership masks (one shared-scan kernel
-                    # job for all 2^k variants) and selects each doc's
-                    # variant by its actual matches.  Nested phrases
-                    # GATE matching; they do not score (only top-level
-                    # SHOULD phrases score — documented divergence).
-                    npid = len(nested)
-                    nested.append((a.value, a.edits, fld))
-                    _attach(out, occ, ("phrase", npid))
-                    continue
-                phrases.append((occ, a.value, a.boost, a.edits, fld))
+                    nested.append(j)      # gates, does not score
+                elif occ != MUST_NOT:
+                    scored.append((j, a.boost))
+                _attach(out, occ, ("phrase", j))
                 continue
             if a.kind == "term":
                 base = terms_of(a.value)
@@ -249,24 +251,12 @@ def compile_query(ast: Bool, terms_of, default_field: str | None,
         return out
 
     root = conv(ast, 0, False)
-    has_must = bool(root.must)
-    must_phr = any(o == MUST for o, *_ in phrases)
-    should_phr = any(o == SHOULD for o, *_ in phrases)
-    if should_phr:
-        root_msm = 0    # msm applied relationally after the phrase join
-    else:
-        # the pure-SHOULD >=1 floor applies only when the query has NO
-        # required clause AT ALL — a MUST phrase is a required clause
-        # (Lucene BooleanQuery; r4 floored whenever no MUST *term*
-        # existed, silently requiring a should term alongside a
-        # required phrase)
-        root_msm = msm if (has_must or must_phr) else max(msm, 1)
-    plan = QueryPlan(root, specs, phrases, root_msm, counter["leaf"],
-                     nested)
-    plan.has_must = has_must
-    plan.must_phrases = must_phr
-    plan.should_phrases = should_phr
-    return plan
+    # the pure-SHOULD >=1 floor applies only when the root has NO
+    # required clause at all — a MUST phrase is a required clause
+    # (Lucene BooleanQuery)
+    root_msm = msm if root.must else max(msm, 1)
+    return QueryPlan(root, specs, phrases, root_msm, counter["leaf"],
+                     scored, nested)
 
 
 def _attach(node: _Node, occ: str, child) -> None:

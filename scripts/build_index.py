@@ -14,8 +14,10 @@ Usage (cluster: set --master/--num-executors via spark-submit flags):
 
 Reads the corpus parquet (input_hint shape: repo,path,commit,lang,content
 — or any table with a unique key + text column), assigns deterministic
-dense doc ids, builds delta+VByte posting blocks chunk-by-chunk with
-idempotent commits + lineage rows (operators/lineage.py), then writes the
+dense doc ids, builds delta+VByte posting blocks (and, with
+--positional, the positional blocks in the same pass and rbuckets)
+chunk-by-chunk with idempotent commits + lineage rows
+(operators/lineage.py), then writes the
 sorted term dictionary and a stats.json (n_docs, avgdl) the query CLI
 reads.  Re-running after a crash resumes from the lineage table — only
 missing chunks rebuild.
@@ -46,9 +48,10 @@ def main() -> None:
     ap.add_argument("--positional", action="store_true",
                     help="also build the packed positional index "
                          "(phrase/slop/highlight serving via "
-                         "query_index.py --syntax classic); rebuilt "
-                         "idempotently from the doc-id checkpoint on "
-                         "re-runs")
+                         "query_index.py --syntax classic), chunk by "
+                         "chunk in the same pass and rbuckets as the "
+                         "postings; a re-run adds positions to chunks "
+                         "committed without them")
     ap.add_argument("--offsets", action="store_true",
                     help="with --positional: store per-occurrence char "
                          "(start, length) for source-text snippets")
@@ -73,7 +76,9 @@ def main() -> None:
     docs = spark.read.parquet(args.input)
     build = ResumableIndexBuild(spark, args.workdir,
                                 chunk_docs=args.chunk_docs,
-                                text_col=args.text_col)
+                                text_col=args.text_col,
+                                positional=args.positional,
+                                store_offsets=args.offsets)
     postings = build.run(docs, args.order_cols.split(","))
 
     if args.audit:
@@ -96,20 +101,7 @@ def main() -> None:
      .write.mode("overwrite").parquet(term_dict_path))
 
     from php_lucene_analyzer_spark.functions.header import (
-        INDEX_WORKDIR_CODEC, INDEX_WORKDIR_VERSION, POSITIONAL_CODEC,
-        POSITIONAL_VERSION, header_fields, write_dir_header)
-
-    if args.positional:
-        from php_lucene_analyzer_spark.operators.positional import (
-            positional_postings)
-        pdir = os.path.join(args.workdir, "positional")
-        ids = spark.read.parquet(build.ids_path)
-        parts = max(spark.sparkContext.defaultParallelism, 2)
-        (positional_postings(ids.repartitionByRange(parts, "doc_id"),
-                             "doc_id", args.text_col,
-                             store_offsets=args.offsets)
-         .write.mode("overwrite").parquet(pdir))
-        write_dir_header(pdir, POSITIONAL_CODEC, POSITIONAL_VERSION)
+        INDEX_WORKDIR_CODEC, INDEX_WORKDIR_VERSION, header_fields)
 
     stats = {**header_fields(INDEX_WORKDIR_CODEC, INDEX_WORKDIR_VERSION),
              "n_docs": n_docs, "avgdl": avgdl,

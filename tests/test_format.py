@@ -119,3 +119,24 @@ def test_engine_save_load_format_guard(spark, docs):
             json.dump(stats, f)
         with pytest.raises(FormatError, match="older"):
             FulltextIndex.load(spark, d)
+
+
+def test_engine_load_refuses_unshared_positional_layout(spark, docs):
+    """A positional layout older than version 2 (positions not
+    guaranteed to share their doc's postings rbucket, e.g. compacted
+    by a separate packing) fails at load with a versioned error instead
+    of serving wrong phrase answers."""
+    from php_lucene_analyzer_spark.engine import FulltextIndex
+    from php_lucene_analyzer_spark.functions.header import (
+        POSITIONAL_CODEC, POSITIONAL_VERSION)
+
+    assert POSITIONAL_VERSION == 2
+    with tempfile.TemporaryDirectory() as d:
+        idx = FulltextIndex.build(spark, docs.limit(50), ["doc_id"],
+                                  text_col="text", positional=True)
+        idx.save(d)
+        idx.close()
+        assert FulltextIndex.load(spark, d).positional is not None
+        write_dir_header(os.path.join(d, "positional"), POSITIONAL_CODEC, 1)
+        with pytest.raises(FormatError, match="older"):
+            FulltextIndex.load(spark, d)

@@ -259,13 +259,15 @@ def test_offsets_full_chain_and_compaction(spark, docs):
     real source text; compaction preserves spans bit-for-bit."""
     from php_lucene_analyzer_spark.analysis import analyze
     from php_lucene_analyzer_spark.operators.positional import (
-        compact_positional, first_match_span, positional_postings)
+        compact_index, first_match_span)
+    from php_lucene_analyzer_spark.operators.postings import (
+        _index_blocks, _split_blocks)
 
     sub = docs.filter("doc_id < 100").select("doc_id", "text")
-    pos = positional_postings(sub.repartitionByRange(8, "doc_id"),
-                              "doc_id", "text",
-                              store_offsets=True,
-                              flush_positions=500).cache()
+    blocks = _index_blocks(sub.repartitionByRange(8, "doc_id"), "doc_id",
+                           ["text"], positions=True, store_offsets=True,
+                           flush_tokens=500).cache()
+    post, pos = _split_blocks(blocks)
     terms = ["fast", "merg"]   # post-stem vocabulary
     got = {r["doc_id"]: (r["first_pos"], r["start"], r["end"])
            for r in first_match_span(pos, terms).collect()}
@@ -283,7 +285,7 @@ def test_offsets_full_chain_and_compaction(spark, docs):
         if best:
             want[row["doc_id"]] = best
     assert got == want and got
-    comp = compact_positional(pos).cache()
+    comp = compact_index(post, pos)[1].cache()
     got_c = {r["doc_id"]: (r["first_pos"], r["start"], r["end"])
              for r in first_match_span(comp, terms).collect()}
     assert got_c == got
@@ -294,7 +296,7 @@ def test_offsets_full_chain_and_compaction(spark, docs):
     b = sorted((r["doc_id"], r["n_matches"])
                for r in phrase_match(comp, "fast merge").collect())
     assert a == b
-    pos.unpersist(); comp.unpersist()
+    blocks.unpersist(); comp.unpersist()
 
 
 def test_engine_snippets(spark, docs):

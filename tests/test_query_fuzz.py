@@ -79,10 +79,8 @@ def test_fuzzed_queries_never_crash(fidx):
             fidx.query(q, k=3).collect()
             ran += 1
         except ValueError as ex:
-            # only the DOCUMENTED rejections may surface
-            msg = str(ex)
-            assert ("nested phrase" in msg or "at most 4 nested" in msg
-                    or "dangling" in msg), (q, msg)
+            # only the DOCUMENTED rejection may surface
+            assert "dangling" in str(ex), (q, str(ex))
     assert ran >= 150          # the generator mostly emits servable forms
 
 
@@ -97,9 +95,7 @@ def test_fuzzed_query_many_bit_identical(fidx):
             from php_lucene_analyzer_spark.querycompile import (
                 compile_query)
             from php_lucene_analyzer_spark.queryparser import parse_query
-            p = compile_query(parse_query(q), fidx._terms, None, 0, 64)
-            if p.nested:
-                continue               # documented query_many rejection
+            compile_query(parse_query(q), fidx._terms, None, 0, 64)
         except ValueError:
             continue
         batch[f"q{len(batch)}"] = q

@@ -38,12 +38,19 @@ def corpus(docs):
 
 
 def _tree_oracle(tree, instances, per_doc, dls, n_docs, avgdl_of, k,
-                 k1=ft.K1, b=ft.B):
+                 k1=ft.K1, b=ft.B, phrase_docs=(), scored=()):
     """Independent evaluator: Python sets for the match algebra, float
-    accumulation in instance order (the kernel's documented contract)."""
+    accumulation in instance order (the kernel's documented contract).
+
+    ``phrase_docs[j]``: {doc_id: n_matches} of phrase leaf j (from
+    phrase_match); ``scored``: [(j, w)] top-level phrases that score,
+    added after the term score as term + (0.0 + c_j0 + c_j1 + …) with
+    c = w·n·(k1+1)/(n+k1)."""
     all_docs = set(per_doc)
 
     def match(node):
+        if node[0] == "phrase":
+            return set(phrase_docs[node[1]])
         if node[0] == "leaf":
             return {d for d in all_docs
                     if any(t in per_doc[d] for t in node[2])}
@@ -70,6 +77,8 @@ def _tree_oracle(tree, instances, per_doc, dls, n_docs, avgdl_of, k,
     effs = {}
 
     def walk(node, eff):
+        if node[0] == "phrase":
+            return
         m = match(node) & eff
         if node[0] == "leaf":
             effs[node[1]] = m
@@ -94,6 +103,14 @@ def _tree_oracle(tree, instances, per_doc, dls, n_docs, avgdl_of, k,
                 tf = per_doc[d][t]
                 scores[d] += (wf * (tf * (k1 + 1.0))
                               / (tf + k1 * (1.0 - b + b * dls[d] / av)))
+    if scored:
+        for d in scores:
+            p = 0.0
+            for j, w in scored:
+                n = phrase_docs[j].get(d)
+                if n:
+                    p += w * n * (k1 + 1.0) / (n + k1)
+            scores[d] = scores[d] + p
     res = sorted(scores.items(), key=lambda x: (-x[1], x[0]))[:k]
     return res
 
@@ -489,3 +506,186 @@ def test_multifield_unfielded_query_mode(fidx, fcorpus):
     found = {d for d, _ in
              _rows(fidx.query("fast", k=10_000, multifield=True))}
     assert tonly <= found and tonly
+
+
+# ------------------------------------------------------- phrase leaves
+@pytest.fixture(scope="module")
+def pidx(spark, docs):
+    i = FulltextIndex.build(spark, docs.select("doc_id", "text"),
+                            ["doc_id"], text_col="text", positional=True)
+    yield i
+    i.close()
+
+
+@pytest.fixture(scope="module")
+def pfidx(spark, fdocs):
+    i = FulltextIndex.build(spark, fdocs, ["doc_id"],
+                            fields=["body", "title"], positional=True)
+    yield i
+    i.close()
+
+
+def _phrase_pool(docs, rng, n):
+    """``n`` adjacent word pairs/triples taken from the corpus texts."""
+    texts = [r["text"].split() for r in
+             docs.select("text").orderBy("doc_id").collect()
+             if r["text"] and len(r["text"].split()) >= 3]
+    out = set()
+    while len(out) < n:
+        ws = rng.choice(texts)
+        w = rng.choice([2, 2, 3])
+        i = rng.randrange(len(ws) - w + 1)
+        out.add(" ".join(ws[i:i + w]))
+    return sorted(out)
+
+
+def _phrase_queries(rng, pool, n, field=None):
+    """Seeded phrase-bearing query strings: top-level MUST/SHOULD/
+    MUST_NOT phrases, nested phrases (up to 6), sloppy phrases."""
+    terms = ["fast", "merge", "join", "stream", "value", "slow", "window",
+             "order", "batch", "spark", "customer"]
+    fp = f"{field}:" if field else ""
+
+    def P():
+        s = f'{fp}"{rng.choice(pool)}"'
+        return s + (f"~{rng.randint(1, 3)}" if rng.random() < .3 else "")
+
+    def T():
+        return rng.choice(terms)
+
+    shapes = [
+        lambda: f"{P()} {T()}",
+        lambda: f"+{P()} {T()} {T()}",
+        lambda: f"+{P()} +{T()} -{P()}",
+        lambda: f"{T()} {T()} -{P()}",
+        lambda: f"{P()} {P()} {T()}^2",
+        lambda: f"({T()} OR {P()}) AND {T()} {P()}",
+        lambda: f"+({P()} OR {P()}) {T()}",
+        lambda: f"({T()} AND NOT {P()}) {P()}",
+        lambda: " ".join(f"({P()} OR {T()})"
+                         for _ in range(rng.randint(4, 6))),
+        lambda: f"(NOT {T()} {P()}) {T()}",
+        lambda: f"{P()}^0.5 -{T()} ({T()} OR ({P()} AND {T()}))",
+    ]
+    return [rng.choice(shapes)() for _ in range(n)]
+
+
+def _phrase_expected(idx, per_doc, dls, avgdl_of, q, k, msm, slop_mode,
+                     cache, default_field=None):
+    """The oracle answer of a phrase-bearing query: the engine's own
+    compiler (pure metadata), phrase leaf match sets from phrase_match,
+    every other piece independent."""
+    from php_lucene_analyzer_spark.operators.fulltext import expand_specs
+    from php_lucene_analyzer_spark.operators.positional import phrase_match
+    from php_lucene_analyzer_spark.querycompile import compile_query
+    from php_lucene_analyzer_spark.queryparser import parse_query
+    from php_lucene_analyzer_spark.queryparser import Bool
+    known = set(idx.fields) if idx.fields else set()
+    ast = parse_query(q)
+    plan = compile_query(ast, idx._terms, default_field, msm, 64,
+                         known_fields=known)
+    exp = expand_specs(idx.tstats, plan.specs,
+                       default_field=default_field) if plan.specs else []
+    tree, inst = plan.finalize(exp)
+    pdocs = []
+    for text, slop, fld in plan.phrases:
+        key = (text, slop, fld, slop_mode)
+        if key not in cache:
+            cache[key] = {r["doc_id"]: r["n_matches"] for r in
+                          phrase_match(idx.positional, text, slop=slop,
+                                       field=fld, slop_mode=slop_mode)
+                          .collect()}
+        pdocs.append(cache[key])
+    boosts = []         # phrase leaf j's boost: j counts atoms in AST order
+
+    def walk(node):
+        for _occ, c in node.clauses:
+            if isinstance(c, Bool):
+                walk(c)
+            elif c.kind == "phrase":
+                boosts.append(c.boost)
+
+    walk(ast)
+    scored = []         # the root's MUST and SHOULD phrase children score
+    for j in sorted(c[1] for c in tree[1] + tree[2] if c[0] == "phrase"):
+        boost = boosts[j]
+        text, _slop, fld = plan.phrases[j]
+        ts = [f"{fld}{FIELD_SEP}{t}" if fld else t
+              for t in idx._terms(text)]
+        dfm = {t: sum(1 for c in per_doc.values() if t in c) for t in ts}
+        scored.append((j, boost * sum(ft.idf(idx.n_docs, dfm[t])
+                                      for t in ts if dfm[t])))
+    return _tree_oracle(tree, inst, per_doc, dls, idx.n_docs, avgdl_of, k,
+                        phrase_docs=pdocs, scored=scored)
+
+
+@pytest.mark.parametrize("msm,slop_mode", [(0, "lucene"), (1, "lucene"),
+                                           (2, "span"), (0, "span")])
+def test_phrase_leaves_match_oracle(pidx, corpus, docs, msm, slop_mode):
+    """Seeded phrase-bearing queries through query() AND query_many ==
+    the tree oracle with phrase_match leaf sets, bit for bit."""
+    import random
+    per_doc, dls = corpus
+    rng = random.Random(1000 + 10 * msm + len(slop_mode))
+    pool = _phrase_pool(docs, rng, 10)
+    qs = _phrase_queries(rng, pool, 8)
+    cache: dict = {}
+    want = {f"q{i}": _phrase_expected(pidx, per_doc, dls,
+                                      lambda t: pidx.avgdl, q, 15, msm,
+                                      slop_mode, cache)
+            for i, q in enumerate(qs)}
+    assert sum(bool(w) for w in want.values()) >= (3 if msm > 1 else 6)
+    for i, q in enumerate(qs):
+        got = _rows(pidx.query(q, k=15, msm=msm, slop_mode=slop_mode))
+        assert got == want[f"q{i}"], q
+    got = {qid: [] for qid in want}
+    for r in pidx.query_many({f"q{i}": q for i, q in enumerate(qs)}, k=15,
+                             msm=msm, slop_mode=slop_mode).collect():
+        got[r["qid"]].append((r["doc_id"], r["score"]))
+    for qid in want:
+        got[qid].sort(key=lambda x: (-x[1], x[0]))
+        assert got[qid] == want[qid], qid
+
+
+def test_field_phrase_leaves_match_oracle(pfidx, fcorpus, fdocs):
+    """``title:"…"`` phrase leaves on the two-field index, through
+    query() and query_many, == the oracle bit for bit (bare terms score
+    on the default field's dl and avgdl)."""
+    import random
+    per_doc, fld_len = fcorpus
+    rng = random.Random(77)
+    titles = fdocs.select(F.col("title").alias("text"), "doc_id")
+    pool = _phrase_pool(titles, rng, 8)
+    qs = _phrase_queries(rng, pool, 8, field="title")
+    cache: dict = {}
+    av = pfidx.field_avgdl["body"]
+    want = {f"q{i}": _phrase_expected(pfidx, per_doc, fld_len["body"],
+                                      lambda t: av, q, 15, 0, "lucene",
+                                      cache, default_field="body")
+            for i, q in enumerate(qs)}
+    assert sum(bool(w) for w in want.values()) >= 6
+    for i, q in enumerate(qs):
+        assert _rows(pfidx.query(q, k=15)) == want[f"q{i}"], q
+    got = {qid: [] for qid in want}
+    for r in pfidx.query_many({f"q{i}": q for i, q in enumerate(qs)},
+                              k=15).collect():
+        got[r["qid"]].append((r["doc_id"], r["score"]))
+    for qid in want:
+        got[qid].sort(key=lambda x: (-x[1], x[0]))
+        assert got[qid] == want[qid], qid
+
+
+def test_msm_counts_with_must_phrase(pidx, docs):
+    """'+"<phrase>" a b' with msm=1: the MUST phrase is the required
+    clause and at least one SHOULD term must match (Lucene
+    minimumShouldMatch) — the relational phrase fold used to drop msm
+    here and return every phrase doc."""
+    phrase = " ".join(docs.filter("doc_id = 0").first()["text"]
+                      .split()[1:3])
+    pdocs = {r["doc_id"] for r in pidx.phrase(phrase).collect()}
+    a_docs = {r["doc_id"] for r in pidx.search("customer", k=10_000)
+              .collect()}
+    got = {d for d, _ in _rows(pidx.query(f'+"{phrase}" customer',
+                                          k=10_000, msm=1))}
+    assert got == pdocs & a_docs
+    assert pdocs - a_docs, "vacuous: every phrase doc has the term"

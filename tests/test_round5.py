@@ -170,12 +170,11 @@ def test_sloppy_repeated_term_needs_distinct_occurrences(spark):
 
 
 # --------------------------------------- one-job phrase serving (r5)
-def test_query_many_with_phrases_bit_identical(pidx, docs, monkeypatch):
+def test_query_many_with_phrases_bit_identical(pidx, docs):
     """query_many accepts the full grammar incl. phrases and matches
-    per-query query() bit-for-bit, with ONE positional job for every
-    phrase of every query."""
-    import php_lucene_analyzer_spark.operators.positional as posmod
-
+    per-query query() bit-for-bit (phrase leaves run inside the tree
+    kernel; test_term_dictionary.py holds the batch's Spark job
+    count)."""
     phrase = _first_phrase(docs)
     phrase2 = _first_phrase(docs, n=3)
     queries = {
@@ -187,15 +186,6 @@ def test_query_many_with_phrases_bit_identical(pidx, docs, monkeypatch):
     }
     want = {qid: _rows(pidx.query(q, k=8))
             for qid, q in queries.items()}
-    calls = []
-    real = posmod.phrase_match_many
-
-    def counting(*a, **kw):
-        calls.append(len(a[1]))
-        return real(*a, **kw)
-
-    monkeypatch.setattr(posmod, "phrase_match_many", counting)
-    # engine imports the symbol lazily from the module -> patch sticks
     rows = pidx.query_many(queries, k=8).collect()
     got = {}
     for r in rows:
@@ -203,7 +193,6 @@ def test_query_many_with_phrases_bit_identical(pidx, docs, monkeypatch):
     for qid in queries:
         got.setdefault(qid, []).sort(key=lambda x: (-x[1], x[0]))
         assert got[qid] == want[qid], qid
-    assert len(calls) == 1 and calls[0] == 4   # 4 phrase clauses, 1 job
 
 
 def test_phrase_match_many_equals_single(pidx, docs):
@@ -420,15 +409,18 @@ def test_escaped_quote_inside_phrase_parses(pidx):
 
 
 def test_query_many_phrase_plan_is_join_sane(pidx, docs):
-    """Physical-plan audit for the phrase serving path: metadata joins
-    broadcast, no cartesian products or nested-loop joins anywhere."""
+    """Physical-plan audit for the phrase serving path: no cartesian
+    products or nested-loop joins anywhere, and ONE exchange — over the
+    union of the term and phrase-term block scans — feeds the kernel."""
     phrase = _first_phrase(docs)
     df = pidx.query_many({"a": f'+"{phrase}" value',
                           "b": "stream -dup"}, k=5)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoop" not in plan
-    assert plan.count("BroadcastHashJoin") >= 2   # qmeta + pid_meta
+    assert plan.count("Exchange hashpartitioning(rbucket") == 1
+    assert plan.count("FlatMapGroupsInPandas") == 1
+    assert "Union" in plan
 
 
 # ------------------------------------------- nested phrases (r5 late)
@@ -512,13 +504,32 @@ def test_nested_phrase_empty_must_expansion_via_phrase(pidx, docs):
     assert got == pdocs
 
 
-def test_nested_phrase_limits_and_many_raise(pidx, docs):
-    phrase = _first_phrase(docs)
-    q5 = " ".join(f'("{phrase}" OR x{i})' for i in range(5))
-    with pytest.raises(ValueError):
-        pidx.query(q5)                    # >4 nested phrases
-    with pytest.raises(ValueError):
-        pidx.query_many({"q": f'(a OR "{phrase}")'})
+def test_nested_phrase_limits_lifted(pidx, docs):
+    """Five nested phrases in query() and a nested phrase in query_many
+    answer (the Shannon-expansion path capped query() at 4 and
+    query_many rejected nested phrases): the set-algebra answer, and
+    query_many == query()."""
+    p1 = _first_phrase(docs)
+    p2 = _first_phrase(docs, n=3)
+    d1 = {r["doc_id"] for r in pidx.phrase(p1).collect()}
+    d2 = {r["doc_id"] for r in pidx.phrase(p2).collect()}
+    # five MUST groups, each satisfied by its phrase (p1 or p2) or a term
+    # absent from the corpus: the match set is d1 ∩ d2
+    q5 = " ".join(f'+("{p1 if i % 2 else p2}" OR zzzq{i})'
+                  for i in range(5))
+    got = {d: s for d, s in _rows(pidx.query(q5, k=100_000))}
+    assert set(got) == d1 & d2 and got
+    assert set(got.values()) == {0.0}   # nested phrases gate, never score
+    c_stream = _contribs(pidx, "stream")
+    q = f'(value OR "{p1}") AND stream'
+    many = [(r["doc_id"], r["score"]) for r in
+            pidx.query_many({"q": q, "r": q5}, k=100_000).collect()
+            if r["qid"] == "q"]
+    many.sort(key=lambda x: (-x[1], x[0]))
+    want = _rows(pidx.query(q, k=100_000))
+    assert many == want and want
+    c_value = _contribs(pidx, "valu")
+    assert {d for d, _ in want} == (set(c_value) | d1) & set(c_stream)
 
 
 # -------------------------------- Lucene sloppy accounting (late r5)

@@ -231,38 +231,50 @@ def built_positional_index(pyfiles_zip, tmp_path_factory):
     return workdir, json.loads(out.strip().splitlines()[-1])
 
 
+def _bucket_docs(table) -> set:
+    """Every (rbucket, doc_id) a posting or positional table holds."""
+    from php_lucene_analyzer_spark.functions.codec import (delta_decode,
+                                                           vbyte_decode)
+    return {(r["rbucket"], int(d))
+            for r in table.select("rbucket", "doc_blob").collect()
+            for d in delta_decode(vbyte_decode(r["doc_blob"]))}
+
+
 def test_phrase_serving_via_spark_submit(built_positional_index,
                                          pyfiles_zip, spark):
     """build_index.py --positional writes the packed positional index
-    (format-headered) into the workdir and query_index.py serves
-    phrase-bearing classic queries from it, matching the in-process
-    engine bit-for-bit (r5: the CLI previously documented phrase
-    support but never loaded a positional dir)."""
+    (format-headered) chunk by chunk, each doc's positions in the
+    rbucket of its postings (the phrase-leaf precondition), and
+    query_index.py serves phrase-bearing classic queries from it,
+    matching an in-process FulltextIndex built from the same input
+    bit-for-bit."""
     workdir, summary = built_positional_index
     assert summary["has_positional"]
-    assert os.path.isdir(os.path.join(workdir, "positional"))
+    assert len(summary["chunks"]) > 1
+    pdir = os.path.join(workdir, "positional")
+    assert os.path.isdir(os.path.join(pdir, "chunk=1"))
+    postings = spark.read.option(
+        "basePath", os.path.join(workdir, "postings")).parquet(
+        os.path.join(workdir, "postings", "chunk=*"))
+    pos_docs = _bucket_docs(spark.read.parquet(pdir))
+    assert pos_docs and pos_docs <= _bucket_docs(postings)
+
     q1, q2 = '+"merge join" value', '"fast merge"~2 stream'
+    q3 = '+"merge join" +value'
     out = _submit("--py-files", pyfiles_zip,
                   os.path.join(REPO, "scripts", "query_index.py"),
                   "--workdir", workdir, "-k", "5", "--syntax", "classic",
-                  q1, q2)
+                  q1, q2, q3)
     lines = [json.loads(l) for l in out.strip().splitlines()
              if l.startswith("{")]
     got = {d["query"]: [tuple(h) for h in d["hits"]] for d in lines}
 
     from php_lucene_analyzer_spark.engine import FulltextIndex
-    from php_lucene_analyzer_spark.operators.postings import (
-        term_stats_from_postings)
-
-    stats = json.load(open(os.path.join(workdir, "stats.json")))
-    postings = spark.read.option(
-        "basePath", os.path.join(workdir, "postings")).parquet(
-        os.path.join(workdir, "postings", "chunk=*"))
-    tstats = term_stats_from_postings(postings).cache()
-    pos = spark.read.parquet(os.path.join(workdir, "positional"))
-    idx = FulltextIndex(spark, postings, tstats, int(stats["n_docs"]),
-                        float(stats["avgdl"]), positional=pos)
-    for q in (q1, q2):
+    idx = FulltextIndex.build(
+        spark, spark.read.parquet(os.path.join(SF_DIR, "documents.parquet")),
+        ["doc_id"], text_col="text", positional=True)
+    for q in (q1, q2, q3):
         want = [(r["doc_id"], r["score"])
                 for r in idx.query(q, k=5).collect()]
         assert got[q] == want and want, q
+    idx.close()

@@ -1,7 +1,8 @@
 """The driver-resident term dictionary of FulltextIndex: driver-side
 expansion returns exactly the Spark expand_specs lists, the collect
-fallback above TERM_DICT_CAP answers exactly as the resident path, and
-a single query on a loaded index runs in at most two Spark jobs."""
+fallback above TERM_DICT_CAP answers exactly as the resident path, a
+single query on a loaded index runs in at most two Spark jobs (a phrase
+query in three), and a query_many batch with phrase queries in four."""
 
 import random
 import time
@@ -256,3 +257,45 @@ def test_single_query_jobs(spark, docs, saved):
                      .collect())
     assert 1 <= n_search <= 2
     assert 1 <= n_prefix <= 2
+
+
+def test_phrase_query_jobs(spark, docs, saved):
+    """Phrase leaves run inside the tree kernel's grouped pass: a warm
+    '"p q" a' query() and a 6-query query_many with two phrase queries
+    launch no separate positional job (the relational phrase fold ran
+    6 and 9)."""
+    idx = FulltextIndex.load(spark, saved)
+    sc = spark.sparkContext
+    forms = _forms(idx, docs)
+    idx.query(forms[5]).collect()                     # warm-up
+    n_phrase = _jobs(sc, "dict-phrase", lambda: idx.query(forms[5])
+                     .collect())
+    batch = {f"q{j}": q for j, q in enumerate(forms)}
+    batch["q0"] = "+" + forms[5]
+    n_many = _jobs(sc, "dict-many", lambda: idx.query_many(batch)
+                   .collect())
+    assert 1 <= n_phrase <= 3
+    assert 1 <= n_many <= 4
+
+
+def test_loaded_tstats_cached_and_released(spark, saved, monkeypatch,
+                                           tmp_path):
+    """load() leaves ``tstats`` uncached (below TERM_DICT_CAP it is read
+    once, by the dictionary collect); above the cap the first dictionary
+    read caches it (every df lookup and expansion then reads it) and
+    close() releases it."""
+    import shutil
+
+    from pyspark import StorageLevel
+    monkeypatch.setattr(engmod, "TERM_DICT_CAP", 0)
+    # a private copy: Spark's cache is keyed by plan, so another open
+    # index over ``saved`` would show as cached here
+    path = str(tmp_path / "copy")
+    shutil.copytree(saved, path)
+    idx = FulltextIndex.load(spark, path)
+    assert idx.tstats.storageLevel == StorageLevel.NONE
+    assert idx._dictionary() is None
+    assert idx.tstats.storageLevel != StorageLevel.NONE
+    assert idx.query("stream value", k=5).count()
+    idx.close()
+    assert idx.tstats.storageLevel == StorageLevel.NONE
