@@ -458,7 +458,7 @@ class FulltextIndex:
                     k_map[qid] = None           # anti-joined: no cut
         schema = "qid string, doc_id long, score double"
         if not trees:
-            return self.spark.createDataFrame([], schema)
+            return ft.empty_frame(self.spark, schema)
         leaf_terms = set().union(*map(_leaf_terms, trees.values()))
         dfs = self._dfs(leaf_terms | {t for ws in weights.values()
                                       for _j, _b, ts in ws for t in ts})

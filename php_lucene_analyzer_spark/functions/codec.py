@@ -5,8 +5,12 @@ Byte layout matches the reference's VInt/VLong exactly
 7 low-order bits per byte, least-significant group first, high bit set on
 every byte except the last.  Zigzag per BitUtil.php:175-183.
 
-These run INSIDE Arrow-batched UDFs (posting build/decode); no per-element
-Python loops — encode loops over ≤10 byte positions, decode uses
+Both directions work on MANY blobs per call: ``vbyte_encode_slices``
+encodes one array into a blob per segment, ``vbyte_decode_slices``
+decodes a list of blobs in one pass over their concatenation (each blob's
+value count comes from its terminator bytes).  ``vbyte_encode`` and
+``vbyte_decode`` are their one-blob wrappers.  No per-element Python
+loops — encode loops over ≤10 byte positions, decode uses
 ``np.add.reduceat`` over continuation-bit group boundaries.
 """
 
@@ -65,18 +69,36 @@ def vbyte_encode_slices(values: np.ndarray,
 
 
 def vbyte_decode(buf: bytes) -> np.ndarray:
-    """Decode VByte bytes back to a uint64 array."""
+    """Decode VByte bytes back to a uint64 array (vbyte_decode_slices
+    of one blob)."""
     b = np.frombuffer(buf, dtype=np.uint8)
+    return _decode(b, np.flatnonzero(b < 0x80))
+
+
+def vbyte_decode_slices(blobs) -> tuple[np.ndarray, np.ndarray]:
+    """Decode a sequence of VByte blobs in ONE vectorized pass over
+    their concatenation -> (values, offsets): blob i's values are
+    ``values[offsets[i]:offsets[i + 1]]``.  The mirror of
+    vbyte_encode_slices: a value ends at each byte whose high bit is
+    clear, so the blobs need no separate count column."""
+    blobs = list(blobs)
+    b = np.frombuffer(b"".join(blobs), dtype=np.uint8)
+    ends = np.flatnonzero(b < 0x80)
+    byte_bounds = np.cumsum([0] + [len(x) for x in blobs])
+    return _decode(b, ends), np.searchsorted(ends, byte_bounds)
+
+
+def _decode(b: np.ndarray, ends: np.ndarray) -> np.ndarray:
+    """VByte bytes ``b`` -> the uint64 values ending at ``ends`` (the
+    indices of the bytes whose high bit is clear)."""
     if b.size == 0:
         return np.empty(0, dtype=np.uint64)
-    is_last = (b & 0x80) == 0
-    starts = np.concatenate(([0], np.flatnonzero(is_last)[:-1] + 1))
-    idx = np.arange(b.size)
+    starts = np.concatenate(([0], ends[:-1] + 1))
     # position of each byte within its value group
     group_start = np.zeros(b.size, dtype=np.int64)
     group_start[starts] = starts
     np.maximum.accumulate(group_start, out=group_start)
-    shifts = np.uint64(7) * (idx - group_start).astype(np.uint64)
+    shifts = np.uint64(7) * (np.arange(b.size) - group_start).astype(np.uint64)
     contribs = (b & 0x7F).astype(np.uint64) << shifts
     return np.add.reduceat(contribs, starts)
 

@@ -43,28 +43,10 @@ import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 
-from ..functions.codec import delta_decode, vbyte_decode
-from .fulltext import B, K1, idf as bm25_idf
+from .fulltext import B, K1, empty_frame, idf as bm25_idf
 from .positional import _decode_flat, _run_phrase, _spec_terms
+from .postings import decode_postings
 from .wand import _filter_terms, _topk_cut, term_dfs
-
-
-def _decode_term(rows: pd.DataFrame) -> tuple[np.ndarray, np.ndarray,
-                                              np.ndarray]:
-    """Concatenate one term's blocks -> (docs, tfs, dls), doc-ascending.
-
-    Blocks of one term are doc-disjoint and first_doc-ordered by
-    construction (see _TermCursor in wand.py), so concatenation in
-    first_doc order IS global doc order."""
-    rows = rows.sort_values("first_doc")
-    docs = np.concatenate([
-        delta_decode(vbyte_decode(bb)).astype(np.int64)
-        for bb in rows["doc_blob"]])
-    tfs = np.concatenate([
-        vbyte_decode(bb).astype(np.float64) for bb in rows["tf_blob"]])
-    dls = np.concatenate([
-        vbyte_decode(bb).astype(np.float64) for bb in rows["dl_blob"]])
-    return docs, tfs, dls
 
 
 def _leaf_terms(node) -> set[str]:
@@ -145,7 +127,8 @@ def _tree_bucket(decoded, tree, instances, k: int | None, k1: float,
     """Evaluate a compiled query TREE inside one doc-range bucket.
 
     ``decoded``: {term: (docs, tfs, dls)} for the tree's terms in this
-    bucket (_decode_term output, shared read-only across the set).
+    bucket (views of one postings.decode_postings pass, shared
+    read-only across the set).
     ``instances``: [(term, weight, avgdl, leaf_id), ...] sorted by
     (term, leaf_id) — one scoring instance per positive-path leaf
     membership; weight = idf x the boost product along the leaf's path.
@@ -245,7 +228,6 @@ def _tree_set(postings: DataFrame, dfs: dict[str, int], n_docs: int,
     whole set.  This needs every doc's postings and positions in one
     rbucket, which the build, the streaming segments and compact()
     keep.  A set without phrases reads no positional rows."""
-    spark = postings.sparkSession
     schema = "qid string, doc_id long, score double"
     scored = scored or {}
     per_q_terms = {qid: _leaf_terms(t) for qid, t in trees.items()}
@@ -261,7 +243,7 @@ def _tree_set(postings: DataFrame, dfs: dict[str, int], n_docs: int,
     pterms = sorted(set().union(*(_spec_terms(sp) for sp in phrases
                                   if sp is not None)))
     if not alive and not pterms:
-        return spark.createDataFrame([], schema)
+        return empty_frame(postings.sparkSession, schema)
     qterms_alive = {qid: {t for t in ts if t in dfs}
                     for qid, ts in per_q_terms.items()}
 
@@ -269,27 +251,21 @@ def _tree_set(postings: DataFrame, dfs: dict[str, int], n_docs: int,
         hits = []
         if pterms:
             is_pos = pdf["pos_blob"].notna()
-            flat = {t: _decode_flat(g)
-                    for t, g in pdf[is_pos].groupby("term")}
+            flat = _decode_flat(pdf[is_pos])
             pdf = pdf[~is_pos]
             none = (np.empty(0, dtype=np.int64),) * 2
             hits = [_run_phrase(flat, sp) if sp is not None else none
                     for sp in phrases]
         outs = []
-        # decode each TERM once per bucket and assemble per-query views
-        # from the shared arrays (_tree_bucket is read-only over them)
-        by_term = dict(tuple(pdf.groupby("term")))
-        term_dec: dict[str, tuple] = {}
+        # decode every term of the bucket in one pass and hand each
+        # query views of the shared arrays (_tree_bucket only reads them)
+        terms, offs, docs, tfs, dls = decode_postings(pdf)
+        tfs, dls = tfs.astype(np.float64), dls.astype(np.float64)
+        term_dec = {t: (docs[lo:hi], tfs[lo:hi], dls[lo:hi])
+                    for t, lo, hi in zip(terms, offs[:-1], offs[1:])}
         for qid, tree in trees.items():
-            dec = {}
-            for t in qterms_alive[qid]:
-                d = term_dec.get(t)
-                if d is None:
-                    g = by_term.get(t)
-                    if g is None:
-                        continue
-                    d = term_dec[t] = _decode_term(g)
-                dec[t] = d
+            dec = {t: term_dec[t] for t in qterms_alive[qid]
+                   if t in term_dec}
             r = _tree_bucket(dec, tree, instances[qid],
                              k_map.get(qid, k), k1, b, hits,
                              scored.get(qid, ()))

@@ -587,6 +587,14 @@ def idf(n_docs: int, df: int) -> float:
     return math.log(1.0 + (float(n_docs) - df + 0.5) / (df + 0.5))
 
 
+def empty_frame(spark, schema: str) -> DataFrame:
+    """A zero-row DataFrame of ``schema`` that collects WITHOUT a Spark
+    job: LIMIT 0 lets the optimizer fold it, and any sort, limit or
+    window above it, to an empty local relation (a bare
+    ``createDataFrame([])`` launches one job)."""
+    return spark.createDataFrame([], schema).limit(0)
+
+
 def bm25_scores(tdf: DataFrame, tstats: DataFrame, n_docs: int, avgdl: float,
                 query_terms: list[str], k1: float = K1, b: float = B) -> DataFrame:
     """Exhaustive BM25 over all matching docs -> (doc_id, score).
@@ -599,11 +607,10 @@ def bm25_scores(tdf: DataFrame, tstats: DataFrame, n_docs: int, avgdl: float,
     terms = sorted(set(query_terms))
     dfs = {r["term"]: r["df"] for r in
            tstats.filter(F.col("term").isin(terms)).select("term", "df").collect()}
-    qt = spark.createDataFrame(
-        [(t, idf(n_docs, dfs[t])) for t in terms if t in dfs],
-        "term string, idf double")
-    if qt.isEmpty():
-        return spark.createDataFrame([], "doc_id long, score double")
+    rows = [(t, idf(n_docs, dfs[t])) for t in terms if t in dfs]
+    if not rows:
+        return empty_frame(spark, "doc_id long, score double")
+    qt = spark.createDataFrame(rows, "term string, idf double")
     scored = (tdf.join(F.broadcast(qt), "term")
               .withColumn(
                   "contrib",
@@ -623,6 +630,6 @@ def bm25_topk(tdf: DataFrame, tstats: DataFrame, n_docs: int, avgdl: float,
     total tie-break (score desc, doc_id asc) -> TakeOrderedAndProject."""
     terms = [t.term for t in analyze(query)]
     if not terms:
-        return tdf.sparkSession.createDataFrame([], "doc_id long, score double")
+        return empty_frame(tdf.sparkSession, "doc_id long, score double")
     scores = bm25_scores(tdf, tstats, n_docs, avgdl, terms)
     return scores.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)

@@ -35,12 +35,11 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
 from ..analysis import analyze
-from ..functions.codec import vbyte_decode, vbyte_encode_slices
-from .postings import (BLOCK_SIZE, FLUSH_POSTINGS, _compact_postings,
-                       _doc_blocks, _doc_order, _index_blocks, _reset_gaps,
-                       _split_blocks, bucket_groups)
-
-POS_BLOCK_SIZE = BLOCK_SIZE
+from ..functions.codec import vbyte_encode_slices
+from .fulltext import empty_frame
+from .postings import (FLUSH_POSTINGS, _compact_postings, _doc_blocks,
+                       _doc_order, _index_blocks, _reset_gaps, _split_blocks,
+                       bucket_groups, decode_positions)
 
 POS_SCHEMA = ("term string, rbucket long, block_no int, n int, "
               "first_doc long, last_doc long, sum_tf long, "
@@ -93,15 +92,10 @@ def _pos_block_rows(terms: list[str], term_offsets: np.ndarray,
     }, columns=_COLS)
 
 
-# the builder's one flush bound, counted in tokens (postings.py::
-# FLUSH_POSTINGS): positional and posting builds flush at the same docs
-FLUSH_POSITIONS = FLUSH_POSTINGS
-
-
 def positional_postings(docs_with_ids: DataFrame, id_col: str = "doc_id",
                         text_col: str = "content",
                         rbucket_base: int = 0, terms_fn=None,
-                        flush_positions: int = FLUSH_POSITIONS,
+                        flush_positions: int = FLUSH_POSTINGS,
                         store_offsets: bool = False,
                         spans_fn=None,
                         analyzer=None) -> DataFrame:
@@ -145,50 +139,6 @@ def positional_postings(docs_with_ids: DataFrame, id_col: str = "doc_id",
         terms_fn=terms_fn, spans_fn=spans_fn))[1]
 
 
-def _decode_arrays(doc_blob: bytes, freq_blob: bytes,
-                   pos_blob: bytes) -> tuple[np.ndarray, np.ndarray,
-                                             np.ndarray]:
-    """One block's blobs -> (docs, freqs, FLAT absolute positions).
-
-    Absolute positions from per-doc-reset gaps: global cumsum, then
-    subtract each doc's carry-in (the cumsum just before its start).
-    Single source of truth for the decode — _decode_block adds the
-    per-doc split, _decode_flat concatenates across blocks."""
-    docs = np.cumsum(vbyte_decode(doc_blob),
-                     dtype=np.uint64).astype(np.int64)
-    freqs = vbyte_decode(freq_blob).astype(np.int64)
-    gaps = vbyte_decode(pos_blob)
-    starts = np.concatenate(([0], np.cumsum(freqs)))[:-1].astype(np.int64)
-    cs = np.cumsum(gaps, dtype=np.uint64)
-    carry = np.zeros(len(starts), dtype=np.uint64)
-    carry[1:] = cs[starts[1:] - 1]
-    abs_pos = (cs - np.repeat(carry, freqs)).astype(np.int64)
-    return docs, freqs, abs_pos
-
-
-def _decode_block(doc_blob: bytes, freq_blob: bytes,
-                  pos_blob: bytes) -> tuple[np.ndarray, np.ndarray, list]:
-    """-> (docs, freqs, per-doc absolute position arrays)."""
-    docs, freqs, abs_pos = _decode_arrays(doc_blob, freq_blob, pos_blob)
-    return docs, freqs, np.split(abs_pos, np.cumsum(freqs)[:-1])
-
-
-def _decode_offsets(ostart_blob: bytes, olen_blob: bytes,
-                    freqs: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-    """-> (absolute starts, token lengths), flat, aligned with the
-    block's position entries (starts are per-doc delta-encoded like
-    positions)."""
-    og = vbyte_decode(ostart_blob)
-    ol = vbyte_decode(olen_blob).astype(np.int64)
-    starts_idx = np.concatenate(([0], np.cumsum(freqs)))[:-1].astype(
-        np.int64)
-    cs = np.cumsum(og, dtype=np.uint64)
-    carry = np.zeros(len(starts_idx), dtype=np.uint64)
-    carry[1:] = cs[starts_idx[1:] - 1]
-    abs_os = (cs - np.repeat(carry, freqs)).astype(np.int64)
-    return abs_os, ol
-
-
 def _phrase_terms(phrase: str,
                   analyzer=None) -> list[tuple[str, int]]:
     """(term, position) pairs of the analyzed phrase — stopword holes
@@ -208,21 +158,16 @@ def _phrase_terms(phrase: str,
     return out
 
 
-def _decode_flat(g: pd.DataFrame) -> tuple[np.ndarray, np.ndarray,
-                                           np.ndarray]:
-    """One term's bucket blocks -> (docs, freqs, flat absolute
-    positions), doc-ascending, positions ascending within each doc —
-    the whole-bucket layout the vectorized phrase kernels run on (no
-    per-doc splits, no Python dict of doc -> array)."""
-    g = g.sort_values(["first_doc", "block_no"])
-    d_parts, f_parts, p_parts = [], [], []
-    for db, fb, pb in zip(g["doc_blob"], g["freq_blob"], g["pos_blob"]):
-        docs, freqs, abs_pos = _decode_arrays(db, fb, pb)
-        d_parts.append(docs)
-        f_parts.append(freqs)
-        p_parts.append(abs_pos)
-    return (np.concatenate(d_parts), np.concatenate(f_parts),
-            np.concatenate(p_parts))
+def _decode_flat(pdf: pd.DataFrame) -> dict[str, tuple]:
+    """A bucket's positional blocks -> {term: (docs, freqs, flat
+    absolute positions)}, doc-ascending, positions ascending within each
+    doc — the whole-bucket layout the vectorized phrase kernels run on
+    (one decode pass for every term, no per-doc splits)."""
+    terms, offs, docs, freqs, pos = decode_positions(pdf)
+    poffs = np.concatenate(([0], np.cumsum(freqs)))[offs]
+    return {t: (docs[lo:hi], freqs[lo:hi], pos[plo:phi])
+            for t, lo, hi, plo, phi
+            in zip(terms, offs[:-1], offs[1:], poffs[:-1], poffs[1:])}
 
 
 def _in_sorted(sorted_arr: np.ndarray, values: np.ndarray) -> np.ndarray:
@@ -577,25 +522,12 @@ def phrase_match(pos_postings: DataFrame, phrase: str,
     full chain; a tokenizer function = sequential positions).
     ``field``: evaluate against a non-default field's positional
     postings (multi-field index, "<field>\\x1fterm" namespace).
+    Runs phrase_match_many's plan as a set of one.
     """
-    spark = pos_postings.sparkSession
-    spec = _compile_phrase(phrase, terms_fn, slop, field, analyzer,
-                           slop_mode)
-    if spec is None:
-        return spark.createDataFrame([], "doc_id long, n_matches int")
-    uterms = sorted(_spec_terms(spec))
-
-    def bucket(pdf: pd.DataFrame) -> pd.DataFrame:
-        flat = {term: _decode_flat(g)
-                for term, g in pdf.groupby("term")}
-        docs, counts = _run_phrase(flat, spec)
-        return pd.DataFrame({"doc_id": docs,
-                             "n_matches": counts.astype(np.int32)})
-
-    matched = pos_postings.filter(F.col("term").isin(uterms))
-    return (matched.groupBy("rbucket")
-            .applyInPandas(bucket, schema="doc_id long, n_matches int")
-            .orderBy("doc_id"))
+    return (phrase_match_many(pos_postings,
+                              {"_": (phrase, slop, field, slop_mode)},
+                              terms_fn, analyzer)
+            .drop("pid").orderBy("doc_id"))
 
 
 def phrase_match_many(pos_postings: DataFrame,
@@ -614,7 +546,6 @@ def phrase_match_many(pos_postings: DataFrame,
     rbucket, every needed term decodes ONCE and each phrase's kernel
     reuses the flat streams; a phrase whose analysis is empty yields no
     rows for its pid."""
-    spark = pos_postings.sparkSession
     schema = "pid string, doc_id long, n_matches int"
     specs: dict[str, tuple] = {}
     for pid, ph in phrases.items():
@@ -626,13 +557,12 @@ def phrase_match_many(pos_postings: DataFrame,
         if spec is not None:
             specs[pid] = spec
     if not specs:
-        return spark.createDataFrame([], schema)
+        return empty_frame(pos_postings.sparkSession, schema)
     all_terms = sorted(set().union(*(_spec_terms(s)
                                      for s in specs.values())))
 
     def bucket(pdf: pd.DataFrame) -> pd.DataFrame:
-        flat = {term: _decode_flat(g)
-                for term, g in pdf.groupby("term")}
+        flat = _decode_flat(pdf)
         outs = []
         for pid in sorted(specs):
             docs, counts = _run_phrase(flat, specs[pid])
@@ -671,40 +601,22 @@ def compact_index(postings: DataFrame, pos_postings: DataFrame,
 def _compact_positional(pos_postings: DataFrame,
                         mapping: DataFrame) -> DataFrame:
     """The positional half of compact_index over a ``(rbucket, _gid)``
-    pack mapping: one applyInPandas pass per group decodes each term's
-    blocks, concatenates docs/freqs/positions (re-sorting if bucket doc
-    ranges interleave) and re-encodes through _pos_block_rows."""
+    pack mapping: one applyInPandas pass per group decodes all its
+    blocks in one pass (postings.decode_positions), re-sorts if bucket
+    doc ranges interleave and re-encodes through _pos_block_rows."""
 
     def compact_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        gid_v = int(pdf["_gid"].iloc[0])
         has_off = ("ostart_blob" in pdf.columns
                    and pdf["ostart_blob"].iloc[0] is not None)
-        terms, offsets = [], [0]
-        parts: list[list] = [[], [], [], [], []]
-        for term, g in pdf.groupby("term", sort=True):
-            g = g.sort_values(["first_doc", "block_no"])
-            for part, arr in zip(parts, _decode_flat(g)):
-                part.append(arr)
-            if has_off:
-                for ob, lb, f in zip(g["ostart_blob"], g["olen_blob"],
-                                     g["freq_blob"]):
-                    starts, lens = _decode_offsets(
-                        ob, lb, vbyte_decode(f).astype(np.int64))
-                    parts[3].append(starts)
-                    parts[4].append(lens)
-            terms.append(term)
-            offsets.append(offsets[-1] + int(g["n"].sum()))
-        offsets = np.asarray(offsets, dtype=np.int64)
-        cols = [np.concatenate(p).astype(np.uint64)
-                for p in parts[:5 if has_off else 3]]
+        terms, offsets, *cols = decode_positions(pdf, has_off)
         # buckets are doc-SET disjoint only: re-sort interleaved doc
         # ranges, gathering each doc's positions (and offsets) along
         order, gather = _doc_order(offsets, cols[0], cols[1])
         if order is not None:
             cols = ([c[order] for c in cols[:2]]
                     + [c[gather] for c in cols[2:]])
-        return _pos_block_rows(terms, offsets, *cols[:3], gid_v,
-                               *cols[3:])
+        return _pos_block_rows(terms, offsets, *cols[:3],
+                               int(pdf["_gid"].iloc[0]), *cols[3:])
 
     return (pos_postings.join(F.broadcast(mapping), "rbucket")
             .groupBy("_gid")
@@ -719,43 +631,22 @@ def first_match_span(pos_postings: DataFrame,
     on one without offsets).  Per rbucket: each (term, doc) run's first
     entry is its earliest position (runs ascend); min-reduce across
     terms by (position, start)."""
-    spark = pos_postings.sparkSession
     uterms = sorted(set(terms))
     schema = "doc_id long, first_pos long, start long, end long"
     if not uterms:
-        return spark.createDataFrame([], schema)
+        return empty_frame(pos_postings.sparkSession, schema)
 
     def bucket(pdf: pd.DataFrame) -> pd.DataFrame:
-        rows = {"doc_id": [], "first_pos": [], "start": [], "end": []}
-        for _, r in pdf.iterrows():
-            if r["ostart_blob"] is None:
-                raise ValueError(
-                    "first_match_span needs an offsets index "
-                    "(positional_postings(store_offsets=True))")
-            # one VByte decode per blob: each doc's FIRST entry is its
-            # run start (per-doc gap reset makes the first gap the
-            # absolute value — no cumsum/carry or per-doc split needed
-            # in this serving path; review fix)
-            docs = np.cumsum(vbyte_decode(r["doc_blob"]),
-                             dtype=np.uint64).astype(np.int64)
-            freqs = vbyte_decode(r["freq_blob"]).astype(np.int64)
-            starts_idx = np.concatenate(
-                ([0], np.cumsum(freqs)))[:-1].astype(np.int64)
-            firsts = vbyte_decode(r["pos_blob"])[starts_idx] \
-                .astype(np.int64)
-            ostarts = vbyte_decode(r["ostart_blob"])[starts_idx] \
-                .astype(np.int64)
-            olens = vbyte_decode(r["olen_blob"])[starts_idx] \
-                .astype(np.int64)
-            rows["doc_id"].append(docs)
-            rows["first_pos"].append(firsts)
-            rows["start"].append(ostarts)
-            rows["end"].append(ostarts + olens)
-        if not rows["doc_id"]:
-            return pd.DataFrame({k: pd.Series(dtype="int64")
-                                 for k in rows})
-        df = pd.DataFrame({k: np.concatenate(v)
-                           for k, v in rows.items()})
+        if pdf["ostart_blob"].isna().any():
+            raise ValueError(
+                "first_match_span needs an offsets index "
+                "(positional_postings(store_offsets=True))")
+        _, _, docs, freqs, pos, ostarts, olens = decode_positions(pdf, True)
+        # each (term, doc) run's first entry is its earliest position
+        runs = np.cumsum(freqs) - freqs
+        df = pd.DataFrame({"doc_id": docs, "first_pos": pos[runs],
+                           "start": ostarts[runs],
+                           "end": ostarts[runs] + olens[runs]})
         # earliest position per doc; starts break position ties
         df = df.sort_values(["doc_id", "first_pos", "start"])
         return df.groupby("doc_id", as_index=False).first()
@@ -776,36 +667,16 @@ def first_match(pos_postings: DataFrame, terms: list[str]) -> DataFrame:
     position per term is the first entry of its position run (positions
     are ascending by construction), min-reduced across terms with one
     groupby — no per-doc Python loops over position lists."""
-    spark = pos_postings.sparkSession
     uterms = sorted(set(terms))
+    schema = "doc_id long, first_pos long"
     if not uterms:
-        return spark.createDataFrame([], "doc_id long, first_pos long")
+        return empty_frame(pos_postings.sparkSession, schema)
 
     def bucket(pdf: pd.DataFrame) -> pd.DataFrame:
-        all_docs, all_firsts = [], []
-        for db, fb, pb in zip(pdf["doc_blob"], pdf["freq_blob"],
-                              pdf["pos_blob"]):
-            docs = np.cumsum(vbyte_decode(db),
-                             dtype=np.uint64).astype(np.int64)
-            freqs = vbyte_decode(fb).astype(np.int64)
-            gaps = vbyte_decode(pb)
-            starts = np.concatenate(
-                ([0], np.cumsum(freqs)))[:-1].astype(np.int64)
-            cs = np.cumsum(gaps, dtype=np.uint64)
-            carry = np.zeros(len(starts), dtype=np.uint64)
-            carry[1:] = cs[starts[1:] - 1]
-            # first position of each doc = absolute position at its
-            # run start (runs are ascending; no split needed)
-            firsts = (cs[starts] - carry).astype(np.int64)
-            all_docs.append(docs)
-            all_firsts.append(firsts)
-        if not all_docs:
-            return pd.DataFrame({"doc_id": pd.Series(dtype="int64"),
-                                 "first_pos": pd.Series(dtype="int64")})
-        return (pd.DataFrame({"doc_id": np.concatenate(all_docs),
-                              "first_pos": np.concatenate(all_firsts)})
+        _, _, docs, freqs, pos = decode_positions(pdf)
+        return (pd.DataFrame({"doc_id": docs,
+                              "first_pos": pos[np.cumsum(freqs) - freqs]})
                 .groupby("doc_id", as_index=False)["first_pos"].min())
 
     matched = pos_postings.filter(F.col("term").isin(uterms))
-    return matched.groupBy("rbucket").applyInPandas(
-        bucket, schema="doc_id long, first_pos long")
+    return matched.groupBy("rbucket").applyInPandas(bucket, schema=schema)

@@ -45,7 +45,7 @@ import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
-from ..functions.codec import vbyte_encode_slices
+from ..functions.codec import vbyte_decode_slices, vbyte_encode_slices
 
 BLOCK_SIZE = 128
 
@@ -98,6 +98,71 @@ def _reset_gaps(vals: np.ndarray, starts: np.ndarray) -> np.ndarray:
     gaps[1:] -= vals[:-1].astype(np.uint64)
     gaps[starts] = vals[starts]
     return gaps
+
+
+def _seg_cumsum(gaps: np.ndarray, starts: np.ndarray) -> np.ndarray:
+    """The inverse of _reset_gaps: running sums of ``gaps`` restarting
+    at each index in ``starts`` (ascending, starting at 0) -> int64.
+    One global cumsum minus each segment's carry-in (uint64 wraps
+    modulo 2^64, so the difference is exact)."""
+    cs = np.cumsum(gaps, dtype=np.uint64)
+    carry = np.concatenate((np.zeros(1, dtype=np.uint64), cs))[starts]
+    lens = np.diff(np.append(starts, cs.size))
+    return (cs - np.repeat(carry, lens)).astype(np.int64)
+
+
+def _values(blobs) -> np.ndarray:
+    """Raw values of ``blobs``, concatenated (one VByte pass) -> int64."""
+    return vbyte_decode_slices(blobs)[0].astype(np.int64)
+
+
+def _block_docs(doc_blobs) -> tuple[np.ndarray, np.ndarray]:
+    """doc_blobs (gaps reset per block) -> (absolute doc ids, per-blob
+    offsets into them), one VByte pass."""
+    gaps, offsets = vbyte_decode_slices(doc_blobs)
+    return _seg_cumsum(gaps, offsets[:-1]), offsets
+
+
+def _decode_docs(blocks: pd.DataFrame):
+    """Sort block rows by (term, first_doc) — each term's global doc
+    order, its blocks being doc-disjoint — and decode their doc blobs
+    -> (sorted rows, terms, term_offsets, docs)."""
+    blocks = blocks.sort_values(["term", "first_doc", "block_no"])
+    term = blocks["term"].to_numpy()
+    new_term = np.ones(term.size, dtype=bool)
+    new_term[1:] = term[1:] != term[:-1]
+    first = np.flatnonzero(new_term)
+    docs, offsets = _block_docs(blocks["doc_blob"])
+    return (blocks, term[first].tolist(),
+            np.append(offsets[first], docs.size), docs)
+
+
+def decode_postings(blocks: pd.DataFrame):
+    """Doc-postings block rows of any terms -> (terms, term_offsets,
+    docs, tfs, dls), all int64: the inverse of _block_rows, one VByte
+    pass per blob column.  Term i owns ``[term_offsets[i],
+    term_offsets[i + 1])``, doc-ascending."""
+    blocks, terms, offsets, docs = _decode_docs(blocks)
+    return (terms, offsets, docs, _values(blocks["tf_blob"]),
+            _values(blocks["dl_blob"]))
+
+
+def decode_positions(blocks: pd.DataFrame, offsets: bool = False):
+    """Positional block rows of any terms -> (terms, term_offsets, docs,
+    freqs, positions[, offset starts, token lengths]), all int64: the
+    inverse of positional._pos_block_rows, one VByte pass per blob
+    column.  Positions and offset starts restart at each doc, so doc
+    j's ascending run starts at ``cumsum(freqs)[j] - freqs[j]``."""
+    blocks, terms, term_offsets, docs = _decode_docs(blocks)
+    freqs = _values(blocks["freq_blob"])
+    runs = np.cumsum(freqs) - freqs
+    out = (terms, term_offsets, docs, freqs,
+           _seg_cumsum(vbyte_decode_slices(blocks["pos_blob"])[0], runs))
+    if not offsets:
+        return out
+    return out + (
+        _seg_cumsum(vbyte_decode_slices(blocks["ostart_blob"])[0], runs),
+        _values(blocks["olen_blob"]))
 
 
 def _doc_blocks(terms: list[str], term_offsets: np.ndarray,
@@ -414,10 +479,10 @@ def compact_postings(postings: DataFrame,
        Buckets are doc-disjoint by construction, and packing only merges
        ADJACENT ranges, so every group is again a contiguous, disjoint
        doc range — the WAND/boolean bucket invariant survives;
-    2. one applyInPandas pass per group decodes each term's blocks
-       (first_doc order == global doc order), concatenates, and rebuilds
-       through the same ``_block_rows`` vectorized encoder the builders
-       use.
+    2. one applyInPandas pass per group decodes its blocks in one pass
+       (decode_postings; first_doc order == global doc order) and
+       rebuilds through the same ``_block_rows`` vectorized encoder the
+       builders use.
 
     Results are BIT-IDENTICAL for every consumer (same postings, same
     per-bucket evaluation; term_stats/corpus_stats are Σ-preserved);
@@ -442,26 +507,11 @@ def _compact_postings(postings: DataFrame, mapping: DataFrame) -> DataFrame:
     group ``_gid`` becomes the new rbucket."""
 
     def compact_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        from ..functions.codec import delta_decode, vbyte_decode
-        gid_v = int(pdf["_gid"].iloc[0])
-        terms, offsets = [], [0]
-        d_parts, t_parts, l_parts = [], [], []
-        total = 0
-        for term, g in pdf.groupby("term", sort=True):
-            g = g.sort_values("first_doc")
-            d_parts += [delta_decode(vbyte_decode(db)) for db in g["doc_blob"]]
-            t_parts += [vbyte_decode(tb) for tb in g["tf_blob"]]
-            l_parts += [vbyte_decode(lb) for lb in g["dl_blob"]]
-            total += int(g["n"].sum())
-            terms.append(term)
-            offsets.append(total)
-        offsets = np.asarray(offsets, dtype=np.int64)
-        cols = [np.concatenate(p).astype(np.uint64)
-                for p in (d_parts, t_parts, l_parts)]
+        terms, offsets, *cols = decode_postings(pdf)
         order, _ = _doc_order(offsets, cols[0])
         if order is not None:
             cols = [c[order] for c in cols]
-        return _block_rows(terms, offsets, *cols, gid_v)
+        return _block_rows(terms, offsets, *cols, int(pdf["_gid"].iloc[0]))
 
     return (postings.join(F.broadcast(mapping), "rbucket")
             .groupBy("_gid")
@@ -476,20 +526,15 @@ def matched_doc_ids(postings: DataFrame,
     set stays a DATAFRAME end to end (semi-join prunes the block scan;
     blobs decode in a mapInPandas; distinct dedupes doc ids).  Nothing
     term-shaped ever reaches the driver or a task closure."""
-    from ..functions.codec import delta_decode, vbyte_decode
-
     sel = (postings.join(terms_df.select("term").distinct(), "term",
                          "left_semi")
            .select("doc_blob"))
 
     def gen(batches):
         for pdf in batches:
-            if not len(pdf):
-                continue
-            arrs = [delta_decode(vbyte_decode(bb)).astype(np.int64)
-                    for bb in pdf["doc_blob"]]
-            yield pd.DataFrame({"doc_id": np.unique(
-                np.concatenate(arrs))})
+            if len(pdf):
+                yield pd.DataFrame({"doc_id": np.unique(
+                    _block_docs(pdf["doc_blob"])[0])})
 
     return sel.mapInPandas(gen, schema="doc_id long").distinct()
 

@@ -35,7 +35,8 @@ from pyspark.sql import DataFrame, Window
 
 from ..analysis import analyze
 from ..functions.codec import delta_decode, vbyte_decode
-from .fulltext import B, K1, idf as bm25_idf
+from .fulltext import B, K1, empty_frame, idf as bm25_idf
+from .postings import decode_postings
 
 _EXHAUSTED = 1 << 62
 
@@ -56,7 +57,12 @@ def _filter_terms(df: DataFrame, terms: list[str]) -> DataFrame:
 
 
 class _BlobCache:
-    """Per-kernel-invocation memo of the pure blob decodes (r6).
+    """Per-kernel-invocation memo of the per-BLOCK decodes of the two
+    paths that skip blocks and decode on demand: the WAND cursor
+    (_TermCursor) and the impact-ordered single-term scan
+    (_single_term_topk).  Whole-term decodes (the dense kernel) go
+    through postings.decode_postings and a per-term memo instead, so
+    this memo pins only the blocks those paths actually visited.
 
     In batched serving one bucket evaluates EVERY query of the set, and
     a term shared by many queries had its blocks VByte-decoded once per
@@ -223,31 +229,36 @@ class _TermCursor:
 def _score_bucket_vectorized(pdf: pd.DataFrame,
                              term_meta: list[tuple[str, float]], k: int,
                              avgdl: float, k1: float, b: float,
-                             cache: "_BlobCache | None" = None) -> pd.DataFrame:
+                             term_dec: dict | None = None) -> pd.DataFrame:
     """Exhaustive NumPy scoring of one bucket — the ADAPTIVE fallback for
     queries whose terms are near-ubiquitous: when block-max bounds cannot
     prune (flat scores), document-at-a-time cursor stepping is pure
     overhead, while decoding every block into one vectorized accumulation
     is memory-bandwidth fast.  Float contract preserved: docs accumulate
     their terms in term order (terms iterate outermost), so results stay
-    bit-identical to WAND/exhaustive."""
-    cache = cache if cache is not None else _BlobCache()
+    bit-identical to WAND/exhaustive.
+
+    ``term_dec``: {term: (docs, tfs, dls)} memo of whole-term decodes,
+    shared by every query of a set against one bucket (a term's rows
+    are the same in each query's slice of the bucket).  Its arrays are
+    frozen (writeable=False), as _BlobCache's are."""
+    term_dec = term_dec if term_dec is not None else {}
     min_doc = int(pdf["first_doc"].min())
     max_doc = int(pdf["last_doc"].max())
     scores = np.zeros(max_doc - min_doc + 1, dtype=np.float64)
     touched = np.zeros(scores.size, dtype=bool)
     for term, idf in term_meta:  # term order == float contract
-        rows = pdf[pdf["term"] == term]
-        if not len(rows):
-            continue
-        rows = rows.sort_values("first_doc")
-        docs = np.concatenate([
-            cache.docs(bl).astype(np.int64)
-            for bl in rows["doc_blob"]])
-        tfs = np.concatenate([cache.vals(bl) for bl in rows["tf_blob"]]) \
-            .astype(np.float64)
-        dls = np.concatenate([cache.vals(bl) for bl in rows["dl_blob"]]) \
-            .astype(np.float64)
+        dec = term_dec.get(term)
+        if dec is None:
+            rows = pdf[pdf["term"] == term]
+            if not len(rows):
+                continue
+            _, _, docs, tfs, dls = decode_postings(rows)
+            dec = term_dec[term] = (docs, tfs.astype(np.float64),
+                                    dls.astype(np.float64))
+            for a in dec:
+                a.flags.writeable = False
+        docs, tfs, dls = dec
         idx = docs - min_doc
         contrib = (idf * (tfs * (k1 + 1.0))
                    / (tfs + k1 * (1.0 - b + b * dls / avgdl)))
@@ -330,7 +341,8 @@ def _single_term_topk(pdf: pd.DataFrame, idf: float, k: int, avgdl: float,
 def _wand_bucket(pdf: pd.DataFrame, term_meta: list[tuple[str, float]],
                  k: int, avgdl: float, k1: float, b: float,
                  dense_threshold: float = 0.10,
-                 cache: "_BlobCache | None" = None) -> pd.DataFrame:
+                 cache: "_BlobCache | None" = None,
+                 term_dec: dict | None = None) -> pd.DataFrame:
     """WAND over one rbucket. term_meta = [(term, idf)] in term order.
 
     Adaptive: if the bucket's matched postings cover more than
@@ -348,7 +360,7 @@ def _wand_bucket(pdf: pd.DataFrame, term_meta: list[tuple[str, float]],
     span = int(pdf["last_doc"].max()) - int(pdf["first_doc"].min()) + 1
     if span > 0 and n_postings > dense_threshold * span:
         return _score_bucket_vectorized(pdf, term_meta, k, avgdl, k1, b,
-                                        cache=cache)
+                                        term_dec)
     cursors: list[_TermCursor] = []
     for term, idf in term_meta:
         rows = pdf[pdf["term"] == term]
@@ -474,26 +486,26 @@ def _wand_set(postings: DataFrame, dfs: dict[str, int], n_docs: int,
     query against each bucket.  Callers finish: a set with the per-qid
     window (_wand_many), a single query with orderBy().limit()
     (_wand_one)."""
-    spark = postings.sparkSession
     schema = "qid string, doc_id long, score double"
     metas = {qid: [(t, w * bm25_idf(n_docs, dfs[t]))
                    for t, w in sorted(es) if t in dfs]
              for qid, es in entries.items()}
     metas = {qid: m for qid, m in metas.items() if m}
     if not metas:
-        return spark.createDataFrame([], schema)
+        return empty_frame(postings.sparkSession, schema)
 
     def bucket(pdf: pd.DataFrame) -> pd.DataFrame:
         outs = []
-        # one decode memo for the WHOLE query set against this bucket:
-        # shared terms decode once, not once per query (r6, _BlobCache)
-        cache = _BlobCache()
+        # decode memos for the WHOLE query set against this bucket:
+        # shared blocks and terms decode once, not once per query
+        cache, term_dec = _BlobCache(), {}
         for qid, meta in metas.items():
             # restrict to THIS query's terms: the bucket holds the union
             # of all queries' postings, which would inflate the adaptive
             # density statistic and the dense kernel's doc-range span
             sub = pdf[pdf["term"].isin([t for t, _ in meta])]
-            r = _wand_bucket(sub, meta, k, avgdl, k1, b, cache=cache)
+            r = _wand_bucket(sub, meta, k, avgdl, k1, b, cache=cache,
+                             term_dec=term_dec)
             r.insert(0, "qid", qid)
             outs.append(r)
         return pd.concat(outs, ignore_index=True)

@@ -71,18 +71,21 @@ def test_stopword_hole_semantics(spark, pos_index, docs):
 def test_pos_block_roundtrip_multiblock():
     """Packed positional blocks round-trip exactly across block
     boundaries: >128 docs per term (multi-block), per-doc gap reset,
-    carry-in decode, and blob slicing on doc boundaries."""
+    carry-in decode, and blob slicing on doc boundaries — per block and
+    for the whole (shuffled) table in one decode pass."""
     import numpy as np
 
-    from php_lucene_analyzer_spark.operators.positional import (
-        POS_BLOCK_SIZE, _decode_block, _pos_block_rows)
+    from php_lucene_analyzer_spark.operators.positional import \
+        _pos_block_rows
+    from php_lucene_analyzer_spark.operators.postings import (
+        BLOCK_SIZE, decode_positions)
 
     rng = np.random.default_rng(7)
     terms = ["alpha", "beta"]
     want: dict[str, dict[int, list[int]]] = {}
     docs_l, freqs_l, pos_l, offsets = [], [], [], [0]
     for term in terms:
-        n_docs = POS_BLOCK_SIZE * 2 + 37   # 3 blocks, last partial
+        n_docs = BLOCK_SIZE * 2 + 37   # 3 blocks, last partial
         dids = np.sort(rng.choice(10**6, size=n_docs, replace=False))
         want[term] = {}
         for d in dids:
@@ -101,9 +104,9 @@ def test_pos_block_roundtrip_multiblock():
     assert set(pdf["term"]) == set(terms)
     assert (pdf.groupby("term")["block_no"].count() == 3).all()
     got: dict[str, dict[int, list[int]]] = {t: {} for t in terms}
-    for _, row in pdf.iterrows():
-        docs, freqs, plists = _decode_block(
-            row["doc_blob"], row["freq_blob"], row["pos_blob"])
+    for i, row in pdf.iterrows():
+        _, _, docs, freqs, pos = decode_positions(pdf.loc[[i]])
+        plists = np.split(pos, np.cumsum(freqs)[:-1])
         assert int(docs[0]) == row["first_doc"]
         assert int(docs[-1]) == row["last_doc"]
         assert len(docs) == row["n"] == len(freqs) == len(plists)
@@ -111,6 +114,12 @@ def test_pos_block_roundtrip_multiblock():
         for d, pl in zip(docs, plists):
             got[row["term"]][int(d)] = pl.tolist()
     assert got == want
+    dterms, offs, docs, freqs, pos = decode_positions(
+        pdf.sample(frac=1, random_state=3))
+    assert dterms == terms and offs.tolist() == offsets
+    np.testing.assert_array_equal(docs, docs_l)
+    np.testing.assert_array_equal(freqs, freqs_l)
+    np.testing.assert_array_equal(pos, pos_l)
 
 
 def test_pos_block_roundtrip_property():
@@ -123,8 +132,10 @@ def test_pos_block_roundtrip_property():
 
     import numpy as np
 
-    from php_lucene_analyzer_spark.operators.positional import (
-        _decode_block, _pos_block_rows)
+    from php_lucene_analyzer_spark.operators.positional import \
+        _pos_block_rows
+    from php_lucene_analyzer_spark.operators.postings import \
+        decode_positions
 
     @settings(max_examples=40, deadline=None)
     @given(st.lists(
@@ -156,14 +167,55 @@ def test_pos_block_roundtrip_property():
             np.asarray(freqs_l, dtype=np.uint64),
             np.asarray(pos_l, dtype=np.uint64), rbucket=0)
         got = {t: {} for t in terms}
-        for _, row in pdf.iterrows():
-            docs, freqs, plists = _decode_block(
-                row["doc_blob"], row["freq_blob"], row["pos_blob"])
-            for d, pl in zip(docs, plists):
+        for i, row in pdf.iterrows():
+            _, _, docs, freqs, pos = decode_positions(pdf.loc[[i]])
+            for d, pl in zip(docs, np.split(pos, np.cumsum(freqs)[:-1])):
                 got[row["term"]][int(d)] = pl.tolist()
         assert got == want
+        _, offs, docs, freqs, pos = decode_positions(pdf)
+        assert offs.tolist() == offsets
+        assert (docs.tolist(), freqs.tolist(), pos.tolist()) == \
+            (docs_l, freqs_l, pos_l)
 
     check()
+
+
+def test_pos_block_roundtrip_offsets():
+    """store_offsets layout: char-offset starts (gaps reset per doc,
+    like positions) and token lengths round-trip through the whole-table
+    decode, aligned 1:1 with the positions, across block boundaries."""
+    import numpy as np
+
+    from php_lucene_analyzer_spark.operators.positional import \
+        _pos_block_rows
+    from php_lucene_analyzer_spark.operators.postings import \
+        decode_positions
+
+    rng = np.random.default_rng(11)
+    terms = ["a", "b", "c"]
+    docs_l, freqs_l, pos_l, st_l, ln_l, offsets = [], [], [], [], [], [0]
+    for n_docs in (1, 128, 300):
+        for d in np.sort(rng.choice(10**6, size=n_docs, replace=False)):
+            ps = np.unique(rng.integers(0, 4000, size=int(
+                rng.integers(1, 7))))
+            docs_l.append(int(d))
+            freqs_l.append(ps.size)
+            pos_l += ps.tolist()
+            st_l += (ps * 6 + rng.integers(0, 3, ps.size)).tolist()
+            ln_l += rng.integers(1, 300, ps.size).tolist()
+        offsets.append(len(docs_l))
+
+    def u64(v):
+        return np.asarray(v, dtype=np.uint64)
+
+    pdf = _pos_block_rows(terms, np.asarray(offsets, dtype=np.int64),
+                          u64(docs_l), u64(freqs_l), u64(pos_l), 0,
+                          u64(st_l), u64(ln_l))
+    assert pdf["ostart_blob"].notna().all()
+    got = decode_positions(pdf.sample(frac=1, random_state=5), True)
+    assert got[0] == terms and got[1].tolist() == offsets
+    assert [a.tolist() for a in got[2:]] == \
+        [docs_l, freqs_l, pos_l, st_l, ln_l]
 
 
 def test_positional_build_handles_unordered_partitions(spark, docs):

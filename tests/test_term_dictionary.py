@@ -2,7 +2,8 @@
 expansion returns exactly the Spark expand_specs lists, the collect
 fallback above TERM_DICT_CAP answers exactly as the resident path, a
 single query on a loaded index runs in at most two Spark jobs (a phrase
-query in three), and a query_many batch with phrase queries in four."""
+query in three), a query_many batch with phrase queries in four, and an
+empty answer in none."""
 
 import random
 import time
@@ -276,6 +277,26 @@ def test_phrase_query_jobs(spark, docs, saved):
                    .collect())
     assert 1 <= n_phrase <= 3
     assert 1 <= n_many <= 4
+
+
+def test_empty_answers_run_no_job(spark, saved):
+    """A query() with no positive clause and an all-stopword search()
+    answer with a zero-row plan the optimizer folds away: building and
+    collecting either launches no Spark job (a bare createDataFrame([])
+    answer ran one) and keeps the (doc_id, score) schema."""
+    idx = FulltextIndex.load(spark, saved)
+    sc = spark.sparkContext
+    idx.search("stream value").collect()              # warm-up
+    for gid, call in (("empty-neg", lambda: idx.query("-value")),
+                      ("empty-stop", lambda: idx.search("the and of"))):
+        got = []
+        assert _jobs(sc, gid, lambda: got.append(call())) == 0, gid
+        df = got[0]
+        assert _jobs(sc, gid + "-collect", lambda: got.append(
+            df.collect())) == 0, gid
+        assert got[1] == []
+        assert df.schema.simpleString() == \
+            "struct<doc_id:bigint,score:double>"
 
 
 def test_loaded_tstats_cached_and_released(spark, saved, monkeypatch,

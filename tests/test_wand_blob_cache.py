@@ -1,4 +1,4 @@
-"""operators/wand._BlobCache — the r6 per-invocation decode memo.
+"""operators/wand._BlobCache and the dense kernel's ``term_dec`` memo.
 
 The serving kernels must return BIT-IDENTICAL results whether blobs are
 decoded fresh per query (r5 behavior) or through a cache shared across
@@ -64,14 +64,20 @@ def test_wand_bucket_bit_identical_with_shared_cache():
         [("alpha", 1.3)],                       # single-term path
         [("alpha", 1.3), ("beta", 0.7), ("gamma", 2.1)],
     ]
-    shared = _BlobCache()
+    # the toy terms are dense, so multi-term metas take the vectorized
+    # kernel, which shares whole-term decodes through ``term_dec``
+    shared, term_dec = _BlobCache(), {}
     for meta in metas:
         sub = pdf[pdf["term"].isin([t for t, _ in meta])]
         fresh = _wand_bucket(sub, meta, 10, 55.0, 1.2, 0.75)
         cached = _wand_bucket(sub, meta, 10, 55.0, 1.2, 0.75,
-                              cache=shared)
+                              cache=shared, term_dec=term_dec)
         pd.testing.assert_frame_equal(fresh.reset_index(drop=True),
                                       cached.reset_index(drop=True))
         # exact float equality, not approx: the bit-identity contract
         assert list(map(float, fresh["score"])) == \
             list(map(float, cached["score"]))
+    assert set(term_dec) == {"alpha", "beta", "gamma"}
+    for arrays in term_dec.values():
+        for a in arrays:
+            assert not a.flags.writeable  # frozen like _BlobCache's
