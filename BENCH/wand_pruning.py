@@ -28,7 +28,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 # query classes are built from the INDEX's own df distribution:
 # WAND's win case is skewed idf (a rare term gates which docs can beat
 # theta, so common-term cursors block-skip); the flat all-common case is
-# exactly what the adaptive kernel routes to the vectorized scorer.
+# exactly what the serving plan routes to the exhaustive tree kernel.
 # Few, LARGE doc-range buckets: block-skipping is a per-bucket effect —
 # a ubiquitous term's block is skipped iff no pivot doc lands in its
 # 128-doc range, so the win scales with blocks-per-bucket (span/128)
@@ -87,7 +87,6 @@ def main() -> None:
     counters = {"decoded_blobs": 0, "visited": 0}
     orig_decode = W.vbyte_decode
     orig_lazy = W._TermCursor._set_block_lazy
-    orig_load = W._TermCursor._load
 
     def counting_decode(buf):
         counters["decoded_blobs"] += 1
@@ -97,30 +96,24 @@ def main() -> None:
         counters["visited"] += 1
         return orig_lazy(self, bi)
 
-    def counting_load(self, bi):
-        counters["visited"] += 1
-        return orig_load(self, bi)  # its decodes hit counting_decode
-
     W.vbyte_decode = counting_decode
     W._TermCursor._set_block_lazy = counting_lazy
-    W._TermCursor._load = counting_load
 
     import pyspark.sql.functions as F
 
     per_q = {}
     for q, terms in QUERY_SETS.items():
-        metas = [(r["term"], W.bm25_idf(n_docs, r["df"])) for r in
+        metas = [(r["term"], ft.idf(n_docs, r["df"])) for r in
                  tstats.filter(F.col("term").isin(terms))
                  .select("term", "df").orderBy("term").collect()]
         pdf = postings.filter(F.col("term").isin(terms)).toPandas()
         counters["decoded_blobs"] = counters["visited"] = 0
-        # huge dense_threshold: force the WAND path so the numbers
-        # characterize pruning (the adaptive kernel would route dense
-        # buckets to the vectorized scorer, which by design decodes all;
-        # n_postings can reach n_terms * span, so >1 does not disable it)
+        # _wand_bucket always runs the cursor, so the numbers
+        # characterize pruning (the serving plan would route dense
+        # buckets to the exhaustive tree kernel, which by design decodes
+        # all)
         for _, bucket in pdf.groupby("rbucket"):
-            W._wand_bucket(bucket, metas, 10, avgdl, W.K1, W.B,
-                           dense_threshold=1e9)
+            W._wand_bucket(bucket, metas, 10, avgdl, W.K1, W.B)
         per_q[q] = {
             "blocks_matched": int(len(pdf)),
             "blocks_visited": int(counters["visited"]),

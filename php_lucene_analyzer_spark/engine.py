@@ -27,13 +27,12 @@ from pyspark.sql import DataFrame, SparkSession
 
 from .analysis import analyze
 from .operators import fulltext as ft
-from .operators.boolean import (_flat_tree, _leaf_terms, _top_k,
-                                _top_k_per_qid, _tree_one, _tree_set)
+from .operators.boolean import (_disjunction_set, _flat_tree, _leaf_terms,
+                                _top_k, _top_k_per_qid, _tree_one, _tree_set)
 from .operators.positional import phrase_match
 from .operators.postings import (_index_blocks, _split_blocks,
-                                 corpus_stats_from_postings,
+                                 corpus_stats_from_postings, term_dfs,
                                  term_stats_from_postings, write_postings)
-from .operators.wand import _wand_many, _wand_one, term_dfs
 
 # above this many terms the index keeps no driver-resident dictionary and
 # every df lookup or expansion runs as a Spark job over ``tstats``
@@ -172,10 +171,16 @@ class FulltextIndex:
                                               else None),
                                tdict=self._dictionary(), **kw)
 
+    def _disjunctions(self, entries: dict, k: int) -> DataFrame:
+        """Per-bucket rows of ``{qid: [(term, weight), ...]}`` flat
+        disjunctions (operators/boolean.py::_disjunction_set)."""
+        terms = {t for es in entries.values() for t, _ in es}
+        return _disjunction_set(self.postings, self._dfs(terms),
+                                self.n_docs, self.avgdl, entries, k)
+
     def _wand(self, entries: list[tuple[str, float]], k: int) -> DataFrame:
-        """WAND over [(term, weight)] entries, a set of one."""
-        return _wand_one(self.postings, self._dfs({t for t, _ in entries}),
-                         self.n_docs, self.avgdl, entries, k)
+        """Top-k of one flat disjunction of [(term, weight)] entries."""
+        return _top_k(self._disjunctions({"_": entries}, k).drop("qid"), k)
 
     def _terms(self, query: str) -> list[str]:
         if self.analyzer is not None:
@@ -183,20 +188,20 @@ class FulltextIndex:
         return sorted({t.term for t in analyze(query)})
 
     def search(self, query: str, k: int = 10) -> DataFrame:
-        """Block-max WAND top-k -> DataFrame(doc_id, score), total order
-        (score desc, doc_id asc) — bit-identical to the exhaustive
-        scorer."""
+        """Top-k of the analyzed terms' disjunction -> DataFrame(doc_id,
+        score), total order (score desc, doc_id asc) — bit-identical to
+        the exhaustive scorer.  query()'s plan over a flat SHOULD tree:
+        block-max WAND prunes each bucket where the terms are sparse."""
         return self._wand([(t, 1.0) for t in self._terms(query)], k)
 
     def search_many(self, queries: dict[str, str], k: int = 10) -> DataFrame:
         """Whole query set in one grouped kernel pass -> (qid, doc_id,
-        score): about three Spark jobs per set (the bucket exchange, the
-        kernel, the per-qid window)."""
-        entries = {qid: [(t, 1.0) for t in self._terms(q)]
-                   for qid, q in queries.items()}
-        terms = {t for es in entries.values() for t, _ in es}
-        return _wand_many(self.postings, self._dfs(terms), self.n_docs,
-                          self.avgdl, entries, k)
+        score), bit-identical to per-query ``search()``: about three
+        Spark jobs per set (the bucket exchange, the kernel, the per-qid
+        window)."""
+        return _top_k_per_qid(self._disjunctions(
+            {qid: [(t, 1.0) for t in self._terms(q)]
+             for qid, q in queries.items()}, k), k)
 
     def search_prefix(self, prefix: str, k: int = 10,
                       max_expansions: int = 64) -> DataFrame:
@@ -512,20 +517,18 @@ class FulltextIndex:
 
     def search_regex(self, pattern: str, k: int = 10,
                      max_expansions: int = 64) -> DataFrame:
-        """RegexpQuery role: match the term dictionary with Spark's
+        """RegexpQuery role: match the default field's terms with Spark's
         native ``rlike`` (the automaton package's regex runner maps to
         the JVM regex engine — SURVEY A19), expand df-descending like
-        Lucene's top-terms rewrite (bounded), WAND the union.
+        Lucene's top-terms rewrite (bounded) in one Spark job, as
+        ``query("/pattern/")`` does, and score the union.
 
         The pattern is anchored to the WHOLE term (``^(?:...)$``) —
         Lucene RegexpQuery semantics; a bare ``rlike`` would match
         substrings ('cat' hitting 'concatenate')."""
-        terms = [r["term"] for r in
-                 (self.tstats.filter(
-                     F.col("term").rlike(f"^(?:{pattern})$"))
-                  .orderBy(F.desc("df"), F.asc("term"))
-                  .limit(max_expansions).collect())]
-        return self._wand([(t, 1.0) for t in sorted(terms)], k)
+        [exp] = self._expand([{"kind": "regex", "value": pattern,
+                               "field": None, "cap": max_expansions}])
+        return self._wand([(t, 1.0) for t, _, _ in exp], k)
 
     def compact(self) -> "FulltextIndex":
         """Rewrite fragmented posting blocks — and the positional index,

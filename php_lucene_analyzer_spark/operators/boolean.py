@@ -8,15 +8,15 @@ clauses exclude (and never score) — Lucene's BooleanQuery /
 MinShouldMatchSumScorer roles, re-expressed over this engine's block
 postings instead of a doc-at-a-time scorer tree.
 
-Distribution model — identical to WAND's (operators/wand.py): posting
-blocks live in doc-disjoint ``rbucket`` ranges, so every doc's full term
-membership is visible inside one bucket.  One applyInPandas pass per
-bucket evaluates every compiled query tree of a query SET vectorized
-(NumPy set algebra over the decoded doc arrays — conjunctions/counts
-via ``np.unique``, exclusions via ``np.isin``), emits each query's
-bucket top-k, and a global top-k finishes (TakeOrderedAndProject for a
-single tree, a per-qid window for a set).  Flat boolean queries
-(boolean_topk) are depth-1 trees.  Phrase clauses of FulltextIndex.query
+Distribution model: posting blocks live in doc-disjoint ``rbucket``
+ranges, so every doc's full term membership is visible inside one
+bucket.  ``_tree_set`` is the package's one serving plan over the
+postings: one pruned scan, one applyInPandas pass per bucket that
+evaluates every compiled query tree of a query SET, each query's bucket
+top-k, and a global top-k finish (TakeOrderedAndProject for a single
+tree, a per-qid window for a set).  Flat boolean queries (boolean_topk)
+are depth-1 trees; search, search_many and the WAND entries are flat
+SHOULD trees (_disjunction_set).  Phrase clauses of FulltextIndex.query
 are leaves of the same trees (Lucene's PhraseScorer beside the term
 scorers): the phrase terms' positional blocks ride in the same grouped
 pass, and per bucket each distinct phrase is evaluated once by the
@@ -24,16 +24,24 @@ positional kernels (operators/positional.py::_run_phrase).  Per-bucket
 work is bounded by the build partition size; nothing is all-pairs and
 nothing funnels through one task.
 
-Unlike WAND (top-k pruning, document-at-a-time cursors), boolean
-evaluation wants the MATCHING SET, whose candidates are bounded by the
-rarest MUST term's postings inside each bucket — full-block decode +
-vectorized set ops beats cursor hopping in a batch engine, and keeps the
-whole kernel NumPy (no per-doc Python).
+Per bucket and per query, ``_bucket_topk`` picks one of two
+strategies before anything decodes.  A flat disjunction (root of SHOULD
+leaves only) of one entry, or one whose postings are sparse in the
+bucket, prunes with block-max WAND (operators/wand.py: impact-ordered
+single-term scan or document-at-a-time cursors, blocks decoded on
+demand), as Lucene prunes every top-k disjunction whichever parser
+built it.  Every other query — MUST, NOT, msm > 1, phrases,
+nested sub-queries, dense disjunctions — wants its MATCHING SET, whose
+candidates are bounded by the rarest MUST term's postings inside each
+bucket: one whole-bucket decode + vectorized set algebra
+(``_tree_bucket``: conjunctions/counts via ``np.unique``, exclusions
+via ``np.isin``) beats cursor hopping there, with no per-doc Python.
 
 Float contract: per-doc scores accumulate clause contributions in
-term-lexicographic order (the same rule as the exhaustive scorer and
-WAND), then add the scoring phrases' sum in phrase order, so results
-are bit-identical at any parallelism.
+instance order — term, then weight (the same rule as the exhaustive
+scorer and the WAND cursors) — then add the scoring phrases' sum in
+phrase order, so results are bit-identical at any parallelism and
+whichever strategy a bucket takes.
 """
 
 from __future__ import annotations
@@ -45,8 +53,8 @@ from pyspark.sql import DataFrame, Window
 
 from .fulltext import B, K1, empty_frame, idf as bm25_idf
 from .positional import _decode_flat, _run_phrase, _spec_terms
-from .postings import decode_postings
-from .wand import _filter_terms, _topk_cut, term_dfs
+from .postings import _filter_terms, _topk_cut, decode_postings, term_dfs
+from .wand import DENSE_THRESHOLD, _BlobCache, _wand_bucket
 
 
 def _leaf_terms(node) -> set[str]:
@@ -129,15 +137,15 @@ def _tree_bucket(decoded, tree, instances, k: int | None, k1: float,
     ``decoded``: {term: (docs, tfs, dls)} for the tree's terms in this
     bucket (views of one postings.decode_postings pass, shared
     read-only across the set).
-    ``instances``: [(term, weight, avgdl, leaf_id), ...] sorted by
-    (term, leaf_id) — one scoring instance per positive-path leaf
+    ``instances``: [(term, weight, avgdl, leaf_id), ...] sorted — one
+    scoring instance per positive-path leaf
     membership; weight = idf x the boost product along the leaf's path.
     Lucene-faithfully, a term appearing in two clauses scores once per
     clause.  A leaf contributes to a doc iff the doc matches the leaf
     AND every ancestor node (its effective set) — a SHOULD sub-query
     that fails to match contributes nothing even when the doc survives
-    via other clauses.  Accumulation order is (term, leaf_id) — fixed
-    at any parallelism (float contract).
+    via other clauses.  Accumulation order is the instance order —
+    fixed at any parallelism (float contract).
 
     ``phrase_hits``: per phrase id, the bucket's (docs, n_matches) —
     the match sets of the tree's ("phrase", j) leaves.  ``scored``:
@@ -206,17 +214,88 @@ def _tree_bucket(decoded, tree, instances, k: int | None, k1: float,
     return pd.DataFrame({"doc_id": d, "score": s})
 
 
+def _flat_meta(tree, instances, k: int | None):
+    """([(term, weight)], avgdl) of a flat disjunction (operators/wand.py;
+    block bounds need w >= 0), else None.  In a flat root every instance
+    scores every doc holding its term, so its instances are the WAND
+    entries."""
+    _, must, should, nots, msm = tree
+    if (k is None or must or nots or msm > 1 or not instances
+            or any(c[0] != "leaf" for c in should)):
+        return None
+    avgdls = {av for _t, _w, av, _l in instances}
+    if len(avgdls) != 1 or any(w < 0 for _t, w, _a, _l in instances):
+        return None
+    return [(t, w) for t, w, _a, _l in instances], avgdls.pop()
+
+
+def _bucket_topk(pdf: pd.DataFrame, trees: dict, instances: dict,
+                 flat: dict, qterms: dict, k_of: dict, k1: float, b: float,
+                 hits=(), scored: dict | None = None) -> pd.DataFrame:
+    """Every query of a set against one bucket's postings rows ->
+    (qid, doc_id, score), each query's bucket top-k (k None: its whole
+    scored match set).  Routing, from the query and the block metadata
+    before any decode: a flat disjunction (``flat``: qid -> _flat_meta,
+    None for any other tree) of one entry, or sparse here (postings <=
+    wand.DENSE_THRESHOLD of their doc span), takes wand._wand_bucket
+    through one shared _BlobCache; every other query takes _tree_bucket
+    over ONE decode_postings pass of just those queries' terms.
+    ``hits`` / ``scored``: phrase match sets and scoring phrases."""
+    scored = scored or {}
+    meta = {t: (n, lo, hi) for t, n, lo, hi in pdf.groupby("term").agg(
+        n=("n", "sum"), lo=("first_doc", "min"), hi=("last_doc", "max"))
+        .itertuples()} if any(flat.values()) else {}
+    res, exhaustive, cache = {}, [], _BlobCache()
+    for qid in trees:
+        fm = flat.get(qid)
+        if fm is None:
+            exhaustive.append(qid)
+            continue
+        here = [t for t in qterms[qid] if t in meta]
+        if not here:
+            continue                     # no entry has postings here
+        n = sum(meta[t][0] for t in here)
+        span = (max(meta[t][2] for t in here)
+                - min(meta[t][1] for t in here) + 1)
+        if len(fm[0]) > 1 and n > DENSE_THRESHOLD * span:
+            exhaustive.append(qid)       # dense: pruning cannot win
+        else:
+            res[qid] = _wand_bucket(pdf[pdf["term"].isin(here)], fm[0],
+                                    k_of[qid], fm[1], k1, b, cache=cache)
+    if exhaustive:
+        # decode the exhaustive queries' terms in one pass and hand each
+        # query frozen views of the shared arrays
+        need = set().union(*(qterms[qid] for qid in exhaustive))
+        terms, offs, docs, tfs, dls = decode_postings(
+            pdf[pdf["term"].isin(need)] if res else pdf)
+        tfs, dls = tfs.astype(np.float64), dls.astype(np.float64)
+        for a in (docs, tfs, dls):
+            a.flags.writeable = False
+        dec = {t: (docs[lo:hi], tfs[lo:hi], dls[lo:hi])
+               for t, lo, hi in zip(terms, offs[:-1], offs[1:])}
+        for qid in exhaustive:
+            res[qid] = _tree_bucket(
+                {t: dec[t] for t in qterms[qid] if t in dec}, trees[qid],
+                instances[qid], k_of[qid], k1, b, hits, scored.get(qid, ()))
+    if not res:
+        return pd.DataFrame({"qid": pd.Series(dtype="object"),
+                             "doc_id": pd.Series(dtype="int64"),
+                             "score": pd.Series(dtype="float64")})
+    return pd.concat([r.assign(qid=qid) for qid, r in res.items()],
+                     ignore_index=True)
+
+
 def _tree_set(postings: DataFrame, dfs: dict[str, int], n_docs: int,
               avgdl, trees: dict, instances_raw: dict, k: int | None,
               k1: float, b: float, k_map: dict,
               positional: DataFrame | None = None, phrases=(),
               scored: dict | None = None) -> DataFrame:
-    """The tree-kernel plan over a SET of compiled trees -> per-bucket
+    """The one serving plan, over a SET of compiled trees -> per-bucket
     (qid, doc_id, score) rows, before any global top-k: idf from the
     resolved ``dfs`` map (leaf terms it lacks are absent from the
     index), one pruned scan, one applyInPandas pass running every tree
-    against each bucket.  ``k_map`` overrides ``k`` per qid (None: no
-    per-bucket cut).
+    against each bucket (_bucket_topk).  ``k_map`` overrides ``k`` per
+    qid (None: no per-bucket cut).
 
     Phrase leaves: ``phrases`` lists the set's distinct compiled phrase
     specs (positional._compile_phrase output, None for an empty
@@ -229,7 +308,6 @@ def _tree_set(postings: DataFrame, dfs: dict[str, int], n_docs: int,
     rbucket, which the build, the streaming segments and compact()
     keep.  A set without phrases reads no positional rows."""
     schema = "qid string, doc_id long, score double"
-    scored = scored or {}
     per_q_terms = {qid: _leaf_terms(t) for qid, t in trees.items()}
     all_terms = set().union(*per_q_terms.values())
     dfs = {t: dfs[t] for t in all_terms if t in dfs}
@@ -244,43 +322,56 @@ def _tree_set(postings: DataFrame, dfs: dict[str, int], n_docs: int,
                                   if sp is not None)))
     if not alive and not pterms:
         return empty_frame(postings.sparkSession, schema)
-    qterms_alive = {qid: {t for t in ts if t in dfs}
-                    for qid, ts in per_q_terms.items()}
+    qterms = {qid: sorted(t for t in ts if t in dfs)
+              for qid, ts in per_q_terms.items()}
+    k_of = {qid: k_map.get(qid, k) for qid in trees}
+    flat = {qid: _flat_meta(tree, instances[qid], k_of[qid])
+            for qid, tree in trees.items()}
 
     def bucket(pdf: pd.DataFrame) -> pd.DataFrame:
         hits = []
         if pterms:
             is_pos = pdf["pos_blob"].notna()
-            flat = _decode_flat(pdf[is_pos])
+            flat_pos = _decode_flat(pdf[is_pos])
             pdf = pdf[~is_pos]
             none = (np.empty(0, dtype=np.int64),) * 2
-            hits = [_run_phrase(flat, sp) if sp is not None else none
+            hits = [_run_phrase(flat_pos, sp) if sp is not None else none
                     for sp in phrases]
-        outs = []
-        # decode every term of the bucket in one pass and hand each
-        # query views of the shared arrays (_tree_bucket only reads them)
-        terms, offs, docs, tfs, dls = decode_postings(pdf)
-        tfs, dls = tfs.astype(np.float64), dls.astype(np.float64)
-        term_dec = {t: (docs[lo:hi], tfs[lo:hi], dls[lo:hi])
-                    for t, lo, hi in zip(terms, offs[:-1], offs[1:])}
-        for qid, tree in trees.items():
-            dec = {t: term_dec[t] for t in qterms_alive[qid]
-                   if t in term_dec}
-            r = _tree_bucket(dec, tree, instances[qid],
-                             k_map.get(qid, k), k1, b, hits,
-                             scored.get(qid, ()))
-            r.insert(0, "qid", qid)
-            outs.append(r)
-        return pd.concat(outs, ignore_index=True)
+        return _bucket_topk(pdf, trees, instances, flat, qterms, k_of, k1,
+                            b, hits, scored)
 
     matched = _filter_terms(postings, alive)
     if pterms:
-        cols = ["term", "rbucket", "block_no", "first_doc", "doc_blob"]
-        matched = matched.select(*cols, "tf_blob", "dl_blob").unionByName(
+        cols = ["term", "rbucket", "block_no", "n", "first_doc",
+                "last_doc", "doc_blob"]
+        matched = matched.select(*cols, "max_tf", "min_dl", "tf_blob",
+                                 "dl_blob").unionByName(
             _filter_terms(positional, pterms)
             .select(*cols, "freq_blob", "pos_blob"),
             allowMissingColumns=True)
     return matched.groupBy("rbucket").applyInPandas(bucket, schema=schema)
+
+
+def _should_tree(entries: list[tuple[str, float]]) -> tuple:
+    """The flat SHOULD tree of [(term, weight)] entries -> (tree,
+    instances): one leaf per entry, so a repeated term (one fuzzy
+    clause per query term) scores once per entry."""
+    es = sorted(entries)
+    leaves = tuple(("leaf", i, (t,)) for i, (t, _w) in enumerate(es))
+    return (("node", (), leaves, (), 1),
+            [(t, w, i) for i, (t, w) in enumerate(es)])
+
+
+def _disjunction_set(postings: DataFrame, dfs: dict[str, int], n_docs: int,
+                     avgdl: float, entries: dict, k: int, k1: float = K1,
+                     b: float = B) -> DataFrame:
+    """_tree_set over ``{qid: [(term, weight), ...]}`` flat disjunctions
+    (the search family and the WAND entries)."""
+    trees, insts = {}, {}
+    for qid, es in entries.items():
+        trees[qid], insts[qid] = _should_tree(es)
+    return _tree_set(postings, dfs, n_docs, float(avgdl), trees, insts, k,
+                     k1, b, {})
 
 
 def boolean_tree_topk(postings: DataFrame, tstats: DataFrame, n_docs: int,

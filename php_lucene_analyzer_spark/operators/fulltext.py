@@ -408,7 +408,12 @@ def _expand_jvm(tstats: DataFrame, specs: list[dict], sids: list[int],
                .filter(F.col("h").isNotNull())
                .select(F.col("h.sid").alias("sid"), "term", "df",
                        F.col("h.dist").alias("dist")))
-    if cap_expr is not None:
+    if len(sids) == 1 and caps[sids[0]] is not None:
+        # one capped spec: a TakeOrderedAndProject, one job fewer than
+        # the spec-partitioned window's exchange
+        matched = matched.orderBy(F.desc("df"), F.asc("term")) \
+            .limit(max(int(caps[sids[0]]), 0))
+    elif cap_expr is not None:
         w = Window.partitionBy("sid").orderBy(F.desc("df"), F.asc("term"))
         matched = (matched.withColumn("_rn", F.row_number().over(w))
                    .filter(F.col("_rn") <= cap_expr).drop("_rn"))

@@ -38,8 +38,8 @@ from ..analysis import analyze
 from ..functions.codec import vbyte_encode_slices
 from .fulltext import empty_frame
 from .postings import (FLUSH_POSTINGS, _compact_postings, _doc_blocks,
-                       _doc_order, _index_blocks, _reset_gaps, _split_blocks,
-                       bucket_groups, decode_positions)
+                       _doc_order, _filter_terms, _index_blocks, _reset_gaps,
+                       _split_blocks, bucket_groups, decode_positions)
 
 POS_SCHEMA = ("term string, rbucket long, block_no int, n int, "
               "first_doc long, last_doc long, sum_tf long, "
@@ -576,7 +576,7 @@ def phrase_match_many(pos_postings: DataFrame,
                                  "n_matches": pd.Series(dtype="int32")})
         return pd.concat(outs, ignore_index=True)
 
-    matched = pos_postings.filter(F.col("term").isin(all_terms))
+    matched = _filter_terms(pos_postings, all_terms)
     return matched.groupBy("rbucket").applyInPandas(bucket, schema=schema)
 
 
@@ -651,7 +651,7 @@ def first_match_span(pos_postings: DataFrame,
         df = df.sort_values(["doc_id", "first_pos", "start"])
         return df.groupby("doc_id", as_index=False).first()
 
-    matched = pos_postings.filter(F.col("term").isin(uterms))
+    matched = _filter_terms(pos_postings, uterms)
     return matched.groupBy("rbucket").applyInPandas(bucket, schema=schema)
 
 
@@ -678,5 +678,5 @@ def first_match(pos_postings: DataFrame, terms: list[str]) -> DataFrame:
                               "first_pos": pos[np.cumsum(freqs) - freqs]})
                 .groupby("doc_id", as_index=False)["first_pos"].min())
 
-    matched = pos_postings.filter(F.col("term").isin(uterms))
+    matched = _filter_terms(pos_postings, uterms)
     return matched.groupBy("rbucket").applyInPandas(bucket, schema=schema)

@@ -518,6 +518,52 @@ def _compact_postings(postings: DataFrame, mapping: DataFrame) -> DataFrame:
             .applyInPandas(compact_group, schema=POSTINGS_SCHEMA))
 
 
+# term-set predicates switch from an isin literal (pushed into the parquet
+# scan) to a broadcast semi-join past this size: a 10^4-term IN-list bloats
+# the plan/task binaries and stops being pushable, while a broadcast hash
+# semi-join stays O(set) per task — the serving path for large batched
+# query sets (and prefix expansions) over a 10^9-term vocabulary
+_ISIN_MAX = 512
+
+
+def _filter_terms(df: DataFrame, terms: list[str]) -> DataFrame:
+    """The rows of a term-keyed table (postings, positional blocks, term
+    stats) whose term is in ``terms`` — the pruned scan every bucket
+    kernel starts from."""
+    if len(terms) <= _ISIN_MAX:
+        return df.filter(F.col("term").isin(list(terms)))
+    tdf = df.sparkSession.createDataFrame(
+        [(t,) for t in terms], "term string")
+    return df.join(F.broadcast(tdf), "term", "left_semi")
+
+
+def term_dfs(tstats: DataFrame, terms) -> dict[str, int]:
+    """{term: df} for those of ``terms`` in ``tstats`` — one filtered
+    collect (no job for an empty term set).  The plan functions take
+    this resolved map; an index with a driver-resident dictionary
+    passes its own (engine.FulltextIndex)."""
+    if not terms:
+        return {}
+    return {r["term"]: int(r["df"]) for r in
+            _filter_terms(tstats, sorted(terms)).select("term", "df")
+            .collect()}
+
+
+def _topk_cut(docs: np.ndarray, scores: np.ndarray,
+              k: int) -> tuple[np.ndarray, np.ndarray]:
+    """Tie-correct top-k by (score desc, doc asc), returned sorted.
+    argpartition alone picks ARBITRARY members of a tie group at the k
+    boundary — include every doc scoring >= the k-th best, then order
+    and cut."""
+    if docs.size > k:
+        kth = -np.partition(-scores, k - 1)[k - 1]
+        cand = np.flatnonzero(scores >= kth)
+        order = cand[np.lexsort((docs[cand], -scores[cand]))][:k]
+    else:
+        order = np.lexsort((docs, -scores))
+    return docs[order], scores[order]
+
+
 def matched_doc_ids(postings: DataFrame,
                     terms_df: DataFrame) -> DataFrame:
     """Distinct doc ids carrying ANY term of ``terms_df`` ->

@@ -1,27 +1,28 @@
-"""Block-max WAND top-k over the posting blocks (SURVEY.md §2-C).
+"""Block-max WAND: the pruning strategy of the one serving plan
+(operators/boolean.py::_tree_set) for flat disjunctions (SURVEY.md §2-C).
 
-Distribution model: posting blocks live in contiguous doc-range buckets
-(``rbucket``, operators/postings.py), so query evaluation groups the
-matched terms' blocks by rbucket — every bucket holds all query terms'
-postings for one doc-id range — runs document-at-a-time WAND with
-block-max skipping inside the bucket (applyInPandas), and the per-bucket
-top-k candidates meet in a global TakeOrderedAndProject
-(orderBy(score desc, doc_id asc).limit(k)).  Each bucket's work is bounded
-by the build partition size regardless of term df, so heavy terms cannot
-create a straggler task.
+A flat disjunction is a query tree whose root holds only SHOULD leaves
+(msm <= 1, no MUST, NOT or phrase) with a finite k, one avgdl and
+non-negative weights: ``search``, ``search_many``, prefix, fuzzy, regex,
+MLT and ``wand_topk*`` build exactly that tree, and so do
+``query("a OR b")``, ``pre* b`` or ``a~1 b``.  Inside the plan's
+per-bucket pass (boolean._bucket_topk), before anything decodes, such a
+query takes ``_wand_bucket``: one entry -> the impact-ordered
+single-term scan, several entries whose postings cover at most
+``DENSE_THRESHOLD`` of their doc span in the bucket -> the
+document-at-a-time block-max cursor.  Both decode blocks on demand
+through one ``_BlobCache`` per bucket.  Denser buckets take the
+exhaustive tree kernel, where pruning cannot win.
 
 Block upper bounds use the stored (max_tf, min_dl): BM25 impact is
-monotone ↑ in tf and ↓ in dl, so idf·(k1+1)·max_tf/(max_tf +
+monotone ↑ in tf and ↓ in dl, so w·(k1+1)·max_tf/(max_tf +
 k1(1−b+b·min_dl/avgdl)) bounds every doc in the block (see postings.py on
-why the build stores these instead of a precomputed impact).
+why the build stores these instead of a precomputed impact); the weight
+w = idf x boost scales every bound linearly, so pruning stays exact.
 
-Float contract: per-doc scores sum contributions in term-lexicographic
-order, mirroring the exhaustive scorer's sort_array + aggregate —
-bit-identical results at any parallelism.
-
-Catalyst cannot express document-at-a-time pruning (SURVEY §4), hence the
-pandas kernel; everything around it (pruned scan on term, grouping,
-global top-k) is declarative.
+Float contract: per-doc scores sum contributions in entry order (term,
+then weight), the tree kernel's instance order — bit-identical results
+whichever strategy a bucket takes, at any parallelism.
 """
 
 from __future__ import annotations
@@ -31,44 +32,35 @@ import heapq
 import numpy as np
 import pandas as pd
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 
 from ..analysis import analyze
 from ..functions.codec import delta_decode, vbyte_decode
-from .fulltext import B, K1, empty_frame, idf as bm25_idf
-from .postings import decode_postings
+from .fulltext import B, K1
+from .postings import _topk_cut, term_dfs
 
 _EXHAUSTED = 1 << 62
 
-# term-set predicates switch from an isin literal (pushed into the parquet
-# scan) to a broadcast semi-join past this size: a 10^4-term IN-list bloats
-# the plan/task binaries and stops being pushable, while a broadcast hash
-# semi-join stays O(set) per task — the serving path for large batched
-# query sets (and prefix expansions) over a 10^9-term vocabulary
-_ISIN_MAX = 512
-
-
-def _filter_terms(df: DataFrame, terms: list[str]) -> DataFrame:
-    if len(terms) <= _ISIN_MAX:
-        return df.filter(F.col("term").isin(list(terms)))
-    tdf = df.sparkSession.createDataFrame(
-        [(t,) for t in terms], "term string")
-    return df.join(F.broadcast(tdf), "term", "left_semi")
+# a flat disjunction whose postings in a bucket cover more than this
+# share of the bucket's doc span takes the exhaustive tree kernel:
+# block-max bounds cannot prune flat scores, and cursor stepping is then
+# pure overhead against one vectorized pass
+DENSE_THRESHOLD = 0.10
 
 
 class _BlobCache:
-    """Per-kernel-invocation memo of the per-BLOCK decodes of the two
-    paths that skip blocks and decode on demand: the WAND cursor
+    """Per-bucket memo of the per-BLOCK decodes of the two strategies
+    that skip blocks and decode on demand: the WAND cursor
     (_TermCursor) and the impact-ordered single-term scan
-    (_single_term_topk).  Whole-term decodes (the dense kernel) go
-    through postings.decode_postings and a per-term memo instead, so
-    this memo pins only the blocks those paths actually visited.
+    (_single_term_topk).  Whole-term decodes (the tree kernel) go
+    through one postings.decode_postings pass instead, so this memo
+    pins only the blocks those strategies actually visited.
 
     In batched serving one bucket evaluates EVERY query of the set, and
     a term shared by many queries had its blocks VByte-decoded once per
     query — measured 4.5 s -> 1.5 s for the 100-query batch kernel at
     sf1.0 with this memo.  Scope is one bucket() invocation (created in
-    _wand_set's applyInPandas fn, or per _wand_bucket call), so no
+    boolean._bucket_topk, or per _wand_bucket call), so no
     state outlives a task and memory is bounded by the bucket's own
     blob set.  Cached arrays are frozen (writeable=False); every
     consumer copies via .astype(...) exactly as the uncached path did,
@@ -139,15 +131,6 @@ class _TermCursor:
         self.cur = -1
         self._next_block()
 
-    def _load(self, bi: int) -> None:
-        self.bi = bi
-        self.ub = float(self._ub_suffix[bi])
-        self.docs = self._cache.docs(self.blobs[bi]).astype(np.int64)
-        self.tfs = self._cache.vals(self.tf_blobs[bi]).astype(np.float64)
-        self.dls = self._cache.vals(self.dl_blobs[bi]).astype(np.float64)
-        self.wi = 0
-        self.cur = int(self.docs[0])
-
     def _set_block_lazy(self, bi: int) -> None:
         """Position at a block's first doc WITHOUT decoding its blobs —
         (first_doc, last_doc, block bound) metadata is enough for pivot
@@ -194,14 +177,12 @@ class _TermCursor:
             if nb >= len(self.blobs):
                 self.cur = _EXHAUSTED
                 return
-            if int(self.first[nb]) >= target:
+            self._set_block_lazy(nb)
+            if self.cur >= target:
                 # lands on/before the block's first doc: metadata is
                 # enough — skip the decode entirely
-                self._set_block_lazy(nb)
                 return
-            self._load(nb)
-        else:
-            self._ensure_loaded()
+        self._ensure_loaded()
         self.wi = int(np.searchsorted(self.docs, target, side="left"))
         if self.wi >= self.docs.size:
             self._next_block()
@@ -224,77 +205,6 @@ class _TermCursor:
             self._next_block()
         else:
             self.cur = int(self.docs[self.wi])
-
-
-def _score_bucket_vectorized(pdf: pd.DataFrame,
-                             term_meta: list[tuple[str, float]], k: int,
-                             avgdl: float, k1: float, b: float,
-                             term_dec: dict | None = None) -> pd.DataFrame:
-    """Exhaustive NumPy scoring of one bucket — the ADAPTIVE fallback for
-    queries whose terms are near-ubiquitous: when block-max bounds cannot
-    prune (flat scores), document-at-a-time cursor stepping is pure
-    overhead, while decoding every block into one vectorized accumulation
-    is memory-bandwidth fast.  Float contract preserved: docs accumulate
-    their terms in term order (terms iterate outermost), so results stay
-    bit-identical to WAND/exhaustive.
-
-    ``term_dec``: {term: (docs, tfs, dls)} memo of whole-term decodes,
-    shared by every query of a set against one bucket (a term's rows
-    are the same in each query's slice of the bucket).  Its arrays are
-    frozen (writeable=False), as _BlobCache's are."""
-    term_dec = term_dec if term_dec is not None else {}
-    min_doc = int(pdf["first_doc"].min())
-    max_doc = int(pdf["last_doc"].max())
-    scores = np.zeros(max_doc - min_doc + 1, dtype=np.float64)
-    touched = np.zeros(scores.size, dtype=bool)
-    for term, idf in term_meta:  # term order == float contract
-        dec = term_dec.get(term)
-        if dec is None:
-            rows = pdf[pdf["term"] == term]
-            if not len(rows):
-                continue
-            _, _, docs, tfs, dls = decode_postings(rows)
-            dec = term_dec[term] = (docs, tfs.astype(np.float64),
-                                    dls.astype(np.float64))
-            for a in dec:
-                a.flags.writeable = False
-        docs, tfs, dls = dec
-        idx = docs - min_doc
-        contrib = (idf * (tfs * (k1 + 1.0))
-                   / (tfs + k1 * (1.0 - b + b * dls / avgdl)))
-        scores[idx] += contrib  # each doc appears once per term
-        touched[idx] = True
-    hit = np.flatnonzero(touched)
-    if hit.size == 0:
-        return pd.DataFrame({"doc_id": [], "score": []}).astype(
-            {"doc_id": "int64", "score": "float64"})
-    s = scores[hit]
-    if hit.size > k:
-        # tie-correct top-k: argpartition alone picks ARBITRARY members
-        # of a tie group at the k boundary — include every doc scoring
-        # >= the k-th best, then order by (score desc, doc asc) and cut
-        kth = -np.partition(-s, k - 1)[k - 1]
-        cand = np.flatnonzero(s >= kth)
-        order = cand[np.lexsort((hit[cand], -s[cand]))][:k]
-    else:
-        order = np.lexsort((hit, -s))
-    return pd.DataFrame({"doc_id": (hit[order] + min_doc).astype(np.int64),
-                         "score": s[order]})
-
-
-def _topk_cut(docs: np.ndarray, scores: np.ndarray,
-              k: int) -> tuple[np.ndarray, np.ndarray]:
-    """Tie-correct top-k by (score desc, doc asc), returned sorted.
-    argpartition alone picks ARBITRARY members of a tie group at the k
-    boundary — include every doc scoring >= the k-th best, then order
-    and cut (same scheme as _score_bucket_vectorized)."""
-    if docs.size > k:
-        kth = -np.partition(-scores, k - 1)[k - 1]
-        cand = np.flatnonzero(scores >= kth)
-        order = cand[np.lexsort((docs[cand], -scores[cand]))][:k]
-    else:
-        order = np.lexsort((docs, -scores))
-    return docs[order], scores[order]
 
 
 def _single_term_topk(pdf: pd.DataFrame, idf: float, k: int, avgdl: float,
@@ -340,14 +250,13 @@ def _single_term_topk(pdf: pd.DataFrame, idf: float, k: int, avgdl: float,
 
 def _wand_bucket(pdf: pd.DataFrame, term_meta: list[tuple[str, float]],
                  k: int, avgdl: float, k1: float, b: float,
-                 dense_threshold: float = 0.10,
-                 cache: "_BlobCache | None" = None,
-                 term_dec: dict | None = None) -> pd.DataFrame:
-    """WAND over one rbucket. term_meta = [(term, idf)] in term order.
-
-    Adaptive: if the bucket's matched postings cover more than
-    ``dense_threshold`` of its doc range, pruning cannot win — switch to
-    the vectorized exhaustive kernel (same float contract)."""
+                 cache: "_BlobCache | None" = None) -> pd.DataFrame:
+    """Top-k of a flat disjunction over one rbucket's block rows.
+    ``term_meta`` = [(term, weight)] in entry order, weight = idf x
+    boost, one cursor per entry (a repeated term keeps one per clause).
+    One entry takes the impact-ordered single-term scan; several take
+    document-at-a-time block-max WAND.  The caller routes dense buckets
+    to the exhaustive tree kernel (boolean._bucket_topk)."""
     if not len(pdf):
         return pd.DataFrame({"doc_id": [], "score": []}).astype(
             {"doc_id": "int64", "score": "float64"})
@@ -356,11 +265,6 @@ def _wand_bucket(pdf: pd.DataFrame, term_meta: list[tuple[str, float]],
         rows = pdf[pdf["term"] == term_meta[0][0]]
         return _single_term_topk(rows, term_meta[0][1], k, avgdl, k1, b,
                                  cache=cache)
-    n_postings = int(pdf["n"].sum())
-    span = int(pdf["last_doc"].max()) - int(pdf["first_doc"].min()) + 1
-    if span > 0 and n_postings > dense_threshold * span:
-        return _score_bucket_vectorized(pdf, term_meta, k, avgdl, k1, b,
-                                        term_dec)
     cursors: list[_TermCursor] = []
     for term, idf in term_meta:
         rows = pdf[pdf["term"] == term]
@@ -445,95 +349,21 @@ def wand_topk_many(postings: DataFrame, tstats: DataFrame, n_docs: int,
                    terms_fn=None) -> DataFrame:
     """Evaluate a whole query SET in one grouped pass -> (qid, doc_id,
     score): about three Spark jobs per set (the bucket exchange, the
-    kernel, the per-qid window).
-
-    Serving shape: per-query driver round trips dominate latency at small
-    k, so the bucket kernel runs every query against its bucket in one
-    applyInPandas pass (matched terms unioned, metadata broadcast via the
-    closure), then one global top-k per qid.  Results are bit-identical
-    to per-query wand_topk.
+    kernel, the per-qid window), each query a flat disjunction of its
+    analyzed terms.  Results are bit-identical to per-query wand_topk.
 
     ``terms_fn``: query-string -> term list; defaults to the flagship
     analysis chain (custom Analyzer chains pass ``analyzer.terms``)."""
+    # imported here: boolean imports this module's bucket strategies
+    from .boolean import _disjunction_set, _top_k_per_qid
     if terms_fn is None:
         terms_fn = lambda q: [t.term for t in analyze(q)]
     entries = {qid: [(t, 1.0) for t in sorted(set(terms_fn(q)))]
                for qid, q in queries.items()}
     terms = {t for es in entries.values() for t, _ in es}
-    return _wand_many(postings, term_dfs(tstats, terms), n_docs, avgdl,
-                      entries, k, k1, b)
-
-
-def term_dfs(tstats: DataFrame, terms) -> dict[str, int]:
-    """{term: df} for those of ``terms`` in ``tstats`` — one filtered
-    collect (no job for an empty term set).  The plan functions take
-    this resolved map; an index with a driver-resident dictionary
-    passes its own (engine.FulltextIndex)."""
-    if not terms:
-        return {}
-    return {r["term"]: int(r["df"]) for r in
-            _filter_terms(tstats, sorted(terms)).select("term", "df")
-            .collect()}
-
-
-def _wand_set(postings: DataFrame, dfs: dict[str, int], n_docs: int,
-              avgdl: float, entries: dict[str, list[tuple[str, float]]],
-              k: int, k1: float, b: float) -> DataFrame:
-    """The WAND serving plan over ``{qid: [(term, weight), ...]}`` ->
-    per-bucket (qid, doc_id, score) candidates, before the global top-k:
-    idf from the resolved ``dfs`` map (terms it lacks are absent from
-    the index), one pruned scan, one applyInPandas pass running every
-    query against each bucket.  Callers finish: a set with the per-qid
-    window (_wand_many), a single query with orderBy().limit()
-    (_wand_one)."""
-    schema = "qid string, doc_id long, score double"
-    metas = {qid: [(t, w * bm25_idf(n_docs, dfs[t]))
-                   for t, w in sorted(es) if t in dfs]
-             for qid, es in entries.items()}
-    metas = {qid: m for qid, m in metas.items() if m}
-    if not metas:
-        return empty_frame(postings.sparkSession, schema)
-
-    def bucket(pdf: pd.DataFrame) -> pd.DataFrame:
-        outs = []
-        # decode memos for the WHOLE query set against this bucket:
-        # shared blocks and terms decode once, not once per query
-        cache, term_dec = _BlobCache(), {}
-        for qid, meta in metas.items():
-            # restrict to THIS query's terms: the bucket holds the union
-            # of all queries' postings, which would inflate the adaptive
-            # density statistic and the dense kernel's doc-range span
-            sub = pdf[pdf["term"].isin([t for t, _ in meta])]
-            r = _wand_bucket(sub, meta, k, avgdl, k1, b, cache=cache,
-                             term_dec=term_dec)
-            r.insert(0, "qid", qid)
-            outs.append(r)
-        return pd.concat(outs, ignore_index=True)
-
-    matched = _filter_terms(
-        postings, sorted({t for m in metas.values() for t, _ in m}))
-    return matched.groupBy("rbucket").applyInPandas(bucket, schema=schema)
-
-
-def _wand_many(postings: DataFrame, dfs: dict[str, int], n_docs: int,
-               avgdl: float, entries: dict[str, list[tuple[str, float]]],
-               k: int, k1: float = K1, b: float = B) -> DataFrame:
-    """A query set, finished by one per-qid top-k window."""
-    w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("doc_id"))
-    return (_wand_set(postings, dfs, n_docs, avgdl, entries, k, k1, b)
-            .withColumn("_r", F.row_number().over(w))
-            .filter(F.col("_r") <= k).drop("_r"))
-
-
-def _wand_one(postings: DataFrame, dfs: dict[str, int], n_docs: int,
-              avgdl: float, entries: list[tuple[str, float]], k: int,
-              k1: float = K1, b: float = B) -> DataFrame:
-    """A set of one -> (doc_id, score), finished by a global
-    orderBy().limit(): a TakeOrderedAndProject, one Spark job fewer
-    than the per-qid window."""
-    return (_wand_set(postings, dfs, n_docs, avgdl, {"_": entries}, k,
-                      k1, b).drop("qid")
-            .orderBy(F.desc("score"), F.asc("doc_id")).limit(k))
+    return _top_k_per_qid(_disjunction_set(
+        postings, term_dfs(tstats, terms), n_docs, avgdl, entries, k, k1,
+        b), k)
 
 
 def prefix_topk(postings: DataFrame, tdict: DataFrame, n_docs: int,
@@ -542,7 +372,7 @@ def prefix_topk(postings: DataFrame, tdict: DataFrame, n_docs: int,
     """Prefix (wildcard `p*`) query — the reference's automaton package
     (SURVEY A19) maps to a RANGE predicate on the sorted term dictionary:
     expand matching terms (bounded, df-descending like Lucene's top-terms
-    rewrite), then score the union through the same WAND kernel."""
+    rewrite), then score the union as one flat disjunction."""
     terms = [r["term"] for r in
              (tdict.filter(F.col("term").startswith(prefix.lower()))
               .orderBy(F.desc("df"), F.asc("term"))
@@ -555,7 +385,8 @@ def wand_topk_terms(postings: DataFrame, tstats: DataFrame, n_docs: int,
                     k1: float = K1, b: float = B,
                     term_boosts: list[tuple[str, float]] | None = None
                     ) -> DataFrame:
-    """Core WAND entry over pre-analyzed terms.
+    """Top-k of the flat disjunction of pre-analyzed terms -> (doc_id,
+    score).
 
     ``tstats`` is (term, df, ...) — from term_stats_from_postings or the
     DataFrame path; only the query's rows are collected (driver-side idf,
@@ -564,11 +395,14 @@ def wand_topk_terms(postings: DataFrame, tstats: DataFrame, n_docs: int,
     ``term_boosts``: optional weighted-CLAUSE form, [(term, weight)]
     sorted by term, possibly with REPEATED terms (one entry per query
     clause — Lucene's fuzzy edit-distance downweight, boosted clauses).
-    Each entry becomes its own cursor with idf x weight; weights scale
-    every block bound linearly, so WAND pruning stays exact.
+    Each entry becomes its own SHOULD leaf (and cursor) with idf x
+    weight.
 
-    Runs the batch kernel (wand_topk_many's plan) as a set of one."""
+    Runs wand_topk_many's plan as a set of one, finished by a global
+    orderBy().limit()."""
+    from .boolean import _disjunction_set, _top_k
     entries = term_boosts if term_boosts is not None \
         else [(t, 1.0) for t in (terms or [])]
-    return _wand_one(postings, term_dfs(tstats, {t for t, _ in entries}),
-                     n_docs, avgdl, entries, k, k1, b)
+    return _top_k(_disjunction_set(
+        postings, term_dfs(tstats, {t for t, _ in entries}), n_docs, avgdl,
+        {"_": entries}, k, k1, b).drop("qid"), k)

@@ -17,8 +17,9 @@ Reads the corpus parquet (input_hint shape: repo,path,commit,lang,content
 dense doc ids, builds delta+VByte posting blocks (and, with
 --positional, the positional blocks in the same pass and rbuckets)
 chunk-by-chunk with idempotent commits + lineage rows
-(operators/lineage.py), then writes the
-sorted term dictionary and a stats.json (n_docs, avgdl) the query CLI
+(operators/lineage.py), then writes the sorted term dictionary
+(``term_dict/``, for offline readers: the query CLI derives term stats
+from the postings) and the stats.json (n_docs, avgdl) the query CLI
 reads.  Re-running after a crash resumes from the lineage table — only
 missing chunks rebuild.
 

@@ -5,14 +5,18 @@ scripts/build_index.py.
     spark-submit --py-files plas.zip scripts/query_index.py \
         --workdir /path/to/index [-k 10] "query one" "query two" ...
 
-All queries evaluate in ONE Spark job per stage (wand_topk_many — or
-engine.query_many with ``--syntax classic``, which parses full
-classic-Lucene strings: AND/OR/NOT, parens, field:term, boosts,
-ranges, wildcards, fuzzy, and (r5) phrases — a workdir built with
-``build_index.py --positional`` (or saved by ``FulltextIndex.save``
-with a positional index) serves ``"exact phrase"`` / ``"a b"~n``
-clauses batched like everything else).  Prints one JSON line per
-query: {"query": ..., "hits": [[doc_id, score], ...]}.
+All queries evaluate as one query set through engine.FulltextIndex:
+``--syntax terms`` (default) ranks each analyzed bag of words with
+``search_many``, ``--syntax classic`` runs ``query_many``, which parses
+full classic-Lucene strings (AND/OR/NOT, parens, field:term, boosts,
+ranges, wildcards, fuzzy, and phrases — a workdir built with
+``build_index.py --positional``, or saved by ``FulltextIndex.save``
+with a positional index, serves ``"exact phrase"`` / ``"a b"~n``
+clauses batched like everything else).  Either way the set takes one
+grouped kernel pass: about three Spark jobs (the bucket exchange, the
+kernel, the per-qid window), plus the term-dictionary read and any
+regex expansion.  Prints one JSON line per query:
+{"query": ..., "hits": [[doc_id, score], ...]}.
 """
 
 from __future__ import annotations
@@ -53,13 +57,12 @@ def main() -> None:
              .getOrCreate())
     spark.sparkContext.setLogLevel("WARN")
 
+    from php_lucene_analyzer_spark.engine import FulltextIndex
+    from php_lucene_analyzer_spark.functions.header import (
+        INDEX_WORKDIR_CODEC, INDEX_WORKDIR_VERSION, POSITIONAL_CODEC,
+        POSITIONAL_VERSION, check_dir_header, check_fields)
     from php_lucene_analyzer_spark.operators.postings import (
         term_stats_from_postings)
-    from php_lucene_analyzer_spark.operators.wand import wand_topk_many
-
-    from php_lucene_analyzer_spark.functions.header import (
-        INDEX_WORKDIR_CODEC, INDEX_WORKDIR_VERSION, check_dir_header,
-        check_fields)
 
     # format guard BEFORE any decode: stale index layouts fail with a
     # versioned message (functions/header.py — CodecUtil's role)
@@ -74,29 +77,23 @@ def main() -> None:
         os.path.join(args.workdir, "postings", "chunk=*"))
     tstats = term_stats_from_postings(postings)
 
+    pos = None
+    pdir = os.path.join(args.workdir, "positional")
+    if args.syntax == "classic" and (stats.get("has_positional")
+                                     or os.path.isdir(pdir)):
+        # header check BEFORE any decode (engine.load's rule)
+        check_dir_header(pdir, POSITIONAL_CODEC, POSITIONAL_VERSION,
+                         POSITIONAL_VERSION)
+        pos = spark.read.parquet(pdir)
+    idx = FulltextIndex(spark, postings, tstats, int(stats["n_docs"]),
+                        float(stats["avgdl"]), positional=pos,
+                        fields=stats.get("fields"),
+                        field_avgdl=stats.get("field_avgdl"))
     qmap = {str(i): q for i, q in enumerate(args.queries)}
     if args.syntax == "classic":
-        from php_lucene_analyzer_spark.engine import FulltextIndex
-        from php_lucene_analyzer_spark.functions.header import (
-            POSITIONAL_CODEC, POSITIONAL_VERSION)
-
-        pos = None
-        pdir = os.path.join(args.workdir, "positional")
-        if stats.get("has_positional") or os.path.isdir(pdir):
-            # header check BEFORE any decode (engine.load's rule)
-            check_dir_header(pdir, POSITIONAL_CODEC, POSITIONAL_VERSION,
-                             POSITIONAL_VERSION)
-            pos = spark.read.parquet(pdir)
-        idx = FulltextIndex(spark, postings, tstats,
-                            int(stats["n_docs"]), float(stats["avgdl"]),
-                            positional=pos,
-                            fields=stats.get("fields"),
-                            field_avgdl=stats.get("field_avgdl"))
-        hits_df = idx.query_many(qmap, k=args.k,
-                                 slop_mode=args.slop_mode)
+        hits_df = idx.query_many(qmap, k=args.k, slop_mode=args.slop_mode)
     else:
-        hits_df = wand_topk_many(postings, tstats, stats["n_docs"],
-                                 stats["avgdl"], qmap, k=args.k)
+        hits_df = idx.search_many(qmap, k=args.k)
     meta_cols: list[str] = []
     if args.fetch:
         import pyspark.sql.functions as F

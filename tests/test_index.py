@@ -299,19 +299,35 @@ def test_wand_cursor_lazy_block_decode(monkeypatch):
     assert cur.cur == 128 * 3 + 7
 
 
-def test_wand_semijoin_term_fetch_identical(spark, index, monkeypatch):
+def test_wand_semijoin_term_fetch_identical(spark, index, docs,
+                                            monkeypatch):
     """Past _ISIN_MAX the term predicate becomes a broadcast semi-join
     (large batched query sets / prefix expansions) — results must be
-    bit-identical to the isin path."""
-    import php_lucene_analyzer_spark.operators.wand as W
+    bit-identical to the isin path, for every scan that starts from a
+    term set: WAND, query() (postings and phrase positions in one
+    pass), phrase_match_many and first_match."""
+    import php_lucene_analyzer_spark.operators.postings as P
+    from php_lucene_analyzer_spark.engine import FulltextIndex
+    from php_lucene_analyzer_spark.operators.positional import (
+        first_match, phrase_match_many)
 
     postings, tstats = index["postings"], index["tstats"]
     n, avgdl = index["n"], index["avgdl"]
     q = "stream merge join window"
-    want = wand_topk(postings, tstats, n, avgdl, q, k=10).collect()
-    monkeypatch.setattr(W, "_ISIN_MAX", 0)
-    got = W.wand_topk(postings, tstats, n, avgdl, q, k=10).collect()
-    assert got == want and len(got) > 0
+    pidx = FulltextIndex.build(spark, docs.select("doc_id", "text"),
+                               ["doc_id"], text_col="text", positional=True)
+    phrases = {"p0": ("fast merge", 0), "p1": ("stream window", 2)}
+    calls = [
+        lambda: wand_topk(postings, tstats, n, avgdl, q, k=10),
+        lambda: pidx.query('+stream merge -window "fast merge"', k=10),
+        lambda: phrase_match_many(pidx.positional, phrases),
+        lambda: first_match(pidx.positional, pidx._terms(q)),
+    ]
+    want = [sorted(c().collect()) for c in calls]
+    monkeypatch.setattr(P, "_ISIN_MAX", 0)
+    got = [sorted(c().collect()) for c in calls]
+    pidx.close()
+    assert got == want and all(want)
 
 
 def test_chunked_resumable_index_wand_matches_exhaustive(spark, tmp_path):
@@ -470,22 +486,38 @@ def test_single_term_kernel_tie_break_at_k_boundary():
     assert got["doc_id"].tolist() == list(range(10))
 
 
-def test_dense_kernel_tie_break_at_k_boundary():
-    """Ties straddling the k boundary must resolve by doc_id asc in the
-    dense kernel too (argpartition alone picks arbitrary tie members)."""
+def test_dense_kernel_tie_break_at_k_boundary(monkeypatch):
+    """Ties straddling the k boundary must resolve by doc_id asc on the
+    dense route too (argpartition alone picks arbitrary tie members):
+    a flat disjunction whose postings cover its bucket takes the
+    exhaustive tree kernel, decoding nothing block by block."""
     import numpy as np
 
+    import php_lucene_analyzer_spark.operators.boolean as Bo
     import php_lucene_analyzer_spark.operators.wand as W
     from php_lucene_analyzer_spark.operators.postings import _block_rows
 
+    calls = {"n": 0}
+    orig = W.vbyte_decode
+
+    def counting(buf):
+        calls["n"] += 1
+        return orig(buf)
+
+    monkeypatch.setattr(W, "vbyte_decode", counting)
     n = 1200
-    docs = np.arange(n, dtype=np.uint64)
-    tfs = np.full(n, 3, dtype=np.uint64)     # all scores identical
-    dls = np.full(n, 40, dtype=np.uint64)
-    pdf = _block_rows(["t"], np.array([0, n], dtype=np.int64),
+    docs = np.tile(np.arange(n, dtype=np.uint64), 2)
+    tfs = np.full(2 * n, 3, dtype=np.uint64)     # all scores identical
+    dls = np.full(2 * n, 40, dtype=np.uint64)
+    pdf = _block_rows(["s", "t"], np.array([0, n, 2 * n], dtype=np.int64),
                       docs, tfs, dls, 0)
-    got = W._score_bucket_vectorized(pdf, [("t", 1.5)], 10, 40.0, W.K1, W.B)
+    tree, inst = Bo._should_tree([("s", 1.5), ("t", 1.5)])
+    inst = [(t, w, 40.0, i) for t, w, i in inst]
+    got = Bo._bucket_topk(pdf, {"q": tree}, {"q": inst},
+                          {"q": Bo._flat_meta(tree, inst, 10)},
+                          {"q": ["s", "t"]}, {"q": 10}, W.K1, W.B)
     assert got["doc_id"].tolist() == list(range(10))
+    assert calls["n"] == 0                       # the dense route
 
 
 @pytest.mark.slow

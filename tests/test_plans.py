@@ -120,7 +120,7 @@ def test_index_build_single_shuffle(spark):
 def test_semijoin_term_fetch_is_broadcast(spark, docs):
     """Past _ISIN_MAX the term predicate must plan as a BROADCAST left-semi
     hash join (not a shuffle join), keeping large query batches O(set)."""
-    from php_lucene_analyzer_spark.operators.wand import _filter_terms
+    from php_lucene_analyzer_spark.operators.postings import _filter_terms
 
     postings = index_corpus(docs.repartitionByRange(5, "doc_id"),
                             "doc_id", "text")

@@ -316,6 +316,24 @@ def test_multifield_default_field_query(fidx, fdocs, spark):
         sidx.close()
 
 
+def test_search_regex_default_field_only(fidx, fcorpus):
+    """search_regex expands over the default field only, as query's
+    regex clause does: on a two-field index ``t.*`` would also match
+    every stored title term (``title`` + FIELD_SEP + term; Java's ``.``
+    matches the separator) and score it with the default field's
+    avgdl.  No hit may come from a title term alone."""
+    import re
+    per_doc, _ = fcorpus
+    pat = "t.*"
+    assert any(t.startswith("title" + FIELD_SEP) and re.fullmatch(pat, t)
+               for t in fidx._dictionary().terms)
+    got = _rows(fidx.search_regex(pat, k=40))
+    assert got == _rows(fidx.query(f"/{pat}/", k=40)) and got
+    for doc_id, _score in got:
+        assert any(FIELD_SEP not in t and re.fullmatch(pat, t)
+                   for t in per_doc[doc_id]), doc_id
+
+
 def test_field_scoped_query_matches_oracle(fidx, fcorpus):
     per_doc, fld_len = fcorpus
     n = fidx.n_docs

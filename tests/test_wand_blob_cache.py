@@ -1,9 +1,10 @@
-"""operators/wand._BlobCache and the dense kernel's ``term_dec`` memo.
+"""operators/wand._BlobCache and the per-bucket decode shared by a set.
 
 The serving kernels must return BIT-IDENTICAL results whether blobs are
-decoded fresh per query (r5 behavior) or through a cache shared across
-a batch's queries, and the cached arrays must be immutable so no kernel
-can corrupt a later query's view.
+decoded fresh per query (r5 behavior) or once per bucket for a whole
+query set (the _BlobCache of the block-skipping strategies, the one
+decode_postings pass of the tree kernel), and the shared arrays must be
+immutable so no kernel can corrupt a later query's view.
 """
 
 import numpy as np
@@ -53,31 +54,49 @@ def test_blob_cache_returns_frozen_equal_arrays():
             d1[0] = 0  # immutable: a mutating consumer fails loudly
 
 
-def test_wand_bucket_bit_identical_with_shared_cache():
-    from php_lucene_analyzer_spark.operators.wand import (_BlobCache,
-                                                          _wand_bucket)
+def test_wand_bucket_bit_identical_with_shared_cache(monkeypatch):
+    import php_lucene_analyzer_spark.operators.boolean as Bo
 
     pdf = _toy_postings()
-    metas = [
-        [("alpha", 1.3), ("beta", 0.7)],
-        [("beta", 0.7), ("gamma", 2.1)],
-        [("alpha", 1.3)],                       # single-term path
-        [("alpha", 1.3), ("beta", 0.7), ("gamma", 2.1)],
-    ]
-    # the toy terms are dense, so multi-term metas take the vectorized
-    # kernel, which shares whole-term decodes through ``term_dec``
-    shared, term_dec = _BlobCache(), {}
-    for meta in metas:
-        sub = pdf[pdf["term"].isin([t for t, _ in meta])]
-        fresh = _wand_bucket(sub, meta, 10, 55.0, 1.2, 0.75)
-        cached = _wand_bucket(sub, meta, 10, 55.0, 1.2, 0.75,
-                              cache=shared, term_dec=term_dec)
-        pd.testing.assert_frame_equal(fresh.reset_index(drop=True),
-                                      cached.reset_index(drop=True))
+    metas = {
+        "ab": [("alpha", 1.3), ("beta", 0.7)],
+        "bg": [("beta", 0.7), ("gamma", 2.1)],
+        "a": [("alpha", 1.3)],                  # single-term path
+        "abg": [("alpha", 1.3), ("beta", 0.7), ("gamma", 2.1)],
+    }
+    # the toy terms are dense, so the multi-term metas take the tree
+    # kernel, which shares one whole-bucket decode across the set
+    seen = []
+    orig = Bo._tree_bucket
+
+    def spy(decoded, *a, **kw):
+        seen.append(decoded)
+        return orig(decoded, *a, **kw)
+
+    monkeypatch.setattr(Bo, "_tree_bucket", spy)
+
+    def run(qids):
+        trees, insts, flat = {}, {}, {}
+        for q in qids:
+            trees[q], inst = Bo._should_tree(metas[q])
+            insts[q] = [(t, w, 55.0, i) for t, w, i in inst]
+            flat[q] = Bo._flat_meta(trees[q], insts[q], 10)
+        return Bo._bucket_topk(
+            pdf, trees, insts, flat,
+            {q: sorted({t for t, _ in metas[q]}) for q in qids},
+            {q: 10 for q in qids}, 1.2, 0.75)
+
+    shared = run(list(metas))
+    assert len(seen) == 3
+    assert {t for d in seen for t in d} == {"alpha", "beta", "gamma"}
+    for decoded in seen:
+        for arrays in decoded.values():
+            for a in arrays:
+                assert not a.flags.writeable  # frozen like _BlobCache's
+    for q in metas:
+        fresh = run([q]).reset_index(drop=True)
+        cached = shared[shared["qid"] == q].reset_index(drop=True)
+        pd.testing.assert_frame_equal(fresh, cached)
         # exact float equality, not approx: the bit-identity contract
         assert list(map(float, fresh["score"])) == \
             list(map(float, cached["score"]))
-    assert set(term_dec) == {"alpha", "beta", "gamma"}
-    for arrays in term_dec.values():
-        for a in arrays:
-            assert not a.flags.writeable  # frozen like _BlobCache's
