@@ -24,24 +24,20 @@ positional kernels (operators/positional.py::_run_phrase).  Per-bucket
 work is bounded by the build partition size; nothing is all-pairs and
 nothing funnels through one task.
 
-Per bucket and per query, ``_bucket_topk`` picks one of two
-strategies before anything decodes.  A flat disjunction (root of SHOULD
-leaves only) of one entry, or one whose postings are sparse in the
-bucket, prunes with block-max WAND (operators/wand.py: impact-ordered
-single-term scan or document-at-a-time cursors, blocks decoded on
-demand), as Lucene prunes every top-k disjunction whichever parser
-built it.  Every other query — MUST, NOT, msm > 1, phrases,
-nested sub-queries, dense disjunctions — wants its MATCHING SET, whose
-candidates are bounded by the rarest MUST term's postings inside each
-bucket: one whole-bucket decode + vectorized set algebra
-(``_tree_bucket``: conjunctions/counts via ``np.unique``, exclusions
-via ``np.isin``) beats cursor hopping there, with no per-doc Python.
+Per bucket, every query of a set takes one path (``_bucket_topk``):
+block metadata prunes its rows, the one decoder
+(postings.decode_postings) decodes what survives, and the tree kernel
+scores it.  A query with a finite k, no negative weight and no phrase
+leaf prunes with a vectorized window-at-a-time MaxScore filter
+(``_query_topk``, Lucene's MaxScoreBulkScorer), whichever parser built
+it and whatever its shape; every other query keeps all its rows.  The
+kernel (``_tree_bucket``) works on matching sets — conjunctions/counts
+via ``np.unique``, exclusions via ``np.isin`` — with no per-doc Python.
 
 Float contract: per-doc scores accumulate clause contributions in
 instance order — term, then weight (the same rule as the exhaustive
-scorer and the WAND cursors) — then add the scoring phrases' sum in
-phrase order, so results are bit-identical at any parallelism and
-whichever strategy a bucket takes.
+scorer) — then add the scoring phrases' sum in phrase order, so results
+are bit-identical at any parallelism and whatever a bucket prunes.
 """
 
 from __future__ import annotations
@@ -53,8 +49,8 @@ from pyspark.sql import DataFrame, Window
 
 from .fulltext import B, K1, empty_frame, idf as bm25_idf
 from .positional import _decode_flat, _run_phrase, _spec_terms
-from .postings import _filter_terms, _topk_cut, decode_postings, term_dfs
-from .wand import DENSE_THRESHOLD, _BlobCache, _wand_bucket
+from .postings import (_filter_terms, _term_doc_order, _topk_cut,
+                       decode_postings, term_dfs)
 
 
 def _leaf_terms(node) -> set[str]:
@@ -131,12 +127,13 @@ def _t_match(node, decoded, cache):
 
 
 def _tree_bucket(decoded, tree, instances, k: int | None, k1: float,
-                 b: float, phrase_hits=(), scored=()) -> pd.DataFrame:
-    """Evaluate a compiled query TREE inside one doc-range bucket.
+                 b: float, phrase_hits=(), scored=()) -> tuple:
+    """Evaluate a compiled query TREE inside one doc-range bucket ->
+    (doc_ids, scores), the top k by (score desc, doc asc), or the whole
+    scored match set for k None.
 
     ``decoded``: {term: (docs, tfs, dls)} for the tree's terms in this
-    bucket (views of one postings.decode_postings pass, shared
-    read-only across the set).
+    bucket (frozen arrays of the bucket's shared decode, _Blocks).
     ``instances``: [(term, weight, avgdl, leaf_id), ...] sorted — one
     scoring instance per positive-path leaf
     membership; weight = idf x the boost product along the leaf's path.
@@ -153,8 +150,7 @@ def _tree_bucket(decoded, tree, instances, k: int | None, k1: float,
     adds w·n·(k1+1)/(n+k1) (BM25 saturation of its match count, no
     length norm — the positional layout stores no dl) on top of the
     term score, as score = term_score + (0.0 + c_j0 + c_j1 + …)."""
-    empty = pd.DataFrame({"doc_id": pd.Series(dtype="int64"),
-                          "score": pd.Series(dtype="float64")})
+    empty = np.empty(0, dtype=np.int64), np.empty(0, dtype=np.float64)
     if not decoded and not phrase_hits:
         return empty
     cache: dict = {("phrase", j): d for j, (d, _n) in enumerate(phrase_hits)}
@@ -208,81 +204,232 @@ def _tree_bucket(decoded, tree, instances, k: int | None, k1: float,
                     w * n * (k1 + 1.0) / (n + k1)
         scores = scores + phr
 
-    if k is None:
-        return pd.DataFrame({"doc_id": cand, "score": scores})
-    d, s = _topk_cut(cand, scores, k)
-    return pd.DataFrame({"doc_id": d, "score": s})
+    return (cand, scores) if k is None else _topk_cut(cand, scores, k)
 
 
-def _flat_meta(tree, instances, k: int | None):
-    """([(term, weight)], avgdl) of a flat disjunction (operators/wand.py;
-    block bounds need w >= 0), else None.  In a flat root every instance
-    scores every doc holding its term, so its instances are the WAND
-    entries."""
-    _, must, should, nots, msm = tree
-    if (k is None or must or nots or msm > 1 or not instances
-            or any(c[0] != "leaf" for c in should)):
-        return None
-    avgdls = {av for _t, _w, av, _l in instances}
-    if len(avgdls) != 1 or any(w < 0 for _t, w, _a, _l in instances):
-        return None
-    return [(t, w) for t, w, _a, _l in instances], avgdls.pop()
+def _frozen(a: np.ndarray) -> np.ndarray:
+    a.flags.writeable = False
+    return a
+
+
+def _ranges(starts: np.ndarray, lens: np.ndarray) -> np.ndarray:
+    """The concatenated ``arange(s, s + n)`` of each (start, len)."""
+    return np.repeat(starts - np.cumsum(lens) + lens, lens) + \
+        np.arange(lens.sum())
+
+
+class _Blocks:
+    """One bucket's posting block rows, sorted once per query set by
+    (term, first_doc) — a term's blocks are doc-disjoint, so that is its
+    doc order — and the rows decoded so far, into frozen arrays: a row
+    decodes at most once, whichever queries of the set need it."""
+
+    _BLOBS = ("term", "block_no", "first_doc", "doc_blob", "tf_blob",
+              "dl_blob")
+
+    def __init__(self, pdf: pd.DataFrame):
+        self.cols = cols = _term_doc_order(
+            pdf, self._BLOBS + ("last_doc", "max_tf", "min_dl", "n"))
+        term = cols["term"]
+        lo = np.flatnonzero(np.append(True, term[1:] != term[:-1])) \
+            if term.size else np.empty(0, dtype=np.int64)
+        self.span = dict(zip(term[lo].tolist(),
+                             zip(lo.tolist(), lo[1:].tolist() + [term.size])))
+        self.first = cols["first_doc"].astype(np.int64)
+        self.last = cols["last_doc"].astype(np.int64)
+        self.max_tf = cols["max_tf"].astype(np.float64)
+        self.min_dl = cols["min_dl"].astype(np.float64)
+        self.n = cols["n"].astype(np.int64)
+        self.at = np.full(term.size, -1, dtype=np.int64)
+        self.docs = np.empty(0, dtype=np.int64)
+        self.tfs = self.dls = np.empty(0, dtype=np.float64)
+
+    def decode(self, rows: np.ndarray) -> None:
+        """Decode the not yet decoded of the sorted unique ``rows`` in
+        one decode_postings call."""
+        rows = rows[self.at[rows] < 0]
+        if not rows.size:
+            return
+        _t, _o, docs, tfs, dls = decode_postings(
+            {c: self.cols[c][rows] for c in self._BLOBS})
+        n = self.n[rows]
+        self.at[rows] = self.docs.size + np.cumsum(n) - n
+        self.docs = _frozen(np.concatenate((self.docs, docs)))
+        self.tfs = _frozen(np.concatenate((self.tfs, tfs.astype(np.float64))))
+        self.dls = _frozen(np.concatenate((self.dls, dls.astype(np.float64))))
+
+    def gather(self, rows: np.ndarray) -> tuple:
+        """(docs, tfs, dls) of decoded ``rows``, in row order."""
+        idx = _ranges(self.at[rows], self.n[rows])
+        return tuple(_frozen(a[idx]) for a in (self.docs, self.tfs, self.dls))
+
+    def by_term(self, rows: np.ndarray, col: np.ndarray, terms: list,
+              docs: np.ndarray | None = None) -> dict:
+        """{term: (docs, tfs, dls)} of decoded ``rows`` (ascending, term
+        ``terms[col[i]]`` owning ``rows[i]``), kept to the sorted unique
+        ``docs`` when given."""
+        arrs = self.gather(rows)
+        c = np.repeat(col, self.n[rows])
+        if docs is not None:
+            d = arrs[0]
+            hit = docs[np.minimum(np.searchsorted(docs, d),
+                                  docs.size - 1)] == d
+            arrs, c = tuple(_frozen(a[hit]) for a in arrs), c[hit]
+        offs = np.searchsorted(c, np.arange(len(terms) + 1))
+        return {t: tuple(a[lo:hi] for a in arrs)
+                for t, lo, hi in zip(terms, offs[:-1], offs[1:]) if hi > lo}
+
+
+def _has_phrase(node) -> bool:
+    return node[0] == "phrase" or node[0] == "node" and any(
+        _has_phrase(c) for c in node[1] + node[2] + node[3])
+
+
+def _query_topk(bk: _Blocks, tree, inst, terms, k: int | None, k1: float,
+                b: float, hits, scored):
+    """One query's top k in one bucket, as a generator: it yields the
+    rows it needs decoded, which the caller decodes for the whole set
+    at once, and returns its (doc_ids, scores).
+
+    A query with a finite k, no negative weight and no phrase leaf
+    prunes with block metadata only, in two MaxScore rounds (Lucene's
+    MaxScoreBulkScorer, one vectorized pass per round instead of a
+    per-doc cursor).  Only its scoring terms (those with an instance)
+    take part: a doc matching the tree holds one, and a NOT term bounds
+    nothing.  A block's bound for instance (t, w, avgdl) is the scorer's
+    own expression at (max_tf, min_dl); BM25 grows with tf and falls
+    with dl, so it bounds every doc of the block, and a bound summed in
+    instance order bounds a doc's score summed the same way.  Round 1
+    scores the docs of each scoring term's highest-bound block exactly;
+    θ is the k-th best.  Round 2 cuts the bucket into elementary windows
+    at every block boundary of the scoring terms and drops each window
+    whose bound is strictly below θ (a doc scoring θ with a smaller id
+    still enters the top k).  In a kept window the lowest-bound terms
+    whose bounds sum below θ are non-essential: a doc holding only
+    those cannot reach θ.  The candidates are the docs of the essential
+    terms' blocks, past round 1's docs; they score exactly and merge
+    with round 1's top k.  Every other query, and one whose windows x
+    instances grid would outgrow the postings of its rows, decodes its
+    terms' rows and scores them in one _tree_bucket call.
+
+    Scoring a doc set reads every leaf term's rows whose doc range
+    holds one of the docs: a doc's score reads its own postings only,
+    so it is then exactly its score over the whole bucket."""
+    terms = [t for t in terms if t in bk.span]
+    lo = np.array([bk.span[t][0] for t in terms], dtype=np.int64)
+    lens = np.array([bk.span[t][1] for t in terms], dtype=np.int64) - lo
+    rows = _ranges(lo, lens)                  # the query's rows, ascending
+    col = np.repeat(np.arange(len(terms)), lens)         # each row's term
+    pi = [x for x in inst if x[0] in bk.span]
+    tix = {t: i for i, t in enumerate(terms)}
+    ic = np.array([tix[x[0]] for x in pi], dtype=np.int64)
+    sc = np.unique(ic)                          # the scoring terms' columns
+    slen = lens[sc]
+    sr = rows[_ranges((np.cumsum(lens) - lens)[sc], slen)]  # their rows
+    ends = np.concatenate((bk.first[sr], bk.last[sr] + 1))
+    p = np.unique(ends)[:-1]              # window j: docs [p[j], p[j + 1])
+    if (not pi or k is None or _has_phrase(tree)
+            or any(w < 0 for _t, w, _a, _l in pi)
+            or p.size * len(pi) > bk.n[rows].sum()):
+        if terms:
+            yield rows
+        return _tree_bucket(bk.by_term(rows, col, terms), tree, inst, k, k1,
+                            b, hits, scored)
+
+    # per instance i, the bound of each scoring row: ib[i, r] for sr[r]
+    # (0 on other terms' rows, and in the extra last column)
+    n_i, n_s = len(pi), sr.size
+    si = np.searchsorted(sc, ic)              # each instance's scoring term
+    at = _ranges((np.cumsum(slen) - slen)[si], slen[si])
+    i_of = np.repeat(np.arange(n_i), slen[si])
+    w, av = (np.array([x[j] for x in pi])[i_of] for j in (1, 2))
+    mt, md = bk.max_tf[sr[at]], bk.min_dl[sr[at]]
+    ib = np.zeros((n_i, n_s + 1))
+    ib[i_of, at] = w * (mt * (k1 + 1.0)) / (mt + k1 * (1.0 - b + b * md / av))
+    scol = np.repeat(np.arange(sc.size), slen)   # each scoring row's term
+
+    def score(docs):
+        # the query's rows whose doc range holds one of the docs
+        hold = (np.searchsorted(docs, bk.first[rows], side="left")
+                < np.searchsorted(docs, bk.last[rows], side="right"))
+        yield rows[hold]
+        return _tree_bucket(bk.by_term(rows[hold], col[hold], terms, docs),
+                            tree, inst, k, k1, b)
+
+    # round 1: θ from the docs of each scoring term's best block
+    best = np.lexsort((-ib[:, :-1].sum(axis=0), scol))
+    top = sr[best[np.append(True, scol[best][1:] != scol[best][:-1])]]
+    yield top
+    docs1 = np.unique(bk.gather(top)[0])
+    d1, s1 = yield from score(docs1)
+    theta = s1[-1] if s1.size >= k > 0 else -np.inf
+
+    # round 2: cov[j, c] = the scoring row of term c covering window j,
+    # n_s in a gap
+    wlo, whi = np.searchsorted(p, ends[:n_s]), np.searchsorted(p, ends[n_s:])
+    cov = np.full((p.size, sc.size), n_s)
+    cov[_ranges(wlo, whi - wlo), np.repeat(scol, whi - wlo)] = \
+        np.repeat(np.arange(n_s), whi - wlo)
+    iw = ib[np.arange(n_i), cov[:, si]]          # windows x instances
+    bound = np.cumsum(iw, axis=1)[:, -1]         # in instance order
+    tw = np.zeros((p.size, sc.size))
+    np.add.at(tw.T, si, iw.T)                    # windows x terms
+    order = np.argsort(tw, axis=1, kind="stable")
+    low = np.cumsum(np.take_along_axis(tw, order, 1), axis=1) < theta
+    non_ess = np.empty_like(low)
+    np.put_along_axis(non_ess, order, low, 1)
+    # float sums depend on their order: the non-essential bounds summed
+    # in instance order must stay below θ too
+    u = np.cumsum(np.where(non_ess[:, si], iw, 0.0), axis=1)[:, -1]
+    non_ess[~(u < theta)] = False
+    ess = ~(bound < theta)[:, None] & ~non_ess & (cov < n_s)
+    pos = np.unique(cov[ess])
+    yield sr[pos]
+    cand = np.empty(0, dtype=np.int64)
+    if pos.size:
+        d = bk.gather(sr[pos])[0]
+        c = np.repeat(scol[pos], bk.n[sr[pos]])
+        cand = np.setdiff1d(
+            d[ess[np.searchsorted(p, d, side="right") - 1, c]], docs1)
+    if cand.size:
+        d2, s2 = yield from score(cand)
+        d1, s1 = _topk_cut(np.concatenate((d1, d2)),
+                           np.concatenate((s1, s2)), k)
+    return d1, s1
 
 
 def _bucket_topk(pdf: pd.DataFrame, trees: dict, instances: dict,
-                 flat: dict, qterms: dict, k_of: dict, k1: float, b: float,
+                 qterms: dict, k_of: dict, k1: float, b: float,
                  hits=(), scored: dict | None = None) -> pd.DataFrame:
     """Every query of a set against one bucket's postings rows ->
     (qid, doc_id, score), each query's bucket top-k (k None: its whole
-    scored match set).  Routing, from the query and the block metadata
-    before any decode: a flat disjunction (``flat``: qid -> _flat_meta,
-    None for any other tree) of one entry, or sparse here (postings <=
-    wand.DENSE_THRESHOLD of their doc span), takes wand._wand_bucket
-    through one shared _BlobCache; every other query takes _tree_bucket
-    over ONE decode_postings pass of just those queries' terms.
+    scored match set), through _query_topk.  The queries advance step
+    by step, and each step decodes the union of the rows they still
+    need in one decode_postings call: a row decodes at most once per
+    bucket, in a handful of calls whatever the set's size.
     ``hits`` / ``scored``: phrase match sets and scoring phrases."""
     scored = scored or {}
-    meta = {t: (n, lo, hi) for t, n, lo, hi in pdf.groupby("term").agg(
-        n=("n", "sum"), lo=("first_doc", "min"), hi=("last_doc", "max"))
-        .itertuples()} if any(flat.values()) else {}
-    res, exhaustive, cache = {}, [], _BlobCache()
-    for qid in trees:
-        fm = flat.get(qid)
-        if fm is None:
-            exhaustive.append(qid)
-            continue
-        here = [t for t in qterms[qid] if t in meta]
-        if not here:
-            continue                     # no entry has postings here
-        n = sum(meta[t][0] for t in here)
-        span = (max(meta[t][2] for t in here)
-                - min(meta[t][1] for t in here) + 1)
-        if len(fm[0]) > 1 and n > DENSE_THRESHOLD * span:
-            exhaustive.append(qid)       # dense: pruning cannot win
-        else:
-            res[qid] = _wand_bucket(pdf[pdf["term"].isin(here)], fm[0],
-                                    k_of[qid], fm[1], k1, b, cache=cache)
-    if exhaustive:
-        # decode the exhaustive queries' terms in one pass and hand each
-        # query frozen views of the shared arrays
-        need = set().union(*(qterms[qid] for qid in exhaustive))
-        terms, offs, docs, tfs, dls = decode_postings(
-            pdf[pdf["term"].isin(need)] if res else pdf)
-        tfs, dls = tfs.astype(np.float64), dls.astype(np.float64)
-        for a in (docs, tfs, dls):
-            a.flags.writeable = False
-        dec = {t: (docs[lo:hi], tfs[lo:hi], dls[lo:hi])
-               for t, lo, hi in zip(terms, offs[:-1], offs[1:])}
-        for qid in exhaustive:
-            res[qid] = _tree_bucket(
-                {t: dec[t] for t in qterms[qid] if t in dec}, trees[qid],
-                instances[qid], k_of[qid], k1, b, hits, scored.get(qid, ()))
-    if not res:
-        return pd.DataFrame({"qid": pd.Series(dtype="object"),
-                             "doc_id": pd.Series(dtype="int64"),
-                             "score": pd.Series(dtype="float64")})
-    return pd.concat([r.assign(qid=qid) for qid, r in res.items()],
-                     ignore_index=True)
+    bk = _Blocks(pdf)
+    runs = {qid: _query_topk(bk, trees[qid], instances[qid], qterms[qid],
+                             k_of[qid], k1, b, hits, scored.get(qid, ()))
+            for qid in trees}
+    res = {}
+    while runs:
+        asks = []
+        for qid in list(runs):
+            try:
+                asks.append(next(runs[qid]))
+            except StopIteration as done:
+                res[qid] = done.value
+                del runs[qid]
+        if asks:
+            bk.decode(np.unique(np.concatenate(asks)))
+    out = list(res.values()) + [(np.empty(0, dtype=np.int64), np.empty(0))]
+    return pd.DataFrame({
+        "qid": np.repeat(np.array(list(res), dtype=object),
+                         [d.size for d, _s in res.values()]),
+        "doc_id": np.concatenate([d for d, _s in out]),
+        "score": np.concatenate([s for _d, s in out])})
 
 
 def _tree_set(postings: DataFrame, dfs: dict[str, int], n_docs: int,
@@ -294,8 +441,9 @@ def _tree_set(postings: DataFrame, dfs: dict[str, int], n_docs: int,
     (qid, doc_id, score) rows, before any global top-k: idf from the
     resolved ``dfs`` map (leaf terms it lacks are absent from the
     index), one pruned scan, one applyInPandas pass running every tree
-    against each bucket (_bucket_topk).  ``k_map`` overrides ``k`` per
-    qid (None: no per-bucket cut).
+    against each bucket through the one per-bucket path (_bucket_topk:
+    block-metadata pruning, shared decode, tree kernel).  ``k_map``
+    overrides ``k`` per qid (None: no per-bucket cut, so no pruning).
 
     Phrase leaves: ``phrases`` lists the set's distinct compiled phrase
     specs (positional._compile_phrase output, None for an empty
@@ -325,8 +473,6 @@ def _tree_set(postings: DataFrame, dfs: dict[str, int], n_docs: int,
     qterms = {qid: sorted(t for t in ts if t in dfs)
               for qid, ts in per_q_terms.items()}
     k_of = {qid: k_map.get(qid, k) for qid in trees}
-    flat = {qid: _flat_meta(tree, instances[qid], k_of[qid])
-            for qid, tree in trees.items()}
 
     def bucket(pdf: pd.DataFrame) -> pd.DataFrame:
         hits = []
@@ -337,8 +483,8 @@ def _tree_set(postings: DataFrame, dfs: dict[str, int], n_docs: int,
             none = (np.empty(0, dtype=np.int64),) * 2
             hits = [_run_phrase(flat_pos, sp) if sp is not None else none
                     for sp in phrases]
-        return _bucket_topk(pdf, trees, instances, flat, qterms, k_of, k1,
-                            b, hits, scored)
+        return _bucket_topk(pdf, trees, instances, qterms, k_of, k1, b,
+                            hits, scored)
 
     matched = _filter_terms(postings, alive)
     if pterms:

@@ -123,12 +123,20 @@ def _block_docs(doc_blobs) -> tuple[np.ndarray, np.ndarray]:
     return _seg_cumsum(gaps, offsets[:-1]), offsets
 
 
-def _decode_docs(blocks: pd.DataFrame):
-    """Sort block rows by (term, first_doc) — each term's global doc
-    order, its blocks being doc-disjoint — and decode their doc blobs
-    -> (sorted rows, terms, term_offsets, docs)."""
-    blocks = blocks.sort_values(["term", "first_doc", "block_no"])
-    term = blocks["term"].to_numpy()
+def _term_doc_order(blocks, cols) -> dict:
+    """The ``cols`` of block rows (a DataFrame, or a mapping of column
+    arrays) sorted by (term, first_doc, block_no): each term's global
+    doc order, its blocks being doc-disjoint -> {col: array}."""
+    order = np.lexsort(tuple(np.asarray(blocks[c])
+                             for c in ("block_no", "first_doc", "term")))
+    return {c: np.asarray(blocks[c])[order] for c in cols}
+
+
+def _decode_docs(blocks, cols: tuple):
+    """Sort block rows (_term_doc_order) and decode their doc blobs ->
+    (the sorted ``cols``, terms, term_offsets, docs)."""
+    blocks = _term_doc_order(blocks, ("term", "doc_blob") + cols)
+    term = blocks["term"]
     new_term = np.ones(term.size, dtype=bool)
     new_term[1:] = term[1:] != term[:-1]
     first = np.flatnonzero(new_term)
@@ -137,12 +145,14 @@ def _decode_docs(blocks: pd.DataFrame):
             np.append(offsets[first], docs.size), docs)
 
 
-def decode_postings(blocks: pd.DataFrame):
-    """Doc-postings block rows of any terms -> (terms, term_offsets,
-    docs, tfs, dls), all int64: the inverse of _block_rows, one VByte
-    pass per blob column.  Term i owns ``[term_offsets[i],
-    term_offsets[i + 1])``, doc-ascending."""
-    blocks, terms, offsets, docs = _decode_docs(blocks)
+def decode_postings(blocks):
+    """Doc-postings block rows of any terms (a DataFrame, or a mapping
+    of its column arrays) -> (terms, term_offsets, docs, tfs, dls), all
+    int64: the inverse of _block_rows, one VByte pass per blob column.
+    Term i owns ``[term_offsets[i], term_offsets[i + 1])``,
+    doc-ascending."""
+    blocks, terms, offsets, docs = _decode_docs(blocks,
+                                                ("tf_blob", "dl_blob"))
     return (terms, offsets, docs, _values(blocks["tf_blob"]),
             _values(blocks["dl_blob"]))
 
@@ -153,7 +163,9 @@ def decode_positions(blocks: pd.DataFrame, offsets: bool = False):
     inverse of positional._pos_block_rows, one VByte pass per blob
     column.  Positions and offset starts restart at each doc, so doc
     j's ascending run starts at ``cumsum(freqs)[j] - freqs[j]``."""
-    blocks, terms, term_offsets, docs = _decode_docs(blocks)
+    blocks, terms, term_offsets, docs = _decode_docs(
+        blocks, ("freq_blob", "pos_blob")
+        + (("ostart_blob", "olen_blob") if offsets else ()))
     freqs = _values(blocks["freq_blob"])
     runs = np.cumsum(freqs) - freqs
     out = (terms, term_offsets, docs, freqs,

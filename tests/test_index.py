@@ -261,42 +261,55 @@ def test_high_vocabulary_corpus(spark):
     assert top[0]["doc_id"] == 1234
 
 
+def _count_decoded_rows(monkeypatch):
+    """Spy on the kernel's one decoder -> the list of row counts of its
+    decode_postings calls."""
+    import php_lucene_analyzer_spark.operators.boolean as Bo
+
+    calls = []
+    orig = Bo.decode_postings
+
+    def spy(rows):
+        calls.append(len(rows["term"]))
+        return orig(rows)
+
+    monkeypatch.setattr(Bo, "decode_postings", spy)
+    return calls
+
+
+def _flat_topk(pdf, entries, k, avgdl):
+    """One flat disjunction through the per-bucket path -> [(doc, score)]."""
+    import php_lucene_analyzer_spark.operators.boolean as Bo
+    import php_lucene_analyzer_spark.operators.wand as W
+
+    tree, inst = Bo._should_tree(entries)
+    inst = [(t, w, avgdl, i) for t, w, i in inst]
+    got = Bo._bucket_topk(pdf, {"q": tree}, {"q": inst},
+                          {"q": sorted({t for t, _ in entries})}, {"q": k},
+                          W.K1, W.B)
+    return list(zip(got["doc_id"].tolist(), got["score"].tolist()))
+
+
 def test_wand_cursor_lazy_block_decode(monkeypatch):
-    """The two-level skip contract: a cursor constructed over many blocks
-    decodes NOTHING until a doc inside a block is actually evaluated, and
-    advance_to that lands on a block's first doc stays metadata-only."""
+    """Block-max skipping happens on metadata: windows whose bound is
+    strictly below θ decode no block.  One term over 4 full blocks, the
+    giants in block 3: round 1 decodes block 3, its 10th best is θ, and
+    the other three blocks bound below it, so they stay encoded."""
     import numpy as np
 
-    import php_lucene_analyzer_spark.operators.wand as W
     from php_lucene_analyzer_spark.operators.postings import _block_rows
 
-    calls = {"n": 0}
-    orig = W.vbyte_decode
-
-    def counting(buf):
-        calls["n"] += 1
-        return orig(buf)
-
-    monkeypatch.setattr(W, "vbyte_decode", counting)
-
     n = 128 * 4  # 4 full blocks, consecutive doc ids
-    docs = np.arange(n, dtype=np.uint64)
     tfs = np.full(n, 2, dtype=np.uint64)
-    dls = np.full(n, 50, dtype=np.uint64)
+    tfs[128 * 3:128 * 3 + 20] = 9
     pdf = _block_rows(["t"], np.array([0, n], dtype=np.int64),
-                      docs, tfs, dls, rbucket=0)
+                      np.arange(n, dtype=np.uint64), tfs,
+                      np.full(n, 50, dtype=np.uint64), rbucket=0)
     assert len(pdf) == 4
-
-    cur = W._TermCursor(1.0, pdf, avgdl=50.0, k1=1.2, b=0.75)
-    assert calls["n"] == 0 and cur.cur == 0     # construction: no decode
-    cur.advance_to(128 * 3)                      # lands on block 3's first
-    assert calls["n"] == 0 and cur.cur == 128 * 3
-    s = cur.score_current()                      # NOW block 3 decodes
-    assert s > 0 and calls["n"] == 3             # doc+tf+dl blobs, once
-    cur.advance_to(128 * 3 + 7)                  # within the same block
-    assert calls["n"] == 3 and cur.cur == 128 * 3 + 7
-    cur.advance_to(60)                           # backwards: no-op
-    assert cur.cur == 128 * 3 + 7
+    calls = _count_decoded_rows(monkeypatch)
+    got = _flat_topk(pdf, [("t", 1.0)], 10, 50.0)
+    assert calls == [1]                          # block 3 alone
+    assert [d for d, _s in got] == list(range(128 * 3, 128 * 3 + 10))
 
 
 def test_wand_semijoin_term_fetch_identical(spark, index, docs,
@@ -360,7 +373,8 @@ def test_chunked_resumable_index_wand_matches_exhaustive(spark, tmp_path):
 def test_colliding_rbuckets_still_correct(spark):
     """Two doc-disjoint segments indexed with the SAME rbucket numbering
     (the pre-fix chunked layout): WAND must still equal the exhaustive
-    scorer because cursors order blocks by first_doc, not rbucket."""
+    scorer because the per-bucket path orders a term's blocks by
+    first_doc, not rbucket."""
     from php_lucene_analyzer_spark.corpus import synthetic_corpus
     from php_lucene_analyzer_spark.operators.postings import (
         term_stats_from_postings)
@@ -391,9 +405,9 @@ def test_colliding_rbuckets_still_correct(spark):
 
 
 def test_single_term_impact_ordered_early_stop(monkeypatch):
-    """Single-term queries run the impact-ordered kernel: blocks scanned
-    bound-descending, terminating before the tail — and the result equals
-    a brute-force evaluation of every posting."""
+    """A single skewed term over 40 blocks prunes in the per-bucket path:
+    it decodes fewer blocks than it holds, and the answer equals a
+    brute-force evaluation of every posting."""
     import numpy as np
 
     import php_lucene_analyzer_spark.operators.wand as W
@@ -408,18 +422,11 @@ def test_single_term_impact_ordered_early_stop(monkeypatch):
     dls = np.full(n, 60, dtype=np.uint64)
     pdf = _block_rows(["t"], np.array([0, n], dtype=np.int64),
                       docs_a, tfs, dls, rbucket=0)
+    assert len(pdf) == 40
 
-    calls = {"n": 0}
-    orig = W.vbyte_decode
-
-    def counting(buf):
-        calls["n"] += 1
-        return orig(buf)
-
-    monkeypatch.setattr(W, "vbyte_decode", counting)
-    got = W._wand_bucket(pdf, [("t", 2.0)], 10, 60.0, W.K1, W.B)
-    decoded_blocks = calls["n"] / 3
-    assert decoded_blocks < 40, "early termination never triggered"
+    calls = _count_decoded_rows(monkeypatch)
+    got = _flat_topk(pdf, [("t", 2.0)], 10, 60.0)
+    assert sum(calls) < 40, "block-max skipping never triggered"
 
     # brute force over every posting with the same expression
     k1, b = W.K1, W.B
@@ -427,8 +434,7 @@ def test_single_term_impact_ordered_early_stop(monkeypatch):
               / (tfs.astype(np.float64)
                  + k1 * (1.0 - b + b * 60.0 / 60.0)))
     order = np.lexsort((docs_a.astype(np.int64), -scores))[:10]
-    want = {(int(docs_a[i]), float(scores[i])) for i in order}
-    assert {(r.doc_id, r.score) for r in got.itertuples()} == want
+    assert got == [(int(docs_a[i]), float(scores[i])) for i in order]
 
 
 def test_incremental_flush_identical_index(spark):
@@ -468,12 +474,11 @@ def test_incremental_flush_identical_index(spark):
 
 
 def test_single_term_kernel_tie_break_at_k_boundary():
-    """The vectorized single-term kernel's running top-k cut must resolve
-    score ties at the k boundary by doc_id asc — including ties that
-    straddle BLOCK boundaries (the merge happens per scanned block)."""
+    """A single term's top-k cut must resolve score ties at the k
+    boundary by doc_id asc — including ties that straddle BLOCK
+    boundaries, where every window bounds exactly θ."""
     import numpy as np
 
-    import php_lucene_analyzer_spark.operators.wand as W
     from php_lucene_analyzer_spark.operators.postings import _block_rows
 
     n = 1200
@@ -482,42 +487,26 @@ def test_single_term_kernel_tie_break_at_k_boundary():
     dls = np.full(n, 40, dtype=np.uint64)
     pdf = _block_rows(["t"], np.array([0, n], dtype=np.int64),
                       docs, tfs, dls, 0)
-    got = W._single_term_topk(pdf, 1.5, 10, 40.0, W.K1, W.B)
-    assert got["doc_id"].tolist() == list(range(10))
+    got = _flat_topk(pdf, [("t", 1.5)], 10, 40.0)
+    assert [d for d, _s in got] == list(range(10))
 
 
-def test_dense_kernel_tie_break_at_k_boundary(monkeypatch):
-    """Ties straddling the k boundary must resolve by doc_id asc on the
-    dense route too (argpartition alone picks arbitrary tie members):
-    a flat disjunction whose postings cover its bucket takes the
-    exhaustive tree kernel, decoding nothing block by block."""
+def test_dense_kernel_tie_break_at_k_boundary():
+    """Ties straddling the k boundary must resolve by doc_id asc for a
+    flat disjunction whose postings cover its bucket too (argpartition
+    alone picks arbitrary tie members)."""
     import numpy as np
 
-    import php_lucene_analyzer_spark.operators.boolean as Bo
-    import php_lucene_analyzer_spark.operators.wand as W
     from php_lucene_analyzer_spark.operators.postings import _block_rows
 
-    calls = {"n": 0}
-    orig = W.vbyte_decode
-
-    def counting(buf):
-        calls["n"] += 1
-        return orig(buf)
-
-    monkeypatch.setattr(W, "vbyte_decode", counting)
     n = 1200
     docs = np.tile(np.arange(n, dtype=np.uint64), 2)
     tfs = np.full(2 * n, 3, dtype=np.uint64)     # all scores identical
     dls = np.full(2 * n, 40, dtype=np.uint64)
     pdf = _block_rows(["s", "t"], np.array([0, n, 2 * n], dtype=np.int64),
                       docs, tfs, dls, 0)
-    tree, inst = Bo._should_tree([("s", 1.5), ("t", 1.5)])
-    inst = [(t, w, 40.0, i) for t, w, i in inst]
-    got = Bo._bucket_topk(pdf, {"q": tree}, {"q": inst},
-                          {"q": Bo._flat_meta(tree, inst, 10)},
-                          {"q": ["s", "t"]}, {"q": 10}, W.K1, W.B)
-    assert got["doc_id"].tolist() == list(range(10))
-    assert calls["n"] == 0                       # the dense route
+    got = _flat_topk(pdf, [("s", 1.5), ("t", 1.5)], 10, 40.0)
+    assert [d for d, _s in got] == list(range(10))
 
 
 @pytest.mark.slow

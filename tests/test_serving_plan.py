@@ -1,10 +1,10 @@
 """One serving plan for every top-k query (operators/boolean.py::
 _tree_set): search() and query() share the grouped pass, and inside it
-each query's per-bucket strategy comes from its tree and the block
-metadata.  A flat disjunction prunes with block-max WAND where its
-postings are sparse and scores exhaustively where they are dense;
-everything else takes the tree kernel.  Whatever the route, answers are
-bit-identical."""
+every query of a set takes one per-bucket path.  Block metadata prunes
+the rows of a query with a finite k, no negative weight and no phrase
+(a vectorized MaxScore filter); the one decoder decodes what survives;
+the tree kernel scores it.  Whatever a query prunes, answers are
+bit-identical to one full decode."""
 
 import numpy as np
 import pytest
@@ -13,6 +13,7 @@ import pyspark.sql.functions as F
 
 import php_lucene_analyzer_spark.operators.boolean as Bo
 import php_lucene_analyzer_spark.operators.wand as W
+import php_lucene_analyzer_spark.operators.postings as P
 from php_lucene_analyzer_spark.engine import FulltextIndex
 from php_lucene_analyzer_spark.operators.postings import (
     _block_rows, corpus_stats_from_postings, index_corpus,
@@ -30,14 +31,24 @@ def _postings(spec: dict):
                        np.full(int(offs[-1]), 50, dtype=np.uint64), 0)
 
 
+def _full_decode(pdf, tree, inst, k):
+    """_tree_bucket over one decode of every row -> [(doc, score)]."""
+    terms, offs, docs, tfs, dls = P.decode_postings(pdf)
+    tfs, dls = tfs.astype(np.float64), dls.astype(np.float64)
+    dec = {t: (docs[a:b], tfs[a:b], dls[a:b])
+           for t, a, b in zip(terms, offs[:-1], offs[1:])}
+    d, s = Bo._tree_bucket(dec, tree, inst, k, W.K1, W.B)
+    return list(zip(d.tolist(), s.tolist()))
+
+
 def test_bucket_routing_decodes(monkeypatch):
-    """A sparse flat disjunction decodes lazily through the cursor's
-    block cache; a dense one, a MUST query and a sparse one with a
+    """Every query takes the same per-bucket path; what it decodes comes
+    from its shape and the block metadata.  A flat disjunction and a
+    MUST query, whose hot block sets θ, skip the cold blocks; a
     negative weight (search_fuzzy's "lucene" downweight can go below 0,
-    and block bounds then bound nothing) decode none of their blocks
-    through it: they take the one decode_postings pass.  The mixed set
-    answers each query as it answers alone, and as the tree kernel does
-    with routing switched off."""
+    and block bounds then bound nothing) decodes all its rows.  The
+    mixed set answers each query as it answers alone, and as one full
+    decode does, and decodes no row twice."""
     s1 = np.arange(0, 640 * 20, 20)          # 5 blocks, tf 9 in block 0
     s1_tf = np.where(np.arange(640) < 128, 9, 1)
     s2 = np.arange(20_000, 20_000 + 384 * 20, 20)          # 3 blocks
@@ -56,51 +67,48 @@ def test_bucket_routing_decodes(monkeypatch):
     trees["must"] = must
     insts["must"] = [("s1", 2.0, 50.0, 0), ("s2", 0.5, 50.0, 1)]
     qterms = {q: sorted(Bo._leaf_terms(t)) for q, t in trees.items()}
+    held = {q: int(pdf["term"].isin(qterms[q]).sum()) for q in trees}
 
-    def run(qids, route=True):
-        flat = {q: Bo._flat_meta(trees[q], insts[q], 10) for q in qids}
-        return Bo._bucket_topk(
-            pdf, {q: trees[q] for q in qids}, insts,
-            {q: f for q, f in flat.items() if f and route}, qterms,
-            {q: 10 for q in qids}, W.K1, W.B)
+    def run(qids):
+        return Bo._bucket_topk(pdf, {q: trees[q] for q in qids}, insts,
+                               qterms, {q: 10 for q in qids}, W.K1, W.B)
 
-    assert Bo._flat_meta(must, insts["must"], 10) is None
-    assert Bo._flat_meta(trees["negative"], insts["negative"], 10) is None
-    calls = {"n": 0}
-    orig = W.vbyte_decode
+    calls = []
+    orig = Bo.decode_postings
 
-    def counting(buf):
-        calls["n"] += 1
-        return orig(buf)
+    def spy(rows):
+        calls.append(rows)
+        return orig(rows)
 
-    monkeypatch.setattr(W, "vbyte_decode", counting)
-    n_sparse_blobs = 3 * int(pdf["term"].isin(["s1", "s2"]).sum())
+    monkeypatch.setattr(Bo, "decode_postings", spy)
     answers = {}
     for q in trees:
-        calls["n"] = 0
+        calls.clear()
         answers[q] = run([q])
-        if q == "sparse":
-            assert 0 < calls["n"] < n_sparse_blobs, calls
+        decoded = sum(len(c["term"]) for c in calls)
+        if q in ("sparse", "must"):
+            assert 0 < decoded < held[q], (q, decoded, held[q])
         else:
-            assert calls["n"] == 0, (q, calls)
+            assert decoded == held[q], (q, decoded, held[q])
+    calls.clear()
     together = run(list(trees))
-    exhaustive = run(list(trees), route=False)
+    keys = [k for c in calls for k in zip(c["term"], c["first_doc"])]
+    assert len(keys) == len(set(keys))
 
     def rows(df, q):
         d = df[df["qid"] == q]
-        return sorted(zip(d["doc_id"].astype(int), d["score"].astype(float)),
-                      key=lambda r: (-r[1], r[0]))
+        return list(zip(d["doc_id"].astype(int), d["score"].astype(float)))
 
     for q in trees:
-        want = rows(answers[q], q)
-        assert want and rows(together, q) == want == rows(exhaustive, q), q
+        want = _full_decode(pdf, trees[q], insts[q], 10)
+        assert want and rows(together, q) == rows(answers[q], q) == want, q
 
 
 @pytest.fixture(scope="module")
 def skewed(spark):
     """1,500 docs over three doc-range buckets: ``alpha``/``beta`` are
     in most docs (dense in every bucket), ``zeta``/``omega`` in few
-    (sparse), so the same query shapes take both routes."""
+    (sparse), so the same query shapes meet both layouts."""
     rows = []
     for i in range(1500):
         words = ["filler"] * (1 + i % 7)
@@ -137,13 +145,13 @@ def _density(idx, terms) -> list[float]:
                                         (("alpha", "beta"), True)])
 def test_query_or_equals_search(skewed, pair, dense):
     """query("a OR b") runs the same flat disjunction as search("a b"),
-    bit for bit, on the pruned (sparse) and exhaustive (dense) route —
-    and both equal the nested form "+(a OR b)", which always takes the
-    tree kernel."""
+    bit for bit, for a sparse pair (under a tenth of its doc span in
+    every bucket) and a dense one (more postings than docs spanned) —
+    and both equal the nested form "+(a OR b)"."""
     a, b = pair
     dens = _density(skewed, [a, b])
     assert len(dens) == 3
-    assert all((d > W.DENSE_THRESHOLD) == dense for d in dens), dens
+    assert all(d > 1.0 if dense else d < 0.1 for d in dens), dens
     for k in (3, 10, 40):
         got = skewed.query(f"{a} OR {b}", k=k).collect()
         assert got == skewed.search(f"{a} {b}", k=k).collect()
@@ -152,8 +160,8 @@ def test_query_or_equals_search(skewed, pair, dense):
 
 
 def test_mixed_route_set_equals_per_query(skewed):
-    """One query_many set whose queries take different routes and share
-    ``zeta`` answers each query as query() does alone; search_many
+    """One query_many set whose queries differ in shape and density and
+    share ``zeta`` answers each query as query() does alone; search_many
     likewise matches search()."""
     qs = {"sparse": "zeta OR omega", "dense": "alpha beta",
           "must": "+zeta alpha", "not": "zeta omega -beta",

@@ -1,15 +1,13 @@
-"""operators/wand._BlobCache and the per-bucket decode shared by a set.
+"""The per-bucket decode shared by a query set.
 
-The serving kernels must return BIT-IDENTICAL results whether blobs are
-decoded fresh per query (r5 behavior) or once per bucket for a whole
-query set (the _BlobCache of the block-skipping strategies, the one
-decode_postings pass of the tree kernel), and the shared arrays must be
-immutable so no kernel can corrupt a later query's view.
+The serving kernel must return BIT-IDENTICAL results whether a query
+runs alone or in a set whose queries share one decode per bucket row,
+and the shared arrays must be immutable so no query can corrupt a later
+query's view.
 """
 
 import numpy as np
 import pandas as pd
-import pytest
 
 
 def _toy_postings():
@@ -34,26 +32,6 @@ def _toy_postings():
                        np.concatenate(dls), 0)
 
 
-def test_blob_cache_returns_frozen_equal_arrays():
-    from php_lucene_analyzer_spark.functions.codec import (delta_decode,
-                                                           vbyte_decode)
-    from php_lucene_analyzer_spark.operators.wand import _BlobCache
-
-    pdf = _toy_postings()
-    cache = _BlobCache()
-    for _, row in pdf.iterrows():
-        d1 = cache.docs(row["doc_blob"])
-        assert not d1.flags.writeable
-        assert d1 is cache.docs(row["doc_blob"])  # memoized
-        np.testing.assert_array_equal(
-            d1, delta_decode(vbyte_decode(row["doc_blob"])))
-        v1 = cache.vals(row["tf_blob"])
-        assert not v1.flags.writeable
-        np.testing.assert_array_equal(v1, vbyte_decode(row["tf_blob"]))
-        with pytest.raises(ValueError):
-            d1[0] = 0  # immutable: a mutating consumer fails loudly
-
-
 def test_wand_bucket_bit_identical_with_shared_cache(monkeypatch):
     import php_lucene_analyzer_spark.operators.boolean as Bo
 
@@ -61,11 +39,11 @@ def test_wand_bucket_bit_identical_with_shared_cache(monkeypatch):
     metas = {
         "ab": [("alpha", 1.3), ("beta", 0.7)],
         "bg": [("beta", 0.7), ("gamma", 2.1)],
-        "a": [("alpha", 1.3)],                  # single-term path
+        "a": [("alpha", 1.3)],
         "abg": [("alpha", 1.3), ("beta", 0.7), ("gamma", 2.1)],
     }
-    # the toy terms are dense, so the multi-term metas take the tree
-    # kernel, which shares one whole-bucket decode across the set
+    # every query of the set scores through the tree kernel, over
+    # arrays of the bucket's shared decode
     seen = []
     orig = Bo._tree_bucket
 
@@ -76,23 +54,21 @@ def test_wand_bucket_bit_identical_with_shared_cache(monkeypatch):
     monkeypatch.setattr(Bo, "_tree_bucket", spy)
 
     def run(qids):
-        trees, insts, flat = {}, {}, {}
+        trees, insts = {}, {}
         for q in qids:
             trees[q], inst = Bo._should_tree(metas[q])
             insts[q] = [(t, w, 55.0, i) for t, w, i in inst]
-            flat[q] = Bo._flat_meta(trees[q], insts[q], 10)
         return Bo._bucket_topk(
-            pdf, trees, insts, flat,
+            pdf, trees, insts,
             {q: sorted({t for t, _ in metas[q]}) for q in qids},
             {q: 10 for q in qids}, 1.2, 0.75)
 
     shared = run(list(metas))
-    assert len(seen) == 3
     assert {t for d in seen for t in d} == {"alpha", "beta", "gamma"}
     for decoded in seen:
         for arrays in decoded.values():
             for a in arrays:
-                assert not a.flags.writeable  # frozen like _BlobCache's
+                assert not a.flags.writeable  # a write fails loudly
     for q in metas:
         fresh = run([q]).reset_index(drop=True)
         cached = shared[shared["qid"] == q].reset_index(drop=True)
