@@ -7,7 +7,7 @@ class is the ergonomic surface a reference user reaches for first:
 
     idx = FulltextIndex.build(spark, docs, order_cols=["repo", "path"])
     idx.search("parse token stream", k=10)          # DataFrame(doc_id, score)
-    idx.search_many({"a": "...", "b": "..."})       # one grouped pass
+    idx.search_many({"a": "...", "b": "..."})       # one plan per set
     idx.phrase("merge join")                        # needs positional=True
     idx.save("/path/idx"); FulltextIndex.load(spark, "/path/idx")
 
@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from .analysis import analyze
 from .operators import fulltext as ft
 from .operators.boolean import (_disjunction_set, _flat_tree, _leaf_terms,
-                                _top_k, _top_k_per_qid, _tree_one, _tree_set)
+                                _tree_one, _tree_set)
 from .operators.positional import phrase_match
 from .operators.postings import (_index_blocks, _split_blocks,
                                  corpus_stats_from_postings, term_dfs,
@@ -172,7 +172,7 @@ class FulltextIndex:
                                tdict=self._dictionary(), **kw)
 
     def _disjunctions(self, entries: dict, k: int) -> DataFrame:
-        """Per-bucket rows of ``{qid: [(term, weight), ...]}`` flat
+        """Each query's top k of ``{qid: [(term, weight), ...]}`` flat
         disjunctions (operators/boolean.py::_disjunction_set)."""
         terms = {t for es in entries.values() for t, _ in es}
         return _disjunction_set(self.postings, self._dfs(terms),
@@ -180,7 +180,7 @@ class FulltextIndex:
 
     def _wand(self, entries: list[tuple[str, float]], k: int) -> DataFrame:
         """Top-k of one flat disjunction of [(term, weight)] entries."""
-        return _top_k(self._disjunctions({"_": entries}, k).drop("qid"), k)
+        return self._disjunctions({"_": entries}, k).drop("qid")
 
     def _terms(self, query: str) -> list[str]:
         if self.analyzer is not None:
@@ -191,17 +191,22 @@ class FulltextIndex:
         """Top-k of the analyzed terms' disjunction -> DataFrame(doc_id,
         score), total order (score desc, doc_id asc) — bit-identical to
         the exhaustive scorer.  query()'s plan over a flat SHOULD tree:
-        block-max WAND prunes each bucket where the terms are sparse."""
+        block-max MaxScore prunes each bucket where the terms are sparse.
+        Below boolean.DRIVER_POSTINGS_CAP postings the answer is
+        computed on the driver when search() is called (one Spark job);
+        the returned frame is local and its collect() runs none."""
         return self._wand([(t, 1.0) for t in self._terms(query)], k)
 
     def search_many(self, queries: dict[str, str], k: int = 10) -> DataFrame:
-        """Whole query set in one grouped kernel pass -> (qid, doc_id,
-        score), bit-identical to per-query ``search()``: about three
-        Spark jobs per set (the bucket exchange, the kernel, the per-qid
-        window)."""
-        return _top_k_per_qid(self._disjunctions(
+        """Whole query set in one plan -> (qid, doc_id, score),
+        bit-identical to per-query ``search()``.  A set below
+        boolean.DRIVER_POSTINGS_CAP postings is answered on the driver
+        when search_many() is called, from one Spark job; a larger set
+        runs one grouped kernel pass and a per-qid window at collect()
+        (operators/boolean.py::_tree_set)."""
+        return self._disjunctions(
             {qid: [(t, 1.0) for t in self._terms(q)]
-             for qid, q in queries.items()}, k), k)
+             for qid, q in queries.items()}, k)
 
     def search_prefix(self, prefix: str, k: int = 10,
                       max_expansions: int = 64) -> DataFrame:
@@ -344,8 +349,8 @@ class FulltextIndex:
         through a doc-set anti-join instead of a term list.
 
         Phrases are leaves of the same tree, at any depth, evaluated
-        inside the tree kernel's grouped pass from the positional blocks
-        of each doc-range bucket (Lucene's PhraseScorer beside the term
+        inside the tree kernel from the positional blocks of each
+        doc-range bucket (Lucene's PhraseScorer beside the term
         scorers): a MUST phrase is required, a MUST_NOT phrase excludes,
         a SHOULD phrase counts toward ``msm`` like any SHOULD clause.
         Top-level MUST and SHOULD phrases score ``boost x Σ idf(phrase
@@ -364,11 +369,13 @@ class FulltextIndex:
         variant scores with its own field's idf/avgdl; explicit
         ``field:`` atoms and expansion atoms are unaffected.
 
-        Runs query_many's plan as a set of one, finished by a global
-        orderBy().limit()."""
-        return _top_k(self._query_set(
+        Runs query_many's plan as a set of one: below
+        boolean.DRIVER_POSTINGS_CAP postings the answer is computed on
+        the driver when query() is called, and the returned local frame
+        collects without a Spark job."""
+        return self._query_set(
             {"_": q}, k, msm, max_expansions, default_operator, multifield,
-            neg_collect_max, slop_mode).drop("qid"), k)
+            neg_collect_max, slop_mode).drop("qid")
 
     def query_many(self, queries: dict[str, str], k: int = 10,
                    msm: int = 0, max_expansions: int = 64,
@@ -382,26 +389,30 @@ class FulltextIndex:
         one expand_specs call (on the driver from the resident
         dictionary; regex clauses, or every clause above TERM_DICT_CAP
         terms, in one Spark job), and every compiled tree — phrase
-        leaves included — evaluates against each doc-range bucket in
-        one applyInPandas pass (operators/boolean.py::_tree_set),
-        finished by a per-qid top-k window: about three Spark jobs per
-        set (the bucket exchange, the kernel, the window)."""
-        return _top_k_per_qid(self._query_set(
+        leaves included — evaluates against each doc-range bucket
+        through one plan (operators/boolean.py::_tree_set).  A set below
+        boolean.DRIVER_POSTINGS_CAP postings, with no doc-set
+        exclusion, is answered on the driver when query_many() is
+        called, from one Spark job that collects its block rows; a
+        larger set runs one grouped kernel pass and a per-qid top-k
+        window at collect()."""
+        return self._query_set(
             queries, k, msm, max_expansions, default_operator, multifield,
-            neg_collect_max, slop_mode), k)
+            neg_collect_max, slop_mode)
 
     def _query_set(self, queries: dict[str, str], k: int, msm: int,
                    max_expansions: int, default_operator: str,
                    multifield: bool, neg_collect_max: int | None,
                    slop_mode: str) -> DataFrame:
         """compile -> expand -> one tree-kernel plan over the set ->
-        per-bucket (qid, doc_id, score) rows before the global top-k.
+        each query's top-k (qid, doc_id, score) rows.
 
         Phrase leaves of every query share one table of compiled specs
         (a phrase two queries share evaluates once per bucket).  A
         query whose root-level negative expansion is an
         OversizedExpansion keeps every kernel row and anti-joins the
-        expansion's doc set relationally (the rare path)."""
+        expansion's doc set relationally (the rare path, always a
+        grouped pass)."""
         from .operators.fulltext import FIELD_SEP, OversizedExpansion, idf
         from .operators.positional import _compile_phrase
         from .operators.postings import matched_doc_ids
@@ -440,7 +451,7 @@ class FulltextIndex:
             return [f"{fld}{FIELD_SEP}{t}" if fld else t
                     for t in self._terms(text)]
 
-        trees, insts, k_map, ext_not = {}, {}, {}, None
+        trees, insts, excluded = {}, {}, {}
         phrase_ids: dict[tuple, int] = {}       # (text, slop, field) -> j
         weights: dict[str, list] = {}           # qid -> [(j, boost, terms)]
         for qid, p in plans.items():
@@ -457,16 +468,15 @@ class FulltextIndex:
             trees[qid], insts[qid] = tree, inst
             for e in exp:
                 if isinstance(e, OversizedExpansion):
-                    ds = matched_doc_ids(self.postings, e.terms_df) \
-                        .select(F.lit(qid).alias("qid"), "doc_id")
-                    ext_not = ds if ext_not is None else ext_not.union(ds)
-                    k_map[qid] = None           # anti-joined: no cut
-        schema = "qid string, doc_id long, score double"
+                    ds = matched_doc_ids(self.postings, e.terms_df)
+                    excluded[qid] = ds if qid not in excluded \
+                        else excluded[qid].union(ds)
         if not trees:
-            return ft.empty_frame(self.spark, schema)
+            return ft.empty_frame(self.spark,
+                                  "qid string, doc_id long, score double")
         leaf_terms = set().union(*map(_leaf_terms, trees.values()))
-        dfs = self._dfs(leaf_terms | {t for ws in weights.values()
-                                      for _j, _b, ts in ws for t in ts})
+        dfs = self._dfs(leaf_terms | {t for ph in phrase_ids
+                                      for t in pterms(*ph)})
         scored = {qid: [(j, boost * sum(idf(self.n_docs, dfs[t])
                                         for t in ts if t in dfs))
                         for j, boost, ts in ws]
@@ -481,12 +491,9 @@ class FulltextIndex:
                   for ins in insts.values() for t, _, _ in ins}
         else:
             av = self.avgdl
-        local = _tree_set(self.postings, dfs, self.n_docs, av, trees,
-                          insts, k, ft.K1, ft.B, k_map, self.positional,
-                          phrases, scored)
-        if ext_not is not None:
-            local = local.join(ext_not, ["qid", "doc_id"], "left_anti")
-        return local
+        return _tree_set(self.postings, dfs, self.n_docs, av, trees, insts,
+                         k, ft.K1, ft.B, excluded, self.positional, phrases,
+                         scored)
 
     def suggest(self, word: str, max_edits: int = 2, k: int = 5,
                 prefix_len: int = 1) -> DataFrame:

@@ -11,18 +11,20 @@ postings instead of a doc-at-a-time scorer tree.
 Distribution model: posting blocks live in doc-disjoint ``rbucket``
 ranges, so every doc's full term membership is visible inside one
 bucket.  ``_tree_set`` is the package's one serving plan over the
-postings: one pruned scan, one applyInPandas pass per bucket that
-evaluates every compiled query tree of a query SET, each query's bucket
-top-k, and a global top-k finish (TakeOrderedAndProject for a single
-tree, a per-qid window for a set).  Flat boolean queries (boolean_topk)
-are depth-1 trees; search, search_many and the WAND entries are flat
-SHOULD trees (_disjunction_set).  Phrase clauses of FulltextIndex.query
-are leaves of the same trees (Lucene's PhraseScorer beside the term
-scorers): the phrase terms' positional blocks ride in the same grouped
-pass, and per bucket each distinct phrase is evaluated once by the
-positional kernels (operators/positional.py::_run_phrase).  Per-bucket
-work is bounded by the build partition size; nothing is all-pairs and
-nothing funnels through one task.
+postings: one pruned scan, one per-bucket closure that evaluates every
+compiled query tree of a query SET and each query's bucket top-k, and a
+global top-k per query.  A set below DRIVER_POSTINGS_CAP postings runs
+the closure on the driver over one JVM-only collect of its block rows
+(a Python worker task costs more than such a set's kernel work); a
+larger set runs it in one ``groupBy("rbucket").applyInPandas`` pass
+with a Spark top-k finish.  Flat boolean queries (boolean_topk) are
+depth-1 trees; search, search_many and the WAND entries are flat SHOULD
+trees (_disjunction_set).  Phrase clauses of FulltextIndex.query are
+leaves of the same trees (Lucene's PhraseScorer beside the term
+scorers): the phrase terms' positional blocks ride in the same scan,
+and per bucket each distinct phrase is evaluated once by the positional
+kernels (operators/positional.py::_run_phrase).  Per-bucket work is
+bounded by the build partition size; nothing is all-pairs.
 
 Per bucket, every query of a set takes one path (``_bucket_topk``):
 block metadata prunes its rows, the one decoder
@@ -42,6 +44,8 @@ are bit-identical at any parallelism and whatever a bucket prunes.
 
 from __future__ import annotations
 
+from functools import reduce
+
 import numpy as np
 import pandas as pd
 import pyspark.sql.functions as F
@@ -51,6 +55,14 @@ from .fulltext import B, K1, empty_frame, idf as bm25_idf
 from .positional import _decode_flat, _run_phrase, _spec_terms
 from .postings import (_filter_terms, _term_doc_order, _topk_cut,
                        decode_postings, term_dfs)
+
+# below this many postings (the Σ df of a query set's leaf and phrase
+# terms) _tree_set scores the set on the driver: it skips the Python
+# worker tasks a grouped pass launches, and its block rows take a few MB
+# there.  On 4 cores, 8-21 rbuckets, every set measured below 600k
+# postings ran faster on the driver and every set above 750k faster
+# grouped (the driver scores rbuckets one after another)
+DRIVER_POSTINGS_CAP = 500_000
 
 
 def _leaf_terms(node) -> set[str]:
@@ -434,30 +446,45 @@ def _bucket_topk(pdf: pd.DataFrame, trees: dict, instances: dict,
 
 def _tree_set(postings: DataFrame, dfs: dict[str, int], n_docs: int,
               avgdl, trees: dict, instances_raw: dict, k: int | None,
-              k1: float, b: float, k_map: dict,
+              k1: float, b: float, excluded: dict | None = None,
               positional: DataFrame | None = None, phrases=(),
               scored: dict | None = None) -> DataFrame:
-    """The one serving plan, over a SET of compiled trees -> per-bucket
-    (qid, doc_id, score) rows, before any global top-k: idf from the
-    resolved ``dfs`` map (leaf terms it lacks are absent from the
-    index), one pruned scan, one applyInPandas pass running every tree
-    against each bucket through the one per-bucket path (_bucket_topk:
-    block-metadata pruning, shared decode, tree kernel).  ``k_map``
-    overrides ``k`` per qid (None: no per-bucket cut, so no pruning).
+    """The one serving plan, over a SET of compiled trees -> (qid,
+    doc_id, score), each query's global top k by (score desc, doc asc)
+    (k None: its whole scored match set): idf from the resolved ``dfs``
+    map (leaf terms it lacks are absent from the index), one pruned
+    scan, and every tree run against each bucket through the one
+    per-bucket path (_bucket_topk: block-metadata pruning, shared
+    decode, tree kernel).  ``excluded`` maps qid -> a (doc_id) frame
+    anti-joined from that query's rows (an OversizedExpansion under a
+    root NOT); such a query takes no per-bucket cut, so no pruning.
+
+    Where the set runs: below DRIVER_POSTINGS_CAP postings (Σ df of its
+    leaf and phrase terms) and without ``excluded``, on the driver —
+    one JVM-only job collects the pruned scan, the same per-bucket
+    closure runs once per rbucket, and the answer is a local relation
+    whose collect() runs no job.  It is computed here, when the plan is
+    built, not at collect().  Any other set runs the closure in one
+    ``groupBy("rbucket").applyInPandas`` pass, finished by a per-qid
+    window.
 
     Phrase leaves: ``phrases`` lists the set's distinct compiled phrase
     specs (positional._compile_phrase output, None for an empty
     analysis) that the trees' ("phrase", j) leaves index, and
     ``scored`` maps qid -> [(j, w)] (see _tree_bucket).  The phrase
     terms' ``positional`` blocks join the leaf terms' posting blocks in
-    the SAME grouped pass (one union, one exchange): per bucket each
-    phrase term decodes once and each phrase evaluates once for the
-    whole set.  This needs every doc's postings and positions in one
-    rbucket, which the build, the streaming segments and compact()
-    keep.  A set without phrases reads no positional rows."""
+    the SAME scan (one union): per bucket each phrase term decodes once
+    and each phrase evaluates once for the whole set.  This needs every
+    doc's postings and positions in one rbucket, which the build, the
+    streaming segments and compact() keep.  A set without phrases reads
+    no positional rows."""
     schema = "qid string, doc_id long, score double"
+    excluded = excluded or {}
     per_q_terms = {qid: _leaf_terms(t) for qid, t in trees.items()}
     all_terms = set().union(*per_q_terms.values())
+    pterms = sorted(set().union(*(_spec_terms(sp) for sp in phrases
+                                  if sp is not None)))
+    size = sum(dfs.get(t, 0) for t in all_terms.union(pterms))
     dfs = {t: dfs[t] for t in all_terms if t in dfs}
     instances = {
         qid: sorted(
@@ -466,13 +493,12 @@ def _tree_set(postings: DataFrame, dfs: dict[str, int], n_docs: int,
             for t, boost, leaf_id in raw if t in dfs)
         for qid, raw in instances_raw.items()}
     alive = sorted(dfs)
-    pterms = sorted(set().union(*(_spec_terms(sp) for sp in phrases
-                                  if sp is not None)))
+    spark = postings.sparkSession
     if not alive and not pterms:
-        return empty_frame(postings.sparkSession, schema)
+        return empty_frame(spark, schema)
     qterms = {qid: sorted(t for t in ts if t in dfs)
               for qid, ts in per_q_terms.items()}
-    k_of = {qid: k_map.get(qid, k) for qid in trees}
+    k_of = {qid: None if qid in excluded else k for qid in trees}
 
     def bucket(pdf: pd.DataFrame) -> pd.DataFrame:
         hits = []
@@ -495,7 +521,40 @@ def _tree_set(postings: DataFrame, dfs: dict[str, int], n_docs: int,
             _filter_terms(positional, pterms)
             .select(*cols, "freq_blob", "pos_blob"),
             allowMissingColumns=True)
-    return matched.groupBy("rbucket").applyInPandas(bucket, schema=schema)
+    if size < DRIVER_POSTINGS_CAP and not excluded:
+        rows = matched.toPandas()
+        return _driver_top_k(
+            spark, [bucket(g) for _rb, g in rows.groupby("rbucket")], k,
+            schema)
+    local = matched.groupBy("rbucket").applyInPandas(bucket, schema=schema)
+    if excluded:
+        local = local.join(reduce(DataFrame.union, (
+            d.select(F.lit(qid).alias("qid"), "doc_id")
+            for qid, d in excluded.items())), ["qid", "doc_id"], "left_anti")
+    if k is None:
+        return local
+    w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("doc_id"))
+    return local.withColumn("_r", F.row_number().over(w)) \
+        .filter(F.col("_r") <= k).drop("_r")
+
+
+def _driver_top_k(spark, parts: list[pd.DataFrame], k: int | None,
+                  schema: str) -> DataFrame:
+    """Each query's global top k (k None: all its rows) of a set's
+    per-bucket (qid, doc_id, score) frames, cut and ordered on the
+    driver by (score desc, doc asc) -> a local relation."""
+    rows = pd.concat(parts, ignore_index=True) if parts else None
+    cut = [] if rows is None else [
+        (qid, *_topk_cut(g["doc_id"].to_numpy(), g["score"].to_numpy(),
+                         len(g) if k is None else k))
+        for qid, g in rows.groupby("qid")]
+    n = [d.size for _q, d, _s in cut]
+    if not sum(n):
+        return empty_frame(spark, schema)
+    return spark.createDataFrame(pd.DataFrame({
+        "qid": np.repeat(np.array([q for q, _d, _s in cut], dtype=object), n),
+        "doc_id": np.concatenate([d for _q, d, _s in cut]),
+        "score": np.concatenate([s for _q, _d, s in cut])}), schema)
 
 
 def _should_tree(entries: list[tuple[str, float]]) -> tuple:
@@ -517,7 +576,7 @@ def _disjunction_set(postings: DataFrame, dfs: dict[str, int], n_docs: int,
     for qid, es in entries.items():
         trees[qid], insts[qid] = _should_tree(es)
     return _tree_set(postings, dfs, n_docs, float(avgdl), trees, insts, k,
-                     k1, b, {})
+                     k1, b)
 
 
 def boolean_tree_topk(postings: DataFrame, tstats: DataFrame, n_docs: int,
@@ -534,9 +593,7 @@ def boolean_tree_topk(postings: DataFrame, tstats: DataFrame, n_docs: int,
     applied (df lookup happens here, one collect for the whole query).
     ``k=None`` returns the full scored match set.
 
-    Runs boolean_tree_topk_many's kernel as a set of one, finished by a
-    global orderBy().limit() — one Spark job fewer than the per-qid
-    window."""
+    Runs boolean_tree_topk_many's plan (_tree_set) as a set of one."""
     return _tree_one(postings, term_dfs(tstats, _leaf_terms(tree)), n_docs,
                      avgdl, tree, instances_raw, k, k1, b)
 
@@ -544,23 +601,8 @@ def boolean_tree_topk(postings: DataFrame, tstats: DataFrame, n_docs: int,
 def _tree_one(postings: DataFrame, dfs: dict[str, int], n_docs: int, avgdl,
               tree, instances_raw, k: int | None = 10, k1: float = K1,
               b: float = B) -> DataFrame:
-    return _top_k(_tree_set(postings, dfs, n_docs, avgdl, {"_": tree},
-                            {"_": instances_raw}, k, k1, b, {})
-                  .drop("qid"), k)
-
-
-def _top_k(local: DataFrame, k: int | None) -> DataFrame:
-    """The global top-k of one query's per-bucket rows."""
-    if k is None:
-        return local
-    return local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-
-
-def _top_k_per_qid(local: DataFrame, k: int) -> DataFrame:
-    """The per-qid top-k window over a query set's per-bucket rows."""
-    w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("doc_id"))
-    return local.withColumn("_r", F.row_number().over(w)) \
-        .filter(F.col("_r") <= k).drop("_r")
+    return _tree_set(postings, dfs, n_docs, avgdl, {"_": tree},
+                     {"_": instances_raw}, k, k1, b).drop("qid")
 
 
 def boolean_tree_topk_many(postings: DataFrame, tstats: DataFrame,
@@ -570,17 +612,16 @@ def boolean_tree_topk_many(postings: DataFrame, tstats: DataFrame,
     """Evaluate a whole SET of compiled query trees -> (qid, doc_id,
     score) — the serving shape (wand_topk_many's role for the grouped/
     boosted/fielded query path): matched terms unioned into one pruned
-    scan, ONE applyInPandas pass runs every query against each bucket,
-    one global per-qid top-k window (three Spark jobs: the bucket
-    exchange, the kernel, the window).  Results are bit-identical to
+    scan, every query run against each bucket, each query's global top
+    k (_tree_set: on the driver below DRIVER_POSTINGS_CAP, else one
+    grouped pass and a per-qid window).  Results are bit-identical to
     per-query ``boolean_tree_topk``.
 
     ``trees``: {qid: tree}; ``instances_raw``: {qid: [(term, boost,
     leaf_id)]}; ``avgdl``: float or {term: avgdl} (multi-field)."""
     terms = set().union(*map(_leaf_terms, trees.values()))
-    return _top_k_per_qid(_tree_set(postings, term_dfs(tstats, terms),
-                                    n_docs, avgdl, trees, instances_raw,
-                                    k, k1, b, {}), k)
+    return _tree_set(postings, term_dfs(tstats, terms), n_docs, avgdl,
+                     trees, instances_raw, k, k1, b)
 
 
 def boolean_topk(postings: DataFrame, tstats: DataFrame, n_docs: int,

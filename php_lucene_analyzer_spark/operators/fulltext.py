@@ -290,11 +290,13 @@ def expand_specs(tstats: DataFrame, specs: list[dict],
     fuzzy/prefix/range spec expands on the driver and launches no Spark
     job; regex specs, and every spec when ``tdict`` is None, expand in
     ONE Spark job over ``tstats``: each spec contributes a condition
-    column, matches explode to (spec_id, term, df, dist) rows, per-spec
-    caps apply through ONE window partitioned by spec_id, and a single
-    collect returns every expansion.  Regex stays on Spark because the
-    JVM regex dialect is the query language's, not Python's.  Both
-    paths return identical lists.
+    column, matches explode to (spec_id, term, df, dist) rows, and a
+    single collect returns every expansion.  One capped spec takes a
+    TakeOrderedAndProject; several rank through ONE window partitioned
+    by spec_id, except when ``tdict`` is resident: then they collect
+    uncapped (its term count bounds the collect) and cap on the driver.
+    Regex stays on Spark because the JVM regex dialect is the query
+    language's, not Python's.  Both paths return identical lists.
 
     spec keys:
       kind: 'fuzzy' | 'prefix' | 'regex' | 'range'   (wildcards compile
@@ -319,12 +321,21 @@ def expand_specs(tstats: DataFrame, specs: list[dict],
         return []
     jvm = [i for i, sp in enumerate(specs)
            if tdict is None or sp["kind"] == "regex"]
-    out = _expand_jvm(tstats, specs, jvm, default_field, neg_collect_max,
+    # several Spark-side specs with a cap would rank through a
+    # spec-partitioned window, one job more; with a resident dictionary
+    # (at most TERM_DICT_CAP terms) they collect uncapped instead and
+    # every cap applies below.  One spec keeps its TakeOrderedAndProject
+    uncap = (tdict is not None and len(jvm) > 1
+             and any(specs[i].get("cap") is not None for i in jvm))
+    out = _expand_jvm(tstats, [dict(sp, cap=None) for sp in specs]
+                      if uncap else specs, jvm, default_field,
+                      neg_collect_max,
                       neg_docset_sids) if jvm else [[] for _ in specs]
     for i, sp in enumerate(specs):
-        if tdict is None or sp["kind"] == "regex":
+        if tdict is None or isinstance(out[i], OversizedExpansion):
             continue
-        hits = tdict.matches(sp, default_field)
+        hits = out[i] if sp["kind"] == "regex" \
+            else tdict.matches(sp, default_field)
         if sp.get("cap") is not None:
             hits = sorted(hits, key=lambda h: (-h[1], h[0]))[
                 :max(int(sp["cap"]), 0)]

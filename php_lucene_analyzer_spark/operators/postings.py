@@ -544,8 +544,10 @@ def _filter_terms(df: DataFrame, terms: list[str]) -> DataFrame:
     kernel starts from."""
     if len(terms) <= _ISIN_MAX:
         return df.filter(F.col("term").isin(list(terms)))
+    # built from pandas, the term table is a local relation (Arrow): its
+    # broadcast runs no Python worker task, unlike a parallelized list
     tdf = df.sparkSession.createDataFrame(
-        [(t,) for t in terms], "term string")
+        pd.DataFrame({"term": list(terms)}), "term string")
     return df.join(F.broadcast(tdf), "term", "left_semi")
 
 

@@ -3,8 +3,10 @@ serving plan (operators/boolean.py::_tree_set, SURVEY.md §2-C).
 
 ``wand_topk``, ``wand_topk_many``, ``wand_topk_terms`` and
 ``prefix_topk`` build flat SHOULD trees, one leaf per (term, weight)
-entry, and run them through the plan's per-bucket pass
-(boolean._bucket_topk) like every other query.  There, a query with a
+entry, and run them through the plan's per-bucket path
+(boolean._bucket_topk) like every other query, on the driver for a set
+below boolean.DRIVER_POSTINGS_CAP postings and in one grouped pass
+otherwise.  There, a query with a
 finite k, no negative weight and no phrase leaf prunes with block
 metadata only: a vectorized window-at-a-time MaxScore filter (Lucene's
 MaxScoreBulkScorer) in front of the one decoder
@@ -28,7 +30,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
 from ..analysis import analyze
-from .boolean import _disjunction_set, _top_k, _top_k_per_qid
+from .boolean import _disjunction_set
 from .fulltext import B, K1
 from .postings import term_dfs
 
@@ -48,10 +50,11 @@ def wand_topk_many(postings: DataFrame, tstats: DataFrame, n_docs: int,
                    avgdl: float, queries: dict[str, str], k: int = 10,
                    k1: float = K1, b: float = B,
                    terms_fn=None) -> DataFrame:
-    """Evaluate a whole query SET in one grouped pass -> (qid, doc_id,
-    score): about three Spark jobs per set (the bucket exchange, the
-    kernel, the per-qid window), each query a flat disjunction of its
-    analyzed terms.  Results are bit-identical to per-query wand_topk.
+    """Evaluate a whole query SET in one plan -> (qid, doc_id, score),
+    each query a flat disjunction of its analyzed terms (boolean.py::
+    _tree_set: on the driver below DRIVER_POSTINGS_CAP postings, else
+    one grouped pass and a per-qid window).  Results are bit-identical
+    to per-query wand_topk.
 
     ``terms_fn``: query-string -> term list; defaults to the flagship
     analysis chain (custom Analyzer chains pass ``analyzer.terms``)."""
@@ -60,9 +63,8 @@ def wand_topk_many(postings: DataFrame, tstats: DataFrame, n_docs: int,
     entries = {qid: [(t, 1.0) for t in sorted(set(terms_fn(q)))]
                for qid, q in queries.items()}
     terms = {t for es in entries.values() for t, _ in es}
-    return _top_k_per_qid(_disjunction_set(
-        postings, term_dfs(tstats, terms), n_docs, avgdl, entries, k, k1,
-        b), k)
+    return _disjunction_set(postings, term_dfs(tstats, terms), n_docs,
+                            avgdl, entries, k, k1, b)
 
 
 def prefix_topk(postings: DataFrame, tdict: DataFrame, n_docs: int,
@@ -96,10 +98,9 @@ def wand_topk_terms(postings: DataFrame, tstats: DataFrame, n_docs: int,
     clause — Lucene's fuzzy edit-distance downweight, boosted clauses).
     Each entry becomes its own SHOULD leaf with idf x weight.
 
-    Runs wand_topk_many's plan as a set of one, finished by a global
-    orderBy().limit()."""
+    Runs wand_topk_many's plan as a set of one."""
     entries = term_boosts if term_boosts is not None \
         else [(t, 1.0) for t in (terms or [])]
-    return _top_k(_disjunction_set(
+    return _disjunction_set(
         postings, term_dfs(tstats, {t for t, _ in entries}), n_docs, avgdl,
-        {"_": entries}, k, k1, b).drop("qid"), k)
+        {"_": entries}, k, k1, b).drop("qid")

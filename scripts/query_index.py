@@ -13,9 +13,11 @@ ranges, wildcards, fuzzy, and phrases — a workdir built with
 ``build_index.py --positional``, or saved by ``FulltextIndex.save``
 with a positional index, serves ``"exact phrase"`` / ``"a b"~n``
 clauses batched like everything else).  Either way the set takes one
-grouped kernel pass: about three Spark jobs (the bucket exchange, the
-kernel, the per-qid window), plus the term-dictionary read and any
-regex expansion.  Prints one JSON line per query:
+plan (operators/boolean.py::_tree_set): below DRIVER_POSTINGS_CAP
+postings one Spark job collects its block rows and the driver scores
+them, else one grouped kernel pass (about three Spark jobs: the bucket
+exchange, the kernel, the per-qid window); plus the term-dictionary
+read and any regex expansion.  Prints one JSON line per query:
 {"query": ..., "hits": [[doc_id, score], ...]}.
 """
 

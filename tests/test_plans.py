@@ -239,11 +239,15 @@ def test_expand_specs_prunes_and_prefilters(spark, docs):
         assert any(t == "stream" for t, _, _ in out[1])
 
 
-def test_tree_kernel_scan_prunes_by_term(spark, docs):
+def test_tree_kernel_scan_prunes_by_term(spark, docs, monkeypatch):
     """boolean_tree_topk's matched scan pushes the term predicate
-    (isin / semi-join) exactly like the WAND path."""
+    (isin / semi-join) exactly like the WAND path, on the grouped branch
+    (the cap forced to 0, so the grouped pass is planned) and in the
+    driver branch's one collect, which also plans no shuffle, no
+    cartesian or nested-loop join and no Python node."""
     import tempfile
 
+    import php_lucene_analyzer_spark.operators.boolean as Bo
     from php_lucene_analyzer_spark.operators.boolean import \
         boolean_tree_topk
 
@@ -260,7 +264,29 @@ def test_tree_kernel_scan_prunes_by_term(spark, docs):
                                ("leaf", 1, ("merge",))), (), 1),),
                 (("leaf", 2, ("stream",)),), (), 0)
         inst = [("fast", 1.0, 0), ("merge", 1.0, 1), ("stream", 1.0, 2)]
+        monkeypatch.setattr(Bo, "DRIVER_POSTINGS_CAP", 0)
         res = boolean_tree_topk(stored, tstats, n, avgdl, tree, inst, 10)
         plan = _plan(res)
         assert "PushedFilters: [In(term" in plan
-        assert res.count() > 0
+        assert "FlatMapGroupsInPandas" in plan
+        want = res.collect()
+        assert want
+
+        monkeypatch.undo()
+        scans = []
+        to_pandas = type(stored).toPandas
+
+        def spy(df):
+            scans.append(df)
+            return to_pandas(df)
+
+        monkeypatch.setattr(type(stored), "toPandas", spy)
+        res = boolean_tree_topk(stored, tstats, n, avgdl, tree, inst, 10)
+        assert len(scans) == 1
+        plan = _plan(scans[0])
+        assert "PushedFilters: [In(term" in plan
+        for node in ("Exchange", "CartesianProduct", "NestedLoop",
+                     "Python", "InPandas"):
+            assert node not in plan, node
+        assert "LocalTableScan" in _plan(res)
+        assert res.collect() == want

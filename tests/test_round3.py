@@ -1,6 +1,7 @@
 """Round-3 hardening tests (VERDICT r2 items 2-7 + ADVICE):
 
-* no driver-side collect inside any contract query body;
+* no driver-side collect inside any contract query body, and only
+  bounded ones in its callees;
 * repeated dedup/phrase operator calls leak no persistent storage
   (the .cache()-without-unpersist class);
 * FulltextIndex.close() releases every build cache;
@@ -26,8 +27,11 @@ SF_DIR = "/root/testdata/sf0.001"
 
 def test_no_collect_in_contract_query_bodies():
     """A .collect() inside a contract query is a driver-side scale
-    killer (VERDICT r2 item 2) — the whole suite must return lazy
-    DataFrames.  Source-level check over every QUERIES entry."""
+    killer (VERDICT r2 item 2): no contract query body may collect.
+    Source-level check over every QUERIES entry; the collects its
+    callees make are bounded, which
+    test_contract_query_callee_collects_are_bounded checks at run
+    time."""
     from php_lucene_analyzer_spark import queries as qmod
 
     for name, fn in qmod.QUERIES.items():
@@ -36,6 +40,67 @@ def test_no_collect_in_contract_query_bodies():
             f"contract query {name} collects to the driver"
         assert ".toPandas(" not in src, \
             f"contract query {name} collects to the driver (toPandas)"
+
+
+# every package function that may collect to the driver while a contract
+# query is built, with its bound in rows (None: one row per query term)
+BOUNDED_COLLECTS = {
+    "engine.py:_dictionary": "TERM_DICT_CAP + 1",
+    "operators/fulltext.py:corpus_stats": "1",
+    "operators/postings.py:corpus_stats_from_postings": "1",
+    "operators/postings.py:term_dfs": None,
+    # a set below DRIVER_POSTINGS_CAP postings collects its block rows
+    # (fewer rows than postings) and is scored on the driver
+    "operators/boolean.py:_tree_set": "DRIVER_POSTINGS_CAP",
+}
+
+
+def test_contract_query_callee_collects_are_bounded(spark, monkeypatch):
+    """Run-time half of the check above: building every QUERIES entry
+    collects to the driver (DataFrame.collect / toPandas) only from the
+    package functions of BOUNDED_COLLECTS, each within its bound.  A new
+    collect in any callee fails here until it is listed with a bound."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    from php_lucene_analyzer_spark import engine
+    from php_lucene_analyzer_spark import queries as qmod
+    from php_lucene_analyzer_spark.operators import boolean as Bo
+
+    bounds = {"TERM_DICT_CAP + 1": engine.TERM_DICT_CAP + 1, "1": 1,
+              "DRIVER_POSTINGS_CAP": Bo.DRIVER_POSTINGS_CAP}
+    seen, depth = [], [0]
+
+    def spy(name):
+        orig = getattr(DataFrame, name)
+
+        def call(self, *a, **kw):
+            depth[0] += 1               # toPandas may collect inside
+            try:
+                out = orig(self, *a, **kw)
+            finally:
+                depth[0] -= 1
+            if not depth[0]:
+                site = next(
+                    (f"{fr.filename.split('php_lucene_analyzer_spark/')[-1]}"
+                     f":{fr.function}"
+                     for fr in inspect.stack(0)[1:]
+                     if "/php_lucene_analyzer_spark/" in fr.filename
+                     and not fr.filename.endswith("/queries.py")), None)
+                seen.append((qname, site, len(out)))
+            return out
+        monkeypatch.setattr(DataFrame, name, call)
+
+    spy("collect")
+    spy("toPandas")
+    for qname, fn in qmod.QUERIES.items():
+        fn(spark, SF_DIR)
+    assert any(site == "operators/boolean.py:_tree_set"
+               for _q, site, _n in seen)       # the spy sees the branch
+    for qname, site, n in seen:
+        assert site in BOUNDED_COLLECTS, \
+            f"contract query {qname} collects from {site}"
+        bound = BOUNDED_COLLECTS[site]
+        assert bound is None or n <= bounds[bound], (qname, site, n)
 
 
 # ------------------------------------------------------- storage hygiene

@@ -408,19 +408,65 @@ def test_escaped_quote_inside_phrase_parses(pidx):
     pidx.query(r'"say \"hi\" now"', k=3).collect()
 
 
-def test_query_many_phrase_plan_is_join_sane(pidx, docs):
+def test_query_many_phrase_plan_is_join_sane(pidx, docs, monkeypatch):
     """Physical-plan audit for the phrase serving path: no cartesian
-    products or nested-loop joins anywhere, and ONE exchange — over the
-    union of the term and phrase-term block scans — feeds the kernel."""
+    products or nested-loop joins anywhere.  On the grouped branch (the
+    cap forced to 0) ONE exchange — over the union of the term and
+    phrase-term block scans — feeds the kernel; on the driver branch
+    the one collect reads that union with no exchange and no Python
+    node."""
+    import php_lucene_analyzer_spark.operators.boolean as Bo
+
     phrase = _first_phrase(docs)
-    df = pidx.query_many({"a": f'+"{phrase}" value',
-                          "b": "stream -dup"}, k=5)
+    qs = {"a": f'+"{phrase}" value', "b": "stream -dup"}
+    monkeypatch.setattr(Bo, "DRIVER_POSTINGS_CAP", 0)
+    df = pidx.query_many(qs, k=5)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoop" not in plan
     assert plan.count("Exchange hashpartitioning(rbucket") == 1
     assert plan.count("FlatMapGroupsInPandas") == 1
     assert "Union" in plan
+    want = sorted(df.collect())
+
+    monkeypatch.undo()
+    scans = []
+    to_pandas = type(df).toPandas
+
+    def spy(frame):
+        scans.append(frame)
+        return to_pandas(frame)
+
+    monkeypatch.setattr(type(df), "toPandas", spy)
+    got = pidx.query_many(qs, k=5)
+    assert len(scans) == 1
+    nodes = _exec_nodes(scans[0])
+    for node in ("CartesianProduct", "NestedLoop", "Exchange", "Python",
+                 "InPandas"):
+        assert not any(node in n for n in nodes), (node, nodes)
+    assert "UnionExec" in nodes and "InMemoryTableScanExec" in nodes
+    assert sorted(got.collect()) == want and want
+
+
+def _exec_nodes(df) -> list[str]:
+    """The physical operators that ran for ``df`` (AQE stages unwrapped;
+    a cached relation is one InMemoryTableScanExec leaf, since its plan
+    ran when it was cached)."""
+    out = []
+
+    def walk(node):
+        name = node.getClass().getSimpleName()
+        out.append(name)
+        if name == "AdaptiveSparkPlanExec":
+            walk(node.executedPlan())
+        elif name.endswith("QueryStageExec"):
+            walk(node.plan())
+        ch = node.children()
+        for i in range(ch.length()):
+            walk(ch.apply(i))
+
+    walk(df._jdf.queryExecution().executedPlan())
+    return out
 
 
 # ------------------------------------------- nested phrases (r5 late)

@@ -1,9 +1,11 @@
 """The driver-resident term dictionary of FulltextIndex: driver-side
 expansion returns exactly the Spark expand_specs lists, the collect
 fallback above TERM_DICT_CAP answers exactly as the resident path, a
-single query on a loaded index runs in at most two Spark jobs (a phrase
-query in three), a query_many batch with phrase queries in four, and an
-empty answer in none."""
+warm single query on a loaded index runs one Spark job (a phrase query
+and a query_many batch with phrase queries too: each set is scored on
+the driver, operators/boolean.py::DRIVER_POSTINGS_CAP), a query with
+regex clauses one more for their expansion however many it has, and an
+empty answer none."""
 
 import random
 import time
@@ -256,15 +258,15 @@ def test_single_query_jobs(spark, docs, saved):
                      .collect())
     n_prefix = _jobs(sc, "dict-prefix", lambda: idx.query(forms[3])
                      .collect())
-    assert 1 <= n_search <= 2
-    assert 1 <= n_prefix <= 2
+    assert n_search == 1
+    assert n_prefix == 1
 
 
 def test_phrase_query_jobs(spark, docs, saved):
-    """Phrase leaves run inside the tree kernel's grouped pass: a warm
-    '"p q" a' query() and a 6-query query_many with two phrase queries
-    launch no separate positional job (the relational phrase fold ran
-    6 and 9)."""
+    """Phrase leaves run inside the tree kernel: a warm '"p q" a'
+    query() and a 6-query query_many with two phrase queries launch no
+    separate positional job (the relational phrase fold ran 6 and 9);
+    the one job collects the set's postings and positional rows."""
     idx = FulltextIndex.load(spark, saved)
     sc = spark.sparkContext
     forms = _forms(idx, docs)
@@ -275,8 +277,33 @@ def test_phrase_query_jobs(spark, docs, saved):
     batch["q0"] = "+" + forms[5]
     n_many = _jobs(sc, "dict-many", lambda: idx.query_many(batch)
                    .collect())
-    assert 1 <= n_phrase <= 3
-    assert 1 <= n_many <= 4
+    assert n_phrase == 1
+    assert n_many == 1
+
+
+def test_regex_clauses_share_one_expansion_job(spark, docs, saved,
+                                               monkeypatch):
+    """With the dictionary resident, one capped regex clause expands
+    through a TakeOrderedAndProject, and two collect uncapped in one
+    Spark job and cap on the driver (df descending, term ascending):
+    two capped regex clauses cost no more jobs than one (a
+    spec-partitioned cap window cost one more), and answer as the Spark
+    path's cap window does."""
+    idx = FulltextIndex.load(spark, saved)
+    sc = spark.sparkContext
+    a, b = _forms(idx, docs)[1].split(" AND ")
+    one, two = f"/{a[0]}.*/ {b}", f"/{a[0]}.*/ /{b[0]}.*/"
+    idx.query(one).collect()                          # warm-up
+    n_one = _jobs(sc, "regex-one", lambda: idx.query(one).collect())
+    n_two = _jobs(sc, "regex-two", lambda: idx.query(two).collect())
+    assert n_one == n_two == 2
+    want = [_rows(idx.query(q, k=20, max_expansions=2)) for q in (one, two)]
+    monkeypatch.setattr(engmod, "TERM_DICT_CAP", 0)
+    fallback = FulltextIndex.load(spark, saved)
+    assert fallback._dictionary() is None
+    assert [_rows(fallback.query(q, k=20, max_expansions=2))
+            for q in (one, two)] == want
+    assert all(want)
 
 
 def test_empty_answers_run_no_job(spark, saved):
